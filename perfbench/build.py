@@ -1,8 +1,6 @@
 """Build file for the benchmark: compiles graft's main sources and the
 benchmark's own Scala package into jars with the Scala compiler shipped in
-Spark's jars, caches them by a hash of every source file, and trains a JVM
-class-data-sharing archive so each run starts without loading Spark's
-classes from jars one by one.
+Spark's jars, and caches them by a hash of every source file.
 
     python3 perfbench/build.py      # prints the class path it built
 
@@ -98,8 +96,7 @@ def _cached(out, make):
 
 
 def build():
-    """Returns (class path, class-data-sharing archive) for the engine and
-    the benchmark."""
+    """Returns the class path of Spark, the engine and the benchmark."""
     engine = engine_sources()
     bench = _sources(os.path.join(HERE, "src"))
     target = os.environ.get("CARGO_TARGET_DIR", ".bench_build")
@@ -107,31 +104,19 @@ def build():
     bkey = f"{ekey}-{_hash(bench)[:16]}"
     eout = os.path.join(target, f"engine-{ekey}")
     bout = os.path.join(target, f"bench-{bkey}")
-    cout = os.path.join(target, f"cds-{bkey}")
     ejar, bjar = f"{eout}/engine.jar", f"{bout}/bench.jar"
     classpath = f"{ejar}:{bjar}:{spark_jars()}"
-
-    def train(d):
-        # The archive records the class path it was trained on, so this
-        # runs only once both jars are in their final place.
-        work = os.path.abspath(f"{d}/train")
-        _run(["java"] + JVM_OPTS +
-             [f"-Djava.io.tmpdir={d}", f"-XX:ArchiveClassesAtExit={d}/app.jsa",
-              "-cp", classpath, "graftbench.Train", work],
-             f"{d}/build.log", "class-data-sharing training")
-        shutil.rmtree(work)
 
     _cached(eout, lambda d: _scalac(f"{d}/engine.jar", spark_jars(), engine,
                                     f"{d}/build.log"))
     _cached(bout, lambda d: _scalac(f"{d}/bench.jar", f"{ejar}:{spark_jars()}",
                                     bench, f"{d}/build.log"))
-    _cached(cout, train)
-    return classpath, f"{cout}/app.jsa"
+    return classpath
 
 
 if __name__ == "__main__":
     try:
-        print(build()[0])
+        print(build())
     except BuildError as e:
         print(f"build failed: {e}", file=sys.stderr)
         sys.exit(2)

@@ -28,7 +28,10 @@ PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
 def _date(days):
-    return pa.array(np.asarray(days, dtype=np.int32), type=pa.date32())
+    """Days since EPOCH as a date column (date32 counts from 1970)."""
+    since_1970 = (EPOCH - datetime.date(1970, 1, 1)).days
+    return pa.array(np.asarray(days, dtype=np.int32) + since_1970,
+                    type=pa.date32())
 
 
 def _write(path, cols):

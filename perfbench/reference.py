@@ -111,6 +111,20 @@ def _notif(sub, typ, obj_id, subject, body):
     return nid, f"{nid}|{subject}|{hashlib.md5(body.encode()).hexdigest()}"
 
 
+def _text(v):
+    """A field as the engine side writes it: doubles to four decimals."""
+    if v is None:
+        return "null"
+    return f"{v:.4f}" if isinstance(v, float) else str(v)
+
+
+def _sha256(lines):
+    h = hashlib.sha256()
+    for line in sorted(lines):
+        h.update((line + "\n").encode())
+    return h.hexdigest()
+
+
 class IngestReference:
     """Replays reports in order: the warehouse upsert (latest non-null value
     wins per field), the ingest closure over the base tables, subscription
@@ -191,8 +205,19 @@ class IngestReference:
         self.seen |= ids
         return {"matched": sorted(m for _, m in matched),
                 "delivered": delivered,
-                "wh_rows": [len(self.wh["orders"]), len(self.wh["lineitem"])],
+                "wh": self.wh_digest(),
                 "submitted": submitted, "merged": merged}
+
+    def wh_digest(self):
+        """{table: [rows, key sum, sha-256 of its rows]}, each row written
+        as column=value pairs in column-name order, nulls included."""
+        out = {}
+        for t, rows in self.wh.items():
+            keys = sum(k if t == "orders" else k[0] * 8 + k[1] for k in rows)
+            out[t] = [len(rows), keys, _sha256(
+                "\t".join(f"{c}={_text(r[c])}" for c in sorted(r))
+                for r in rows.values())]
+        return out
 
     def readback_ok(self, rb):
         """rb = [order id, [order row as strings], lineitem count]."""

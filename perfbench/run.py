@@ -130,14 +130,20 @@ def check(workload, inp, res):
     if workload == "ingest_notify":
         T = reference.load_tables(inp["db"])
         ref = reference.IngestReference(T, inp["initial"])
-        ref.apply(inp["reports"][0])
+        want = ref.apply(inp["reports"][0])
+        warm = res["warmup"]
+        bad = [k for k in ("matched", "delivered", "wh")
+               if warm.get(k) != want[k]]
+        if "readback_error" in warm or not ref.readback_ok(warm["readback"]):
+            bad.append("readback")
+        err = f"warm-up report: {', '.join(bad)} wrong" if bad else None
         sub = merged = matched = delivered = written = rep_bytes = 0
         rb_tried = rb_failed = 0
         for r in ops:
             rep = inp["reports"][r["i"] + 1]
             want = ref.apply(rep)
             out = r.get("out", {})
-            mark(r, ", ".join(k for k in ("matched", "delivered", "wh_rows")
+            mark(r, ", ".join(k for k in ("matched", "delivered", "wh")
                               if out.get(k) != want[k]))
             if not r["good"]:
                 continue
@@ -157,7 +163,7 @@ def check(workload, inp, res):
             write_amp=written / rep_bytes if rep_bytes else 0.0,
             new_notif_ratio=delivered / matched if matched else 0.0,
             readback_failed_frac=rb_failed / rb_tried if rb_tried else 0.0)
-        return None, facts
+        return err, facts
     err = reference.check_corpus(inp, res["first_rows"], res["first_pairs"])
     for r in ops:
         mark(r, err or (r["ok"] and r["out"]["digest"] != res["first_digest"]
@@ -180,7 +186,7 @@ def end_to_end(res, good, attempted_ns):
         "rows_per_s": (sum(r["rows"] for r in good) / total_s, "rows/s")}
 
 
-def per_layer(res, good, facts):
+def per_layer(res, good, facts, cpus):
     traced = [r for r in good if r["traced"]]
     untraced = [r for r in good if not r["traced"]]
     if not traced:
@@ -203,6 +209,8 @@ def per_layer(res, good, facts):
         m[name] = (sum(s[key] for s in spans) * scale / n, unit)
     m["spark.peak_exec_mem_bytes"] = (
         max([s["peak_exec_mem_bytes"] for s in spans] or [0]), "bytes")
+    m["spark.task_busy_pct"] = (100.0 * sum(s["task_run_ms"] for s in spans)
+                                / (op_ms * cpus), "%")
     m["spark.gc_ms"] = (sum(r["gc_ms"] for r in traced) / n, "ms")
     m["process.peak_rss_mb"] = (res["peak_rss_kb"] / 1024.0, "MB")
     for name in ("spark.plan", "result.collect"):
@@ -233,6 +241,8 @@ def per_layer(res, good, facts):
                                     "ratio")
     m["readback.failed_frac"] = (facts.get("readback_failed_frac", 0.0),
                                  "ratio")
+    m["readback.pct"] = (100.0 * sum(r["out"].get("readback_ns", 0)
+                                     for r in traced) / 1e6 / op_ms, "%")
     m["dedup.pairs"] = (facts.get("pairs", 0.0), "count")
     med_t = statistics.median(r["ns"] for r in traced)
     med_u = statistics.median(r["ns"] for r in untraced) if untraced \
@@ -252,7 +262,7 @@ def main():
     args = ap.parse_args()
     cpus = len(os.sched_getaffinity(0))
     try:
-        classpath, archive = build.build()
+        classpath = build.build()
     except build.BuildError as e:
         fail(f"build failed: {e}")
 
@@ -267,8 +277,8 @@ def main():
     with open(cfg_path, "w") as fh:
         json.dump(cfg, fh)
     jvm = ["java"] + build.JVM_OPTS + [
-        f"-Djava.io.tmpdir={work}/tmp", f"-XX:SharedArchiveFile={archive}",
-        "-cp", classpath, "graftbench.Main", cfg_path, out_path]
+        f"-Djava.io.tmpdir={work}/tmp", "-cp", classpath,
+        "graftbench.Main", cfg_path, out_path]
     with open(f"{work}/jvm.log", "w") as log:
         try:
             rc = subprocess.run(jvm, stdout=log, stderr=subprocess.STDOUT,
@@ -308,7 +318,7 @@ def main():
         fail("no operation completed correctly")
 
     all_ns = sum(r["ns"] for r in ops)
-    metrics = per_layer(res, good, facts) if args.trace else \
+    metrics = per_layer(res, good, facts, cpus) if args.trace else \
         end_to_end(res, good, all_ns)
     lat = sorted(r["ns"] / 1e6 for r in good)
     tail = len(lat) - math.ceil(0.9 * len(lat))

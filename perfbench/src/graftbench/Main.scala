@@ -64,7 +64,9 @@ object Main {
     val loopStart = System.nanoTime()
     var i = 0
     val mix = workload.mixSize
-    while (workload.hasNext && (i % mix != 0 ||
+    // Whole mixes only, and at least two of them, so that a slow first mix
+    // does not leave the median resting on the coldest operations alone.
+    while (workload.hasNext && (i % mix != 0 || i < 2 * mix ||
       (System.nanoTime() - loopStart) / 1e9 < seconds)) {
       // A traced run alternates traced and untraced mixes, so the tracing
       // overhead is measured within the run on the same operation kinds.

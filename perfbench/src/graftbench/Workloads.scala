@@ -57,6 +57,20 @@ private object Common {
     m
   }
 
+  /** SHA-256 of the lines in sorted order: an order-independent digest. */
+  def sha256(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.sorted.foreach(s => md.update((s + "\n").getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** A field as the reference writes it: doubles to four decimals. */
+  def text(v: Any): String = v match {
+    case null => "null"
+    case d: Double => String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+    case x => x.toString
+  }
+
   def ids(spark: SparkSession, c: String, xs: Seq[Long]): DataFrame = {
     import spark.implicits._
     xs.toDF(c)
@@ -242,17 +256,17 @@ final class IngestNotify(spark: SparkSession, tr: Tracer, cfg: JsonNode)
     }
 
   /** Bookkeeping after a report, outside its time: records what it matched
-    * and delivered and the warehouse row counts, then reads a just-loaded
-    * order back through a Catalog over the warehouse. */
+    * and delivered and a digest of the warehouse, then reads a just-loaded
+    * order back through a Catalog over the warehouse, timing the read. */
   private def check(op: Int, out: JMap[String, AnyRef]): Unit = {
     out.put("matched", Main.jlist(lastMatched.toSeq.map(n =>
       s"${n.notification_id}|${n.subject}|${n.body_md5}").sorted))
     out.put("delivered", Main.jlist(delivered.asScala.drop(deliveredBefore)
       .map(_.notification_id).sorted))
     val rep = reports.get(out.get("report").asInstanceOf[Integer].intValue)
-    out.put("wh_rows", Main.jlist(Seq("orders", "lineitem").map(t =>
-      Long.box(spark.read.parquet(s"$wh/$t.parquet").count()))))
+    out.put("wh", warehouseDigest())
     val id = rep.get("readback").asLong()
+    val t0 = System.nanoTime()
     try {
       val m = whCat.childrenClosure(spark, wh,
         Map("orders" -> Common.ids(spark, "o_orderkey", Seq(id))))
@@ -265,12 +279,34 @@ final class IngestNotify(spark: SparkSession, tr: Tracer, cfg: JsonNode)
     } catch {
       case e: Exception => out.put("readback_error", Main.errorText(e))
     }
+    out.put("readback_ns", Long.box(System.nanoTime() - t0))
     drainProgress(op)
   }
 
+  /** {table: [rows, key sum, sha-256 of its rows]}, each row written as
+    * `column=value` pairs in column-name order, nulls included. */
+  private def warehouseDigest(): JMap[String, AnyRef] = {
+    val m = new JMap[String, AnyRef]()
+    Seq("orders", "lineitem").foreach { t =>
+      val df = spark.read.parquet(s"$wh/$t.parquet")
+      val cols = df.columns.sorted.toSeq
+      val rows = df.select(cols.map(col): _*).collect()
+      m.put(t, Main.jlist(Seq(Long.box(rows.length.toLong),
+        Long.box(rows.map(Common.key(t, _)).sum),
+        Common.sha256(rows.toSeq.map(r => cols.indices
+          .map(i => s"${cols(i)}=${Common.text(r.get(i))}")
+          .mkString("\t"))))))
+    }
+    m
+  }
+
+  /** The warm-up report's outputs, checked like a timed report's. Its
+    * readback is the session's first read of the warehouse. */
+  private var warmupOut: JMap[String, AnyRef] = _
+
   def warmup(): Unit = {
-    val out = load(0).outputs
-    check(-1, out)
+    warmupOut = load(0).outputs
+    check(-1, warmupOut)
     next = 1
   }
 
@@ -286,6 +322,7 @@ final class IngestNotify(spark: SparkSession, tr: Tracer, cfg: JsonNode)
     check(i, out)
 
   override def finish(out: JMap[String, AnyRef]): Unit = {
+    out.put("warmup", warmupOut)
     out.put("stream_progress", progress)
     query.stop()
   }
@@ -330,12 +367,8 @@ final class CorpusDedup(spark: SparkSession, tr: Tracer, cfg: JsonNode)
     (Common.fetch(tr, packed), pairs)
   }
 
-  private def digest(rows: Array[Row]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    rows.map(_.mkString(",")).sorted
-      .foreach(s => md.update((s + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+  private def digest(rows: Array[Row]): String =
+    Common.sha256(rows.toSeq.map(_.mkString(",")))
 
   private var nDocs = 0L
 
