@@ -1,39 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * sys.env("SPARK_GRAFT_SF_DIR") and prints one JSON line with per-query
   * seconds. Results go to the `noop` sink so the full plan executes
   * (a bare count() would let Catalyst prune projections and under-measure).
+  * Gates that throw are listed under `failed`, never timed, and make the
+  * run exit non-zero.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // typed-buffer aggregates (datasketches hll_sketch_agg, k09) fall
-      // back to SORT-BASED aggregation past 128 distinct groups per task
-      // by default — k09's per-(series, day) pass holds 210, and at the
-      // probe's third decade the fallback sorted the whole corpus (2.2x
-      // wall, BENCHLOG r18). Raise the threshold: 4096 sketch buffers
-      // (~4-16 KB dense each at lgK<=12) is tens of MB per task, far
-      // under executor memory at 32 partitions.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(32)
+    val spark = GraftSession.local(cpus)
     // Untimed warmup: JIT/codegen/parquet-footer costs land here, not on
     // the alphabetically-first query.
     try SparkEntry.queries("q01_summary_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup failed: ${e.getMessage}")
+    }
     // SparkEntry.querySubset: optional SPARK_GRAFT_ONLY re-measurement
     // subset (absent = all; driver mode).
     // Per query: total seconds, plus the seconds spent inside
@@ -49,22 +34,33 @@ object Bench {
     // line still gets the bench object (ADVICE r18).
     val wantState = sys.env.contains("GRAFT_STREAM_STATE")
     val stateRows = scala.collection.mutable.Map.empty[String, Long]
+    // A gate that throws is a FAILURE, never a timing: it is listed in
+    // `failed`, left out of `queries`/`total`, and the run exits non-zero.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.querySubset.toSeq.sortBy(_._1)
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       graft.util.GateTimer.reset()
       if (wantState) SparkEntry.stStateRows.clear()
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          false
+        }
       if (wantState && !SparkEntry.stStateRows.isEmpty) {
         import scala.jdk.CollectionConverters._
         stateRows(name) =
           SparkEntry.stStateRows.values.asScala.map(_.longValue).max
       }
-      (name, (System.nanoTime() - t0) / 1e9, graft.util.GateTimer.exportSeconds)
+      if (ok) Some((name, (System.nanoTime() - t0) / 1e9,
+        graft.util.GateTimer.exportSeconds))
+      else None
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v, _) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
     // only gates that actually exported (others would be noise-y zeros)
@@ -113,11 +109,8 @@ object Bench {
       } catch { case _: Throwable => false }
     val control = results.collectFirst {
       case ("q19_star_join_agg", v, _) => v }.getOrElse(-1.0)
-    // SPARK_GRAFT_CPUS is numeric under the driver contract, but emit
-    // valid JSON even for e.g. "*" (quote non-numeric values)
-    val cpusJson = if (cpus.matches("[0-9]+")) cpus else "\"" + cpus + "\""
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","git_head":"$sha","git_dirty":$dirty,"control_q19_sec":$control%.3f,"cpus":$cpusJson,"queries":$qs,"export_s":$ex,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","git_head":"$sha","git_dirty":$dirty,"control_q19_sec":$control%.3f,"cpus":$cpus,"queries":$qs,"export_s":$ex,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // Supplementary line second: line-order consumers (first JSON line)
     // read the canonical bench object regardless of GRAFT_STREAM_STATE.
@@ -133,7 +126,7 @@ object Bench {
     // the totals. Additive only: first-JSON-line consumers still get the
     // canonical object above, and the persisted BENCH_LOCAL.json below
     // still carries the full per-query map.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","control_q19_sec":$control%.3f,"cpus":$cpusJson,"n":${results.size},"git_head":"$sha","git_dirty":$dirty,"sf":"$sfDir","summary":true}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","control_q19_sec":$control%.3f,"cpus":$cpus,"n":${results.size},"failed":$failedJson,"git_head":"$sha","git_dirty":$dirty,"sf":"$sfDir","summary":true}""")
     // Stdout capture windows can clip the (long) JSON line mid-object —
     // the r11 bench artifact lost its whole first family that way. Also
     // persist the full line in-tree so every round has a complete
@@ -144,5 +137,6 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

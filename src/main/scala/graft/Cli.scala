@@ -22,25 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (after, until] ISO bounds — exclusive lower, inclusive upper, the
   * reference's dump_iter window. `init`/`empty`/`cleanup` are the
   * kcidb-db-init/-empty/-cleanup analogs over the parquet warehouse
-  * `load`/`merge` write (sources/Warehouse lifecycle). Session config
-  * matches Verify/Bench so CLI results are the gate results.
+  * `load`/`merge` write (sources/Warehouse lifecycle). The session is
+  * Verify/Bench's [[GraftSession]], so CLI results are the gate results.
   */
 object Cli {
 
   private[graft] def session(sfDir: String): SparkSession = {
     System.setProperty("graft.gate.sfTag", new java.io.File(sfDir).getName)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    GraftSession.local(GraftSession.cpus(4))
   }
 
   /** Dispatch one command; returns the result frame for commands that

@@ -6,13 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSim, DotProduct}
 
 /** Session extension registering graft's native expressions as SQL
-  * functions, so `spark.sql("SELECT cosine_sim(a, b) ...")` works anywhere
-  * the library is on the classpath:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
+  * functions, so `spark.sql("SELECT cosine_sim(a, b) ...")` works in any
+  * session built with `spark.sql.extensions=graft.GraftExtensions`
+  * ([[GraftSession.local]] sets it).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

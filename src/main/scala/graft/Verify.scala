@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     // oracles (s07/s08/s09/st05) embed SparkEntry.gateModelSqlPath,
     // which must name the same per-sf dir the gates write this run.
     System.setProperty("graft.gate.sfTag", new java.io.File(sfDir).getName)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries ns timestamps; read as long and normalize
-      // in graft.sources.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // typed-buffer aggregates (datasketches hll_sketch_agg, k09) fall
-      // back to SORT-BASED aggregation past 128 distinct groups per task
-      // by default — k09's per-(series, day) pass holds 210, and at the
-      // probe's third decade the fallback sorted the whole corpus (2.2x
-      // wall, BENCHLOG r18). Raise the threshold: 4096 sketch buffers
-      // (~4-16 KB dense each at lgK<=12) is tens of MB per task, far
-      // under executor memory at 32 partitions.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Delete each query's target dir up front AND on failure: AQE can fail a
     // query in stage materialization before the overwrite clears the dir, and

@@ -82,33 +82,36 @@ object Dedup {
       .select("id", "g")
       .distinct()
 
-  /** Optional document-frequency cap on exploded (id, g) shingles: grams
-    * in more than `maxDf` docs leave the pipeline before any signature
-    * math (df computed once — one extra shuffle on the gram), so corpus-
-    * wide boilerplate can no longer align signatures and blow a
-    * (band, bucket) key up quadratically. None keeps exact semantics. */
-  private def dfCapped(all: DataFrame, maxDf: Option[Int]): DataFrame =
-    maxDf match {
-      case None => all
-      case Some(cap) =>
-        // localCheckpoint (the q46 memoization discipline): the capped
-        // index is re-executed by every downstream consumer (banding +
-        // both exact-verify sides / probes + corpus + sizes), and
-        // without memoization EACH re-execution would re-aggregate df
-        // over the whole exploded corpus — measured 2-3x on the d02/d04
-        // gates. The surviving-g frame is |G|-bounded (distinct
-        // shingles, not corpus rows), exactly the frame a production
-        // run would persist as the boilerplate blocklist; with it
-        // materialized, a re-execution costs scan+explode+join(small).
-        val keep = all.groupBy("g").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") <= cap).select("g")
-          .localCheckpoint()
-        // (checkpointing the JOINED index too was measured: ~5% at
-        // sf0.1, not worth pinning the whole (id, g) frame in memory)
-        all.join(keep, "g")
-    }
+  /** The corpus-derived document-frequency cap ([[autoDfCap]]) on the
+    * exploded (id, g) shingles of `docs`: grams in more than the cap's
+    * docs leave the pipeline before any signature math (df computed
+    * once — one extra shuffle on the gram), so corpus-wide boilerplate
+    * can no longer align signatures and blow a (band, bucket) key up
+    * quadratically. Signatures, banding, exact verification and set
+    * sizes then all see the capped shingle sets (a documented
+    * approximation, standard near-dup practice). */
+  private def dfCapped(docs: DataFrame, idCol: String, textCol: String,
+                       n: Int): DataFrame = {
+    val all = explodedShingles(docs, idCol, textCol, n)
+    val cap = math.min(Int.MaxValue.toLong, autoDfCap(docs, textCol, n)).toInt
+    // localCheckpoint (the q46 memoization discipline): the capped
+    // index is re-executed by every downstream consumer (banding +
+    // both exact-verify sides / probes + corpus + sizes), and
+    // without memoization EACH re-execution would re-aggregate df
+    // over the whole exploded corpus — measured 2-3x on the d02/d04
+    // gates. The surviving-g frame is |G|-bounded (distinct
+    // shingles, not corpus rows), exactly the frame a production
+    // run would persist as the boilerplate blocklist; with it
+    // materialized, a re-execution costs scan+explode+join(small).
+    val keep = all.groupBy("g").agg(count(lit(1)).as("__df"))
+      .filter(col("__df") <= cap).select("g")
+      .localCheckpoint()
+    // (checkpointing the JOINED index too was measured: ~5% at
+    // sf0.1, not worth pinning the whole (id, g) frame in memory)
+    all.join(keep, "g")
+  }
 
-  /** Default posting-length budget of the `*Auto` df caps: a shingle
+  /** Posting-length budget of the `*Auto` df caps: a shingle
     * may occupy at most this many TYPICAL DOCUMENTS' worth of index
     * mass before it is boilerplate. */
   val DefaultDfBudget: Int = 4
@@ -124,23 +127,24 @@ object Dedup {
     * index size R with constant multiplier D.
     *
     * D derives from the corpus's own shape, not a magic number:
-    * D = ceil(dfBudget × avgShinglesPerDoc), i.e. a shingle whose
-    * posting list outweighs `dfBudget` typical documents is corpus
+    * D = ceil(DefaultDfBudget × avgShinglesPerDoc), i.e. a shingle whose
+    * posting list outweighs DefaultDfBudget typical documents is corpus
     * boilerplate, not pairwise signal. Doc length is scale-invariant,
     * so D is O(1) in corpus size and the linear bound holds at any
     * scale. Recall: a true near-dup pair is lost only when EVERY shared
     * shingle is boilerplate — the documented approximation of this
     * family; identical-doc clusters larger than D (whose every shingle
     * has df ≥ cluster size) belong to the exact [[fingerprint]] dedup
-    * pass (d01), which runs first in the pipeline ordering. At the driver corpora the derived
-    * cap (≈210 = 4×52 shingles/doc) is a NO-OP — max observed df is 7
-    * at sf0.01 / 25 at sf0.1 (DedupSpec pins the margin) — so the gate
-    * oracles stay exact while the gates run the production default.
+    * pass (d01), which runs first in the pipeline ordering. At the
+    * gate corpora the derived cap (≈210 = 4×52 shingles/doc) is a
+    * NO-OP — max observed df is 7 at sf0.01 / 25 at sf0.1 (DedupSpec
+    * pins the margin) — so the gate oracles stay exact while the gates
+    * run the production default.
     *
     * The derivation is the d05 `*Auto` discipline exactly: ONE small
     * aggregate action computes the knob (as `embeddingNearDupsAuto`
     * derives bits from `emb.count()`), then the pipeline runs the
-    * SAME plan shape as the manual cap — the scalar never rides the
+    * cap as a plain literal filter — the scalar never rides the
     * plan, so the nested-loop and broadcast-hint sweeps stay clean.
     * The knob scan is MAP-SIDE ONLY and HOF-free: avgShinglesPerDoc is
     * measured as the average shingle POSITION count max(|toks|−n+1, 1)
@@ -153,19 +157,14 @@ object Dedup {
     * documented HOF trap): measured 4.4 s vs ~0.3 s for this scan at
     * sf0.1. At 100 TB the pass amortizes across the run (or derive
     * from corpus stats you already track). */
-  def autoDfCap(docs: DataFrame, textCol: String, n: Int,
-                dfBudget: Int = DefaultDfBudget): Long = {
+  private[graft] def autoDfCap(docs: DataFrame, textCol: String,
+                                n: Int): Long = {
     val r = docs
       .agg(avg(greatest(size(tokens(col(textCol))) - (n - 1), lit(1)))
         .as("__avg"))
       .head().getDouble(0)
-    math.ceil(r * dfBudget).toLong
+    math.ceil(r * DefaultDfBudget).toLong
   }
-
-  private def autoCapInt(docs: DataFrame, textCol: String, n: Int,
-                         dfBudget: Int): Option[Int] =
-    Some(math.min(Int.MaxValue.toLong,
-      autoDfCap(docs, textCol, n, dfBudget)).toInt)
 
   /** Rotate a 64-bit column left by `s` bits (s in [0, 63]). */
   private def rotl64(c: Column, s: Int): Column =
@@ -229,39 +228,16 @@ object Dedup {
   private def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
-  /** MinHash+LSH candidate pairs with exact-Jaccard verification.
-    * Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-    * Candidates come only from shared (band, band-hash) buckets; the exact
-    * verification joins the shingle sets back by id, so the banding join
-    * itself carries just (id, band, bh).
-    *
-    * @param maxDf optional document-frequency cap mirroring
-    *              [[ngramJaccardPairs]]: shingles in more than `maxDf` docs
-    *              leave the pipeline BEFORE signatures, so boilerplate
-    *              shared by a large fraction of the corpus can no longer
-    *              align signatures and blow one (band, bucket) key up
-    *              quadratically. Signatures, banding, AND the exact verify
-    *              then all see the capped shingle sets (a documented
-    *              approximation, standard near-dup practice); None keeps
-    *              exact semantics. */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      k: Int, nBands: Int, threshold: Double,
-                      maxDf: Option[Int] = None): DataFrame =
-    minhashCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n = 3), maxDf),
-      k, nBands, threshold)
-
-  /** [[minhashNearDups]] with the PRODUCTION df-cap default: the
-    * corpus-derived boilerplate cap of [[autoDfCap]] is ON (a no-op
-    * at gate corpora — DedupSpec pins the margin — and the linear-work
-    * guard at 100 TB). The d05 `*Auto` discipline: gates run this. */
+  /** MinHash+LSH candidate pairs with exact-Jaccard verification over
+    * the df-capped shingle sets ([[dfCapped]]; the cap is a no-op at
+    * gate corpora — DedupSpec pins the margin — and the linear-work
+    * guard at 100 TB). Returns (id_a, id_b, jaccard) with id_a < id_b,
+    * jaccard >= threshold. Candidates come only from shared (band,
+    * band-hash) buckets; the exact verification joins the shingle sets
+    * back by id, so the banding join itself carries just (id, band, bh). */
   def minhashNearDupsAuto(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int, nBands: Int, threshold: Double,
-                          dfBudget: Int = DefaultDfBudget): DataFrame =
-    minhashCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n = 3),
-        autoCapInt(docs, textCol, 3, dfBudget)),
-      k, nBands, threshold)
+                          k: Int, nBands: Int, threshold: Double): DataFrame =
+    minhashCore(dfCapped(docs, idCol, textCol, n = 3), k, nBands, threshold)
 
   private def minhashCore(exploded: DataFrame, k: Int, nBands: Int,
                           threshold: Double): DataFrame = {
@@ -309,30 +285,18 @@ object Dedup {
     * (d09) is the exact n-gram-overlap test; this is its MinHash+LSH
     * sibling for paraphrase-level leakage.
     *
-    * Scale shape = [[minhashNearDups]]' exactly — signatures are
+    * Scale shape = [[minhashNearDupsAuto]]' exactly — signatures are
     * computed ONCE over the union (one aggregation pass), the banding
     * equi-join is the only candidate generator (never eval × train), and
     * the split membership rides the n-row signature frame as a flag, so
     * restricting candidates to cross-split pairs costs one narrow join
     * on the doc id and a filter on each banded side. Exact verification
     * joins shingle sets back per candidate. */
-  def crossMinhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                           evalFilter: Column, k: Int, nBands: Int,
-                           threshold: Double,
-                           maxDf: Option[Int] = None): DataFrame =
-    crossMinhashCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n = 3), maxDf),
-      docs, idCol, evalFilter, k, nBands, threshold)
-
-  /** [[crossMinhashNearDups]] with the production df-cap default —
-    * see [[minhashNearDupsAuto]]. */
   def crossMinhashNearDupsAuto(docs: DataFrame, idCol: String,
                                textCol: String, evalFilter: Column,
-                               k: Int, nBands: Int, threshold: Double,
-                               dfBudget: Int = DefaultDfBudget): DataFrame =
-    crossMinhashCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n = 3),
-        autoCapInt(docs, textCol, 3, dfBudget)),
+                               k: Int, nBands: Int,
+                               threshold: Double): DataFrame =
+    crossMinhashCore(dfCapped(docs, idCol, textCol, n = 3),
       docs, idCol, evalFilter, k, nBands, threshold)
 
   private def crossMinhashCore(exploded: DataFrame, docs: DataFrame,
@@ -445,35 +409,19 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard similarity for pairs from a bounded probe subset,
+  /** n-gram Jaccard similarity for pairs from a bounded probe subset,
     * via an inverted-index equi-join: explode shingles on both sides, join
     * on the shingle (the shuffle key), and count matches per (id_a, id_b) —
     * that count IS |A ∩ B| because shingle arrays are distinct, and
     * |A ∪ B| = |A| + |B| − |A ∩ B|. Only pairs sharing at least one shingle
     * are ever generated — never a probe × corpus nested loop — and the
-    * per-pair work is a counting aggregate with map-side combine. */
-  /** @param maxDf optional document-frequency cap: shingles appearing in
-    *               more than `maxDf` docs are dropped from the index —
-    *               standard MinHash/all-pairs practice that removes the
-    *               skewed hot-shingle join tail at scale. Jaccard is then
-    *               computed over the capped shingle sets (a documented
-    *               approximation); None keeps exact semantics. */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int, probeFilter: Column, threshold: Double,
-                        maxDf: Option[Int] = None): DataFrame =
-    ngramJaccardCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n), maxDf),
-      docs, idCol, textCol, n, probeFilter, threshold)
-
-  /** [[ngramJaccardPairs]] with the production df-cap default —
-    * see [[minhashNearDupsAuto]]. */
+    * per-pair work is a counting aggregate with map-side combine.
+    * Jaccard is exact over the df-capped shingle sets ([[dfCapped]]), a
+    * no-op at gate corpora. */
   def ngramJaccardPairsAuto(docs: DataFrame, idCol: String,
                             textCol: String, n: Int, probeFilter: Column,
-                            threshold: Double,
-                            dfBudget: Int = DefaultDfBudget): DataFrame =
-    ngramJaccardCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n),
-        autoCapInt(docs, textCol, n, dfBudget)),
+                            threshold: Double): DataFrame =
+    ngramJaccardCore(dfCapped(docs, idCol, textCol, n),
       docs, idCol, textCol, n, probeFilter, threshold)
 
   private def ngramJaccardCore(index: DataFrame, docs: DataFrame,
@@ -517,29 +465,17 @@ object Dedup {
     * inside a much longer one has Jaccard ≈ |small|/|big| (arbitrarily
     * low) but containment ≈ 1. The quote/snippet/boilerplate-extract
     * duplicate class a corpus pipeline needs alongside [[d04's
-    * symmetric pairs|ngramJaccardPairs]]. Pairs are generated ONLY by
+    * symmetric pairs|ngramJaccardPairsAuto]]. Pairs are generated ONLY by
     * the shared-shingle equi-join (the d04/d16 blocking rule — never
     * doc × doc); direction is decided by shingle-set size (ties keep
     * the smaller id on the small side, which the `id_a < id_b` join
-    * orientation already provides). `maxDf` is the usual hot-shingle
-    * guard at corpus scale. Emits (id_small, id_big, inter, sz_small,
-    * sz_big, containment >= threshold). */
-  def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, threshold: Double,
-                       maxDf: Option[Int] = None): DataFrame =
-    containmentCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n), maxDf),
-      threshold)
-
-  /** [[containmentPairs]] with the production df-cap default —
-    * see [[minhashNearDupsAuto]]. */
+    * orientation already provides). The df cap ([[dfCapped]]) is the
+    * usual hot-shingle guard at corpus scale. Emits (id_small, id_big,
+    * inter, sz_small, sz_big, containment >= threshold). */
   def containmentPairsAuto(docs: DataFrame, idCol: String,
-                           textCol: String, n: Int, threshold: Double,
-                           dfBudget: Int = DefaultDfBudget): DataFrame =
-    containmentCore(
-      dfCapped(explodedShingles(docs, idCol, textCol, n),
-        autoCapInt(docs, textCol, n, dfBudget)),
-      threshold)
+                           textCol: String, n: Int,
+                           threshold: Double): DataFrame =
+    containmentCore(dfCapped(docs, idCol, textCol, n), threshold)
 
   private def containmentCore(index: DataFrame,
                               threshold: Double): DataFrame = {
@@ -764,16 +700,8 @@ object Dedup {
     * each round (the standard Spark iterative-algorithm discipline).
     * Returns (id, cluster) for every vertex appearing in `pairs`.
     */
-  /** Round count of the most recent [[connectedComponents]] call —
-    * probe/spec instrumentation for the r19 pointer-halving term. */
-  private[graft] var lastCcIters: Int = 0
-
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 20,
-                          halving: Boolean = true,
-                          roundsPerProbe: Int = 1): DataFrame = {
-    require(roundsPerProbe >= 1 && roundsPerProbe <= 4,
-      s"connectedComponents: roundsPerProbe out of range: $roundsPerProbe")
+  def connectedComponents(pairs: DataFrame, aCol: String,
+                          bCol: String): DataFrame = {
     // Materialize the edge list once: every propagation round (and every
     // convergence probe) joins against it, and recomputing the upstream
     // candidate-generation pipeline per round would dominate the loop.
@@ -781,8 +709,8 @@ object Dedup {
     // checkpoint was tried (guide §2.4 — it would let every round's
     // join skip the edge-side exchange) and REVERTED: under AQE,
     // Dataset.localCheckpoint materializes to a LogicalRDD with
-    // UnknownPartitioning (verified in the round-plan dump), so the
-    // partitioning cannot survive the checkpoint and the round joins
+    // UnknownPartitioning (verified in r20's per-round plan dump), so
+    // the partitioning cannot survive the checkpoint and the round joins
     // re-exchange regardless; the extra up-front shuffle bought
     // nothing. Removing the per-round edge exchange at scale needs a
     // bucketed/persisted edge table, not an in-session checkpoint.
@@ -794,12 +722,13 @@ object Dedup {
       .localCheckpoint()
     var converged = false
     var iter = 0
-    // One propagation round over `cur` (id, label): the new label per id
-    // plus the OLD one (the `own`-tagged row), so the convergence test is
-    // a join-free filter over the checkpointed frame.
-    def round(cur: DataFrame): DataFrame = {
+    // One propagation round per convergence probe (batching rounds per
+    // probe measured a wash, OPTIMIZATION_r20.md). Each round yields the
+    // new label per id plus the OLD one (the `own`-tagged row), so the
+    // convergence test is a join-free filter over the checkpointed frame.
+    while (!converged && iter < CcMaxIter) {
       val propagated = edges
-        .join(cur, edges("src") === cur("id"))
+        .join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("label"), lit(false).as("own"))
       // r19 pointer-halving term: each id ALSO adopts its label's label
       // (label-of-label), so label chains collapse in O(log diameter)
@@ -809,55 +738,34 @@ object Dedup {
       // drops. Each round that used to pay (plan + codegen + job) ×
       // diameter now pays it × log — the dominant cost of this loop at
       // gate scale is per-round DRIVER work, not data.
-      val ptrTerm =
-        if (!halving) Seq.empty
-        else Seq(cur.select(col("id"), col("label").as("mid"))
-          .join(cur.select(col("id").as("mid"),
-            col("label").as("plabel")), Seq("mid"))
-          .select(col("id"), col("plabel").as("label"),
-            lit(false).as("own")))
-      val agg = (Seq(cur.withColumn("own", lit(true)), propagated) ++
+      val ptrTerm = labels.select(col("id"), col("label").as("mid"))
+        .join(labels.select(col("id").as("mid"),
+          col("label").as("plabel")), Seq("mid"))
+        .select(col("id"), col("plabel").as("label"), lit(false).as("own"))
+      // r19: LAZY — the convergence probe below is the round's one
+      // action and materializes the checkpoint as it runs: one job per
+      // probe, not a checkpoint job plus a probe job.
+      val next = Seq(labels.withColumn("own", lit(true)), propagated,
           ptrTerm)
         .reduce(_ union _)
         .groupBy("id")
         .agg(min(col("label")).as("label"),
           min(when(col("own"), col("label"))).as("old"))
-      // per-round plan evidence hook (no-op unless GRAFT_ROUND_PLAN_DIR)
-      graft.util.RoundPlan.dump(agg, s"cc_round$iter")
-      // r19: LAZY — the convergence probe below is the batch's one
-      // action and materializes the checkpoints as it runs: one job
-      // per probe, not a checkpoint job plus a probe job.
-      agg.localCheckpoint(eager = false)
-    }
-    while (!converged && iter < maxIter) {
-      // r20 (VERDICT r19 item 4): `roundsPerProbe` rounds per
-      // convergence probe is SOUND (the probe checks the batch's last
-      // round; "that round changed nothing" IS the fixpoint, so the
-      // emitted labels are identical — at most k−1 extra no-op rounds
-      // run before the loop notices) but MEASURED a wash: CcProbe
-      // interleaved ×3 at sf0.1 read rpp=2 slightly faster on the
-      // even-round shallow d05 graph (2.48/1.86/1.76 vs 3.09/2.10/1.80)
-      // and SLOWER on the odd-round d04 text chains (4.97/4.41/4.35 vs
-      // 3.89/4.03/3.53, 9→10 rounds) — the extra no-op round's full
-      // join+aggregate outweighs the saved probe plan+dispatch. Default
-      // stays 1; the knob remains for callers whose graphs converge on
-      // even round counts.
-      var next: DataFrame = null
-      var r = 0
-      while (r < roundsPerProbe && iter < maxIter) {
-        next = round(labels)
-        labels = next.select("id", "label")
-        r += 1; iter += 1
-      }
+        .localCheckpoint(eager = false)
+      labels = next.select("id", "label")
+      iter += 1
       // old is null only if an id arrived purely via propagation — cannot
       // happen while `labels` seeds every vertex of the symmetrized edge
       // list, but treat it as "changed" so the invariant is not load-bearing.
       converged =
         next.filter(col("old").isNull || col("label") < col("old")).isEmpty
     }
-    lastCcIters = iter
     labels.select(col("id"), col("label").as("cluster"))
   }
+
+  /** Round cap of [[connectedComponents]]: pointer halving converges in
+    * O(log diameter) rounds, far below this on near-dup graphs. */
+  private val CcMaxIter = 20
 
   /** Semantic dedup, SemDeDup-style (Abbas et al. 2023, arXiv:2303.09540):
     * k-means-cluster the embeddings, then drop every vector that has a

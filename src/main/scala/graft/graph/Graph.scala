@@ -113,7 +113,7 @@ object Graph {
         coalesce(col("dang"), lit(true)).as("dang"),
         expr(s"${unit}L div n_nodes").as("r"))
       .localCheckpoint()
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contribs = ewd.join(ranks.select("node", "r"),
           ewd("src") === col("node"))
         .select(col("dst"), expr("r div outdeg").as("c"))
@@ -130,11 +130,6 @@ object Graph {
             s"(${dampDen}L * n_nodes)) + ((${dampNum}L * " +
             s"(coalesce(in_sum, 0L) + (dmass div n_nodes))) div " +
             s"${dampDen}L)").as("r"))
-      // per-round plan evidence (VERDICT r19 items 4/8): the loop sits
-      // behind localCheckpoint, so only this pre-checkpoint dump can
-      // show that the r19 dangling-flag round carries NO out-degree
-      // aggregate / anti-join. No-op unless GRAFT_ROUND_PLAN_DIR.
-      graft.util.RoundPlan.dump(next, s"pagerank_round$i")
       ranks = next.localCheckpoint()
     }
     val indeg = e.groupBy(col("dst").as("node"))
@@ -280,8 +275,6 @@ object Graph {
         .select(col("node"),
           expr(s"(cast(coalesce($c, 0L) as decimal(38,0)) * " +
             s"${unit}L) div s").as(c))
-      // per-half-round plan evidence (no-op unless GRAFT_ROUND_PLAN_DIR)
-      graft.util.RoundPlan.dump(normed, s"hits_halfround_$c")
       normed.localCheckpoint()
     }
     for (_ <- 1 to iters) {

@@ -55,7 +55,8 @@ object Knn {
   }
 
   /** Drop (table, bucket) keys holding more than `cap` rows — the LSH
-    * analog of d02/d04's `maxDf` hot-shingle cap (dedup/Dedup.scala). A
+    * analog of d02/d04's document-frequency hot-shingle cap
+    * (`Dedup.autoDfCap`). A
     * degenerate bucket (all-zero vectors, near-constant corpora) holds a
     * corpus-scale fraction of rows, so its self-join term is quadratic
     * while its candidates carry the least signal (the bucket fails to

@@ -19,25 +19,46 @@ object Tables {
 
   /** Per-session RELATION cache (r19, guide §6's listing/schema-cache
     * class): `spark.read.parquet` pays ~100-200 ms of driver-side file
-    * listing + footer schema inference PER CALL (measured,
-    * tools/LoadProbe — ~30 s across a full 182-gate bench run), for a
-    * catalog of ten immutable tables. Caching the ANALYZED RELATION —
-    * a lazy plan, never data; every action still scans the parquet —
-    * makes a repeated load free, exactly like a catalog table. Keyed by
-    * (session, dir, name): testdata dirs are immutable for a session's
-    * lifetime (the generator writes once; warehouse paths do NOT go
-    * through Tables), and the map holds a handful of tiny plan objects
-    * per session. */
+    * listing + footer schema inference PER CALL (~30 s across a full
+    * 182-gate bench run), for a catalog of ten tables. Caching the
+    * ANALYZED RELATION — a lazy plan, never data; every action still
+    * scans the parquet — makes a repeated load free, exactly like a
+    * catalog table. Keyed by (session, dir, name), and each entry holds
+    * the leaf-file listing (path, size, mtime) it was read under: every
+    * load re-lists the directory (no footer reads) and reads again when
+    * the listing changed. Testdata dirs never change, but `Catalog.load`
+    * sends warehouse dirs through here too, and those are rewritten in
+    * place — a relation over the old files would fail its next scan
+    * with FILE_NOT_EXIST. */
+  private type Listing = Seq[(String, Long, Long)]
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
+      (SparkSession, String, String), (Listing, DataFrame)]()
+
+  /** Leaf files under `path` as (path, size, mtime); empty when the path
+    * does not exist (the read then raises Spark's own error). */
+  private def listing(spark: SparkSession, path: String): Listing = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(p: org.apache.hadoop.fs.Path): Listing =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) leaves(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    try leaves(root).sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
 
   /** The RAW (un-normalized) cached relation — the streaming file
     * source peeks this schema, which must be the parquet's physical
     * shape, not the normalized one. */
-  def raw(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationCache.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+  def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val files = listing(spark, path)
+    relationCache.compute((spark, dir, name), (_, cached) =>
+      if (cached != null && cached._1 == files) cached
+      else (files, spark.read.parquet(path)))._2
+  }
 
   /** Every load dispatches through the table's shape normalizer, so NO
     * call site can see a generator-drifted physical type (the r11

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Third-decade octave probe for the two-level IVF build (VERDICT r18
@@ -42,15 +42,7 @@ object IvfScaleProbe {
       "usage: IvfScaleProbe rows [auto|cmp|fixp|fixpcmp]")
     val n = args(0).toLong
     val mode = if (args.length > 1) args(1) else "auto"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     import graft.sim.{CellKnobs, Ivf, Knn}
 
     def synth(rows: Long): DataFrame =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -48,15 +47,7 @@ object KeyedTtlProbe {
       if (args.length > 2) args(2).replace('_', ' ') else "2 hours"
     val skipOneShot = args.length > 3 && args(3) == "skipOneShot"
     val ttlMs = ttlDays * 86400L * 1000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     graft.streaming.Streams.applyStateStoreProviderEnv(spark)
     import spark.implicits._
     import graft.streaming.Streams

@@ -1,13 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r19 optimization instrument: for each named gate, dump the physical
   * plan (`explain("formatted")`) to a file and time `reps` noop-sink
-  * executions under EXACTLY the bench session (master/partitions/confs
-  * mirror graft.Bench so a reading here is comparable to BENCH_LOCAL
-  * numbers). Args: sfDir outDir reps query [query...]; `reps 0` dumps
-  * plans only.
+  * executions under EXACTLY the bench session ([[graft.GraftSession]],
+  * so a reading here is comparable to BENCH_LOCAL numbers). Args: sfDir
+  * outDir reps query [query...]; `reps 0` dumps plans only.
   *
   * Per rep it prints wall seconds plus the overhead decomposition the
   * 17 MB gate inputs make decisive (at sf0.1 nearly all gate time is
@@ -24,19 +21,7 @@ object PlanDump {
     val outDir = args(1)
     val reps = args(2).toInt
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4096")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     val jobs = new java.util.concurrent.atomic.AtomicLong

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sim.{CellKnobs, Ivf, ModelStore, Pq}
 
@@ -26,16 +25,7 @@ object PqProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = if (args.length > 1) args(1) else "phases"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     val emb = graft.sources.Tables(spark, dir, "embeddings")
     val n = emb.count()
     val dim = emb.select(max(size(col("embedding")))).head().getInt(0)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run a single SparkEntry query against a scale-factor dir and
   * dump it to parquet (args: queryName sfDir outPath [explain]). */
 object RunOne {
@@ -9,16 +7,7 @@ object RunOne {
     val name = args(0)
     val sfDir = args(1)
     val outPath = args(2)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(8)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     if (args.length > 3 && args(3) == "explain") df.explain("formatted")
     df.coalesce(1).write.mode("overwrite").parquet(outPath)

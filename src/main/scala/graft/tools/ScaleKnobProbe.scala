@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builder-side probe for the SRP-LSH scale knobs (args: sfDir
@@ -27,16 +26,7 @@ object ScaleKnobProbe {
     // derived (c, nprobe) — the TwoLevelMinCells crossover evidence.
     val mode = if (args.length > 1) args(1) else ""
     if (mode == "ivf" || mode == "ivfcmp") { ivfOnly(dir, mode); return }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     val emb = graft.sources.Tables(spark, dir, "embeddings")
     val n = emb.count()
     import graft.sim.LshKnobs
@@ -98,16 +88,7 @@ object ScaleKnobProbe {
   }
 
   private def ivfOnly(dir: String, mode: String): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     val emb = graft.sources.Tables(spark, dir, "embeddings")
     val n = emb.count()
     def timed(f: => Unit): Double = {

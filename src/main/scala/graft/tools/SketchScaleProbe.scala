@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Third-decade (1000×) octave probe for the bounded-state sketch /
@@ -25,13 +25,7 @@ import org.apache.spark.sql.functions._
 object SketchScaleProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SketchScaleProbe rows [rows...]")
-    val builder = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     // typed-buffer aggregates (datasketches HLL) fall back to
     // SORT-BASED aggregation past
     // spark.sql.objectHashAggregate.sortBased.fallbackThreshold
@@ -39,18 +33,17 @@ object SketchScaleProbe {
     // day) pass holds 210 groups, so at the third decade the fallback
     // sorts the whole corpus. Since r19 the library itself raises the
     // threshold (util.OhaHeadroom in Sketches.mergeProfile /
-    // quantileProfile), so the probe's DEFAULT is a default-conf
-    // session: no explicit threshold — the "no cliff without the
-    // harness conf" check. GRAFT_OHA_FALLBACK=<n> pins the threshold
-    // AND opts out of the auto-raise, so the cliff itself stays
-    // measurable (=128 reproduces the old default-conf behavior).
-    val spark = (sys.env.get("GRAFT_OHA_FALLBACK") match {
-      case Some(n) => builder
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", n)
-        .config(graft.util.OhaHeadroom.OptOutKey, "false")
-      case None => builder
-    }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // quantileProfile), so the probe's DEFAULT unsets the session's
+    // threshold back to Spark's: the "no cliff without the harness conf"
+    // check. GRAFT_OHA_FALLBACK=<n> pins the threshold AND opts out of
+    // the auto-raise, so the cliff itself stays measurable (=128
+    // reproduces the old default-conf behavior).
+    sys.env.get("GRAFT_OHA_FALLBACK") match {
+      case Some(n) =>
+        spark.conf.set(graft.util.OhaHeadroom.Key, n)
+        spark.conf.set(graft.util.OhaHeadroom.OptOutKey, "false")
+      case None => spark.conf.unset(graft.util.OhaHeadroom.Key)
+    }
     import graft.operators.{Eval, Sketches}
 
     def synth(n: Long): DataFrame = {

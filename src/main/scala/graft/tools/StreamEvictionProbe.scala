@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -25,15 +24,7 @@ object StreamEvictionProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val wmDelay = if (args.length > 1) args(1) else "2 hours"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus(32))
     val ev = graft.sources.Tables.events(spark, dir)
     val days = ev.select(date_format(col("ts"), "yyyy-MM-dd").as("day"))
       .distinct().orderBy("day").collect().map(_.getString(0))

@@ -125,15 +125,16 @@ class CliSpec extends AnyFunSuite {
   test("load accepts a bare relative report filename") {
     val cwd = new java.io.File(".").getAbsoluteFile.getParentFile
     val f = java.io.File.createTempFile("graft-rel-", ".json", cwd)
-    f.deleteOnExit()
-    java.nio.file.Files.writeString(f.toPath,
-      """{"version": {"major": 4, "minor": 3},
-          "builds": [{"id": "b1", "origin": "o"}]}""")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-cli-rel").toString
-    // pre-fix this NPE'd inside session(new File(path).getParent)
-    Cli.dispatch(Array("load", f.getName, out, "builds"))
-    assert(spark.read.parquet(s"$out/builds").count() == 1)
+    try {
+      java.nio.file.Files.writeString(f.toPath,
+        """{"version": {"major": 4, "minor": 3},
+            "builds": [{"id": "b1", "origin": "o"}]}""")
+      val out = java.nio.file.Files
+        .createTempDirectory("graft-cli-rel").toString
+      // pre-fix this NPE'd inside session(new File(path).getParent)
+      Cli.dispatch(Array("load", f.getName, out, "builds"))
+      assert(spark.read.parquet(s"$out/builds").count() == 1)
+    } finally f.delete()
   }
 
   test("load ingests a JSON report per type; merge dedups across " +

@@ -36,7 +36,7 @@ class DedupSpec extends AnyFunSuite {
       (20L, "the quick brown fox"),
       (30L, "completely different content discussing catalyst optimizer")
     ).toDF("doc_id", "text")
-    val pairs = Dedup.containmentPairs(d, "doc_id", "text", n = 3,
+    val pairs = Dedup.containmentPairsAuto(d, "doc_id", "text", n = 3,
         threshold = 0.9)
       .collect().map(r => (r.getAs[Long]("id_small"),
         r.getAs[Long]("id_big"), r.getAs[Long]("inter"),
@@ -45,7 +45,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.toSeq == Seq((20L, 10L, 2L, 2L, 10L, 1.0)),
       s"got ${pairs.toSeq}")
     // the same pair is invisible to symmetric Jaccard at 0.9
-    val j = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
+    val j = Dedup.ngramJaccardPairsAuto(d, "doc_id", "text", n = 3,
       probeFilter = lit(true), threshold = 0.9).collect()
     assert(j.isEmpty, "jaccard at 0.9 must not see the subset pair")
     // a lower containment than the threshold is dropped: doc sharing
@@ -54,7 +54,7 @@ class DedupSpec extends AnyFunSuite {
       (10L, "the quick brown fox jumps over the lazy dog again and again"),
       (21L, "the quick brown fox sat still")
     ).toDF("doc_id", "text")
-    assert(Dedup.containmentPairs(half, "doc_id", "text", n = 3,
+    assert(Dedup.containmentPairsAuto(half, "doc_id", "text", n = 3,
       threshold = 0.9).collect().isEmpty)
   }
 
@@ -69,7 +69,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhashNearDups recalls exact dups and verifies with exact jaccard") {
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
+    val pairs = Dedup.minhashNearDupsAuto(docs, "doc_id", "text",
         k = 64, nBands = 16, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(pairs.contains((1L, 2L)), "exact dup must always collide in LSH")
@@ -79,29 +79,6 @@ class DedupSpec extends AnyFunSuite {
       assert(math.abs(j - 7.0 / 13.0) < 1e-12)
     assert(!pairs.keySet.exists { case (a, b) => a == 4L || b == 4L },
       "disjoint doc must produce no verified pair")
-  }
-
-  test("minhashNearDups maxDf drops hot shingles from banding AND verify") {
-    // 12 docs sharing a boilerplate sentence (its trigrams have df=12),
-    // each with a unique tail; plus the base docs (1,2 exact dups).
-    val boiler = (10 to 21).map(i => (i.toLong,
-      "terms and conditions apply to all users of this service " +
-        s"without exception unique$i tail$i")).toDF("doc_id", "text")
-    val corpus = docs.union(boiler)
-    def run(cap: Option[Int]) =
-      Dedup.minhashNearDups(corpus, "doc_id", "text",
-          k = 64, nBands = 16, threshold = 0.3, maxDf = cap)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val uncapped = run(None)
-    assert(uncapped.keySet.exists { case (a, b) => a >= 10L && b >= 10L },
-      "without a cap, boilerplate-heavy docs pair up")
-    val capped = run(Some(10))
-    assert(!capped.keySet.exists { case (a, b) => a >= 10L && b >= 10L },
-      "df>10 boilerplate shingles must leave the banding index")
-    assert(capped.contains((1L, 2L)) &&
-      math.abs(capped((1L, 2L)) - 1.0) < 1e-12,
-      "low-df exact dups survive the cap with exact jaccard")
   }
 
   test("auto df cap is a NO-OP at gate corpora: derived cap clears the " +
@@ -120,25 +97,45 @@ class DedupSpec extends AnyFunSuite {
     assert(cap >= 4 * maxDf,
       s"derived cap $cap too close to observed max df $maxDf — the " +
         "no-op margin eroded; the gate oracles are at risk")
+    // exact semantics by brute force over the uncapped shingle sets:
+    // every (a < b) pair sharing a shingle, with its intersection size
+    val sh = corpus.select(col("doc_id"),
+        Dedup.shingles(Dedup.tokens(col("text")), 3).as("sh"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+    val shared = for {
+      (a, sa) <- sh; (b, sb) <- sh if a < b
+      inter = (sa intersect sb).size if inter > 0
+    } yield (a, b, sa.size, sb.size, inter)
+    def jac(sa: Int, sb: Int, i: Int) = i.toDouble / (sa + sb - i)
     def set(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val probe = col("doc_id") % 10 === 0
     assert(set(Dedup.ngramJaccardPairsAuto(corpus, "doc_id", "text",
         n = 3, probeFilter = probe, threshold = 0.02)) ==
-      set(Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-        n = 3, probeFilter = probe, threshold = 0.02)))
-    assert(set(Dedup.minhashNearDupsAuto(corpus, "doc_id", "text",
-        k = 64, nBands = 16, threshold = 0.3)) ==
-      set(Dedup.minhashNearDups(corpus, "doc_id", "text",
-        k = 64, nBands = 16, threshold = 0.3)))
+      shared.collect { case (a, b, sa, sb, i)
+          if a % 10 == 0 && jac(sa, sb, i) >= 0.02 => (a, b) }.toSet)
+    // MinHash banding is approximate, so exact semantics means: every
+    // emitted pair carries its uncapped jaccard, and every pair at
+    // j >= 0.9 is recalled (the minhash ground-truth spec's bound)
+    val brute = shared.map { case (a, b, sa, sb, i) =>
+      (a, b) -> jac(sa, sb, i) }.toMap
+    val mh = Dedup.minhashNearDupsAuto(corpus, "doc_id", "text",
+        k = 64, nBands = 16, threshold = 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    for ((pair, j) <- mh)
+      assert(math.abs(j - brute(pair)) < 1e-12, s"$pair")
+    val high = brute.filter(_._2 >= 0.9).keySet
+    assert(high.subsetOf(mh.map(_._1).toSet),
+      s"missed high-sim pairs: ${high -- mh.map(_._1)}")
     def cset(df: org.apache.spark.sql.DataFrame) =
       df.select("id_small", "id_big").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cset(Dedup.containmentPairsAuto(corpus, "doc_id", "text",
         n = 3, threshold = 0.9)) ==
-      cset(Dedup.containmentPairs(corpus, "doc_id", "text",
-        n = 3, threshold = 0.9)))
+      shared.collect { case (a, b, sa, sb, i)
+          if i.toDouble / math.min(sa, sb).toDouble >= 0.9 =>
+        if (sa <= sb) (a, b) else (b, a) }.toSet)
   }
 
   test("auto df cap BINDS on corpus-fraction boilerplate: the hot " +
@@ -177,7 +174,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("ngramJaccardPairs computes exact set jaccard via inverted index") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
+    val pairs = Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", n = 3,
         probeFilter = col("doc_id") === 1, threshold = 0.1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(pairs.keySet == Set((1L, 2L), (1L, 3L)),
@@ -189,7 +186,7 @@ class DedupSpec extends AnyFunSuite {
   test("minhash LSH ground truth at sf0.001: exact verify, high-sim recall") {
     import graft.sources.Tables
     val docs = Tables(spark, TestSpark.sf, "documents")
-    val got = Dedup.minhashNearDups(docs, "doc_id", "text",
+    val got = Dedup.minhashNearDupsAuto(docs, "doc_id", "text",
         k = 64, nBands = 16, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
@@ -218,7 +215,7 @@ class DedupSpec extends AnyFunSuite {
       "verify, high-sim recall, no within-split pairs") {
     import graft.sources.Tables
     val docs = Tables(spark, TestSpark.sf, "documents")
-    val got = Dedup.crossMinhashNearDups(docs, "doc_id", "text",
+    val got = Dedup.crossMinhashNearDupsAuto(docs, "doc_id", "text",
         evalFilter = col("doc_id") % 10 === 0,
         k = 64, nBands = 16, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
@@ -730,7 +727,7 @@ class DedupSpec extends AnyFunSuite {
     // column — re-derive the argmax independently
     val docs = graft.sources.Tables(spark, TestSpark.sf, "documents")
     val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3,
+        Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", n = 3,
           probeFilter = col("doc_id") % 10 === 0, threshold = 0.02),
         "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1))

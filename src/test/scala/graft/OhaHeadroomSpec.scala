@@ -9,10 +9,10 @@ import graft.util.OhaHeadroom
 
 /** The ObjectHashAggregate sort-fallback guard as a LIBRARY contract
   * (VERDICT r18 item 1): these tests run in the shared TestSpark
-  * session, which deliberately does NOT set
-  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` — i.e.
-  * exactly the consumer-session shape where the cliff used to be
-  * silent. The fallback-task METRIC (`numTasksFallBacked` on
+  * session and UNSET
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (which
+  * [[GraftSession]] sets) around each check — i.e. exactly the
+  * consumer-session shape where the cliff used to be silent. The fallback-task METRIC (`numTasksFallBacked` on
   * ObjectHashAggregateExec) is the ground truth: the contrast test
   * proves the metric detects a forced fallback, the guarantee test
   * proves the guarded path reports zero in a default-conf session.
