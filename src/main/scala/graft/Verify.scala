@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare. Gates that throw are
+  * printed by name, and the run exits 1 after writing oracle_sql.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -20,14 +21,17 @@ object Verify {
     }
     // SparkEntry.querySubset: optional SPARK_GRAFT_ONLY targeted re-dump
     // subset (absent = all, so driver gate runs always dump everything).
-    SparkEntry.querySubset.foreach { case (name, fn) =>
+    val failed = SparkEntry.querySubset.toSeq.flatMap { case (name, fn) =>
       val target = new java.io.File(s"$outDir/$name")
       wipe(target)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(target.getPath)
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(target.getPath)
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         wipe(target)
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -46,5 +50,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} gate(s) failed: " +
+        failed.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

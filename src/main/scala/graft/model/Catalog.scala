@@ -1,7 +1,12 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{GraftColumnBridge => B}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** A typed object graph: the Spark-native analog of kcidb's ORM schema
   * (/root/reference/kcidb/orm/data.py:11-254 — `Type`, `Relation`, `Schema`).
@@ -13,9 +18,15 @@ import org.apache.spark.sql.functions._
   * schema: each `GraftType` names a table and its ID columns; each
   * `GraftRelation` says which child columns reference the parent's ID.
   *
-  * Traversal is expressed as semi-joins (never row-at-a-time), so a closure
-  * step at 100 TB is one shuffle bounded by the frontier, and Catalyst can
-  * broadcast small frontiers.
+  * Children traversal is expressed as semi-joins (never row-at-a-time),
+  * so a closure step at 100 TB is one shuffle bounded by the frontier, and
+  * Catalyst can broadcast small frontiers: a parent's fan-out is
+  * unbounded. Parents traversal is bounded instead. Every relation is
+  * many-to-one, so a parent id set is never larger than the child rows it
+  * is read from, and the whole parents closure is bounded by its roots,
+  * which must already fit on the driver. So the parents direction walks
+  * on the driver: one filtered scan per reached type, collected, and the
+  * result returned as local frames.
   */
 /** @param required columns that must be non-null (kcidb JSON-schema
   *                 `required` fields, orm/data.py:89-123)
@@ -156,12 +167,15 @@ final class Catalog(
     val errs = rootIdViolationsWith(tbl, roots)
     require(errs.isEmpty, s"invalid root ids: ${errs.mkString("; ")}")
     roots.map { case (tn, ids) =>
-      // Lazy localCheckpoint: a root id frame feeds every outgoing
-      // derivation of expandIds AND materialize's width-restoring
-      // semi-join — without it each consumer re-runs the frame's scan
-      // and distinct exchange (a leaf type with no incoming derivations
-      // stays the RAW batch projection through to materialize, so q40's
-      // plan scanned lineitem twice; PlanSpec pins the memoized shape).
+      // localCheckpoint: a root id frame feeds every outgoing derivation
+      // of expandIds AND materialize's width-restoring semi-join —
+      // without it each consumer re-runs the frame's scan and distinct
+      // exchange. eager = false does NOT make it free: under AQE the
+      // checkpoint calls physicalPlan.execute(), which runs every shuffle
+      // and broadcast stage of the frame here, at call time, so a
+      // children closure runs jobs before its caller's first action
+      // (the jobs perfbench's model.closure_jobs counts inside the
+      // closure call itself).
       tn -> broadcast(ids.select(types(tn).idCols.map(col): _*).distinct()
         .localCheckpoint(eager = false))
     }
@@ -222,59 +236,50 @@ final class Catalog(
     order.result()
   }
 
-  /** Directional closure expansion in ID SPACE: one pass over the types in
-    * topological order (the reference's add_parents/add_children recursion,
-    * sqlite/v04_00.py:614-682) — each type's final ID set is the distinct
+  /** Children expansion in ID SPACE: one pass over the types in
+    * topological order (the reference's add_children recursion,
+    * sqlite/v04_00.py:644-682) — each type's final ID set is the distinct
     * union of its start ids and one derivation per incoming relation from
-    * the already-final upstream id set. On a DAG this single pass IS the
+    * the already-final parent id set. On a DAG this single pass IS the
     * fixpoint.
     *
-    * Scale shape: every accumulated/shuffled frame is a NARROW id tuple —
+    * Scale shape: a parent's fan-out is unbounded, so this direction stays
+    * distributed. Every accumulated/shuffled frame is a NARROW id tuple —
     * full-width rows never cross a shuffle, the per-relation derivation
     * scans only (idCols ∪ refCols) of the child table (column pruning
     * reaches the parquet scan), and [[materialize]] restores width with one
     * final semi-join per type. Each derivation is one key-bounded shuffle;
     * nothing is row-at-a-time. */
   private def expandIds(tbl: String => DataFrame,
-                        start: Map[String, DataFrame],
-                        children: Boolean): Map[String, DataFrame] = {
+                        start: Map[String, DataFrame]): Map[String, DataFrame] = {
     var ids = start
-    // Both directions derive through the RELATION'S CHILD table, which
-    // holds the (child id, parent ref) mapping: children expansion keeps
-    // its idCols, parents expansion projects its refCols to parent ids.
-    def childNarrow(rel: GraftRelation): DataFrame =
-      tbl(rel.child)
-        .select((types(rel.child).idCols ++ rel.refCols).distinct
-          .map(col): _*)
-    for (tn <- topoOrder(children)) {
-      val incoming: Seq[DataFrame] =
-        if (children) parentsOf(tn).flatMap { rel =>
-          ids.get(rel.parent).map { pIds =>
-            val narrow = childNarrow(rel)
-            val cond = rel.refCols.zip(types(rel.parent).idCols)
-              .map { case (rc, ic) => narrow(rc) === pIds(ic) }
-              .reduce(_ && _)
-            narrow.join(pIds, cond, "left_semi")
-              .select(types(tn).idCols.map(col): _*).distinct()
-          }
-        } else childrenOf(tn).flatMap { rel =>
-          ids.get(rel.child).map { cIds =>
-            childNarrow(rel)
-              .join(cIds, types(rel.child).idCols, "left_semi")
-              .select(rel.refCols.zip(types(tn).idCols).map {
-                case (rc, ic) => col(rc).as(ic)
-              }: _*).distinct()
-          }
+    for (tn <- topoOrder(children = true)) {
+      val incoming: Seq[DataFrame] = parentsOf(tn).flatMap { rel =>
+        ids.get(rel.parent).map { pIds =>
+          val narrow = tbl(rel.child)
+            .select((types(rel.child).idCols ++ rel.refCols).distinct
+              .map(col): _*)
+          val cond = rel.refCols.zip(types(rel.parent).idCols)
+            .map { case (rc, ic) => narrow(rc) === pIds(ic) }
+            .reduce(_ && _)
+          narrow.join(pIds, cond, "left_semi")
+            .select(types(tn).idCols.map(col): _*).distinct()
         }
+      }
       if (incoming.nonEmpty) {
         val all = ids.get(tn).map(_.select(types(tn).idCols.map(col): _*))
           .toSeq ++ incoming
-        // Lazy localCheckpoint (the repo's iterative-frame discipline, cf.
+        // localCheckpoint (the repo's iterative-frame discipline, cf.
         // Ivf / connectedComponents): a type's final id frame feeds every
         // outgoing relation AND the width-restoring materialize — without
         // materialization each consumer re-executes the whole upstream
-        // derivation chain, multiplying scans along every DAG path. Lazy
-        // (eager=false) so single-consumer closures pay no extra job.
+        // derivation chain, multiplying scans along every DAG path.
+        // eager = false is not free: under AQE the checkpoint calls
+        // physicalPlan.execute(), which runs every shuffle and broadcast
+        // stage of the chain here, at call time. The checkpoints stay
+        // anyway: without them perfbench's lookup family requests (a
+        // parents walk, then this pass) slowed from 2.5 s to 8.1 s on 4
+        // cores.
         ids = ids.updated(tn,
           (if (all.sizeIs == 1) all.head
            else all.reduce(_ union _).distinct())
@@ -282,6 +287,72 @@ final class Catalog(
       }
     }
     ids
+  }
+
+  /** The parents closure as a walk on the driver (the reference's
+    * add_parents recursion, sqlite/v04_00.py:614-643; [[parentsClosure]]
+    * says why it fits there). The walk visits the types children-first;
+    * each type's id set is final when it is visited, so ONE scan of its
+    * table, filtered to that set, is collected as the type's rows. Each
+    * parent's id set is then read off those rows' refCols; a null ref
+    * reaches no parent, as in an equi-join.
+    *
+    * The rows keep [[materialize]]'s contract: every row whose id tuple is
+    * in the set, duplicates included, in declared column order, with
+    * `metaCols` dropped (and never read) when `withMetadata = false`.
+    * Returns, per reached type, its distinct id tuples in the table's id
+    * column types, and its rows as a local frame. One job per reached
+    * type with a non-empty id set, plus whatever collecting the roots
+    * runs; a local root list runs none. */
+  private def walkParents(spark: SparkSession, tbl: String => DataFrame,
+                          roots: Map[String, DataFrame],
+                          withMetadata: Boolean)
+      : (Map[String, Set[Row]], Map[String, DataFrame]) = {
+    val errs = rootIdViolationsWith(tbl, roots)
+    require(errs.isEmpty, s"invalid root ids: ${errs.mkString("; ")}")
+    val ids = scala.collection.mutable.Map.from(roots.map { case (tn, df) =>
+      tn -> df.select(idSchema(tbl, tn).map(f =>
+          col(f.name).cast(f.dataType)): _*)
+        .collect().iterator.filterNot(_.anyNull).toSet
+    })
+    val frames = Map.newBuilder[String, DataFrame]
+    for (tn <- topoOrder(children = false); set <- ids.get(tn)) {
+      val t = tbl(tn)
+      val out = t.columns.toSeq
+        .filter(c => withMetadata || !types(tn).metaCols.contains(c))
+      val rels = parentsOf(tn)
+      // Each parent's ref tuple, cast to that parent's id column types so
+      // it compares equal to the parent's own id tuples.
+      val refs = rels.map(rel => struct(rel.refCols.zip(idSchema(tbl,
+        rel.parent)).map { case (rc, f) => col(rc).cast(f.dataType) }: _*))
+      val rows =
+        if (set.isEmpty) Array.empty[Row]
+        else t.filter(idIn(tbl, tn, set))
+          .select(out.map(col) ++ refs: _*).collect()
+      for ((rel, k) <- rels.zipWithIndex)
+        ids(rel.parent) = ids.getOrElse(rel.parent, Set.empty[Row]) ++
+          rows.iterator.map(_.getStruct(out.size + k)).filterNot(_.anyNull)
+      frames += tn -> spark.createDataFrame(
+        rows.toSeq.map(r => Row.fromSeq(r.toSeq.take(out.size))).asJava,
+        StructType(out.map(t.schema(_))))
+    }
+    (ids.toMap, frames.result())
+  }
+
+  private def idSchema(tbl: String => DataFrame, tn: String): StructType =
+    StructType(types(tn).idCols.map(tbl(tn).schema(_)))
+
+  /** `tn`'s id tuple is in `ids` — an `InSet` over the id-column struct.
+    * Its values live in a reference object, not in the generated Java, so
+    * each request's ids compile no new code: Spark inlines an `In` list
+    * of 10 or fewer values, and an `InSet` over int keys becomes a switch
+    * over them. */
+  private def idIn(tbl: String => DataFrame, tn: String,
+                   ids: Set[Row]): Column = {
+    val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(idSchema(tbl, tn))
+    B.column(InSet(B.expression(struct(types(tn).idCols.map(col): _*)),
+      ids.map(toCatalyst)))
   }
 
   /** Children closure (kcidb db query with children=True,
@@ -293,9 +364,7 @@ final class Catalog(
       roots: Map[String, DataFrame],
       withMetadata: Boolean = true): Map[String, DataFrame] = {
     val tbl = tableCache(spark, dir)
-    materialize(tbl,
-      expandIds(tbl, rootIds(tbl, roots), children = true),
-      withMetadata)
+    materialize(tbl, expandIds(tbl, rootIds(tbl, roots)), withMetadata)
   }
 
   /** The full `query(ids, children=…, parents=…)` entry point
@@ -304,19 +373,27 @@ final class Catalog(
     * parents pass runs FIRST, and the children pass then expands downward
     * from the ACCUMULATED per-type sets — so with both flags, descendants
     * of the matched objects' ancestors are included (the whole family
-    * tree), exactly as `kcidb-query -c -p` returns it. Each pass is the
-    * same BFS of frontier-bounded semi-joins as the single-direction
-    * closures; with one flag set this degenerates to exactly
-    * [[childrenClosure]] / [[parentsClosure]]. */
+    * tree), exactly as `kcidb-query -c -p` returns it. The parents pass is
+    * [[parentsClosure]]'s driver walk; the children pass starts from the
+    * walk's id sets as broadcast local roots. With one flag set this
+    * degenerates to exactly [[childrenClosure]] / [[parentsClosure]]. */
   def closure(spark: SparkSession, dir: String,
               roots: Map[String, DataFrame],
               parents: Boolean, children: Boolean,
               withMetadata: Boolean = true): Map[String, DataFrame] = {
     val tbl = tableCache(spark, dir)
-    var ids = rootIds(tbl, roots)
-    if (parents) ids = expandIds(tbl, ids, children = false)
-    if (children) ids = expandIds(tbl, ids, children = true)
-    materialize(tbl, ids, withMetadata)
+    if (!parents) {
+      val ids = rootIds(tbl, roots)
+      materialize(tbl, if (children) expandIds(tbl, ids) else ids,
+        withMetadata)
+    } else {
+      val (ids, frames) = walkParents(spark, tbl, roots, withMetadata)
+      if (!children) frames
+      else materialize(tbl, expandIds(tbl, ids.map { case (tn, set) =>
+          tn -> broadcast(spark.createDataFrame(set.toSeq.asJava,
+            idSchema(tbl, tn)))
+        }), withMetadata)
+    }
   }
 
   /** Constraint validation, generated from catalog metadata — the Spark
@@ -375,16 +452,18 @@ final class Catalog(
       .orderBy("check_name")
   }
 
-  /** Parents closure (children=False counterpart, sqlite/v04_00.py:614-643). */
+  /** Parents closure (children=False counterpart, sqlite/v04_00.py:614-643).
+    * Every relation is many-to-one, so each reached type's id set is no
+    * larger than the child rows it came from, and the whole closure is
+    * bounded by the roots, which must fit on the driver anyway. So this
+    * call walks on the driver: it runs its jobs EAGERLY, one filtered scan
+    * per reached type, and returns local frames, whose collection runs no
+    * further job. */
   def parentsClosure(
       spark: SparkSession, dir: String,
       roots: Map[String, DataFrame],
-      withMetadata: Boolean = true): Map[String, DataFrame] = {
-    val tbl = tableCache(spark, dir)
-    materialize(tbl,
-      expandIds(tbl, rootIds(tbl, roots), children = false),
-      withMetadata)
-  }
+      withMetadata: Boolean = true): Map[String, DataFrame] =
+    walkParents(spark, tableCache(spark, dir), roots, withMetadata)._2
 
   /** `Pattern.from_io` analog (reference kcidb/orm/query.py:788-851):
     * derive per-type ROOT-ID frames from a just-loaded I/O batch — each
@@ -399,11 +478,12 @@ final class Catalog(
     * `maxObjs` is the reference's `max_objs` parameter (query.py:797,
     * `isliced(obj_list, max_objs)` at :841): there it bounds how many
     * object IDs one pattern's driver-side id set may carry (SQL IN-list
-    * limits); here root-id frames are never driver lists, but they DO take
-    * the broadcast hint ([[rootIds]]'s bounded-input contract), so the
-    * analog is an admission cap — a type whose batch carries more than
-    * `maxObjs` distinct id tuples is REFUSED up front with the full
-    * offender list, instead of OOMing executors at broadcast time. Zero
+    * limits); here the roots are collected to the driver by the parents
+    * walk, or take the broadcast hint in the children direction
+    * ([[rootIds]]'s bounded-input contract), so the analog is an
+    * admission cap — a type whose batch carries more than `maxObjs`
+    * distinct id tuples is REFUSED up front with the full offender list,
+    * instead of OOMing the driver or executors. Zero
     * (the reference's default) means no limit and stays fully lazy; a
     * positive cap runs one `limit(maxObjs+1)`-bounded count per type, so
     * the guard's own cost never exceeds the cap it enforces. */
@@ -436,12 +516,21 @@ final class Catalog(
     * ancestors — i.e. the parents closure from the batch-derived roots.
     * Feeding the result to [[graft.monitor.Subscriptions]] closes the
     * load → query → notify loop. Scale shape is [[parentsClosure]]'s:
-    * the batch projects to narrow id tuples before anything shuffles. */
+    * the closure is bounded by the batch's distinct id tuples (every
+    * relation is many-to-one), its jobs run eagerly in this call, and the
+    * returned frames are local. */
   def ingestClosure(spark: SparkSession, dir: String,
                     batch: Map[String, DataFrame],
                     withMetadata: Boolean = true,
-                    maxObjs: Int = 0): Map[String, DataFrame] =
-    parentsClosure(spark, dir, rootsFromBatch(batch, maxObjs), withMetadata)
+                    maxObjs: Int = 0): Map[String, DataFrame] = {
+    // rootsFromBatch checks the batch. The walk then collects the plain
+    // id projections, not their distinct() frames, and dedupes them on
+    // the driver: one job per loaded type instead of a shuffle and two.
+    rootsFromBatch(batch, maxObjs)
+    parentsClosure(spark, dir, batch.map { case (tn, df) =>
+      tn -> df.select(types(tn).idCols.map(col): _*)
+    }, withMetadata)
+  }
 }
 
 /** Catalog-ENTRY validation — the reference's test-catalog checker

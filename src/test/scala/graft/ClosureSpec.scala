@@ -195,6 +195,105 @@ class ClosureSpec extends AnyFunSuite {
       "descendants via OWN spine and via the ancestor's other spine")
   }
 
+  test("parentsClosure keeps every duplicate-id row and follows no null " +
+      "ref: equal to a join chain on a synthetic catalog") {
+    import graft.model.{Catalog, GraftRelation, GraftType}
+    import org.apache.spark.sql.DataFrame
+    // tg ← tp ← tc. The child tc has a composite (bigint, int) id with a
+    // duplicated tuple (1, 1) and a null ref; tp has a duplicated id, a
+    // null ref and a null-id row; tg has a duplicated and a null id. No
+    // ref may reach a null id, and a null ref reaches nothing.
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-dupnull").toString
+    Seq[(java.lang.Long, String)]((100L, "g0"), (100L, "g1"), (101L, "g2"),
+        (null, "gnull"))
+      .toDF("g_id", "g_name").write.parquet(s"$tmp/tg.parquet")
+    Seq[(java.lang.Long, java.lang.Long, String)]((10L, 100L, "p0"),
+        (10L, 100L, "p1"), (11L, null, "p2"), (12L, 101L, "p3"),
+        (null, 101L, "pnull"))
+      .toDF("p_id", "p_g", "p_name").write.parquet(s"$tmp/tp.parquet")
+    Seq[(Long, Int, java.lang.Long, String)]((1L, 1, 10L, "c0"),
+        (1L, 1, 10L, "c1"), (1L, 2, null, "c2"), (2L, 1, 11L, "c3"),
+        (3L, 1, 12L, "c4"))
+      .toDF("c_a", "c_b", "c_p", "c_name").write.parquet(s"$tmp/tc.parquet")
+    val syn = new Catalog(
+      types = Map(
+        "tg" -> GraftType("tg", Seq("g_id")),
+        "tp" -> GraftType("tp", Seq("p_id"), metaCols = Seq("p_name")),
+        "tc" -> GraftType("tc", Seq("c_a", "c_b"))),
+      relations = Seq(
+        GraftRelation("tg", "tp", Seq("p_g")),
+        GraftRelation("tp", "tc", Seq("c_p"))))
+    val roots = Seq((1L, 1), (1L, 2), (2L, 1)).toDF("c_a", "c_b")
+    val m = syn.parentsClosure(spark, tmp, Map("tc" -> roots))
+    def tb(n: String) = spark.read.parquet(s"$tmp/$n.parquet")
+    val expC = tb("tc").join(roots, Seq("c_a", "c_b"), "left_semi")
+    val expP = tb("tp").join(expC, col("p_id") === col("c_p"), "left_semi")
+    val expG = tb("tg").join(expP, col("g_id") === col("p_g"), "left_semi")
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    assert(m.keySet == Set("tc", "tp", "tg"))
+    for ((tn, exp) <- Seq("tc" -> expC, "tp" -> expP, "tg" -> expG)) {
+      assert(m(tn).columns.toSeq == exp.columns.toSeq, tn)
+      assert(rows(m(tn)) == rows(exp), s"$tn differs from the join chain")
+    }
+    assert(rows(m("tc").select("c_name")) == Seq("[c0]", "[c1]", "[c2]", "[c3]"))
+    assert(rows(m("tp").select("p_name")) == Seq("[p0]", "[p1]", "[p2]"))
+    assert(rows(m("tg").select("g_name")) == Seq("[g0]", "[g1]"))
+    val noMeta = syn.parentsClosure(spark, tmp, Map("tc" -> roots),
+      withMetadata = false)
+    assert(noMeta("tp").columns.toSeq == Seq("p_id", "p_g"))
+    assert(rows(noMeta("tp")) == rows(expP.drop("p_name")))
+  }
+
+  test("parentsClosure runs at most one job per reached type, and " +
+      "collecting its local frames runs none") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val sc = spark.sparkContext
+    // Jobs started while `body` runs. The listener bus is asynchronous but
+    // delivers in order: once the start of a marker job run after `body`
+    // arrives, so has every earlier one.
+    def jobsOf(body: => Unit): Int = {
+      val n = new AtomicInteger(0)
+      val drained = new CountDownLatch(1)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("graft.jobs")) match {
+            case Some("body") => n.incrementAndGet(); ()
+            case Some("marker") => drained.countDown()
+            case _ => ()
+          }
+      }
+      sc.addSparkListener(l)
+      try {
+        sc.setLocalProperty("graft.jobs", "body")
+        body
+        sc.setLocalProperty("graft.jobs", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        assert(drained.await(60, TimeUnit.SECONDS), "listener bus stalled")
+        n.get
+      } finally {
+        sc.setLocalProperty("graft.jobs", null)
+        sc.removeSparkListener(l)
+      }
+    }
+    def walk(): Map[String, DataFrame] = cat.parentsClosure(spark, dir,
+      Map("lineitem" -> Seq((1L, 3L)).toDF("l_orderkey", "l_linenumber")))
+    walk() // loads every table once; a first parquet load infers its schema
+    var m = Map.empty[String, DataFrame]
+    val jobs = jobsOf { m = walk() }
+    assert(m.size == 7)
+    // The root list is a local relation, so collecting it runs no job.
+    assert(jobs <= m.size, s"$jobs jobs for ${m.size} reached types")
+    assert(m.values.forall(_.queryExecution.analyzed
+      .isInstanceOf[LocalRelation]))
+    assert(jobsOf(m.values.foreach(_.collect())) == 0)
+  }
+
   test("invalid root-id maps are rejected up front (query_ids_are_valid)") {
     // unknown type name
     val e1 = intercept[IllegalArgumentException] {
