@@ -18,10 +18,15 @@ import scala.jdk.CollectionConverters._
   * schema: each `GraftType` names a table and its ID columns; each
   * `GraftRelation` says which child columns reference the parent's ID.
   *
-  * Children traversal is expressed as semi-joins (never row-at-a-time),
-  * so a closure step at 100 TB is one shuffle bounded by the frontier, and
-  * Catalyst can broadcast small frontiers: a parent's fan-out is
-  * unbounded. Parents traversal is bounded instead. Every relation is
+  * This class alone knows how an id set crosses a relation ([[hop]]) and
+  * how the fixpoint over the relation DAG is computed ([[reach]], one
+  * topological pass); the children closures and PatternQuery's hops and
+  * `*` steps run on them. A hop is a semi-join in ID space (never
+  * row-at-a-time), so a closure step at 100 TB is one shuffle bounded by
+  * the frontier, and Catalyst can broadcast small frontiers: a parent's
+  * fan-out is unbounded. [[reach]] checkpoints each type it reaches, so a
+  * children closure or a `*` step runs its checkpoint jobs inside the
+  * call. Parents traversal is bounded instead. Every relation is
   * many-to-one, so a parent id set is never larger than the child rows it
   * is read from, and the whole parents closure is bounded by its roots,
   * which must already fit on the driver. So the parents direction walks
@@ -116,20 +121,20 @@ final class Catalog(
                    cands: DataFrame): DataFrame = {
     val sorted = types.values.toSeq.sortBy(_.name)
     val known = col("object_type").isin(types.keys.toSeq: _*)
-    // One load per type, shared by the shape check (schema) and the
-    // existence probe (scan): each spark.read re-infers the parquet
-    // schema from footers, and the doubled footer pass was the dominant
-    // cost of this metadata-heavy query (measured 1.1-1.8 s of frame
-    // BUILD vs 0.5 s of execution at sf0.1).
-    val tables = sorted.map(t => t.name -> load(spark, dir, t.name)).toMap
+    // One load per type (the tableCache memo), shared by the shape check
+    // (schema) and the existence probe (scan): each spark.read re-infers
+    // the parquet schema from footers, and the doubled footer pass was the
+    // dominant cost of this metadata-heavy query (measured 1.1-1.8 s of
+    // frame BUILD vs 0.5 s of execution at sf0.1).
+    val tbl = tableCache(spark, dir)
     def perType(f: GraftType => Column): Column =
       sorted.foldLeft(lit(null).cast("boolean")) { (acc, t) =>
         when(col("object_type") === t.name, f(t)).otherwise(acc)
       }
     val shapeOk = perType { t =>
-      val tbl = tables(t.name).schema
+      val schema = tbl(t.name).schema
       val parts = t.idCols.zipWithIndex.map { case (c, i) =>
-        val dt = tbl(tbl.fieldIndex(c)).dataType.sql
+        val dt = schema(schema.fieldIndex(c)).dataType.sql
         expr(s"try_cast(try_element_at(split(id, '_'), ${i + 1}) AS $dt)")
           .isNotNull
       }
@@ -137,7 +142,7 @@ final class Catalog(
     }
     val candKeys = broadcast(cands.select("object_type", "id"))
     val hits = sorted.map { t =>
-        tables(t.name).select(
+        tbl(t.name).select(
             lit(t.name).as("object_type"),
             concat_ws("_", t.idCols.map(c => col(c).cast("string")): _*)
               .as("id"))
@@ -167,8 +172,8 @@ final class Catalog(
     val errs = rootIdViolationsWith(tbl, roots)
     require(errs.isEmpty, s"invalid root ids: ${errs.mkString("; ")}")
     roots.map { case (tn, ids) =>
-      // localCheckpoint: a root id frame feeds every outgoing derivation
-      // of expandIds AND materialize's width-restoring semi-join —
+      // localCheckpoint: a root id frame feeds every outgoing hop of
+      // reach AND materialize's width-restoring semi-join —
       // without it each consumer re-runs the frame's scan and distinct
       // exchange. eager = false does NOT make it free: under AQE the
       // checkpoint calls physicalPlan.execute(), which runs every shuffle
@@ -188,8 +193,8 @@ final class Catalog(
     * footer-dominated (the q33 finding, measured 1.1-1.8 s vs 0.5 s of
     * execution). One memo per top-level call keeps a query's view of each
     * table to ONE load — also one consistent file-listing snapshot. */
-  private def tableCache(spark: SparkSession,
-                         dir: String): String => DataFrame = {
+  private[graft] def tableCache(spark: SparkSession,
+                                dir: String): String => DataFrame = {
     val m = scala.collection.mutable.Map.empty[String, DataFrame]
     tn => m.getOrElseUpdate(tn, load(spark, dir, tn))
   }
@@ -205,9 +210,10 @@ final class Catalog(
     * from the output (query_iter's with_metadata flag,
     * db/abstract.py:283-315) — the scan then never READS them either
     * (column pruning reaches parquet). */
-  private def materialize(tbl: String => DataFrame,
-                          ids: Map[String, DataFrame],
-                          withMetadata: Boolean = true): Map[String, DataFrame] =
+  private[graft] def materialize(tbl: String => DataFrame,
+                                 ids: Map[String, DataFrame],
+                                 withMetadata: Boolean = true)
+      : Map[String, DataFrame] =
     ids.map { case (tn, idDf) =>
       val t = tbl(tn)
       val full = t.join(idDf, types(tn).idCols, "left_semi")
@@ -215,13 +221,13 @@ final class Catalog(
       tn -> (if (withMetadata) full else full.drop(types(tn).metaCols: _*))
     }
 
-  /** Types in propagation order for one traversal direction (children:
-    * parents before children; parents: the reverse). The relation graph is
+  /** Types in propagation order for one traversal direction (down:
+    * parents before children; up: the reverse). The relation graph is
     * a DAG; Kahn's algorithm with a sorted tie-break keeps it
     * deterministic. */
-  private def topoOrder(children: Boolean): Seq[String] = {
+  private def topoOrder(down: Boolean): Seq[String] = {
     val out: Map[String, Seq[String]] =
-      (if (children) relations.groupBy(_.parent).view.mapValues(_.map(_.child))
+      (if (down) relations.groupBy(_.parent).view.mapValues(_.map(_.child))
        else relations.groupBy(_.child).view.mapValues(_.map(_.parent)))
         .toMap.withDefaultValue(Seq.empty)
     val indeg = scala.collection.mutable.Map.from(types.keys.map(_ -> 0))
@@ -236,39 +242,72 @@ final class Catalog(
     order.result()
   }
 
-  /** Children expansion in ID SPACE: one pass over the types in
-    * topological order (the reference's add_children recursion,
-    * sqlite/v04_00.py:644-682) — each type's final ID set is the distinct
-    * union of its start ids and one derivation per incoming relation from
-    * the already-final parent id set. On a DAG this single pass IS the
-    * fixpoint.
+  /** One relation crossed in ID SPACE, in either direction: `from` holds
+    * ids of the relation's parent type (`down`) or of its child type, and
+    * the result holds the DISTINCT ids reached on the other side, in that
+    * type's id column order. Both directions read the relation's CHILD
+    * table, which holds the (child id, parent ref) mapping, and scan only
+    * (idCols ∪ refCols) of it: column pruning reaches the parquet scan.
+    * Going down, the narrow side's refs are renamed `__ref_*`, so a child
+    * column named like a parent id can never make the join condition
+    * ambiguous, and `from` stays a direct join child: a broadcast hint on
+    * a root frame stays on its join. No hint is added here: a derived
+    * frame is unbounded, and AQE picks the strategy from its runtime size.
+    */
+  private[graft] def hop(tbl: String => DataFrame, rel: GraftRelation,
+                         from: DataFrame, down: Boolean): DataFrame = {
+    val cIds = types(rel.child).idCols
+    val pIds = types(rel.parent).idCols
+    if (down) {
+      val narrow = tbl(rel.child).select(cIds.map(col) ++
+        rel.refCols.map(rc => col(rc).as(s"__ref_$rc")): _*)
+      val cond = rel.refCols.zip(pIds)
+        .map { case (rc, ic) => narrow(s"__ref_$rc") === from(ic) }
+        .reduce(_ && _)
+      narrow.join(from, cond, "left_semi")
+        .select(cIds.map(col): _*).distinct()
+    } else
+      tbl(rel.child).select((cIds ++ rel.refCols).distinct.map(col): _*)
+        .join(from, cIds, "left_semi")
+        .select(rel.refCols.zip(pIds)
+          .map { case (rc, ic) => col(rc).as(ic) }: _*)
+        .distinct()
+  }
+
+  /** Expansion in ID SPACE: one pass over the types in topological order
+    * for the direction — the reference's add_children recursion
+    * (sqlite/v04_00.py:644-682) and the pattern language's `*` step
+    * (orm/query.py:459-481 `_expand`). Each type's ids are final when it
+    * is visited: its `start` ids, plus `keep` applied to the union of one
+    * [[hop]] per incoming relation from an already-final type. On a DAG
+    * this single pass IS the fixpoint; a breadth-first loop would expand
+    * a type once per path into it.
     *
-    * Scale shape: a parent's fan-out is unbounded, so this direction stays
-    * distributed. Every accumulated/shuffled frame is a NARROW id tuple —
-    * full-width rows never cross a shuffle, the per-relation derivation
-    * scans only (idCols ∪ refCols) of the child table (column pruning
-    * reaches the parquet scan), and [[materialize]] restores width with one
-    * final semi-join per type. Each derivation is one key-bounded shuffle;
-    * nothing is row-at-a-time. */
-  private def expandIds(tbl: String => DataFrame,
-                        start: Map[String, DataFrame]): Map[String, DataFrame] = {
+    * Returns (ids, reached) per type. `ids` holds start ∪ reached, and is
+    * checkpointed for every reached type; `reached` holds the ids that
+    * came in through a relation, for every type some relation led into
+    * (for a start type, the unchecked union of its hops).
+    *
+    * Scale shape: every accumulated/shuffled frame is a NARROW id tuple —
+    * full-width rows never cross a shuffle, and [[materialize]] restores
+    * width with one final semi-join per type. Each hop is one key-bounded
+    * shuffle; nothing is row-at-a-time. */
+  private[graft] def reach(tbl: String => DataFrame,
+                           start: Map[String, DataFrame], down: Boolean,
+                           keep: (String, DataFrame) => DataFrame =
+                             (_, df) => df)
+      : (Map[String, DataFrame], Map[String, DataFrame]) = {
     var ids = start
-    for (tn <- topoOrder(children = true)) {
-      val incoming: Seq[DataFrame] = parentsOf(tn).flatMap { rel =>
-        ids.get(rel.parent).map { pIds =>
-          val narrow = tbl(rel.child)
-            .select((types(rel.child).idCols ++ rel.refCols).distinct
-              .map(col): _*)
-          val cond = rel.refCols.zip(types(rel.parent).idCols)
-            .map { case (rc, ic) => narrow(rc) === pIds(ic) }
-            .reduce(_ && _)
-          narrow.join(pIds, cond, "left_semi")
-            .select(types(tn).idCols.map(col): _*).distinct()
+    var reached = Map.empty[String, DataFrame]
+    for (tn <- topoOrder(down)) {
+      val incoming = (if (down) parentsOf(tn) else childrenOf(tn))
+        .flatMap { rel =>
+          ids.get(if (down) rel.parent else rel.child)
+            .map(hop(tbl, rel, _, down))
         }
-      }
       if (incoming.nonEmpty) {
-        val all = ids.get(tn).map(_.select(types(tn).idCols.map(col): _*))
-          .toSeq ++ incoming
+        val in = keep(tn, incoming.reduce(_ union _))
+        val own = start.get(tn).map(_.select(types(tn).idCols.map(col): _*))
         // localCheckpoint (the repo's iterative-frame discipline, cf.
         // Ivf / connectedComponents): a type's final id frame feeds every
         // outgoing relation AND the width-restoring materialize — without
@@ -280,13 +319,14 @@ final class Catalog(
         // anyway: without them perfbench's lookup family requests (a
         // parents walk, then this pass) slowed from 2.5 s to 8.1 s on 4
         // cores.
-        ids = ids.updated(tn,
-          (if (all.sizeIs == 1) all.head
-           else all.reduce(_ union _).distinct())
-            .localCheckpoint(eager = false))
+        val all = (if (own.isEmpty && incoming.sizeIs == 1) in
+                   else (own.toSeq :+ in).reduce(_ union _).distinct())
+          .localCheckpoint(eager = false)
+        ids = ids.updated(tn, all)
+        reached = reached.updated(tn, if (own.isEmpty) all else in)
       }
     }
-    ids
+    (ids, reached)
   }
 
   /** The parents closure as a walk on the driver (the reference's
@@ -316,7 +356,7 @@ final class Catalog(
         .collect().iterator.filterNot(_.anyNull).toSet
     })
     val frames = Map.newBuilder[String, DataFrame]
-    for (tn <- topoOrder(children = false); set <- ids.get(tn)) {
+    for (tn <- topoOrder(down = false); set <- ids.get(tn)) {
       val t = tbl(tn)
       val out = t.columns.toSeq
         .filter(c => withMetadata || !types(tn).metaCols.contains(c))
@@ -364,7 +404,8 @@ final class Catalog(
       roots: Map[String, DataFrame],
       withMetadata: Boolean = true): Map[String, DataFrame] = {
     val tbl = tableCache(spark, dir)
-    materialize(tbl, expandIds(tbl, rootIds(tbl, roots)), withMetadata)
+    materialize(tbl, reach(tbl, rootIds(tbl, roots), down = true)._1,
+      withMetadata)
   }
 
   /** The full `query(ids, children=…, parents=…)` entry point
@@ -384,15 +425,15 @@ final class Catalog(
     val tbl = tableCache(spark, dir)
     if (!parents) {
       val ids = rootIds(tbl, roots)
-      materialize(tbl, if (children) expandIds(tbl, ids) else ids,
+      materialize(tbl, if (children) reach(tbl, ids, down = true)._1 else ids,
         withMetadata)
     } else {
       val (ids, frames) = walkParents(spark, tbl, roots, withMetadata)
       if (!children) frames
-      else materialize(tbl, expandIds(tbl, ids.map { case (tn, set) =>
+      else materialize(tbl, reach(tbl, ids.map { case (tn, set) =>
           tn -> broadcast(spark.createDataFrame(set.toSeq.asJava,
             idSchema(tbl, tn)))
-        }), withMetadata)
+        }, down = true)._1, withMetadata)
     }
   }
 

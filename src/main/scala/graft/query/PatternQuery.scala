@@ -27,10 +27,15 @@ import graft.model.Catalog
   * (`>test[...]<*$` = the ultimate parents). The next step's frontier is
   * always the REFERENCED set (reference: orm/query.py:459-481 `_expand`).
   *
-  * Each hop is one frontier semi-join: no driver iteration over rows, so a
-  * pattern over 100 TB is a fixed number of key-bounded shuffles. Only
-  * caller-supplied ID lists are bounded; frontiers carry no broadcast hint
-  * (AQE decides from runtime size).
+  * This object holds the pattern language only: parsing, id-list
+  * resolution and the `#`/`$`/frontier rules. Hops and `*` steps run on
+  * [[graft.model.Catalog]]'s id-space traversal: a named step is one
+  * `Catalog.hop` per frontier relation into that type, a `*` step is one
+  * `Catalog.reach` pass over the relation DAG. Each hop is one frontier
+  * semi-join: no driver iteration over rows, so a pattern over 100 TB is a
+  * fixed number of key-bounded shuffles. Only caller-supplied ID lists are
+  * bounded; frontiers carry no broadcast hint (AQE decides from runtime
+  * size).
   */
 object PatternQuery {
 
@@ -154,13 +159,17 @@ object PatternQuery {
   /** Execute a pattern against the catalog; returns matched rows per type
     * (every row sharing a matched id tuple, with its multiplicity — the
     * reference's final `FROM t INNER JOIN (…ids…) USING (id fields)`).
+    * This is [[runAll]] of one pattern.
     *
-    * Scale shape (mirrors [[graft.model.Catalog]]): the traversal runs in
-    * ID SPACE — frontiers and match accumulators are narrow id-tuple
-    * frames, each hop scans only (idCols ∪ refCols) of the relation's
-    * child table (column pruning reaches the parquet scan), and ONE
-    * width-restoring semi-join per matched type runs at the end. Full
-    * rows never cross a shuffle.
+    * Scale shape (that of [[graft.model.Catalog]], whose hops and
+    * topological pass it runs on): the traversal runs in ID SPACE —
+    * frontiers and match accumulators are narrow id-tuple frames, each hop
+    * scans only (idCols ∪ refCols) of the relation's child table (column
+    * pruning reaches the parquet scan), and ONE width-restoring semi-join
+    * per matched type runs at the end. Full rows never cross a shuffle. A
+    * `*` step checkpoints each type it reaches, so, like
+    * `Catalog.childrenClosure`, it runs its checkpoint jobs inside this
+    * call.
     *
     * @param idLists out-of-band ID lists consumed, in order, by `%` specs
     *                (reference: `obj_str_id_set_list` in orm/query.py parse).
@@ -168,148 +177,110 @@ object PatternQuery {
   def run(spark: SparkSession, dir: String, catalog: Catalog,
           pattern: String,
           idLists: Seq[Seq[Seq[String]]] = Seq.empty): Map[String, DataFrame] =
-    materializeAll(spark, dir, catalog,
-      runIds(spark, dir, catalog, pattern, idLists))
+    runAll(spark, dir, catalog, Seq(pattern), idLists)
 
-  /** Matched id tuples per type → full rows, in the table's declared
-    * column order. */
-  private def materializeAll(spark: SparkSession, dir: String,
-                             catalog: Catalog, ids: Map[String, DataFrame])
-      : Map[String, DataFrame] =
-    ids.map { case (tn, idDf) =>
-      val tbl = catalog.load(spark, dir, tn)
-      tn -> tbl.join(idDf, catalog.types(tn).idCols, "left_semi")
-        .select(tbl.columns.map(col).toSeq: _*)
+  /** Multi-pattern union — `kcidb-query` accepts repeated pattern strings
+    * whose matches accumulate into one set
+    * (/root/reference/kcidb/orm/__init__.py:841-851 `pattern_set |=
+    * Pattern.parse(...)`; CLI wiring kcidb/__init__.py:370-387). Each
+    * pattern runs independently; per-type matches union with distinct in
+    * id space, and width is restored once at the end. All patterns share
+    * one table memo.
+    *
+    * `%` placeholders consume `idLists` in PATTERN order (pattern 1's
+    * placeholders first, then pattern 2's, …) — the concatenation of the
+    * per-parse `obj_str_id_set_list`s of the reference. */
+  def runAll(spark: SparkSession, dir: String, catalog: Catalog,
+             patterns: Seq[String],
+             idLists: Seq[Seq[Seq[String]]] = Seq.empty)
+      : Map[String, DataFrame] = {
+    val tbl = catalog.tableCache(spark, dir)
+    var remaining = idLists
+    var acc: Map[String, DataFrame] = Map.empty
+    for (p <- patterns) {
+      val steps = parse(p)
+      val need = steps.count(_.spec == Placeholder)
+      require(remaining.size >= need,
+        s"not enough ID lists for '%' placeholders in: $p")
+      val (mine, rest) = remaining.splitAt(need)
+      remaining = rest
+      for ((tn, df) <- runIds(catalog, tbl, steps, mine))
+        acc = merged(acc, tn, df)
     }
+    catalog.materialize(tbl, acc)
+  }
 
-  /** The id-space planner behind [[run]]/[[runAll]]: returns DISTINCT
-    * matched id tuples per type. */
-  private def runIds(spark: SparkSession, dir: String, catalog: Catalog,
-                     pattern: String,
+  private def merged(acc: Map[String, DataFrame], tn: String,
+                     df: DataFrame): Map[String, DataFrame] =
+    acc.updated(tn, acc.get(tn).fold(df)(_.union(df).distinct()))
+
+  /** The id-space planner behind [[runAll]]: matched id tuples per type
+    * for one parsed pattern, whose `%` specs take `idLists` in order. */
+  private def runIds(catalog: Catalog, tbl: String => DataFrame,
+                     steps: Seq[Step],
                      idLists: Seq[Seq[Seq[String]]]): Map[String, DataFrame] = {
+    val lists = idLists.iterator
     var frontier: Map[String, DataFrame] = Map.empty // referenced ids/type
     var results: Map[String, DataFrame] = Map.empty
-    var remainingIdLists = idLists
-
-    def resolveIds(spec: Spec): Option[Seq[Seq[String]]] = spec match {
-      case NoSpec => None
-      case IdList(ids) => Some(ids)
-      case Placeholder =>
-        require(remainingIdLists.nonEmpty,
-          s"not enough ID lists supplied for '%' placeholders in: $pattern")
-        val head = remainingIdLists.head
-        remainingIdLists = remainingIdLists.tail
-        Some(head)
-    }
-
-    def idFilter(tn: String, df: DataFrame,
-                 ids: Option[Seq[Seq[String]]]): DataFrame = ids match {
-      case None => df
-      case Some(idList) =>
-        val t = catalog.types(tn)
-        val cond = idList.map { idVals =>
-          t.idCols.zip(idVals).map { case (c, v) =>
-            col(c).cast("string") === lit(v)
-          }.reduce(_ && _)
-        }.reduceOption(_ || _).getOrElse(lit(false))
-        df.filter(cond)
-    }
 
     /** DISTINCT id tuples of a whole table. */
-    def allIds(tn: String): DataFrame = {
-      val t = catalog.types(tn)
-      catalog.load(spark, dir, tn).select(t.idCols.map(col): _*).distinct()
-    }
+    def allIds(tn: String): DataFrame =
+      tbl(tn).select(catalog.types(tn).idCols.map(col): _*).distinct()
 
-    def relsOf(tn: String, child: Boolean) =
-      if (child) catalog.childrenOf(tn) else catalog.parentsOf(tn)
+    for (step <- steps) {
+      val ids = step.spec match {
+        case NoSpec => None
+        case IdList(l) => Some(l)
+        case Placeholder => Some(lists.next())
+      }
+      // the step's id filter, applied to every id set it expands into
+      def keep(tn: String, df: DataFrame): DataFrame = ids.fold(df) { l =>
+        val idCols = catalog.types(tn).idCols
+        df.filter(l.map { idVals =>
+          idCols.zip(idVals).map { case (c, v) =>
+            col(c).cast("string") === lit(v)
+          }.reduce(_ && _)
+        }.reduceOption(_ || _).getOrElse(lit(false)))
+      }
+      def relsOf(tn: String) =
+        if (step.child) catalog.childrenOf(tn) else catalog.parentsOf(tn)
+      val root = frontier.isEmpty
+      require(!root || step.child, "first pattern step must use '>'")
 
-    /** One hop from a type's id frontier, in either direction. Both
-      * directions derive through the RELATION'S CHILD table (it holds the
-      * (child id, parent ref) mapping), scanning only the needed columns.
-      * No broadcast hint: the frontier is derived and unbounded; AQE picks
-      * the strategy from its runtime size. */
-    def hop(fromType: String, fromIds: DataFrame, child: Boolean)
-        : Seq[(String, DataFrame)] =
-      relsOf(fromType, child).map { rel =>
-        val cType = catalog.types(rel.child)
-        val narrow = catalog.load(spark, dir, rel.child)
-          .select((cType.idCols ++ rel.refCols).distinct.map(col): _*)
-        if (child) {
-          val pType = catalog.types(rel.parent)
-          val renamed = fromIds.select(pType.idCols.zip(rel.refCols).map {
-            case (ic, rc) => col(ic).as(s"__ref_$rc")
-          }: _*).distinct()
-          val cond = rel.refCols
-            .map(rc => narrow(rc) === renamed(s"__ref_$rc"))
-            .reduce(_ && _)
-          rel.child -> narrow.join(renamed, cond, "left_semi")
-            .select(cType.idCols.map(col): _*).distinct()
+      // (traversed, referenced): the match targets of '#' and of '$'; the
+      // referenced set is also the next step's frontier
+      val (traversed, referenced) =
+        if (step.typeName == "*") {
+          // Recursive traversal. Referenced = types with no relations in
+          // the traversal direction (including frontier types that cannot
+          // expand at all — reference orm/query.py:466-472 `unused_set`).
+          // A root '*' starts from every catalog type's id set, id-filtered.
+          val base =
+            if (!root) frontier
+            else catalog.types.keys.map(tn => tn -> keep(tn, allIds(tn))).toMap
+          val (all, reached) = catalog.reach(tbl, base, step.child, keep)
+          (if (root) all else reached,
+           all.filter { case (tn, _) => relsOf(tn).isEmpty })
         } else {
-          val pType = catalog.types(rel.parent)
-          rel.parent -> narrow.join(fromIds, cType.idCols, "left_semi")
-            .select(rel.refCols.zip(pType.idCols).map {
-              case (rc, ic) => col(rc).as(ic)
-            }: _*).distinct()
+          val df =
+            if (root) {
+              require(catalog.types.contains(step.typeName),
+                s"unknown type ${step.typeName}")
+              keep(step.typeName, allIds(step.typeName))
+            } else {
+              val hops = for {
+                (tn, from) <- frontier.toSeq
+                rel <- relsOf(tn)
+                if (if (step.child) rel.child else rel.parent) == step.typeName
+              } yield catalog.hop(tbl, rel, from, step.child)
+              require(hops.nonEmpty,
+                s"no relation to type ${step.typeName} from frontier")
+              keep(step.typeName,
+                if (hops.sizeIs == 1) hops.head
+                else hops.reduce(_ union _).distinct())
+            }
+          (Map(step.typeName -> df), Map(step.typeName -> df))
         }
-      }
-
-    def merged(acc: Map[String, DataFrame], tn: String, df: DataFrame) =
-      acc.updated(tn, acc.get(tn).map(_.union(df).distinct()).getOrElse(df))
-
-    for (step <- parse(pattern)) {
-      val ids = resolveIds(step.spec)
-      // rows expanded into by this step, per type (match target of '#')
-      var traversed: Map[String, DataFrame] = Map.empty
-      // rows of dead-end types (match target of '$', and the next frontier)
-      var referenced: Map[String, DataFrame] = Map.empty
-
-      if (step.typeName == "*") {
-        // Recursive traversal. Referenced = types with no relations in the
-        // traversal direction (including frontier types that cannot expand
-        // at all — reference orm/query.py:466-472 `unused_set`).
-        val base: Map[String, DataFrame] =
-          if (frontier.nonEmpty) frontier
-          else {
-            require(step.child, "first pattern step must use '>'")
-            // Root '*': every catalog type's id set, id-filtered
-            catalog.types.keys.map { tn =>
-              tn -> idFilter(tn, allIds(tn), ids)
-            }.toMap
-          }
-        if (frontier.isEmpty)
-          for ((tn, df) <- base) traversed = merged(traversed, tn, df)
-        for ((tn, df) <- base if relsOf(tn, step.child).isEmpty)
-          referenced = merged(referenced, tn, df)
-        var cur = base
-        while (cur.nonEmpty) {
-          var next: Map[String, DataFrame] = Map.empty
-          for ((tn, rows) <- cur; (ntn, ndf) <- hop(tn, rows, step.child)) {
-            val filtered = idFilter(ntn, ndf, ids)
-            next = merged(next, ntn, filtered)
-            traversed = merged(traversed, ntn, filtered)
-          }
-          for ((tn, df) <- next if relsOf(tn, step.child).isEmpty)
-            referenced = merged(referenced, tn, df)
-          cur = next
-        }
-      } else if (frontier.isEmpty) {
-        // Based on root: a named type's id set.
-        require(step.child, "first pattern step must use '>'")
-        require(catalog.types.contains(step.typeName),
-          s"unknown type ${step.typeName}")
-        val df = idFilter(step.typeName, allIds(step.typeName), ids)
-        traversed = Map(step.typeName -> df)
-        referenced = traversed
-      } else {
-        for ((tn, rows) <- frontier;
-             (ntn, ndf) <- hop(tn, rows, step.child)
-             if ntn == step.typeName)
-          traversed = merged(traversed, ntn, idFilter(ntn, ndf, ids))
-        require(traversed.nonEmpty,
-          s"no relation to type ${step.typeName} from frontier")
-        referenced = traversed
-      }
 
       frontier = referenced
       val toMatch = step.matchChar match {
@@ -320,34 +291,5 @@ object PatternQuery {
       for ((tn, df) <- toMatch) results = merged(results, tn, df)
     }
     results
-  }
-
-  /** Multi-pattern union — `kcidb-query` accepts repeated pattern strings
-    * whose matches accumulate into one set
-    * (/root/reference/kcidb/orm/__init__.py:841-851 `pattern_set |=
-    * Pattern.parse(...)`; CLI wiring kcidb/__init__.py:370-387). Each
-    * pattern runs independently; per-type matches union with distinct.
-    *
-    * `%` placeholders consume `idLists` in PATTERN order (pattern 1's
-    * placeholders first, then pattern 2's, …) — the concatenation of the
-    * per-parse `obj_str_id_set_list`s of the reference. */
-  def runAll(spark: SparkSession, dir: String, catalog: Catalog,
-             patterns: Seq[String],
-             idLists: Seq[Seq[Seq[String]]] = Seq.empty)
-      : Map[String, DataFrame] = {
-    var remaining = idLists
-    var acc: Map[String, DataFrame] = Map.empty
-    for (p <- patterns) {
-      val need = parse(p).count(_.spec == Placeholder)
-      require(remaining.size >= need,
-        s"not enough ID lists for '%' placeholders in: $p")
-      val (mine, rest) = remaining.splitAt(need)
-      remaining = rest
-      // cross-pattern union in ID space; width restored once at the end
-      for ((tn, df) <- runIds(spark, dir, catalog, p, mine))
-        acc = acc.updated(tn,
-          acc.get(tn).map(_.union(df).distinct()).getOrElse(df))
-    }
-    materializeAll(spark, dir, catalog, acc)
   }
 }

@@ -71,7 +71,7 @@ object Knn {
         // the keep set is consumed alongside the probe/corpus reads of the
         // same signature frame — checkpoint it lazily so the full-corpus
         // SRP explode is not re-executed a third time for the count
-        // (Catalog.expandIds' multi-consumer discipline)
+        // (Catalog.reach's multi-consumer discipline)
         val keep = sigs.groupBy("table", "bucket")
           .agg(count(lit(1)).as("__n"))
           .filter(col("__n") <= cap)

@@ -149,30 +149,10 @@ class ClosureSpec extends AnyFunSuite {
   }
 
   test("closures generalize to a synthetic diamond catalog") {
-    import graft.model.{Catalog, GraftRelation, GraftType}
-    // A → B, A → C, B → D, C → D: the multi-path diamond exercises
-    // cross-relation dedup in both directions on a schema that is NOT the
-    // testdata's.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-diamond").toString
-    Seq(1L, 2L).toDF("a_id").write.parquet(s"$tmp/ta.parquet")
-    Seq((10L, 1L), (11L, 2L)).toDF("b_id", "b_a")
-      .write.parquet(s"$tmp/tb.parquet")
-    Seq((20L, 1L), (21L, 2L)).toDF("c_id", "c_a")
-      .write.parquet(s"$tmp/tc.parquet")
-    Seq((30L, 10L, 20L), (31L, 10L, 21L), (32L, 11L, 20L))
-      .toDF("d_id", "d_b", "d_c").write.parquet(s"$tmp/td.parquet")
-    val dia = new Catalog(
-      types = Map(
-        "ta" -> GraftType("ta", Seq("a_id")),
-        "tb" -> GraftType("tb", Seq("b_id")),
-        "tc" -> GraftType("tc", Seq("c_id")),
-        "td" -> GraftType("td", Seq("d_id"))),
-      relations = Seq(
-        GraftRelation("ta", "tb", Seq("b_a")),
-        GraftRelation("ta", "tc", Seq("c_a")),
-        GraftRelation("tb", "td", Seq("d_b")),
-        GraftRelation("tc", "td", Seq("d_c"))))
+    // The multi-path diamond exercises cross-relation dedup in both
+    // directions on a schema that is NOT the testdata's.
+    val tmp = DiamondCatalog.write()
+    val dia = DiamondCatalog.catalog
     def idSet(df: org.apache.spark.sql.DataFrame) =
       df.select(df.columns.head).collect().map(_.getLong(0)).toSet
     val down = dia.childrenClosure(spark, tmp,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.query.PatternQuery
@@ -83,10 +84,46 @@ class PatternQuerySpec extends AnyFunSuite {
   }
 
   test("run: '$' frontier chains — '<*$>*#' descends from the roots") {
-    val res = PatternQuery.run(spark, dir, cat, ">orders[1]<*$")
-    // orders' ancestors: customer -> nation -> region; dead end = region.
-    assert(res.keySet == Set("region"))
-    assert(res("region").count() == 1)
+    val res = PatternQuery.run(spark, dir, cat, ">orders[1]<*$>*#")
+    // orders' ancestors: customer -> nation -> region; the dead end region
+    // is matched by '$' and is the frontier of '>*#', which matches every
+    // type below it. part has no parent, so nothing descends into it.
+    assert(res.keySet == Set("region", "nation", "customer", "supplier",
+      "orders", "lineitem"))
+    def tb(n: String) = Tables(spark, dir, n)
+    // a using-column join moves the key first; keep the declared order
+    def semi(df: DataFrame, keys: DataFrame, k: String) =
+      df.join(keys, Seq(k), "left_semi").select(df.columns.map(col): _*)
+    // The direct join chain down from order 1's region.
+    val region = semi(tb("region"), tb("orders")
+        .filter(col("o_orderkey") === 1)
+        .join(tb("customer"), col("o_custkey") === col("c_custkey"))
+        .join(tb("nation"), col("c_nationkey") === col("n_nationkey"))
+        .select(col("n_regionkey").as("r_regionkey")), "r_regionkey")
+    val nation = semi(tb("nation"),
+      region.select(col("r_regionkey").as("n_regionkey")), "n_regionkey")
+    val customer = semi(tb("customer"),
+      nation.select(col("n_nationkey").as("c_nationkey")), "c_nationkey")
+    val supplier = semi(tb("supplier"),
+      nation.select(col("n_nationkey").as("s_nationkey")), "s_nationkey")
+    val orders = semi(tb("orders"),
+      customer.select(col("c_custkey").as("o_custkey")), "o_custkey")
+    // lineitems below the orders or the suppliers, restored by id tuple
+    val li = tb("lineitem")
+    val liIds = semi(li, orders.select(col("o_orderkey").as("l_orderkey")),
+        "l_orderkey").select("l_orderkey", "l_linenumber")
+      .union(semi(li, supplier.select(col("s_suppkey").as("l_suppkey")),
+        "l_suppkey").select("l_orderkey", "l_linenumber"))
+    val lineitem = li.join(liIds.distinct(), Seq("l_orderkey", "l_linenumber"),
+      "left_semi").select(li.columns.map(col): _*)
+    assert(region.count() == 1)
+    for ((tn, exp) <- Seq("region" -> region, "nation" -> nation,
+        "customer" -> customer, "supplier" -> supplier, "orders" -> orders,
+        "lineitem" -> lineitem)) {
+      assert(res(tn).count() == exp.count(), tn)
+      assert(res(tn).exceptAll(exp).isEmpty && exp.exceptAll(res(tn)).isEmpty,
+        s"$tn differs from the join chain")
+    }
   }
 
   test("run: '%' consumes out-of-band id lists in order") {
@@ -102,6 +139,50 @@ class PatternQuerySpec extends AnyFunSuite {
     val res = PatternQuery.run(spark, dir, cat, ">*[999999]$")
     // lineitem is the only type with no child relations
     assert(res.keySet == Set("lineitem"))
+  }
+
+  test("run: '*' steps on the diamond catalog equal a BFS over the edges") {
+    val dia = DiamondCatalog.catalog
+    val ddir = DiamondCatalog.write()
+    // Every (parent, child) edge of the object graph, on the driver.
+    val edges: Seq[((String, Long), (String, Long))] =
+      dia.relations.flatMap { rel =>
+        val idCol = dia.types(rel.child).idCols.head
+        Tables(spark, ddir, rel.child).select(idCol, rel.refCols.head)
+          .collect().toSeq
+          .map(r => (rel.parent, r.getLong(1)) -> (rel.child, r.getLong(0)))
+      }
+    // Objects reached from the roots through one or more edges.
+    def bfs(roots: Set[(String, Long)], down: Boolean): Set[(String, Long)] = {
+      val next = edges.map { case (p, c) => if (down) p -> c else c -> p }
+        .groupMap(_._1)(_._2)
+      var seen = Set.empty[(String, Long)]
+      var cur = roots
+      while (cur.nonEmpty) {
+        val n = cur.flatMap(next.getOrElse(_, Nil))
+        cur = n -- seen
+        seen ++= n
+      }
+      seen
+    }
+    def deadEnd(tn: String, down: Boolean) =
+      (if (down) dia.childrenOf(tn) else dia.parentsOf(tn)).isEmpty
+    for ((root, ids, down) <- Seq(("ta", Seq(1L), true),
+        ("ta", Seq(1L, 2L), true), ("td", Seq(30L, 32L), false),
+        ("tb", Seq(11L), false), ("td", Seq(30L), true),
+        ("ta", Seq(2L), false)); m <- Seq('#', '$')) {
+      val roots = ids.map(root -> _).toSet
+      val reached = bfs(roots, down)
+      val exp = (if (m == '#') reached
+                 else (roots ++ reached).filter(o => deadEnd(o._1, down)))
+        .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+      val p = s">$root[${ids.mkString(";")}]${if (down) '>' else '<'}*$m"
+      val got = PatternQuery.run(spark, ddir, dia, p).map { case (tn, df) =>
+        tn -> df.select(dia.types(tn).idCols.head).collect()
+          .map(_.getLong(0)).toSet
+      }
+      assert(got == exp, p)
+    }
   }
 
   test("run: unrelated hop fails loudly") {
