@@ -84,10 +84,10 @@ object Bench {
     // not masquerade as a reading of git_head's code. The records this
     // repo's OWN measurement tools write at run time are excluded
     // (ADVICE r16/r17): run N of a clean-code session churns only the
-    // records run N-1 wrote (this file's BENCH_LOCAL.json, and
-    // oracle_check.py's AUDITS_LOCAL.json / GRAFT_AUDITS_OUT=
-    // AUDITS_SF01.json when a verify preceded the bench in the same
-    // session), and flagging record churn as code dirt defeated the
+    // records run N-1 wrote (this file's BENCH_LOCAL.json, and the
+    // AUDITS_LOCAL.json / AUDITS_SF01.json that oracle_check.py writes
+    // when GRAFT_AUDITS_OUT names one of them, as a verify before the
+    // bench may), and flagging record churn as code dirt defeated the
     // provenance the flag exists to pin. Driver/judge artifacts
     // (VERDICT.md, BENCH_r*.json, ...) are deliberately NOT excluded —
     // conservative direction: false-dirty is acceptable, false-clean

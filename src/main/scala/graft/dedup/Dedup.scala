@@ -1,8 +1,14 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, GraftColumnBridge => B}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{MinHash, MinHashSignature, Vectors, WordShingles}
 
 /** Document deduplication for large-scale training-data pipelines.
   *
@@ -13,24 +19,28 @@ import graft.functions.Vectors
   * That is the shape that survives 100 TB: bucket sizes are bounded by data
   * similarity, not corpus size, and AQE handles skewed buckets.
   *
-  * Signatures are computed explode→aggregate: one row per (doc, shingle),
-  * then a map-side-combined min/sum per doc. This keeps every expensive
-  * expression (normalization regexp, shingling, hashing) evaluated exactly
-  * once per row — never inlined into a higher-order-function lambda where
-  * Catalyst's CollapseProject would re-evaluate it per element — and the
-  * aggregation shuffles only k small values per doc.
+  * Every expensive expression (normalization regexp, shingling, hashing)
+  * is evaluated exactly once per row — never inlined into a
+  * higher-order-function lambda where Catalyst's CollapseProject would
+  * re-evaluate it per element. MinHash runs in-row: native kernels
+  * ([[graft.functions.WordShingles]], [[graft.functions.MinHashSignature]])
+  * turn a document's tokens into its shingle set and signature with no
+  * shuffle. SimHash is explode→aggregate: one row per (doc, token), then
+  * one map-side-combined vote aggregate per doc.
   */
 object Dedup {
 
-  /** Sharing note: the signature/shingle frames below feed several plan
-    * branches, and ReuseExchange cannot deduplicate them (each consumer
-    * prunes different columns/aggregates, so the exchange subtrees
-    * differ) — the pipeline re-runs once per branch. Measured at sf0.1,
-    * recomputing beats `persist(MEMORY_AND_DISK)` (cache build +
-    * serialization cost the codegen'd recompute ~2×), so these operators
-    * recompute; at 100 TB with expensive scans, callers should
-    * `.persist()` the INPUT docs frame instead, which restores sharing at
-    * the only stage where it pays. */
+  /** Sharing note: the exploded shingle frames below (the n-gram Jaccard
+    * and containment paths) feed several plan branches, and ReuseExchange
+    * cannot deduplicate them (each consumer prunes different
+    * columns/aggregates, so the exchange subtrees differ) — the pipeline
+    * re-runs once per branch. Measured at sf0.1, recomputing beats
+    * `persist(MEMORY_AND_DISK)` (cache build + serialization cost the
+    * codegen'd recompute ~2×), so these operators recompute; at 100 TB
+    * with expensive scans, callers should `.persist()` the INPUT docs
+    * frame instead. The MinHash paths are the exception: their per-doc
+    * (id, sh, sig) frame is one narrow projection, materialized once
+    * ([[minhashIndex]]). */
 
   /** Canonical text normalization: lowercase, collapse non-alphanumerics. */
   def normText(c: Column): Column =
@@ -41,13 +51,13 @@ object Dedup {
 
   def tokens(c: Column): Column = split(normText(c), " ")
 
-  /** Word n-gram shingles as strings; short docs degrade to one shingle. */
+  /** The DISTINCT word n-gram shingles of a token array, in first-
+    * occurrence order ([[graft.functions.WordShingles]]); short docs
+    * degrade to one shingle, and a null array counts as empty, so it is
+    * one empty shingle, as in [[positionalGrams]]. */
   def shingles(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
-      .otherwise(array(concat_ws(" ", toks)))
+    B.column(WordShingles(
+      B.expression(coalesce(toks, typedLit(Seq.empty[String]))), n))
 
   /** (id, p, g): POSITIONAL word n-grams — one row per token position,
     * duplicates kept (cf. [[dupSpans]]'s coverage semantics). Short docs
@@ -83,13 +93,14 @@ object Dedup {
       .distinct()
 
   /** The corpus-derived document-frequency cap ([[autoDfCap]]) on the
-    * exploded (id, g) shingles of `docs`: grams in more than the cap's
-    * docs leave the pipeline before any signature math (df computed
-    * once — one extra shuffle on the gram), so corpus-wide boilerplate
-    * can no longer align signatures and blow a (band, bucket) key up
-    * quadratically. Signatures, banding, exact verification and set
-    * sizes then all see the capped shingle sets (a documented
-    * approximation, standard near-dup practice). */
+    * exploded (id, g) shingles of `docs`, for the shared-shingle joins
+    * (n-gram Jaccard, containment): grams in more than the cap's docs
+    * leave the index (df computed once — one extra shuffle on the gram),
+    * so corpus-wide boilerplate can no longer blow a join key up
+    * quadratically. Intersections and set sizes then both see the capped
+    * shingle sets (a documented approximation, standard near-dup
+    * practice). The MinHash paths apply the same cut in-row
+    * ([[minhashIndex]]). */
   private def dfCapped(docs: DataFrame, idCol: String, textCol: String,
                        n: Int): DataFrame = {
     val all = explodedShingles(docs, idCol, textCol, n)
@@ -146,17 +157,12 @@ object Dedup {
     * derives bits from `emb.count()`), then the pipeline runs the
     * cap as a plain literal filter — the scalar never rides the
     * plan, so the nested-loop and broadcast-hint sweeps stay clean.
-    * The knob scan is MAP-SIDE ONLY and HOF-free: avgShinglesPerDoc is
-    * measured as the average shingle POSITION count max(|toks|−n+1, 1)
-    * — one split per doc in the scan stage. Positions ≥ distinct
+    * The knob scan is MAP-SIDE ONLY: avgShinglesPerDoc is measured as
+    * the average shingle POSITION count max(|toks|−n+1, 1) — one split
+    * per doc in the scan stage, no shingle built. Positions ≥ distinct
     * shingles, so the derived cap only errs LARGER (safer no-op, same
-    * O(1)-in-corpus-size bound). Building the exact distinct-shingle
-    * arrays here would walk the `shingles` transform lambda, and
-    * Catalyst inlines the tokenization INTO the lambda (CollapseProject
-    * counts lambda refs once but they evaluate per element — the
-    * documented HOF trap): measured 4.4 s vs ~0.3 s for this scan at
-    * sf0.1. At 100 TB the pass amortizes across the run (or derive
-    * from corpus stats you already track). */
+    * O(1)-in-corpus-size bound). At 100 TB the pass amortizes across
+    * the run (or derive from corpus stats you already track). */
   private[graft] def autoDfCap(docs: DataFrame, textCol: String,
                                 n: Int): Long = {
     val r = docs
@@ -166,43 +172,113 @@ object Dedup {
     math.ceil(r * DefaultDfBudget).toLong
   }
 
-  /** Rotate a 64-bit column left by `s` bits (s in [0, 63]). */
-  private def rotl64(c: Column, s: Int): Column =
-    if (s % 64 == 0) c
-    else shiftleft(c, s % 64)
-      .bitwiseOR(shiftrightunsigned(c, 64 - (s % 64)))
-
-  /** k-permutation MinHash signatures via explode + k min-aggregates:
-    * sig[s] = min over shingles of h1(shingle) XOR rotl(h2(shingle), s) — a
-    * double-hashing family where each shingle string is hashed exactly twice
-    * and the k permutations are bitwise mixes (overflow-free under ANSI
-    * mode, unlike h1 + s*h2). One shuffle with map-side combine; k longs per
-    * doc cross the wire. Input: (id, sh array). Returns (id, sig). */
+  /** k-permutation MinHash signatures of caller-built shingle sets:
+    * sig[s] = min over shingles of h1(shingle) XOR rotl(h2(shingle), s)
+    * ([[graft.functions.MinHashSignature]]) — a double-hashing family
+    * where each shingle string is hashed exactly twice and the k
+    * permutations are bitwise mixes (overflow-free under ANSI mode,
+    * unlike h1 + s*h2). In-row: no shuffle. Input: (id, sh array), one
+    * row per id. Returns (id, sig); an empty or null set has no
+    * signature and no row. */
   def minhashSignatures(withSh: DataFrame, k: Int): DataFrame =
-    sigAndShingles(
-      withSh.select(col("id"), explode(col("sh")).as("g")), k)
-      .select(col("id"), col("sig"))
+    withSh.select(col("id"), minhash(col("sh"), k).as("sig"))
+      .filter(col("sig").isNotNull)
 
-  /** (id, sh, sig) in a single aggregation pass over exploded (id, g) rows:
-    * the same groupBy computes the k signature mins AND reassembles the
-    * shingle set (collect_set), so each consumer pays one aggregation, not
-    * two. Consumers (banding + both exact-verify sides) still re-execute
-    * the pipeline — ReuseExchange can NOT deduplicate them (each prunes
-    * different columns, so the exchange subtrees differ), and a lazy
-    * localCheckpoint of this frame measured no better than the recompute
-    * at sf0.1 (collect_set rows serialize poorly; cf. the file-header
-    * sharing note: at 100 TB, persist the INPUT docs frame instead). */
-  private def sigAndShingles(exploded: DataFrame, k: Int): DataFrame = {
-    val mins = (0 until k).map(s =>
-      min(col("h1").bitwiseXOR(rotl64(col("h2"), s))).as(s"m$s"))
-    val aggs = collect_set(col("g")).as("sh") +: mins
-    exploded
-      .select(col("id"), col("g"), hash(col("g")).cast("long").as("h1"),
-        xxhash64(col("g")).as("h2"))
-      .groupBy(col("id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), col("sh"),
-        array((0 until k).map(s => col(s"m$s")): _*).as("sig"))
+  private def minhash(sh: Column, k: Int): Column =
+    B.column(MinHashSignature(B.expression(sh), k))
+
+  /** An LSH bucket: band number plus the band's raw signature slice, so
+    * bucket equality is exactly slice equality ([[bands]]' key). */
+  private final class BandKey(val band: Int, val slice: Array[Long])
+      extends Serializable {
+    override def hashCode: Int =
+      31 * band + java.util.Arrays.hashCode(slice)
+    override def equals(o: Any): Boolean = o match {
+      case b: BandKey =>
+        band == b.band && java.util.Arrays.equals(slice, b.slice)
+      case _ => false
+    }
+  }
+
+  /** The near-dup index of `docs` (one row per id): rows (id, sh, sig,
+    * npos, ev) with `sh` the document's distinct word-3-gram set minus
+    * the boilerplate blocklist, `sig` its MinHash signature, `npos` its
+    * shingle position count max(|toks| − 2, 1) (what [[autoDfCap]]
+    * averages) and `ev` the caller's flag. The sets and signatures come
+    * from the in-row kernels in ONE projection, whose rows are
+    * materialized once with `localCheckpoint`; banding and both verify
+    * sides read them as RDD operations, so a pass plans no further
+    * queries and generates no further code. Returns the index, its
+    * partition count (the parallelism of the stage's shuffles) and the
+    * id type.
+    *
+    * The blocklist is the [[autoDfCap]] cut: the shingles whose document
+    * frequency exceeds the cap. The materializing action also sums the
+    * position counts, so the cap (the same double average, hence the
+    * same value) costs no scan of its own. No shingle can exceed a cap
+    * at least the document count, and then no df is counted; otherwise
+    * ONE reduce over the per-doc sets collects the blocked shingles.
+    * Their document frequencies sum to at most the index size R (one
+    * entry per (doc, shingle)), so the list holds at most R ÷ cap
+    * shingles — about a quarter of the document count, as the cap is
+    * four typical documents' shingle counts. It is empty at every gate
+    * corpus and in the benchmark (DedupSpec pins the margin), and then
+    * the first materialization is the answer; otherwise the blocked
+    * shingles leave each set, the signatures are recomputed over the
+    * capped sets (df is always counted over the uncapped sets), and a
+    * document whose every shingle is blocked leaves the index. */
+  private def minhashIndex(docs: DataFrame, idCol: String, textCol: String,
+                           k: Int, ev: Column): (RDD[InternalRow], Int,
+                                                  DataType) = {
+    val n = 3
+    val proj = docs
+      .select(col(idCol).as("id"), tokens(col(textCol)).as("toks"),
+        ev.as("ev"))
+      .select(col("id"), shingles(col("toks"), n).as("sh"),
+        greatest(size(col("toks")) - (n - 1), lit(1)).as("npos"), col("ev"))
+      .select(col("id"), col("sh"), minhash(col("sh"), k).as("sig"),
+        col("npos"), col("ev"))
+    val dt = proj.schema.head.dataType
+    // unsafe rows, copied out of the reused buffer: one byte array each,
+    // which the block store sizes without walking an object graph
+    val rows = proj.queryExecution.toRdd.map(_.copy())
+    val parts = math.max(rows.getNumPartitions, 1)
+    rows.localCheckpoint()
+    val (nDocs, nPos) = rows.map(r => (1L, r.getInt(3).toLong))
+      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+    val cap =
+      if (nDocs == 0) 0L
+      else math.ceil(nPos.toDouble / nDocs * DefaultDfBudget).toLong
+    val blocked: Set[UTF8String] =
+      if (nDocs <= cap) Set.empty
+      else rows.flatMap(r => grams(r).iterator.map(g => (g, 1L)))
+        .reduceByKey(_ + _, parts)
+        .filter(_._2 > cap)
+        .keys.collect().toSet
+    val index =
+      if (blocked.isEmpty) rows
+      else {
+        val capped = rows.flatMap { r =>
+          val sh = grams(r).filterNot(blocked.contains)
+          if (sh.isEmpty) None
+          else {
+            val set = new GenericArrayData(sh.asInstanceOf[Array[Any]])
+            Some(InternalRow(InternalRow.copyValue(r.get(0, dt)), set,
+              MinHash.signature(set, k), r.getInt(3),
+              if (r.isNullAt(4)) null else r.getBoolean(4)))
+          }
+        }
+        capped.localCheckpoint()
+        capped.count()
+        capped
+      }
+    (index, parts, dt)
+  }
+
+  /** An index row's shingle set. */
+  private def grams(r: InternalRow): Array[UTF8String] = {
+    val sh = r.getArray(1)
+    Array.tabulate(sh.numElements())(i => sh.getUTF8String(i).clone())
   }
 
   /** LSH banding: split the k-length signature into `bands` bands of
@@ -215,67 +291,94 @@ object Dedup {
     * (~40-90 bytes + per-row string formatting); the raw slice is the
     * same exact-equality key (concat_ws(",") over decimal longs is
     * injective, so slice equality ⇔ string equality — the candidate
-    * set is IDENTICAL) at rowsPerBand·8 bytes, which narrows the
-    * banding exchange and skips the cast/concat per (row, band). The
-    * DuckDB oracle keeps its own canonical key (string_agg ORDER BY s)
-    * — the two sides agree on candidates, which is all the output
-    * depends on. Returns the per-band key array. */
+    * set is IDENTICAL) at rowsPerBand·8 bytes. The near-dup paths key
+    * their buckets by the same slices ([[BandKey]]). The DuckDB oracle
+    * keeps its own canonical key (string_agg ORDER BY s) — the two sides
+    * agree on candidates, which is all the output depends on. Returns
+    * the per-band key array. */
   def bands(sig: Column, nBands: Int, rowsPerBand: Int): Column =
     transform(sequence(lit(0), lit(nBands - 1)),
       b => slice(sig, b * lit(rowsPerBand) + lit(1), lit(rowsPerBand)))
 
-  /** Exact Jaccard between two shingle-array columns. */
-  private def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+  /** The (band, slice) buckets of every indexed document with an id and a
+    * signature, each holding the (id, eval flag) of its documents. */
+  private def buckets(index: RDD[InternalRow], dt: DataType, k: Int,
+                      nBands: Int,
+                      parts: Int): RDD[Iterable[(Any, java.lang.Boolean)]] = {
+    val r = k / nBands
+    index.filter(row => !row.isNullAt(0) && !row.isNullAt(2))
+      .flatMap { row =>
+        val sig = row.getArray(2).toLongArray()
+        val doc = (InternalRow.copyValue(row.get(0, dt)),
+          if (row.isNullAt(4)) null else Boolean.box(row.getBoolean(4)))
+        Iterator.tabulate(nBands)(b => (new BandKey(b,
+          java.util.Arrays.copyOfRange(sig, b * r, b * r + r)), doc))
+      }
+      .groupByKey(parts)
+      .values
+  }
+
+  /** Exact Jaccard of two distinct shingle sets, as Spark's
+    * size(array_intersect) / size(array_union) computes it. */
+  private def jaccard(a: ArrayData, b: ArrayData): Double = {
+    val in = new java.util.HashSet[UTF8String]()
+    for (i <- 0 until a.numElements()) in.add(a.getUTF8String(i))
+    val both = (0 until b.numElements()).count(i => in.contains(b.getUTF8String(i)))
+    both.toDouble / (a.numElements() + b.numElements() - both)
+  }
+
+  /** The distinct candidate pairs (a, b) whose exact shingle-set Jaccard
+    * over `index` clears `threshold`, as the frame (aName, bName,
+    * jaccard): each pair side joins its shingle set back by id. Ids
+    * compare as Catalyst values, so any atomic id type but binary. */
+  private def verified(spark: SparkSession, cands: RDD[(Any, Any)],
+                       index: RDD[InternalRow], parts: Int, dt: DataType,
+                       aName: String, bName: String,
+                       threshold: Double): DataFrame = {
+    // hash-partitioned once: both joins reuse that one index shuffle
+    val byId = new HashPartitioner(parts)
+    val sets = index.filter(!_.isNullAt(0))
+      .map(r => (InternalRow.copyValue(r.get(0, dt)), r.getArray(1).copy()))
+      .partitionBy(byId)
+    val rows = cands.distinct(parts)
+      .join(sets, byId)
+      .map { case (a, (b, shA)) => (b, (a, shA)) }
+      .join(sets, byId)
+      .mapPartitions { it =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        it.flatMap { case (b, ((a, shA), shB)) =>
+          val j = jaccard(shA, shB)
+          if (j >= threshold) Iterator(Row(toScala(a), toScala(b), j))
+          else Iterator.empty
+        }
+      }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField(aName, dt), StructField(bName, dt),
+      StructField("jaccard", DoubleType))))
+  }
 
   /** MinHash+LSH candidate pairs with exact-Jaccard verification over
-    * the df-capped shingle sets ([[dfCapped]]; the cap is a no-op at
+    * the df-capped shingle sets ([[minhashIndex]]; the cap is a no-op at
     * gate corpora — DedupSpec pins the margin — and the linear-work
     * guard at 100 TB). Returns (id_a, id_b, jaccard) with id_a < id_b,
     * jaccard >= threshold. Candidates come only from shared (band,
-    * band-hash) buckets; the exact verification joins the shingle sets
-    * back by id, so the banding join itself carries just (id, band, bh). */
+    * slice) buckets, which carry just ids; the exact verification joins
+    * the shingle sets back by id. Every branch reads the one
+    * materialized index. */
   def minhashNearDupsAuto(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int, nBands: Int, threshold: Double): DataFrame =
-    minhashCore(dfCapped(docs, idCol, textCol, n = 3), k, nBands, threshold)
-
-  private def minhashCore(exploded: DataFrame, k: Int, nBands: Int,
-                          threshold: Double): DataFrame = {
-    val rowsPerBand = k / nBands
-    // banding needs only the signature mins (column pruning drops the
-    // collect_set from these executions)
-    val sigs = sigAndShingles(exploded, k)
-    val banded = sigs
-      .select(col("id"),
-        posexplode(bands(col("sig"), nBands, rowsPerBand))
-          .as(Seq("band", "bh")))
-    // candidate pairs are tiny next to the corpus; checkpoint lazily —
-    // three consumers below (the id set + both verify joins) must not
-    // re-run the banding self-join
-    // r20 NOTE: restructuring the exact verify to a candidate-restricted
-    // aggregation (checkpoint `cands`, semi-join the exploded index by
-    // candidate ids, collect_set only those) was tried and REVERTED:
-    // interleaved bench A/B at sf0.1 read d02 +5% / d13 +12% raw (flat
-    // after control scaling) and shuffle bytes moved only −4%/+2% —
-    // because at RUNTIME AQE's ReuseExchange already shares the
-    // identical verify subtrees' shuffle, the semi-join does not push
-    // below the distinct (the full (id, g) exchange re-ran in the new
-    // fragment), and the checkpoint split adds fixed fragment overhead
-    // (under AQE even a lazy checkpoint runs its stages eagerly at plan
-    // time). The shared-subtree formulation below is the cheaper plan
-    // as measured.
-    val cands = banded.select(col("id").as("id_a"), col("band"), col("bh"))
-      .join(banded.select(col("id").as("id_b"), col("band"), col("bh")),
-        Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    cands
-      .join(sigs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+                          k: Int, nBands: Int, threshold: Double): DataFrame = {
+    val (index, parts, dt) =
+      minhashIndex(docs, idCol, textCol, k, lit(null).cast("boolean"))
+    val cands = buckets(index, dt, k, nBands, parts).mapPartitions { it =>
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      it.flatMap { docsIn =>
+        val ids = docsIn.map(_._1).toArray
+        for (a <- ids.iterator; b <- ids.iterator if ord.lt(a, b))
+          yield (a, b)
+      }
+    }
+    verified(docs.sparkSession, cands, index, parts, dt, "id_a", "id_b",
+      threshold)
   }
 
   /** FUZZY benchmark decontamination — the near-duplicate (not exact-
@@ -286,47 +389,23 @@ object Dedup {
     * sibling for paraphrase-level leakage.
     *
     * Scale shape = [[minhashNearDupsAuto]]' exactly — signatures are
-    * computed ONCE over the union (one aggregation pass), the banding
-    * equi-join is the only candidate generator (never eval × train), and
-    * the split membership rides the n-row signature frame as a flag, so
-    * restricting candidates to cross-split pairs costs one narrow join
-    * on the doc id and a filter on each banded side. Exact verification
-    * joins shingle sets back per candidate. */
+    * computed ONCE over the union, the banding buckets are the only
+    * candidate generator (never eval × train), and the split membership
+    * rides the per-doc index entry as a flag, so a bucket pairs only its
+    * eval documents with its train documents (a null flag is neither).
+    * Exact verification joins shingle sets back per candidate. */
   def crossMinhashNearDupsAuto(docs: DataFrame, idCol: String,
                                textCol: String, evalFilter: Column,
                                k: Int, nBands: Int,
-                               threshold: Double): DataFrame =
-    crossMinhashCore(dfCapped(docs, idCol, textCol, n = 3),
-      docs, idCol, evalFilter, k, nBands, threshold)
-
-  private def crossMinhashCore(exploded: DataFrame, docs: DataFrame,
-                               idCol: String, evalFilter: Column,
-                               k: Int, nBands: Int,
                                threshold: Double): DataFrame = {
-    val rowsPerBand = k / nBands
-    val sigs = sigAndShingles(exploded, k)
-    val flags = docs.select(col(idCol).as("id"), evalFilter.as("__ev"))
-    val banded = sigs.join(flags, "id")
-      .select(col("id"), col("__ev"),
-        posexplode(bands(col("sig"), nBands, rowsPerBand))
-          .as(Seq("band", "bh")))
-    // (the candidate-restricted verify restructure was tried and
-    // reverted here too — see [[minhashCore]]'s r20 NOTE)
-    val cands = banded.filter(col("__ev"))
-      .select(col("id").as("eval_id"), col("band"), col("bh"))
-      .join(banded.filter(!col("__ev"))
-        .select(col("id").as("train_id"), col("band"), col("bh")),
-        Seq("band", "bh"))
-      .select(col("eval_id"), col("train_id"))
-      .distinct()
-    cands
-      .join(sigs.select(col("id").as("eval_id"), col("sh").as("sh_e")),
-        "eval_id")
-      .join(sigs.select(col("id").as("train_id"), col("sh").as("sh_t")),
-        "train_id")
-      .select(col("eval_id"), col("train_id"),
-        jaccard(col("sh_e"), col("sh_t")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    val (index, parts, dt) = minhashIndex(docs, idCol, textCol, k, evalFilter)
+    val cands = buckets(index, dt, k, nBands, parts).flatMap { docsIn =>
+      val evals = docsIn.collect { case (id, ev) if ev == true => id }
+      val trains = docsIn.collect { case (id, ev) if ev == false => id }
+      for (e <- evals.iterator; t <- trains.iterator) yield (e, t)
+    }
+    verified(docs.sparkSession, cands, index, parts, dt, "eval_id",
+      "train_id", threshold)
   }
 
   /** The xxhash64 TOKEN dictionary — (t, h) for every distinct token of
@@ -345,7 +424,7 @@ object Dedup {
     * exact band keys, the candidate join and the exact jaccard. */
   def shingleHashDict(docs: DataFrame, idCol: String, textCol: String,
                       n: Int): DataFrame =
-    explodedShingles(docs, idCol, textCol, n).select("g").distinct()
+    docs.select(explode(shingles(tokens(col(textCol)), n)).as("g")).distinct()
       .select(col("g"), hash(col("g")).cast("long").as("h1"),
         xxhash64(col("g")).as("h2"))
 
@@ -690,82 +769,136 @@ object Dedup {
     * post-step that turns pairwise matches into KEEP/DROP decisions: every
     * document in a component shares its cluster id (the component's
     * minimum vertex id), and a pipeline keeps one representative per
-    * cluster.
+    * cluster. Returns (id, cluster) for every vertex appearing in `pairs`;
+    * a null endpoint is the vertex null, whose cluster is null.
     *
-    * Min-label propagation: labels start as own ids and flow across edges
-    * until fixpoint; each round is one symmetric-edge join + min aggregate
-    * (all shuffles keyed on the vertex). Rounds needed ≈ the graph
-    * diameter — near-dup components are short chains, so convergence is a
-    * handful of rounds; `localCheckpoint` truncates the growing lineage
-    * each round (the standard Spark iterative-algorithm discipline).
-    * Returns (id, cluster) for every vertex appearing in `pairs`.
+    * Union-find first: one pass over each partition of `pairs` links the
+    * edges' endpoints and labels every id it saw with its partition-local
+    * component minimum. If every id ends up with a single label across
+    * the partitions, each label is its global component's minimum: a
+    * path between two ids crosses partitions only at ids, and each id
+    * carries one label, so a whole component shares one label, which is
+    * at most its minimum's. That always holds when the pairs sit in one
+    * partition, and then the pass is the answer. Otherwise the min-label
+    * rounds ([[minLabelRounds]]) finish the job on the contracted graph,
+    * one edge from each id to each of its local labels (Kiveris et al.,
+    * SoCC 2014). Either way the emitted label is the component minimum,
+    * whatever the partitioning.
     */
   def connectedComponents(pairs: DataFrame, aCol: String,
                           bCol: String): DataFrame = {
-    // Materialize the edge list once: every propagation round (and every
-    // convergence probe) joins against it, and recomputing the upstream
-    // candidate-generation pipeline per round would dominate the loop.
-    // r20 NOTE: pre-partitioning the edges by `src` before this
-    // checkpoint was tried (guide §2.4 — it would let every round's
-    // join skip the edge-side exchange) and REVERTED: under AQE,
-    // Dataset.localCheckpoint materializes to a LogicalRDD with
-    // UnknownPartitioning (verified in r20's per-round plan dump), so
-    // the partitioning cannot survive the checkpoint and the round joins
-    // re-exchange regardless; the extra up-front shuffle bought
-    // nothing. Removing the per-round edge exchange at scale needs a
-    // bucketed/persisted edge table, not an in-session checkpoint.
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // the common type of both endpoint columns, as a union would widen it
+    val dt = pairs.select(col(aCol)).union(pairs.select(col(bCol)))
+      .schema.head.dataType
+    val rows = pairs.select(col(aCol).cast(dt), col(bCol).cast(dt))
+      .queryExecution.toRdd
+    val local = pairs.sparkSession.createDataFrame(
+        rows.mapPartitions(localComponents(_, dt)),
+        StructType(Seq(StructField("id", dt), StructField("label", dt))))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
+    if (rows.getNumPartitions <= 1)
+      local.select(col("id"), col("label").as("cluster"))
+    else {
+      val labels = local.groupBy("id")
+        .agg(min(col("label")).as("label"), max(col("label")).as("hi"))
+        .localCheckpoint()
+      val done = labels.filter(col("label") =!= col("hi")).isEmpty
+      (if (done) labels
+       else minLabelRounds(local.filter(col("id") =!= col("label")),
+         labels.select("id", "label")))
+        .select(col("id"), col("label").as("cluster"))
+    }
+  }
+
+  /** Union-find over one partition's (a, b) edge rows of type `dt`, with
+    * path halving and the smaller root always kept as the root: one
+    * (id, label) row per id seen, labeled with its local component
+    * minimum, plus (null, null) if an endpoint was null. */
+  private def localComponents(edges: Iterator[InternalRow],
+                              dt: DataType): Iterator[Row] = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var v = x
+      while (parent.get(v) != v) {
+        val up = parent.get(parent.get(v))
+        parent.put(v, up)
+        v = up
+      }
+      v
+    }
+    def vertex(r: InternalRow, i: Int): Any =
+      if (r.isNullAt(i)) null
+      else {
+        // rows are reused: copy string bytes out of the row's buffer
+        val v = InternalRow.copyValue(r.get(i, dt))
+        parent.putIfAbsent(v, v)
+        v
+      }
+    var sawNull = false
+    for (r <- edges) {
+      val (a, b) = (vertex(r, 0), vertex(r, 1))
+      if (a == null || b == null) sawNull = true
+      else {
+        val (ra, rb) = (find(a), find(b))
+        if (ord.lt(ra, rb)) parent.put(rb, ra)
+        else if (ord.lt(rb, ra)) parent.put(ra, rb)
+      }
+    }
+    val ids = parent.keySet.toArray
+    ids.iterator.map(v => Row(toScala(v), toScala(find(v)))) ++
+      (if (sawNull) Iterator(Row(null, null)) else Iterator.empty)
+  }
+
+  /** Min-label propagation to fixpoint over the (id, label) edge rows,
+    * from `start` labels (id, label) that each name a member of the id's
+    * component, with every component's minimum labeled itself. Each
+    * round is a few id-keyed joins and one min aggregate;
+    * `localCheckpoint` truncates the growing lineage each round. Labels
+    * only fall, so the rounds end; the hook and pointer-halving terms
+    * keep them to a handful on near-dup graphs. Returns (id, label), the
+    * component minimum per id. */
+  private def minLabelRounds(edgeRows: DataFrame,
+                             start: DataFrame): DataFrame = {
+    val edges = edgeRows.select(col("id").as("src"), col("label").as("dst"))
+      .union(edgeRows.select(col("label").as("src"), col("id").as("dst")))
       .localCheckpoint()
+    var labels = start
     var converged = false
-    var iter = 0
-    // One propagation round per convergence probe (batching rounds per
-    // probe measured a wash, OPTIMIZATION_r20.md). Each round yields the
-    // new label per id plus the OLD one (the `own`-tagged row), so the
-    // convergence test is a join-free filter over the checkpointed frame.
-    while (!converged && iter < CcMaxIter) {
-      val propagated = edges
-        .join(labels, edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("label"), lit(false).as("own"))
-      // r19 pointer-halving term: each id ALSO adopts its label's label
-      // (label-of-label), so label chains collapse in O(log diameter)
-      // rounds instead of O(diameter) — a label always names a member
-      // of the same component, so the fixpoint (the component MIN) is
-      // unchanged and so is the emitted result; only the round count
-      // drops. Each round that used to pay (plan + codegen + job) ×
-      // diameter now pays it × log — the dominant cost of this loop at
-      // gate scale is per-round DRIVER work, not data.
-      val ptrTerm = labels.select(col("id"), col("label").as("mid"))
+    while (!converged) {
+      // (src, dst, l): dst has a neighbour src labeled l
+      val hops = edges.join(
+        labels.select(col("id").as("src"), col("label").as("l")), "src")
+      val propagated = hops.select(col("dst").as("id"), col("l").as("label"))
+      // hooking: dst's LABEL takes l too, so a whole label class moves
+      // at once instead of one hop per round
+      val hooked = hops
+        .join(labels.select(col("id").as("dst"), col("label").as("id")),
+          "dst")
+        .select(col("id"), col("l").as("label"))
+      // pointer halving: each id also adopts its label's label
+      val halved = labels.select(col("id"), col("label").as("mid"))
         .join(labels.select(col("id").as("mid"),
-          col("label").as("plabel")), Seq("mid"))
-        .select(col("id"), col("plabel").as("label"), lit(false).as("own"))
-      // r19: LAZY — the convergence probe below is the round's one
-      // action and materializes the checkpoint as it runs: one job per
-      // probe, not a checkpoint job plus a probe job.
-      val next = Seq(labels.withColumn("own", lit(true)), propagated,
-          ptrTerm)
+          col("label").as("plabel")), "mid")
+        .select(col("id"), col("plabel").as("label"))
+      // Each id's new label plus its OLD one (the `own` row), so the
+      // convergence test is a join-free filter over the checkpointed
+      // frame. LAZY: that test is the round's one action and
+      // materializes the checkpoint as it runs.
+      val next = (labels.withColumn("own", lit(true)) +:
+          Seq(propagated, hooked, halved).map(_.withColumn("own", lit(false))))
         .reduce(_ union _)
         .groupBy("id")
         .agg(min(col("label")).as("label"),
           min(when(col("own"), col("label"))).as("old"))
         .localCheckpoint(eager = false)
       labels = next.select("id", "label")
-      iter += 1
-      // old is null only if an id arrived purely via propagation — cannot
-      // happen while `labels` seeds every vertex of the symmetrized edge
-      // list, but treat it as "changed" so the invariant is not load-bearing.
-      converged =
-        next.filter(col("old").isNull || col("label") < col("old")).isEmpty
+      // null-safe: the null vertex keeps its null label and is settled
+      converged = next.filter(!(col("label") <=> col("old"))).isEmpty
     }
-    labels.select(col("id"), col("label").as("cluster"))
+    labels
   }
-
-  /** Round cap of [[connectedComponents]]: pointer halving converges in
-    * O(log diameter) rounds, far below this on near-dup graphs. */
-  private val CcMaxIter = 20
 
   /** Semantic dedup, SemDeDup-style (Abbas et al. 2023, arXiv:2303.09540):
     * k-means-cluster the embeddings, then drop every vector that has a

@@ -416,7 +416,7 @@ final class Catalog(
     * of the matched objects' ancestors are included (the whole family
     * tree), exactly as `kcidb-query -c -p` returns it. The parents pass is
     * [[parentsClosure]]'s driver walk; the children pass starts from the
-    * walk's id sets as broadcast local roots. With one flag set this
+    * walk's id sets as local frames. With one flag set this
     * degenerates to exactly [[childrenClosure]] / [[parentsClosure]]. */
   def closure(spark: SparkSession, dir: String,
               roots: Map[String, DataFrame],
@@ -430,9 +430,10 @@ final class Catalog(
     } else {
       val (ids, frames) = walkParents(spark, tbl, roots, withMetadata)
       if (!children) frames
+      // no broadcast hint: a local frame's size is exact to Catalyst, and
+      // under the checkpointed unions of `reach` a hint is dropped anyway
       else materialize(tbl, reach(tbl, ids.map { case (tn, set) =>
-          tn -> broadcast(spark.createDataFrame(set.toSeq.asJava,
-            idSchema(tbl, tn)))
+          tn -> spark.createDataFrame(set.toSeq.asJava, idSchema(tbl, tn))
         }, down = true)._1, withMetadata)
     }
   }

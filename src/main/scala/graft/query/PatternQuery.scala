@@ -233,9 +233,15 @@ object PatternQuery {
         case IdList(l) => Some(l)
         case Placeholder => Some(lists.next())
       }
-      // the step's id filter, applied to every id set it expands into
+      // the step's id filter, applied to every id set it expands into; an
+      // id must name every id column of the type (kcidb's
+      // query_ids_are_valid)
       def keep(tn: String, df: DataFrame): DataFrame = ids.fold(df) { l =>
         val idCols = catalog.types(tn).idCols
+        for (id <- l)
+          require(id.size == idCols.size,
+            s"id [${id.mkString(",")}] has ${id.size} field(s) but type " +
+              s"$tn has ${idCols.size} id column(s): ${idCols.mkString(", ")}")
         df.filter(l.map { idVals =>
           idCols.zip(idVals).map { case (c, v) =>
             col(c).cast("string") === lit(v)

@@ -68,6 +68,92 @@ class DedupSpec extends AnyFunSuite {
     assert(sigs(1L) != sigs(4L))
   }
 
+  /** The shingle and signature formulations the MinHash kernels replaced:
+    * shingle arrays built by a `transform` lambda, and signatures as 64
+    * `min(h1 ^ rotl(h2, s))` aggregates over the exploded distinct
+    * (id, g) rows, grouped by id. Returns (id, sh, sig). */
+  private def explodeAggMinhash(d: org.apache.spark.sql.DataFrame,
+                                k: Int): org.apache.spark.sql.DataFrame = {
+    def rotl(c: org.apache.spark.sql.Column, s: Int) =
+      if (s % 64 == 0) c
+      else shiftleft(c, s % 64).bitwiseOR(shiftrightunsigned(c, 64 - s % 64))
+    val mins = (0 until k).map(s =>
+      min(col("h1").bitwiseXOR(rotl(col("h2"), s))).as(s"m$s"))
+    val aggs = collect_set(col("g")).as("sh") +: mins
+    Dedup.positionalGrams(d, "doc_id", "text", 3).select("id", "g").distinct()
+      .select(col("id"), col("g"), hash(col("g")).cast("long").as("h1"),
+        xxhash64(col("g")).as("h2"))
+      .groupBy(col("id"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("id"), col("sh"),
+        array((0 until k).map(s => col(s"m$s")): _*).as("sig"))
+  }
+
+  private def transformShingles(toks: org.apache.spark.sql.Column,
+                                n: Int): org.apache.spark.sql.Column =
+    when(size(toks) >= n,
+      array_distinct(transform(
+        sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
+      .otherwise(array(concat_ws(" ", toks)))
+
+  test("MinHash kernels equal the transform-lambda shingles and the " +
+      "explode + 64-min signatures bit for bit") {
+    val edge = Seq[(Long, String)](
+      (900001L, ""),                              // empty text
+      (900002L, "two words"),                     // shorter than 3 tokens
+      (900003L, "one"),
+      (900004L, "!!! ???"),                       // no token survives
+      (900005L, "a b c a b c a b c a b"),         // repeated grams
+      (900006L, "Grüße aus Köln: naïve café ½ 日本語 text über alles"),
+      (900007L, "ÄÖÜ àéî ñ — ø œ ß ğ ı İ"),
+      (900008L, null)
+    ).toDF("doc_id", "text")
+    val corpus = graft.sources.Tables(spark, TestSpark.sf, "documents")
+      .select("doc_id", "text").unionByName(edge)
+    def check(): Unit = {
+      val kernel = corpus.select(col("doc_id"),
+          Dedup.shingles(Dedup.tokens(col("text")), 3).as("sh"),
+          transformShingles(Dedup.tokens(col("text")), 3).as("ref"))
+        .collect()
+      // same grams in the same (first-occurrence) order
+      for (r <- kernel)
+        assert(r.getSeq[String](1) == r.getSeq[String](2), s"doc ${r.get(0)}")
+      val sigs = Dedup.minhashSignatures(
+          kernel.toSeq.map(r => (r.getLong(0), r.getSeq[String](1)))
+            .toDF("id", "sh"), k = 64)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val ref = explodeAggMinhash(corpus, 64).collect()
+        .map(r => r.getLong(0) -> (r.getSeq[String](1).toSet,
+          r.getSeq[Long](2))).toMap
+      assert(sigs.keySet == ref.keySet)
+      for (r <- kernel) {
+        val id = r.getLong(0)
+        assert(sigs(id) == ref(id)._2, s"doc $id signature")
+        assert(r.getSeq[String](1).toSet == ref(id)._1, s"doc $id set")
+      }
+    }
+    check()
+    // the kernels' interpreted eval must agree with their generated code
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try check() finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    // a caller's set may hold nulls and repeats; an empty or null set has
+    // no signature, as an explode yields no row for it
+    val odd = Seq[(Long, Seq[String])]((1L, Seq("x", null, "x")),
+        (2L, Seq.empty), (3L, null), (4L, Seq(null)))
+      .toDF("id", "sh")
+    val exploded = odd.select(col("id"), explode(col("sh")).as("g"))
+      .select(col("id"), col("g"), hash(col("g")).cast("long").as("h1"),
+        xxhash64(col("g")).as("h2"))
+      .groupBy("id").agg(min(col("h1").bitwiseXOR(col("h2"))).as("m0"),
+        min(col("h1").bitwiseXOR(shiftleft(col("h2"), 1)
+          .bitwiseOR(shiftrightunsigned(col("h2"), 63)))).as("m1"))
+      .collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2)))
+      .toMap
+    assert(Dedup.minhashSignatures(odd, k = 2).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap == exploded)
+  }
+
   test("minhashNearDups recalls exact dups and verifies with exact jaccard") {
     val pairs = Dedup.minhashNearDupsAuto(docs, "doc_id", "text",
         k = 64, nBands = 16, threshold = 0.3)
@@ -209,6 +295,57 @@ class DedupSpec extends AnyFunSuite {
     val high = brute.filter(_._2 >= 0.9).keySet
     assert(high.subsetOf(got.keySet),
       s"missed high-sim pairs: ${high -- got.keySet}")
+  }
+
+  /** The near-dup stage as SQL over (id, sh, sig, ev): the banding
+    * self-join on (band, slice), the pair filter and distinct, and the
+    * two join-backs with Spark's array_intersect / array_union Jaccard.
+    * `cross` pairs eval rows with train rows instead of a < b. */
+  private def sqlNearDups(index: org.apache.spark.sql.DataFrame, k: Int,
+                          nBands: Int, threshold: Double,
+                          cross: Boolean): Set[(Any, Any, Double)] = {
+    val banded = index.select(col("id"), col("ev"),
+      posexplode(Dedup.bands(col("sig"), nBands, k / nBands))
+        .as(Seq("band", "bh")))
+    val a = banded.select(col("id").as("a"), col("ev").as("ev_a"),
+      col("band"), col("bh"))
+    val b = banded.select(col("id").as("b"), col("ev").as("ev_b"),
+      col("band"), col("bh"))
+    val cands = a.join(b, Seq("band", "bh"))
+      .filter(if (cross) col("ev_a") && !col("ev_b") else col("a") < col("b"))
+      .select("a", "b").distinct()
+    cands
+      .join(index.select(col("id").as("a"), col("sh").as("sh_a")), "a")
+      .join(index.select(col("id").as("b"), col("sh").as("sh_b")), "b")
+      .select(col("a"), col("b"), (size(array_intersect(col("sh_a"),
+        col("sh_b"))).cast("double") / size(array_union(col("sh_a"),
+        col("sh_b")))).as("j"))
+      .filter(col("j") >= threshold)
+      .collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSet
+  }
+
+  test("near-dup stage equals the SQL banding self-join and join-back " +
+      "bit for bit, long and string ids, within and across splits") {
+    val base = graft.sources.Tables(spark, TestSpark.sf, "documents")
+      .select(col("doc_id"), col("text"))
+    for (ids <- Seq(col("doc_id"), concat(lit("d"), col("doc_id")))) {
+      val corpus = base.select(ids.as("id"), col("text"),
+        (col("doc_id") % 10 === 0).as("ev"))
+      val sets = corpus.select(col("id"), col("ev"),
+        Dedup.shingles(Dedup.tokens(col("text")), 3).as("sh"))
+      val indexed = sets.join(
+        Dedup.minhashSignatures(sets.select("id", "sh"), 64), "id")
+      def got(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSet
+      val within = got(Dedup.minhashNearDupsAuto(corpus, "id", "text",
+        k = 64, nBands = 16, threshold = 0.3))
+      assert(within.nonEmpty)
+      assert(within == sqlNearDups(indexed, 64, 16, 0.3, cross = false))
+      val across = got(Dedup.crossMinhashNearDupsAuto(corpus, "id", "text",
+        col("ev"), k = 64, nBands = 16, threshold = 0.3))
+      assert(across.nonEmpty)
+      assert(across == sqlNearDups(indexed, 64, 16, 0.3, cross = true))
+    }
   }
 
   test("crossMinhashNearDups ground truth at sf0.001: exact cross-split " +
@@ -590,6 +727,73 @@ class DedupSpec extends AnyFunSuite {
     val got = Dedup.connectedComponents(chain, "id_a", "id_b")
       .collect().map(r => r.getLong(1)).distinct.toSeq
     assert(got == Seq(1L), "one component labeled by its min id")
+  }
+
+  /** A random pair graph: chains and stars over shuffled vertex ids,
+    * joined by a few random edges, with repeats and self-loops. */
+  private def randomGraph(seed: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = rnd.shuffle((1L to 400L).toVector)
+    val (chainIds, rest) = ids.splitAt(200)
+    val chains = chainIds.grouped(25).flatMap(c => c.zip(c.tail)).toSeq
+    val stars = rest.take(150).grouped(15)
+      .flatMap(s => s.tail.map(leaf => (s.head, leaf))).toSeq
+    val extra = Seq.fill(12)((ids(rnd.nextInt(350)), ids(rnd.nextInt(350))))
+    val all = chains ++ stars ++ extra ++ chains.take(5) :+ ((7L, 7L))
+    rnd.shuffle(all).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+  }
+
+  /** Each vertex's component minimum, by union-find on the driver. */
+  private def driverComponents[T](edges: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ord.lt(ra, rb)) parent(rb) = ra else if (ord.lt(rb, ra)) parent(ra) = rb
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("connectedComponents equals a driver union-find on chains and " +
+      "stars at any pair and shuffle partitioning, long and string ids") {
+    val edges = randomGraph(7)
+    val named = edges.map { case (a, b) => (s"v${a * 37 % 401}", s"v${b * 37 % 401}") }
+    val longWant = driverComponents(edges)
+    val strWant = driverComponents(named)
+    val longPairs = edges.toDF("id_a", "id_b")
+    val strPairs = named.toDF("id_a", "id_b")
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      for (sp <- Seq(1, 4, 32); parts <- Seq(1, 4, 32)) {
+        spark.conf.set(key, sp.toString)
+        val gotL = Dedup.connectedComponents(longPairs.repartition(parts),
+            "id_a", "id_b")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(gotL == longWant, s"long ids, $parts pair partitions, $sp")
+        val gotS = Dedup.connectedComponents(strPairs.repartition(parts),
+            "id_a", "id_b")
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+        assert(gotS == strWant, s"string ids, $parts pair partitions, $sp")
+      }
+    } finally spark.conf.set(key, before)
+  }
+
+  test("connectedComponents over single-partition pairs runs at most " +
+      "four jobs, collecting the result included") {
+    val pairs = randomGraph(11).toDF("id_a", "id_b").repartition(1)
+    val want = driverComponents(randomGraph(11))
+    var got = Map.empty[Long, Long]
+    val jobs = Jobs.of(spark) {
+      got = Dedup.connectedComponents(pairs, "id_a", "id_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got == want)
+    assert(jobs <= 4, s"$jobs jobs")
   }
 
   test("embeddingNearDups pairs by cosine threshold") {

@@ -136,9 +136,19 @@ class PatternQuerySpec extends AnyFunSuite {
   }
 
   test("run: '>*$' from root matches childless types only") {
-    val res = PatternQuery.run(spark, dir, cat, ">*[999999]$")
+    val res = PatternQuery.run(spark, dir, cat, ">*$")
     // lineitem is the only type with no child relations
     assert(res.keySet == Set("lineitem"))
+  }
+
+  test("run: an id whose field count differs from the type's id columns " +
+      "is rejected (query_ids_are_valid)") {
+    // lineitem's id is (l_orderkey, l_linenumber); orders' is o_orderkey
+    for (p <- Seq(">lineitem[1]#", ">lineitem[1,3,9]#", ">orders[1,1]#",
+        ">*[999999]$"))
+      intercept[IllegalArgumentException](PatternQuery.run(spark, dir, cat, p))
+    assert(PatternQuery.run(spark, dir, cat, ">lineitem[1,3]#")("lineitem")
+      .count() == 1)
   }
 
   test("run: '*' steps on the diamond catalog equal a BFS over the edges") {
