@@ -2,7 +2,8 @@ package graft.model
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.{GraftColumnBridge => B}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,20 +19,20 @@ import scala.jdk.CollectionConverters._
   * schema: each `GraftType` names a table and its ID columns; each
   * `GraftRelation` says which child columns reference the parent's ID.
   *
-  * This class alone knows how an id set crosses a relation ([[hop]]) and
-  * how the fixpoint over the relation DAG is computed ([[reach]], one
-  * topological pass); the children closures and PatternQuery's hops and
-  * `*` steps run on them. A hop is a semi-join in ID space (never
-  * row-at-a-time), so a closure step at 100 TB is one shuffle bounded by
-  * the frontier, and Catalyst can broadcast small frontiers: a parent's
-  * fan-out is unbounded. [[reach]] checkpoints each type it reaches, so a
-  * children closure or a `*` step runs its checkpoint jobs inside the
-  * call. Parents traversal is bounded instead. Every relation is
-  * many-to-one, so a parent id set is never larger than the child rows it
-  * is read from, and the whole parents closure is bounded by its roots,
-  * which must already fit on the driver. So the parents direction walks
-  * on the driver: one filtered scan per reached type, collected, and the
-  * result returned as local frames.
+  * This class alone knows how an id set crosses a relation and how the
+  * fixpoint over the relation DAG is computed: one topological pass, run
+  * one of two ways. [[walk]] runs it on the driver for request-sized id
+  * sets: one `InSet`-filtered scan per reached type, collected. Every
+  * relation is many-to-one, so a parent id set is never larger than the
+  * child rows it is read from, and the whole parents closure is bounded by
+  * its roots, which must already fit on the driver: going up always walks.
+  * A parent's fan-out is unbounded, so going down the walk holds at most
+  * the session's broadcast budget of ids per type; past it the pass runs
+  * distributed, as [[reach]] over [[hop]]s. A hop is a semi-join in ID
+  * space (never row-at-a-time), so a closure step at 100 TB is one shuffle
+  * bounded by the frontier. [[reach]] checkpoints each type it reaches, so
+  * it runs its checkpoint jobs inside the call. The closures and
+  * PatternQuery's hops and `*` steps run on these.
   */
 /** @param required columns that must be non-null (kcidb JSON-schema
   *                 `required` fields, orm/data.py:89-123)
@@ -159,32 +160,35 @@ final class Catalog(
         coalesce(col("__hit"), lit(false)).as("id_exists"))
   }
 
-  /** Caller-supplied root ID lists → broadcast-hinted distinct id frames.
-    * Only these bounded inputs ever carry a broadcast hint; derived
-    * frontiers are data-dependent and unbounded at scale, so their
-    * semi-joins carry no hint and AQE picks broadcast vs shuffle from the
-    * runtime size. Precondition: [[rootIdViolations]] must be empty (the
-    * reference asserts the same on every query, abstract.py:310) — an
-    * invalid map fails HERE with the full violation list instead of as a
-    * bare Map-key error inside plan construction. */
+  /** Caller-supplied root ID lists → per-type sets of id tuples on the
+    * driver, typed to the table's id columns, with every tuple that holds a
+    * null dropped (a null id matches nothing in an equi-join). A local list
+    * is collected without a job. Precondition: [[rootIdViolations]] must
+    * be empty (the reference asserts the same on every query,
+    * abstract.py:310) — an invalid map fails HERE with the full violation
+    * list instead of as a bare Map-key error inside plan construction. */
   private def rootIds(tbl: String => DataFrame,
-                      roots: Map[String, DataFrame]): Map[String, DataFrame] = {
+                      roots: Map[String, DataFrame]): Map[String, Set[Row]] = {
     val errs = rootIdViolationsWith(tbl, roots)
     require(errs.isEmpty, s"invalid root ids: ${errs.mkString("; ")}")
-    roots.map { case (tn, ids) =>
-      // localCheckpoint: a root id frame feeds every outgoing hop of
-      // reach AND materialize's width-restoring semi-join —
-      // without it each consumer re-runs the frame's scan and distinct
-      // exchange. eager = false does NOT make it free: under AQE the
-      // checkpoint calls physicalPlan.execute(), which runs every shuffle
-      // and broadcast stage of the frame here, at call time, so a
-      // children closure runs jobs before its caller's first action
-      // (the jobs perfbench's model.closure_jobs counts inside the
-      // closure call itself).
-      tn -> broadcast(ids.select(types(tn).idCols.map(col): _*).distinct()
-        .localCheckpoint(eager = false))
+    roots.map { case (tn, df) =>
+      tn -> df.select(idSchema(tbl, tn).map(f =>
+          col(f.name).cast(f.dataType)): _*)
+        .collect().iterator.filterNot(_.anyNull).toSet
     }
   }
+
+  /** Id sets held on the driver as local frames: where [[reach]] starts
+    * when a [[walk]] gives up. A local frame's size is exact to Catalyst,
+    * so it needs no broadcast hint, and being local it needs no
+    * checkpoint. */
+  private[graft] def localIds(tbl: String => DataFrame,
+                              sets: Map[String, Set[Row]])
+      : Map[String, DataFrame] =
+    sets.map { case (tn, set) =>
+      tn -> tbl(tn).sparkSession.createDataFrame(set.toSeq.asJava,
+        idSchema(tbl, tn))
+    }
 
   /** Per-query-construction table memo: every `spark.read` re-infers the
     * parquet schema from footers, and the closure chain (root validation →
@@ -250,9 +254,8 @@ final class Catalog(
     * (idCols ∪ refCols) of it: column pruning reaches the parquet scan.
     * Going down, the narrow side's refs are renamed `__ref_*`, so a child
     * column named like a parent id can never make the join condition
-    * ambiguous, and `from` stays a direct join child: a broadcast hint on
-    * a root frame stays on its join. No hint is added here: a derived
-    * frame is unbounded, and AQE picks the strategy from its runtime size.
+    * ambiguous. No hint is added here: a derived frame is unbounded, and
+    * AQE picks the strategy from its runtime size.
     */
   private[graft] def hop(tbl: String => DataFrame, rel: GraftRelation,
                          from: DataFrame, down: Boolean): DataFrame = {
@@ -316,9 +319,11 @@ final class Catalog(
         // eager = false is not free: under AQE the checkpoint calls
         // physicalPlan.execute(), which runs every shuffle and broadcast
         // stage of the chain here, at call time. The checkpoints stay
-        // anyway: without them perfbench's lookup family requests (a
-        // parents walk, then this pass) slowed from 2.5 s to 8.1 s on 4
-        // cores.
+        // anyway: when perfbench's lookup family requests (a parents
+        // walk, then this pass) ran here, dropping them slowed a request
+        // from 2.5 s to 8.1 s on 4 cores. Request-sized traversals now run
+        // on [[walk]]; this pass serves frontiers past the walk's budget and
+        // frontiers that were never held on the driver.
         val all = (if (own.isEmpty && incoming.sizeIs == 1) in
                    else (own.toSeq :+ in).reduce(_ union _).distinct())
           .localCheckpoint(eager = false)
@@ -329,84 +334,175 @@ final class Catalog(
     (ids, reached)
   }
 
-  /** The parents closure as a walk on the driver (the reference's
-    * add_parents recursion, sqlite/v04_00.py:614-643; [[parentsClosure]]
-    * says why it fits there). The walk visits the types children-first;
-    * each type's id set is final when it is visited, so ONE scan of its
-    * table, filtered to that set, is collected as the type's rows. Each
-    * parent's id set is then read off those rows' refCols; a null ref
-    * reaches no parent, as in an equi-join.
+  /** [[reach]]'s twin on the driver, in either direction (the
+    * reference's add_parents / add_children recursions,
+    * sqlite/v04_00.py:614-682, and the pattern language's hops and `*`
+    * steps). It crosses `rels` in topological order, so each type's ids
+    * are final when it is visited. `keep` filters every id tuple that
+    * comes in through a relation, over the columns that hold it: the
+    * type's id columns going down, the child's ref columns going up. Null
+    * id tuples are dropped: they match nothing in an equi-join.
     *
-    * The rows keep [[materialize]]'s contract: every row whose id tuple is
-    * in the set, duplicates included, in declared column order, with
-    * `metaCols` dropped (and never read) when `withMetadata = false`.
-    * Returns, per reached type, its distinct id tuples in the table's id
-    * column types, and its rows as a local frame. One job per reached
-    * type with a non-empty id set, plus whatever collecting the roots
-    * runs; a local root list runs none. */
-  private def walkParents(spark: SparkSession, tbl: String => DataFrame,
-                          roots: Map[String, DataFrame],
-                          withMetadata: Boolean)
-      : (Map[String, Set[Row]], Map[String, DataFrame]) = {
-    val errs = rootIdViolationsWith(tbl, roots)
-    require(errs.isEmpty, s"invalid root ids: ${errs.mkString("; ")}")
-    val ids = scala.collection.mutable.Map.from(roots.map { case (tn, df) =>
-      tn -> df.select(idSchema(tbl, tn).map(f =>
-          col(f.name).cast(f.dataType)): _*)
-        .collect().iterator.filterNot(_.anyNull).toSet
-    })
-    val frames = Map.newBuilder[String, DataFrame]
-    for (tn <- topoOrder(down = false); set <- ids.get(tn)) {
+    * Up: one scan per type, filtered to its ids, collects its rows and
+    * refs, and each parent's ids are read off the refs. Going up never
+    * outgrows the start (every relation is many-to-one): no budget.
+    *
+    * Down: a type reached by a relation runs one scan of (idCols ∪
+    * refCols) for the rows whose refs are in a parent's set, and collects
+    * their id tuples; its rows are then a lazy re-scan by id, since id
+    * tuples need not be unique. When every incoming ref lies inside the
+    * id columns, a row matches iff its id tuple does, so that one scan
+    * collects the rows. Past the budget of [[collectWithin]] the walk
+    * gives up with None, and the caller runs [[reach]] from `start`.
+    *
+    * Rows keep [[materialize]]'s contract (every row whose id tuple is in
+    * the set, declared column order, `metaCols` dropped and never read
+    * without metadata), and every filter is a [[Catalog.tupleIn]], so no
+    * request compiles new code. Ids and `reached` are as [[reach]] defines
+    * them: a type is present iff it started with ids or a crossed
+    * relation led into it from a type that had them. */
+  private[graft] def walk(tbl: String => DataFrame,
+                          start: Map[String, Set[Row]], down: Boolean,
+                          withMetadata: Boolean = true,
+                          rels: Seq[GraftRelation] = relations,
+                          keep: (String, Seq[Column]) => Column =
+                            (_, _) => lit(true))
+      : Option[Walked] = {
+    val ids = scala.collection.mutable.Map.from(start)
+    val reached = scala.collection.mutable.Map.empty[String, Set[Row]]
+    val rows = scala.collection.mutable.Map.empty[String, DataFrame]
+    val order = topoOrder(down).iterator
+    var within = true
+    while (within && order.hasNext) {
+      val tn = order.next()
       val t = tbl(tn)
-      val out = t.columns.toSeq
-        .filter(c => withMetadata || !types(tn).metaCols.contains(c))
-      val rels = parentsOf(tn)
-      // Each parent's ref tuple, cast to that parent's id column types so
-      // it compares equal to the parent's own id tuples.
-      val refs = rels.map(rel => struct(rel.refCols.zip(idSchema(tbl,
-        rel.parent)).map { case (rc, f) => col(rc).cast(f.dataType) }: _*))
-      val rows =
-        if (set.isEmpty) Array.empty[Row]
-        else t.filter(idIn(tbl, tn, set))
-          .select(out.map(col) ++ refs: _*).collect()
-      for ((rel, k) <- rels.zipWithIndex)
-        ids(rel.parent) = ids.getOrElse(rel.parent, Set.empty[Row]) ++
-          rows.iterator.map(_.getStruct(out.size + k)).filterNot(_.anyNull)
-      frames += tn -> spark.createDataFrame(
-        rows.toSeq.map(r => Row.fromSeq(r.toSeq.take(out.size))).asJava,
+      val idc = types(tn).idCols
+      val out = outCols(t, tn, withMetadata)
+      def local(rs: Seq[Row]): DataFrame = t.sparkSession.createDataFrame(
+        rs.map(r => Row.fromSeq(r.toSeq.take(out.size))).asJava,
         StructType(out.map(t.schema(_))))
+      val ins = if (!down) Nil
+        else rels.filter(r => r.child == tn && ids.contains(r.parent))
+      if (ins.nonEmpty) {
+        val live = ins.filter(r => ids(r.parent).nonEmpty)
+        val hit = live.map(r => Catalog.tupleIn(r.refCols.map(col),
+            idSchema(tbl, r.parent), ids(r.parent))).reduceOption(_ || _)
+          .map(_ && keep(tn, idc.map(col)) && idc.map(col(_).isNotNull)
+            .reduce(_ && _))
+        val own = start.getOrElse(tn, Set.empty[Row])
+        val got = hit.fold(Option(Set.empty[Row])) { h =>
+          if (!live.forall(_.refCols.forall(idc.contains)))
+            idsWhere(tbl, tn, h)
+          else
+            collectWithin(t.filter(idIn(tbl, tn, own) || h).select(
+                out.map(col) :+ struct(idc.map(col): _*).as("__id") :+
+                  h.as("__hit"): _*))
+              .map { rs =>
+                rows(tn) = local(rs)
+                rs.filter(_.getBoolean(out.size + 1))
+                  .map(_.getStruct(out.size)).toSet
+              }
+        }
+        got match {
+          case Some(in) => reached(tn) = in; ids(tn) = own ++ in
+          case None => within = false
+        }
+      }
+      for (set <- ids.get(tn) if within) {
+        if (down) rows.getOrElseUpdate(tn, rowsById(tbl, tn, set, withMetadata))
+        else {
+          val outs = rels.filter(_.child == tn)
+          // Each parent's ref tuple, cast to that parent's id column types
+          // so it compares equal to the parent's own id tuples; null where
+          // `keep` refuses it. Named: Spark fails to name an InSet itself.
+          val refs = outs.zipWithIndex.map { case (rel, k) =>
+            when(keep(rel.parent, rel.refCols.map(col)),
+              struct(rel.refCols.zip(idSchema(tbl, rel.parent)).map {
+                case (rc, f) => col(rc).cast(f.dataType) }: _*)).as(s"__ref$k")
+          }
+          val rs =
+            if (set.isEmpty) Array.empty[Row]
+            else t.filter(idIn(tbl, tn, set))
+              .select(out.map(col) ++ refs: _*).collect()
+          for ((rel, k) <- outs.zipWithIndex) {
+            val in = rs.iterator.map(_.getStruct(out.size + k))
+              .filter(r => r != null && !r.anyNull).toSet
+            reached(rel.parent) = reached.getOrElse(rel.parent, Set.empty) ++ in
+            ids(rel.parent) = ids.getOrElse(rel.parent, Set.empty) ++ in
+          }
+          rows(tn) = local(rs.toSeq)
+        }
+      }
     }
-    (ids.toMap, frames.result())
+    Option.when(within)(Walked(ids.toMap, reached.toMap, rows.toMap))
   }
+
+  /** The rows of `df` if it has no more than the session's broadcast
+    * budget holds: `spark.sql.autoBroadcastJoinThreshold` bytes over the
+    * row's `defaultSize`, the size Spark itself collects to the driver to
+    * build a broadcast side. None past that, and always when the threshold
+    * is negative (broadcasts off). One job whatever the partition count:
+    * each task returns at most budget + 1 rows, and the driver stops
+    * keeping them once the budget is passed. (`limit()` would not do:
+    * its collect runs a growing series of jobs.) */
+  private def collectWithin(df: DataFrame): Option[Seq[Row]] = {
+    val spark = df.sparkSession
+    val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    if (conf.startsWith("-")) None
+    else {
+      val cap = (JavaUtils.byteStringAsBytes(conf) / df.schema.defaultSize)
+        .min(Int.MaxValue - 1).toInt
+      val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      spark.sparkContext.runJob(df.queryExecution.toRdd,
+        (it: Iterator[InternalRow]) => it.take(cap + 1).map(_.copy()).toArray,
+        (_: Int, part: Array[InternalRow]) =>
+          if (kept.size <= cap) kept ++= part)
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      Option.when(kept.size <= cap)(kept.map(toRow(_).asInstanceOf[Row]).toSeq)
+    }
+  }
+
+  /** `tn`'s id tuples that satisfy `pred`, distinct, if they fit the
+    * budget ([[collectWithin]]): one scan. */
+  private[graft] def idsWhere(tbl: String => DataFrame, tn: String,
+                              pred: Column): Option[Set[Row]] =
+    collectWithin(tbl(tn).filter(pred)
+      .select(types(tn).idCols.map(col): _*)).map(_.toSet)
+
+  /** Every row of `tn` whose id tuple is in `set`, lazily: one filtered
+    * scan when collected, none for an empty set. */
+  private[graft] def rowsById(tbl: String => DataFrame, tn: String,
+                              set: Set[Row],
+                              withMetadata: Boolean = true): DataFrame = {
+    val t = tbl(tn)
+    t.filter(idIn(tbl, tn, set))
+      .select(outCols(t, tn, withMetadata).map(col): _*)
+  }
+
+  private def outCols(t: DataFrame, tn: String,
+                      withMetadata: Boolean): Seq[String] =
+    t.columns.toSeq
+      .filter(c => withMetadata || !types(tn).metaCols.contains(c))
 
   private def idSchema(tbl: String => DataFrame, tn: String): StructType =
     StructType(types(tn).idCols.map(tbl(tn).schema(_)))
 
-  /** `tn`'s id tuple is in `ids` — an `InSet` over the id-column struct.
-    * Its values live in a reference object, not in the generated Java, so
-    * each request's ids compile no new code: Spark inlines an `In` list
-    * of 10 or fewer values, and an `InSet` over int keys becomes a switch
-    * over them. */
+  /** `tn`'s id tuple is in `ids`. */
   private def idIn(tbl: String => DataFrame, tn: String,
-                   ids: Set[Row]): Column = {
-    val toCatalyst =
-      CatalystTypeConverters.createToCatalystConverter(idSchema(tbl, tn))
-    B.column(InSet(B.expression(struct(types(tn).idCols.map(col): _*)),
-      ids.map(toCatalyst)))
-  }
+                   ids: Set[Row]): Column =
+    Catalog.tupleIn(types(tn).idCols.map(col), idSchema(tbl, tn), ids)
 
   /** Children closure (kcidb db query with children=True,
     * /root/reference/kcidb/db/sqlite/v04_00.py:644-682): starting from
     * per-type root ID sets, repeatedly semi-join child tables on the
-    * parent-reference columns. Returns every reached type's matched rows. */
+    * parent-reference columns. Returns every reached type's matched rows.
+    * It is [[closure]] with `children` alone. */
   def childrenClosure(
       spark: SparkSession, dir: String,
       roots: Map[String, DataFrame],
-      withMetadata: Boolean = true): Map[String, DataFrame] = {
-    val tbl = tableCache(spark, dir)
-    materialize(tbl, reach(tbl, rootIds(tbl, roots), down = true)._1,
+      withMetadata: Boolean = true): Map[String, DataFrame] =
+    closure(spark, dir, roots, parents = false, children = true,
       withMetadata)
-  }
 
   /** The full `query(ids, children=…, parents=…)` entry point
     * (/root/reference/kcidb/__init__.py:255-338). Pass order is faithful
@@ -414,27 +510,36 @@ final class Catalog(
     * parents pass runs FIRST, and the children pass then expands downward
     * from the ACCUMULATED per-type sets — so with both flags, descendants
     * of the matched objects' ancestors are included (the whole family
-    * tree), exactly as `kcidb-query -c -p` returns it. The parents pass is
-    * [[parentsClosure]]'s driver walk; the children pass starts from the
-    * walk's id sets as local frames. With one flag set this
-    * degenerates to exactly [[childrenClosure]] / [[parentsClosure]]. */
+    * tree), exactly as `kcidb-query -c -p` returns it. With one flag set
+    * this degenerates to exactly [[childrenClosure]] / [[parentsClosure]].
+    *
+    * Both passes are [[walk]]s from the roots' id sets, collected once.
+    * The parents pass always walks; its jobs run in this call, and its
+    * frames are local. The children pass walks while every reached type's
+    * ids fit the budget, and its rows are lazy filtered scans (or local
+    * frames, where the walk collected them); past the budget it becomes
+    * [[reach]] plus [[materialize]] from the same sets. */
   def closure(spark: SparkSession, dir: String,
               roots: Map[String, DataFrame],
               parents: Boolean, children: Boolean,
               withMetadata: Boolean = true): Map[String, DataFrame] = {
     val tbl = tableCache(spark, dir)
-    if (!parents) {
-      val ids = rootIds(tbl, roots)
-      materialize(tbl, if (children) reach(tbl, ids, down = true)._1 else ids,
-        withMetadata)
-    } else {
-      val (ids, frames) = walkParents(spark, tbl, roots, withMetadata)
-      if (!children) frames
-      // no broadcast hint: a local frame's size is exact to Catalyst, and
-      // under the checkpointed unions of `reach` a hint is dropped anyway
-      else materialize(tbl, reach(tbl, ids.map { case (tn, set) =>
-          tn -> spark.createDataFrame(set.toSeq.asJava, idSchema(tbl, tn))
-        }, down = true)._1, withMetadata)
+    val start = rootIds(tbl, roots)
+    // an up walk never gives up (see walk)
+    lazy val up = walk(tbl, start, down = false, withMetadata).get
+    if (!children)
+      if (parents) up.rows
+      else walk(tbl, start, down = true, withMetadata, rels = Nil).get.rows
+    else {
+      val from = if (parents) up.ids else start
+      walk(tbl, from, down = true, withMetadata) match {
+        // a type the children pass added nothing to keeps its local frame
+        case Some(w) if parents => w.rows ++ up.rows.filter {
+          case (tn, _) => w.ids(tn) == up.ids(tn) }
+        case Some(w) => w.rows
+        case None => materialize(tbl,
+          reach(tbl, localIds(tbl, from), down = true)._1, withMetadata)
+      }
     }
   }
 
@@ -498,14 +603,16 @@ final class Catalog(
     * Every relation is many-to-one, so each reached type's id set is no
     * larger than the child rows it came from, and the whole closure is
     * bounded by the roots, which must fit on the driver anyway. So this
-    * call walks on the driver: it runs its jobs EAGERLY, one filtered scan
-    * per reached type, and returns local frames, whose collection runs no
-    * further job. */
+    * call walks up on the driver ([[walk]]): it runs its jobs EAGERLY, one
+    * filtered scan per reached type, and returns local frames, whose
+    * collection runs no further job. It is [[closure]] with `parents`
+    * alone. */
   def parentsClosure(
       spark: SparkSession, dir: String,
       roots: Map[String, DataFrame],
       withMetadata: Boolean = true): Map[String, DataFrame] =
-    walkParents(spark, tableCache(spark, dir), roots, withMetadata)._2
+    closure(spark, dir, roots, parents = true, children = false,
+      withMetadata)
 
   /** `Pattern.from_io` analog (reference kcidb/orm/query.py:788-851):
     * derive per-type ROOT-ID frames from a just-loaded I/O batch — each
@@ -520,12 +627,11 @@ final class Catalog(
     * `maxObjs` is the reference's `max_objs` parameter (query.py:797,
     * `isliced(obj_list, max_objs)` at :841): there it bounds how many
     * object IDs one pattern's driver-side id set may carry (SQL IN-list
-    * limits); here the roots are collected to the driver by the parents
-    * walk, or take the broadcast hint in the children direction
-    * ([[rootIds]]'s bounded-input contract), so the analog is an
-    * admission cap — a type whose batch carries more than `maxObjs`
-    * distinct id tuples is REFUSED up front with the full offender list,
-    * instead of OOMing the driver or executors. Zero
+    * limits); here every closure collects its roots to the driver
+    * ([[rootIds]]), so the analog is an admission cap — a type whose
+    * batch carries more than `maxObjs` distinct id tuples is REFUSED up
+    * front with the full offender list, instead of OOMing the driver or
+    * executors. Zero
     * (the reference's default) means no limit and stays fully lazy; a
     * positive cap runs one `limit(maxObjs+1)`-bounded count per type, so
     * the guard's own cost never exceeds the cap it enforces. */
@@ -574,6 +680,29 @@ final class Catalog(
     }, withMetadata)
   }
 }
+
+object Catalog {
+  /** The tuple of `cols`, cast to `schema`'s types, is in `tuples` (rows
+    * of `schema`): an `InSet` over a struct of them, false for no tuples.
+    * The values live in a reference object, not in the generated Java, so
+    * each request's values compile no new code: Spark inlines an `In` list
+    * of 10 or fewer values, and an `InSet` over a bare int column becomes a
+    * switch over them. */
+  private[graft] def tupleIn(cols: Seq[Column], schema: StructType,
+                             tuples: Set[Row]): Column =
+    if (tuples.isEmpty) lit(false)
+    else {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+      B.column(InSet(B.expression(struct(cols.zip(schema).map {
+        case (c, f) => c.cast(f.dataType) }: _*)), tuples.map(toCatalyst)))
+    }
+}
+
+/** What a [[Catalog.walk]] reached, per type: its final id tuples, the
+  * ones that came in through a relation, and its rows. */
+private[graft] final case class Walked(ids: Map[String, Set[Row]],
+                                       reached: Map[String, Set[Row]],
+                                       rows: Map[String, DataFrame])
 
 /** Catalog-ENTRY validation — the reference's test-catalog checker
   * (kcidb/tests/schema.py:6-42 JSON schema, kcidb/tests/__init__.py:10

@@ -1,8 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Catalog
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import graft.model.{Catalog, GraftRelation}
 
 /** The kcidb ORM pattern query language, planned as Spark semi-joins.
   *
@@ -29,13 +30,16 @@ import graft.model.Catalog
   *
   * This object holds the pattern language only: parsing, id-list
   * resolution and the `#`/`$`/frontier rules. Hops and `*` steps run on
-  * [[graft.model.Catalog]]'s id-space traversal: a named step is one
-  * `Catalog.hop` per frontier relation into that type, a `*` step is one
-  * `Catalog.reach` pass over the relation DAG. Each hop is one frontier
-  * semi-join: no driver iteration over rows, so a pattern over 100 TB is a
-  * fixed number of key-bounded shuffles. Only caller-supplied ID lists are
-  * bounded; frontiers carry no broadcast hint (AQE decides from runtime
-  * size).
+  * [[graft.model.Catalog]]'s id-space traversal. A pattern that starts
+  * from an id list holds its frontier on the driver: a named step is a
+  * `Catalog.walk` over the frontier's relations into that type, a `*` step
+  * a walk over the relation DAG, each one filtered scan per reached type,
+  * for as long as every reached id set fits the session's broadcast
+  * budget. Any other frontier runs distributed: a named step is one
+  * `Catalog.hop` per frontier relation, a `*` step one `Catalog.reach`
+  * pass, each hop one frontier semi-join, so a pattern over 100 TB is a
+  * fixed number of key-bounded shuffles. Frontiers carry no broadcast hint
+  * (AQE decides from runtime size).
   */
 object PatternQuery {
 
@@ -161,15 +165,15 @@ object PatternQuery {
     * reference's final `FROM t INNER JOIN (…ids…) USING (id fields)`).
     * This is [[runAll]] of one pattern.
     *
-    * Scale shape (that of [[graft.model.Catalog]], whose hops and
-    * topological pass it runs on): the traversal runs in ID SPACE —
-    * frontiers and match accumulators are narrow id-tuple frames, each hop
-    * scans only (idCols ∪ refCols) of the relation's child table (column
-    * pruning reaches the parquet scan), and ONE width-restoring semi-join
-    * per matched type runs at the end. Full rows never cross a shuffle. A
-    * `*` step checkpoints each type it reaches, so, like
-    * `Catalog.childrenClosure`, it runs its checkpoint jobs inside this
-    * call.
+    * Scale shape (that of [[graft.model.Catalog]], whose traversals it runs
+    * on): the traversal runs in ID SPACE — frontiers and match
+    * accumulators are id tuples, each hop reads only (idCols ∪ refCols) of
+    * the relation's child table going down (column pruning reaches the
+    * parquet scan), and width is restored once per matched type at the
+    * end. A pattern that starts from an id list walks on the driver while
+    * its frontier fits the budget, so its scans run inside this call; a
+    * distributed `*` step checkpoints each type it reaches, so it too runs
+    * its checkpoint jobs here.
     *
     * @param idLists out-of-band ID lists consumed, in order, by `%` specs
     *                (reference: `obj_str_id_set_list` in orm/query.py parse).
@@ -196,7 +200,7 @@ object PatternQuery {
       : Map[String, DataFrame] = {
     val tbl = catalog.tableCache(spark, dir)
     var remaining = idLists
-    var acc: Map[String, DataFrame] = Map.empty
+    var acc = Matches()
     for (p <- patterns) {
       val steps = parse(p)
       val need = steps.count(_.spec == Placeholder)
@@ -204,24 +208,57 @@ object PatternQuery {
         s"not enough ID lists for '%' placeholders in: $p")
       val (mine, rest) = remaining.splitAt(need)
       remaining = rest
-      for ((tn, df) <- runIds(catalog, tbl, steps, mine))
-        acc = merged(acc, tn, df)
+      acc = runIds(catalog, tbl, steps, mine, acc)
     }
-    catalog.materialize(tbl, acc)
+    // Width is restored by id: from the rows a walk collected for exactly
+    // the matched set, else by a filtered scan; any frame takes the
+    // width-restoring semi-join.
+    val held = acc.held.map { case (tn, set) =>
+      tn -> acc.rows.get(tn).collect { case (`set`, df) => df }
+        .getOrElse(catalog.rowsById(tbl, tn, set))
+    }
+    held ++ catalog.materialize(tbl, acc.frames.map { case (tn, df) =>
+      tn -> acc.held.get(tn).fold(df)(set =>
+        df.union(catalog.localIds(tbl, Map(tn -> set))(tn)).distinct())
+    })
   }
 
-  private def merged(acc: Map[String, DataFrame], tn: String,
-                     df: DataFrame): Map[String, DataFrame] =
-    acc.updated(tn, acc.get(tn).fold(df)(_.union(df).distinct()))
+  /** Matched ids per type: sets held on the driver, frames from steps that
+    * ran distributed, and the rows a walk found for a held set. */
+  private final case class Matches(
+      held: Map[String, Set[Row]] = Map.empty,
+      frames: Map[String, DataFrame] = Map.empty,
+      rows: Map[String, (Set[Row], DataFrame)] = Map.empty) {
+    def add(ids: Ids): Matches = ids match {
+      case Held(m) => copy(held = m.foldLeft(held) { case (h, (tn, s)) =>
+        h.updated(tn, h.getOrElse(tn, Set.empty[Row]) ++ s) })
+      case Frames(m) => copy(frames = m.foldLeft(frames) {
+        case (f, (tn, df)) =>
+          f.updated(tn, f.get(tn).fold(df)(_.union(df).distinct()))
+      })
+    }
+  }
 
-  /** The id-space planner behind [[runAll]]: matched id tuples per type
-    * for one parsed pattern, whose `%` specs take `idLists` in order. */
+  /** Id tuples per type: held on the driver, or distributed frames. */
+  private sealed trait Ids { def m: Map[String, Any] }
+  private final case class Held(m: Map[String, Set[Row]]) extends Ids
+  private final case class Frames(m: Map[String, DataFrame]) extends Ids
+
+  /** The id-space planner behind [[runAll]]: adds one parsed pattern's
+    * matches to `acc`, its `%` specs taking `idLists` in order.
+    *
+    * A pattern whose first step names a type and an id list finds that
+    * type's ids with one scan ([[Catalog.idsWhere]]) and holds them on the
+    * driver. While the frontier is held, named hops and `*` steps run on
+    * [[Catalog.walk]]; once a scan passes the budget, that step and the
+    * rest of the pattern take [[Catalog.hop]] and [[Catalog.reach]] from
+    * frames. */
   private def runIds(catalog: Catalog, tbl: String => DataFrame,
-                     steps: Seq[Step],
-                     idLists: Seq[Seq[Seq[String]]]): Map[String, DataFrame] = {
+                     steps: Seq[Step], idLists: Seq[Seq[Seq[String]]],
+                     acc: Matches): Matches = {
     val lists = idLists.iterator
-    var frontier: Map[String, DataFrame] = Map.empty // referenced ids/type
-    var results: Map[String, DataFrame] = Map.empty
+    var frontier: Ids = Frames(Map.empty) // referenced ids per type
+    var out = acc
 
     /** DISTINCT id tuples of a whole table. */
     def allIds(tn: String): DataFrame =
@@ -233,69 +270,101 @@ object PatternQuery {
         case IdList(l) => Some(l)
         case Placeholder => Some(lists.next())
       }
-      // the step's id filter, applied to every id set it expands into; an
-      // id must name every id column of the type (kcidb's
-      // query_ids_are_valid)
-      def keep(tn: String, df: DataFrame): DataFrame = ids.fold(df) { l =>
-        val idCols = catalog.types(tn).idCols
-        for (id <- l)
-          require(id.size == idCols.size,
-            s"id [${id.mkString(",")}] has ${id.size} field(s) but type " +
-              s"$tn has ${idCols.size} id column(s): ${idCols.mkString(", ")}")
-        df.filter(l.map { idVals =>
-          idCols.zip(idVals).map { case (c, v) =>
-            col(c).cast("string") === lit(v)
-          }.reduce(_ && _)
-        }.reduceOption(_ || _).getOrElse(lit(false)))
+      // The step's id filter over the columns that hold a `tn` id tuple,
+      // applied to every id set the step expands into: each id column's
+      // string form equals the id's field. An id must name every id
+      // column of the type (kcidb's query_ids_are_valid).
+      def keep(tn: String, cols: Seq[Column]): Column = ids.fold(lit(true)) {
+        l =>
+          val idCols = catalog.types(tn).idCols
+          for (id <- l)
+            require(id.size == idCols.size,
+              s"id [${id.mkString(",")}] has ${id.size} field(s) but " +
+                s"type $tn has ${idCols.size} id column(s): " +
+                idCols.mkString(", "))
+          Catalog.tupleIn(cols, StructType(idCols.map(StructField(_,
+            StringType))), l.map(Row.fromSeq).toSet)
       }
+      def kept(tn: String, df: DataFrame): DataFrame =
+        df.filter(keep(tn, catalog.types(tn).idCols.map(col)))
       def relsOf(tn: String) =
         if (step.child) catalog.childrenOf(tn) else catalog.parentsOf(tn)
-      val root = frontier.isEmpty
+      def deadEnds[T](m: Map[String, T]) = m.filter(kv => relsOf(kv._1).isEmpty)
+      val root = frontier.m.isEmpty
       require(!root || step.child, "first pattern step must use '>'")
+      val star = step.typeName == "*"
+      require(star || catalog.types.contains(step.typeName),
+        s"unknown type ${step.typeName}")
+      // the relations a named step crosses from the frontier
+      def source(rel: GraftRelation) = if (step.child) rel.parent else rel.child
+      val into = if (star) Nil else for {
+        tn <- frontier.m.keys.toSeq
+        rel <- relsOf(tn)
+        if (if (step.child) rel.child else rel.parent) == step.typeName
+      } yield rel
+      require(root || star || into.nonEmpty,
+        s"no relation to type ${step.typeName} from frontier")
 
       // (traversed, referenced): the match targets of '#' and of '$'; the
       // referenced set is also the next step's frontier
-      val (traversed, referenced) =
-        if (step.typeName == "*") {
+      def viaFrames(from: Map[String, DataFrame]): (Ids, Ids) =
+        if (star) {
           // Recursive traversal. Referenced = types with no relations in
           // the traversal direction (including frontier types that cannot
           // expand at all — reference orm/query.py:466-472 `unused_set`).
           // A root '*' starts from every catalog type's id set, id-filtered.
           val base =
-            if (!root) frontier
-            else catalog.types.keys.map(tn => tn -> keep(tn, allIds(tn))).toMap
-          val (all, reached) = catalog.reach(tbl, base, step.child, keep)
-          (if (root) all else reached,
-           all.filter { case (tn, _) => relsOf(tn).isEmpty })
+            if (!root) from
+            else catalog.types.keys.map(tn => tn -> kept(tn, allIds(tn))).toMap
+          val (all, reached) = catalog.reach(tbl, base, step.child, kept)
+          (Frames(if (root) all else reached), Frames(deadEnds(all)))
         } else {
           val df =
-            if (root) {
-              require(catalog.types.contains(step.typeName),
-                s"unknown type ${step.typeName}")
-              keep(step.typeName, allIds(step.typeName))
-            } else {
-              val hops = for {
-                (tn, from) <- frontier.toSeq
-                rel <- relsOf(tn)
-                if (if (step.child) rel.child else rel.parent) == step.typeName
-              } yield catalog.hop(tbl, rel, from, step.child)
-              require(hops.nonEmpty,
-                s"no relation to type ${step.typeName} from frontier")
-              keep(step.typeName,
+            if (root) kept(step.typeName, allIds(step.typeName))
+            else {
+              val hops = into.map(rel =>
+                catalog.hop(tbl, rel, from(source(rel)), step.child))
+              kept(step.typeName,
                 if (hops.sizeIs == 1) hops.head
                 else hops.reduce(_ union _).distinct())
             }
-          (Map(step.typeName -> df), Map(step.typeName -> df))
+          (Frames(Map(step.typeName -> df)), Frames(Map(step.typeName -> df)))
         }
+      def viaWalk(from: Map[String, Set[Row]]): Option[(Ids, Ids)] =
+        catalog.walk(tbl,
+            if (star) from
+            else from.filter(kv => into.exists(source(_) == kv._1)),
+            step.child, rels = if (star) catalog.relations else into,
+            keep = keep)
+          .map { w =>
+            out = out.copy(rows = out.rows ++ w.rows.map {
+              case (tn, df) => tn -> (w.ids(tn), df) })
+            if (star) (Held(w.reached), Held(deadEnds(w.ids)))
+            else {
+              val m = Held(Map(step.typeName -> w.reached(step.typeName)))
+              (m, m)
+            }
+          }
+
+      val (traversed, referenced) = frontier match {
+        case _ if root && !star && ids.nonEmpty =>
+          val tn = step.typeName
+          catalog.idsWhere(tbl, tn, keep(tn, catalog.types(tn).idCols.map(col)))
+            .map(s => (Held(Map(tn -> s)), Held(Map(tn -> s))))
+            .getOrElse(viaFrames(Map.empty))
+        case Held(h) if !root =>
+          viaWalk(h).getOrElse(viaFrames(catalog.localIds(tbl, h)))
+        case Held(_) => viaFrames(Map.empty)
+        case Frames(f) => viaFrames(f)
+      }
 
       frontier = referenced
-      val toMatch = step.matchChar match {
-        case Some('#') => traversed
-        case Some('$') => referenced
-        case _ => Map.empty[String, DataFrame]
+      step.matchChar match {
+        case Some('#') => out = out.add(traversed)
+        case Some('$') => out = out.add(referenced)
+        case _ =>
       }
-      for ((tn, df) <- toMatch) results = merged(results, tn, df)
     }
-    results
+    out
   }
 }

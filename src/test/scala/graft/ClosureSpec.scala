@@ -175,14 +175,14 @@ class ClosureSpec extends AnyFunSuite {
       "descendants via OWN spine and via the ancestor's other spine")
   }
 
-  test("parentsClosure keeps every duplicate-id row and follows no null " +
-      "ref: equal to a join chain on a synthetic catalog") {
+  /** A synthetic catalog, tg ← tp ← tc, written to a fresh temp dir. The
+    * child tc has a composite (bigint, int) id with a duplicated tuple
+    * (1, 1), a null ref, and a tuple (3, 1) whose two rows hold different
+    * refs; tp has a duplicated id, an id (12) whose two rows hold different
+    * refs, a null ref and a null-id row; tg has a duplicated and a null
+    * id. No ref may reach a null id, and a null ref reaches nothing. */
+  private lazy val dupNull: (String, graft.model.Catalog) = {
     import graft.model.{Catalog, GraftRelation, GraftType}
-    import org.apache.spark.sql.DataFrame
-    // tg ← tp ← tc. The child tc has a composite (bigint, int) id with a
-    // duplicated tuple (1, 1) and a null ref; tp has a duplicated id, a
-    // null ref and a null-id row; tg has a duplicated and a null id. No
-    // ref may reach a null id, and a null ref reaches nothing.
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-dupnull").toString
     Seq[(java.lang.Long, String)]((100L, "g0"), (100L, "g1"), (101L, "g2"),
@@ -190,13 +190,13 @@ class ClosureSpec extends AnyFunSuite {
       .toDF("g_id", "g_name").write.parquet(s"$tmp/tg.parquet")
     Seq[(java.lang.Long, java.lang.Long, String)]((10L, 100L, "p0"),
         (10L, 100L, "p1"), (11L, null, "p2"), (12L, 101L, "p3"),
-        (null, 101L, "pnull"))
+        (null, 101L, "pnull"), (12L, 100L, "p4"))
       .toDF("p_id", "p_g", "p_name").write.parquet(s"$tmp/tp.parquet")
     Seq[(Long, Int, java.lang.Long, String)]((1L, 1, 10L, "c0"),
         (1L, 1, 10L, "c1"), (1L, 2, null, "c2"), (2L, 1, 11L, "c3"),
-        (3L, 1, 12L, "c4"))
+        (3L, 1, 12L, "c4"), (3L, 1, 10L, "c5"))
       .toDF("c_a", "c_b", "c_p", "c_name").write.parquet(s"$tmp/tc.parquet")
-    val syn = new Catalog(
+    tmp -> new Catalog(
       types = Map(
         "tg" -> GraftType("tg", Seq("g_id")),
         "tp" -> GraftType("tp", Seq("p_id"), metaCols = Seq("p_name")),
@@ -204,14 +204,20 @@ class ClosureSpec extends AnyFunSuite {
       relations = Seq(
         GraftRelation("tg", "tp", Seq("p_g")),
         GraftRelation("tp", "tc", Seq("c_p"))))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("parentsClosure keeps every duplicate-id row and follows no null " +
+      "ref: equal to a join chain on a synthetic catalog") {
+    val (tmp, syn) = dupNull
     val roots = Seq((1L, 1), (1L, 2), (2L, 1)).toDF("c_a", "c_b")
     val m = syn.parentsClosure(spark, tmp, Map("tc" -> roots))
     def tb(n: String) = spark.read.parquet(s"$tmp/$n.parquet")
     val expC = tb("tc").join(roots, Seq("c_a", "c_b"), "left_semi")
     val expP = tb("tp").join(expC, col("p_id") === col("c_p"), "left_semi")
     val expG = tb("tg").join(expP, col("g_id") === col("p_g"), "left_semi")
-    def rows(df: DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
     assert(m.keySet == Set("tc", "tp", "tg"))
     for ((tn, exp) <- Seq("tc" -> expC, "tp" -> expP, "tg" -> expG)) {
       assert(m(tn).columns.toSeq == exp.columns.toSeq, tn)
@@ -242,6 +248,76 @@ class ClosureSpec extends AnyFunSuite {
     assert(m.values.forall(_.queryExecution.analyzed
       .isInstanceOf[LocalRelation]))
     assert(jobsOf(m.values.foreach(_.collect())) == 0)
+  }
+
+  test("childrenClosure and the both-flags closure keep every duplicate-id " +
+      "row and follow no null ref: equal to a semi-join chain on a " +
+      "synthetic catalog, walked and distributed") {
+    import org.apache.spark.sql.DataFrame
+    val (tmp, syn) = dupNull
+    def tb(n: String) = spark.read.parquet(s"$tmp/$n.parquet")
+    val (gId, pId, cId) = (Seq("g_id"), Seq("p_id"), Seq("c_a", "c_b"))
+    // Every row of `t` whose id tuple is in `ids`, in declared order.
+    def byId(t: String, idCols: Seq[String], ids: DataFrame): DataFrame =
+      tb(t).join(ids.toDF(idCols: _*).distinct(), idCols, "left_semi")
+        .select(tb(t).columns.map(col).toSeq: _*)
+    // The id tuples, nulls dropped, of `t`'s rows whose ref is in `refIds`.
+    def down(t: String, idCols: Seq[String], ref: String,
+             refIds: DataFrame): DataFrame =
+      tb(t).join(refIds.toDF("__r"), col(ref) === col("__r"), "left_semi")
+        .select(idCols.map(col): _*).na.drop()
+    def check(m: Map[String, DataFrame], exp: Map[String, DataFrame]): Unit = {
+      assert(m.keySet == exp.keySet)
+      for ((tn, e) <- exp) {
+        assert(m(tn).columns.toSeq == e.columns.toSeq, tn)
+        assert(rows(m(tn)) == rows(e), s"$tn differs from the semi-join chain")
+      }
+    }
+    // Children of g 100: p 10 and 12 by ref, so p3 returns by id although
+    // its ref is 101; c (1, 1) and (3, 1) by ref, so c4 returns by id.
+    val g = Seq(100L).toDF("g_id")
+    val pDown = down("tp", pId, "p_g", g)
+    val children = Map("tg" -> byId("tg", gId, g),
+      "tp" -> byId("tp", pId, pDown),
+      "tc" -> byId("tc", cId, down("tc", cId, "c_p", pDown)))
+    // Both flags from c (3, 1): up to p 10 and 12 and to g 100 and 101,
+    // then down from those accumulated sets.
+    val c = Seq((3L, 1)).toDF("c_a", "c_b")
+    val pUp = byId("tc", cId, c).select("c_p").na.drop()
+    val gUp = byId("tp", pId, pUp).select("p_g").na.drop()
+    val pAll = down("tp", pId, "p_g", gUp).union(pUp)
+    val family = Map("tg" -> byId("tg", gId, gUp),
+      "tp" -> byId("tp", pId, pAll),
+      "tc" -> byId("tc", cId, down("tc", cId, "c_p", pAll).union(c)))
+    assert(rows(children("tp").select("p_name")) ==
+      Seq("[p0]", "[p1]", "[p3]", "[p4]"))
+    assert(rows(children("tc").select("c_name")) ==
+      Seq("[c0]", "[c1]", "[c4]", "[c5]"))
+    assert(rows(family("tg").select("g_name")) == Seq("[g0]", "[g1]", "[g2]"))
+    for (t <- Seq("10MB", "-1")) TestSpark.withThreshold(t) {
+      check(syn.childrenClosure(spark, tmp, Map("tg" -> g)), children)
+      check(syn.closure(spark, tmp, Map("tc" -> c), parents = true,
+        children = true), family)
+    }
+  }
+
+  test("a children walk past the budget hands over to reach with the same " +
+      "rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val roots = Map("customer" -> Seq(21L).toDF("c_custkey"))
+    def joins(m: Map[String, org.apache.spark.sql.DataFrame]): Boolean =
+      m.values.exists(_.queryExecution.analyzed.collectFirst {
+        case j: Join => j }.nonEmpty)
+    val walked = cat.childrenClosure(spark, dir, roots)
+    assert(walked("orders").count() > 1)
+    assert(!joins(walked))
+    // a budget of one bigint id: the root fits, the customer's orders do not
+    TestSpark.withThreshold("8") {
+      val handed = cat.childrenClosure(spark, dir, roots)
+      assert(joins(handed), "expected reach's width-restoring semi-joins")
+      assert(handed.keySet == walked.keySet)
+      for (tn <- walked.keySet) assert(rows(handed(tn)) == rows(walked(tn)), tn)
+    }
   }
 
   test("invalid root-id maps are rejected up front (query_ids_are_valid)") {

@@ -152,6 +152,15 @@ class PatternQuerySpec extends AnyFunSuite {
   }
 
   test("run: '*' steps on the diamond catalog equal a BFS over the edges") {
+    diamondBfs()
+  }
+
+  test("run: '*' steps on the diamond catalog equal a BFS over the edges " +
+      "with the driver walk off (spark.sql.autoBroadcastJoinThreshold=-1)") {
+    TestSpark.withThreshold("-1")(diamondBfs())
+  }
+
+  private def diamondBfs(): Unit = {
     val dia = DiamondCatalog.catalog
     val ddir = DiamondCatalog.write()
     // Every (parent, child) edge of the object graph, on the driver.
@@ -193,6 +202,78 @@ class PatternQuerySpec extends AnyFunSuite {
       }
       assert(got == exp, p)
     }
+  }
+
+  test("run: a pattern walk past the budget hands over to hops with the " +
+      "same rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val p = ">customer[21]>orders>lineitem#"
+    val walked = PatternQuery.run(spark, dir, cat, p)("lineitem")
+    def joins(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst { case j: Join => j }.nonEmpty
+    assert(!joins(walked))
+    val n = Tables(spark, dir, "orders").filter(col("o_custkey") === 21).count()
+    assert(n > 0 && walked.count() > n)
+    // a budget of n bigint ids: the root and its orders fit, and the
+    // lineitem rows (wider, and more of them) do not
+    TestSpark.withThreshold((8 * n).toString) {
+      val handed = PatternQuery.run(spark, dir, cat, p)("lineitem")
+      assert(joins(handed), "expected the hop's semi-joins")
+      assert(handed.exceptAll(walked).isEmpty &&
+        walked.exceptAll(handed).isEmpty)
+    }
+  }
+
+  test("run: id lists match exactly the rows the cast(string) === filter " +
+      "matches, walked and distributed") {
+    def tb(n: String) = Tables(spark, dir, n)
+    // the reference filter: every id column's string form equals its field
+    def ref(df: DataFrame, cols: Seq[String], ids: Seq[Seq[String]]) =
+      df.filter(ids.map(id => cols.zip(id).map { case (c, v) =>
+        col(c).cast("string") === lit(v) }.reduce(_ && _)).reduce(_ || _))
+    def q(s: String) = "\"" + s + "\""
+    val first = tb("orders").orderBy("o_orderkey").head
+    val (ok, ck) = (first.getAs[Long]("o_orderkey"),
+      first.getAs[Long]("o_custkey"))
+    val cases: Seq[(String, String, DataFrame)] =
+      Seq("7", "007", "+7", q(" 7"), "7.0").map(v =>
+        (s">customer[$v]#", "customer",
+          ref(tb("customer"), Seq("c_custkey"), Seq(Seq(v.replace("\"", ""))))))
+    val more: Seq[(String, String, DataFrame)] = Seq(
+      (">region[1; 01; 1.0]#", "region",
+        ref(tb("region"), Seq("r_regionkey"), Seq(Seq("1"), Seq("01"),
+          Seq("1.0")))),
+      (">lineitem[1,3; 1,03; 1, 3.0; 2,1]#", "lineitem",
+        ref(tb("lineitem"), Seq("l_orderkey", "l_linenumber"),
+          Seq(Seq("1", "3"), Seq("1", "03"), Seq("1", "3.0"), Seq("2", "1")))),
+      // filters on hops, down and up
+      (s">customer[$ck]>orders[$ok; 0$ok]#", "orders",
+        ref(tb("orders").filter(col("o_custkey") === ck), Seq("o_orderkey"),
+          Seq(Seq(ok.toString), Seq("0" + ok)))),
+      (s">orders[$ok]<customer[$ck; +$ck]#", "customer",
+        ref(tb("customer"), Seq("c_custkey"), Seq(Seq(ck.toString),
+          Seq("+" + ck)))),
+      (s">orders[$ok]<*[$ck]#", "customer",
+        ref(tb("customer"), Seq("c_custkey"), Seq(Seq(ck.toString)))))
+    for (t <- Seq("10MB", "-1"); (p, tn, exp) <- cases ++ more)
+      TestSpark.withThreshold(t) {
+        val got = PatternQuery.run(spark, dir, cat, p).get(tn)
+        assert(got.fold(0L)(_.count()) == exp.count(), s"$p at $t")
+        got.foreach(g => assert(g.exceptAll(exp).isEmpty, s"$p at $t"))
+      }
+    // string ids: case, padding and numeric look-alikes stay distinct
+    import graft.model.{Catalog, GraftType}
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-strid").toString
+    Seq("a", "A", " a", "a ", "7", "07").toDF("s_id")
+      .write.parquet(s"$tmp/ts.parquet")
+    val strs = new Catalog(Map("ts" -> GraftType("ts", Seq("s_id"))), Nil)
+    for (t <- Seq("10MB", "-1"); l <- Seq("a", q(" a"), "7", "07;A"))
+      TestSpark.withThreshold(t) {
+        val got = PatternQuery.run(spark, tmp, strs, s">ts[$l]#")("ts")
+          .collect().map(_.getString(0)).toSet
+        assert(got == l.split(";").map(_.replace("\"", "")).toSet, s"$l at $t")
+      }
   }
 
   test("run: unrelated hop fails loudly") {

@@ -6,6 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(8)
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set to `v`:
+    * the budget of `Catalog`'s driver walk, which -1 turns off. */
+  def withThreshold[T](v: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 class SmokeSpec extends AnyFunSuite {
