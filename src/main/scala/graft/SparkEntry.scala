@@ -3513,8 +3513,8 @@ object SparkEntry {
     * closed form of (doc_id, frame) — Binary.makeRealGif) demuxed by
     * javax.imageio's multi-image reader and decoded to exact channel
     * sums in ONE fused pass (Binary.frameStatsFused, every 2nd frame —
-    * no per-frame PNG re-encode/re-decode; the blob-emitting
-    * sampleFrames API remains for writers, parity-spec-pinned). GIF
+    * no per-frame PNG re-encode/re-decode; BinarySpec pins it against
+    * a sample-then-decode reference). GIF
     * stores the gray palette verbatim, so decode is lossless and the
     * oracle recomputes frame set, dimensions, and mean arithmetically
     * from doc_id — a demux bug (wrong frame count, frame/offset mixup,
@@ -3533,16 +3533,6 @@ object SparkEntry {
       .orderBy("doc_id", "frame_idx")
   }
 
-  /** REAL video frame sampling: per-doc RIFF/AVI containers carrying
-    * Motion-PNG streams (Binary.makeRealAvi — frame pixels a closed form
-    * of (doc_id, frame)), demuxed by the pure-byte RIFF walker and
-    * decoded to exact channel sums in one fused pass
-    * (Binary.videoFrameStatsFused, every 2nd frame; the Frame-emitting
-    * sampleVideoFrames API remains for writers, parity-spec-pinned).
-    * The oracle recomputes frame sets/dims/means arithmetically — a
-    * demux bug (chunk walk, padding, frame order) or decode bug breaks
-    * the hash. Retires the video stub for AVI; only containers with no
-    * JVM demuxer (e.g. MP4) remain. */
   /** Scene-cut detection (Binary.videoSceneCuts) over synthesized
     * multi-shot AVIs: real demux + decode, consecutive-frame mean deltas
     * computed row-locally (zero shuffles — all frames of a clip live in
@@ -3559,6 +3549,14 @@ object SparkEntry {
       .orderBy("doc_id", "frame_idx")
   }
 
+  /** REAL video frame sampling: per-doc RIFF/AVI containers carrying
+    * Motion-PNG streams (Binary.makeRealAvi — frame pixels a closed form
+    * of (doc_id, frame)), demuxed by the pure-byte RIFF walker and
+    * decoded to exact channel sums in one fused pass
+    * (Binary.videoFrameStatsFused, every 2nd frame; BinarySpec pins it
+    * against a sample-then-decode reference). The oracle recomputes
+    * frame sets/dims/means arithmetically — a demux bug (chunk walk,
+    * padding, frame order) or decode bug breaks the hash. */
   private def m05(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
@@ -3734,12 +3732,6 @@ object SparkEntry {
         else Paths.get(System.getProperty("java.io.tmpdir"))
     }
     val ckpt = Files.createTempDirectory(ckptBase, "graft_st_ckpt_")
-    // State-store provider knob (VERDICT r18 item 3):
-    // GRAFT_ST_PROVIDER=rocksdb|hdfs|<fqcn> pins the provider for a
-    // session; unset leaves Spark's default (HDFS-backed). Resolution
-    // + the result-invariance argument live in Streams (shared with
-    // the streaming probes).
-    graft.streaming.Streams.applyStateStoreProviderEnv(s)
     val sink = s"st_gate_sink_${stGateRuns.incrementAndGet()}"
     // cleanup wraps from start() onward so an analysis/start failure
     // cannot leak the RAM-backed dir, closes the walk stream (the fd

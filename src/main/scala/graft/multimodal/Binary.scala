@@ -1,25 +1,24 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Multimodal column plumbing: treat image/audio/video payloads as opaque
   * `binary` columns with typed metadata, processed in partition-local
   * batches.
   *
-  * Header metadata ([[Binary.imageHeader]]: PNG/JPEG/GIF dimensions) is
-  * parsed for REAL from payload bytes — pure arithmetic, no codecs.
-  * Pixel decode ([[Binary.pixelStats]]), resize ([[Binary.resizeImages]])
-  * and multi-frame sampling ([[Binary.sampleFrames]]) are REAL too, via
-  * the pure-JVM `javax.imageio` readers (PNG/GIF/BMP/JPEG, including
-  * multi-image GIF sequences). The only remaining stubs are for true
-  * VIDEO containers — the JDK has no demuxer and the container no media
-  * codecs — and they keep the real Spark-side plumbing: schema,
-  * partition batching, iterator discipline (no per-row task setup),
-  * which is what matters at 100 TB: `mapPartitions` amortizes any
-  * model/codec initialization once per partition, the Scala analog of
-  * `mapInPandas` batch processing.
+  * Header metadata (image, audio, video, archive and stream formats)
+  * is parsed for REAL from payload bytes — pure arithmetic, no codecs —
+  * and each parser has a typed Dataset form (`perRow`). Pixel decode
+  * ([[Binary.pixelStats]]) and multi-frame decode
+  * ([[Binary.frameStatsFused]] for GIF sequences; AVI, Motion-JPEG MP4
+  * and Matroska through the pure-byte demuxers) are REAL too, via the
+  * pure-JVM `javax.imageio` readers (PNG/GIF/BMP/JPEG). Frames of codecs
+  * with no JVM reader (H.264/VP9-class bytes) are not decoded; their
+  * streams get structure walks ([[Binary.h264Meta]], [[Binary.ivfMeta]]).
+  * Every decode runs at the codec boundary (`decoding`): `mapPartitions`
+  * amortizes codec initialization once per partition, the Scala analog
+  * of `mapInPandas` batch processing.
   */
 object Binary {
 
@@ -97,47 +96,23 @@ object Binary {
     }
   }
 
-  /** Attach a binary payload column (here: utf8 bytes of a text column —
-    * with real media this is the file/blob bytes). */
-  def withPayload(df: DataFrame, srcCol: String): DataFrame =
-    df.withColumn("payload", col(srcCol).cast(BinaryType))
-
-  val metaSchema: StructType = StructType(Seq(
-    StructField("byte_len", LongType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("checksum", StringType, nullable = false)))
-
   final case class PayloadRow(doc_id: Long, payload: Array[Byte])
-  final case class DecodedMeta(doc_id: Long, byte_len: Long, width: Long,
-                               height: Long, checksum: String)
 
-  /** Batch decode over partitions: the real plumbing for a heavyweight
-    * decoder — Dataset-typed `mapPartitions`, so the codec/model handle is
-    * initialized once per PARTITION (not per row) and rows stream through
-    * with Tungsten encoders (no RDD hop, no Row boxing). Every emitted
-    * field is REAL: byte length, md5 checksum, and [[imageHeader]]-parsed
-    * dimensions (−1 for non-image bytes). Only pixel decode remains an
-    * env-blocked stub ([[resizeStub]]/[[sampleFramesStub]]). */
-  def decodePartitions(ds: Dataset[PayloadRow]): Dataset[DecodedMeta] = {
-    import ds.sparkSession.implicits._
+  /** The shape of every header/meta parser's Dataset form: a typed
+    * row-local map, Tungsten encoders, no per-row setup, no shuffle. */
+  private def perRow[T <: Product : TypeTag](ds: Dataset[PayloadRow])(
+      f: PayloadRow => T): Dataset[T] =
+    ds.map(f)(Encoders.product[T])
+
+  /** The codec boundary's Dataset form: one [[codecPrologue]] and one
+    * [[FrameDecoder]] per partition, rows streamed through `f` — any
+    * model/codec initialization amortized per PARTITION, not per row. */
+  private def decoding[T <: Product : TypeTag](ds: Dataset[PayloadRow])(
+      f: (FrameDecoder, Iterator[PayloadRow]) => Iterator[T]): Dataset[T] =
     ds.mapPartitions { rows =>
-      // Per-partition init: with a real codec this is the decoder context.
-      val digest = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        digest.reset()
-        val sum = digest.digest(r.payload).map("%02x".format(_)).mkString
-        val (_, w, h) = imageHeader(r.payload)
-        DecodedMeta(r.doc_id, r.payload.length.toLong, w, h, sum)
-      }
-    }
-  }
-
-  /** [[decodePartitions]] over a payload frame (see [[withPayload]]). */
-  def decodeFrame(df: DataFrame): Dataset[DecodedMeta] = {
-    import df.sparkSession.implicits._
-    decodePartitions(df.select(col("doc_id"), col("payload")).as[PayloadRow])
-  }
+      codecPrologue()
+      f(new FrameDecoder, rows)
+    }(Encoders.product[T])
 
   final case class ImageHeader(doc_id: Long, format: String, width: Long,
                                height: Long)
@@ -330,13 +305,11 @@ object Binary {
     * zero shuffle: the whole decode+reduce is row-local, so the operator
     * scales linearly with the corpus and parallelizes to any partition
     * count (the 100 TB posture for per-file feature extraction). */
-  def audioStatsOf(ds: Dataset[PayloadRow]): Dataset[AudioStats] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def audioStatsOf(ds: Dataset[PayloadRow]): Dataset[AudioStats] =
+    perRow(ds) { r =>
       val (n, peak, zc, sumA, sumSq) = pcmStats(r.payload)
       AudioStats(r.doc_id, n, peak, zc, sumA, sumSq)
     }
-  }
 
   /** Deterministic image header blob — PNG, JPEG, or GIF rotating on the
     * doc id, built byte-for-byte per the public format specs (PNG
@@ -376,23 +349,19 @@ object Binary {
 
   /** [[wavHeader]] over a payload Dataset — typed map, Tungsten encoders,
     * no per-row setup. */
-  def audioHeaders(ds: Dataset[PayloadRow]): Dataset[AudioHeader] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def audioHeaders(ds: Dataset[PayloadRow]): Dataset[AudioHeader] =
+    perRow(ds) { r =>
       val (f, c, sr, bits, n, ms) = wavHeader(r.payload)
       AudioHeader(r.doc_id, f, c, sr, bits, n, ms)
     }
-  }
 
   /** [[imageHeader]] over a payload Dataset — typed map, stays in Tungsten
     * encoders, no per-row setup. */
-  def imageHeaders(ds: Dataset[PayloadRow]): Dataset[ImageHeader] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def imageHeaders(ds: Dataset[PayloadRow]): Dataset[ImageHeader] =
+    perRow(ds) { r =>
       val (f, w, h) = imageHeader(r.payload)
       ImageHeader(r.doc_id, f, w, h)
     }
-  }
 
   final case class VideoHeader(doc_id: Long, brand: String,
                                timescale: Long, duration_ms: Long,
@@ -406,9 +375,8 @@ object Binary {
     * discipline). Handles v0 and v1 full boxes and 64-bit `largesize`;
     * reads only declared sizes, so a header-only blob (metadata
     * extraction without media data) parses. Non-MP4 or malformed bytes
-    * yield ("unknown", -1, …). This retires the metadata half of the
-    * MP4 stub — only FRAME DECODE remains env-blocked (no JVM codec),
-    * see [[sampleFramesStub]]. */
+    * yield ("unknown", -1, …). Motion-JPEG frames decode via
+    * [[mp4JpegFrames]]; other codecs' frames have no JVM decoder. */
   def mp4Header(p: Array[Byte])
       : (String, Long, Long, Long, Long, Long) = {
     def u32(i: Int): Long =
@@ -681,9 +649,9 @@ object Binary {
     * samples_per_chunk runs expanded per spec (a run covers chunks up to
     * the next entry's first_chunk) — then slices each sample's JPEG
     * bytes straight out of the payload at chunk_offset + intra-chunk
-    * cumulative size. Frames feed the bundled JPEG reader; this retires
-    * [[sampleFramesStub]] for MJPEG MP4 exactly as [[aviFrames]] did for
-    * AVI. Malformed tables stop the walk at the last consistent sample
+    * cumulative size. Frames feed the bundled JPEG reader, as
+    * [[aviFrames]]' do for AVI. Malformed tables stop the walk at the
+    * last consistent sample
     * (all the information the bytes offer); no JPEG track → empty. */
   def mp4JpegFrames(p: Array[Byte]): IndexedSeq[Array[Byte]] = {
     def u32(i: Int): Long =
@@ -790,52 +758,25 @@ object Binary {
     IndexedSeq.empty
   }
 
-  /** [[mp4JpegFrames]] fused with [[frameStats]] — the MP4 sibling of
+  /** [[mp4JpegFrames]] fused with frame decode — the MP4 sibling of
     * [[videoFrameStatsFused]]: sample-table demux → bundled-JPEG decode
     * ([[FrameDecoder]]: one reader per partition) → channel sums, all
     * row-local (a clip's frames live in its own payload; zero shuffles,
     * linear in frames — the property that holds at billions of clips).
     * Sentinels: non-MP4 payload → one frame_idx −1 row; no JPEG track /
-    * broken sample table → no rows (the [[sampleVideoFrames]] zero-frame
-    * rule); an undecodable sample → −1 stats at its frame_idx. */
+    * broken sample table → no rows (the zero-frame rule of every
+    * container); an undecodable sample → −1 stats at its frame_idx. */
   def mp4FrameStats(ds: Dataset[PayloadRow], stride: Int)
-      : Dataset[FrameStats] = {
-    import ds.sparkSession.implicits._
-    require(stride > 0, s"stride must be positive: $stride")
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
-      rows.flatMap { r =>
-        if (notMp4(r.payload))
-          Iterator.single(
-            FrameStats(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
-        else {
-          val frames =
-            try mp4JpegFrames(r.payload)
-            catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
-          Iterator.range(0, frames.length, stride).map { i =>
-            val img = dec.decode(frames(i))
-            if (img == null)
-              FrameStats(r.doc_id, i.toLong, -1L, -1L, -1L, -1L, -1L, -1L)
-            else {
-              val (fw, fh, sr, sg, sb) = rgbSums(img)
-              FrameStats(r.doc_id, i.toLong, fw, fh, fw * fh, sr, sg, sb)
-            }
-          }
-        }
-      }
-    }
-  }
+      : Dataset[FrameStats] =
+    containerFrameStats(ds, stride, notMp4, mp4JpegFrames)
 
   /** [[mp4Header]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup ([[audioHeaders]]' video sibling). */
-  def videoHeaders(ds: Dataset[PayloadRow]): Dataset[VideoHeader] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def videoHeaders(ds: Dataset[PayloadRow]): Dataset[VideoHeader] =
+    perRow(ds) { r =>
       val (brand, ts, ms, n, w, h) = mp4Header(r.payload)
       VideoHeader(r.doc_id, brand, ts, ms, n, w, h)
     }
-  }
 
   final case class MkvMeta(doc_id: Long, doc_type: String,
                            timescale_ns: Long, duration_ms: Long,
@@ -852,9 +793,9 @@ object Binary {
     * are read to the parent's limit (the live-stream Segment shape —
     * RFC 8794 §6.2, simplified to parent-bounded, which is exact for
     * the last child). Reads only declared extents; non-EBML or
-    * malformed bytes yield ("unknown", -1, …). This retires the
-    * metadata half of the Matroska stub — only frame decode remains
-    * env-blocked (no JVM codec), see [[sampleFramesStub]]. */
+    * malformed bytes yield ("unknown", -1, …). Motion-JPEG frames
+    * decode via [[mkvJpegFrames]]; other codecs' frames have no JVM
+    * decoder. */
   def mkvHeader(p: Array[Byte])
       : (String, Long, Long, Long, Long, Long) = {
     val bad = ("unknown", -1L, -1L, -1L, -1L, -1L)
@@ -1109,9 +1050,8 @@ object Binary {
     * yields its frame bytes (block header = track VINT + 2-byte
     * relative timestamp + flags; laced blocks — flag bits 0x06 — are
     * skipped, the fixture never laces and a demuxer must not guess
-    * frame boundaries it cannot read). Feeds the bundled JPEG reader;
-    * retires [[sampleFramesStub]] for MJPEG Matroska exactly as
-    * [[mp4JpegFrames]] did for MP4. */
+    * frame boundaries it cannot read). Feeds the bundled JPEG reader,
+    * as [[mp4JpegFrames]] does for MP4. */
   def mkvJpegFrames(p: Array[Byte]): IndexedSeq[Array[Byte]] = {
     if (notMkv(p)) return IndexedSeq.empty
     def vintLen(b: Int): Int =
@@ -1199,50 +1139,23 @@ object Binary {
     out.result()
   }
 
-  /** [[mkvJpegFrames]] fused with [[frameStats]] — the Matroska sibling
+  /** [[mkvJpegFrames]] fused with frame decode — the Matroska sibling
     * of [[mp4FrameStats]]: EBML block walk → bundled-JPEG decode (one
     * [[FrameDecoder]] reader per partition) → channel sums, row-local,
     * zero shuffles, linear in frames. Sentinels: non-EBML payload → one
     * frame_idx −1 row; no MJPEG track / broken walk → no rows; an
     * undecodable block → −1 stats at its frame_idx. */
   def mkvFrameStats(ds: Dataset[PayloadRow], stride: Int)
-      : Dataset[FrameStats] = {
-    import ds.sparkSession.implicits._
-    require(stride > 0, s"stride must be positive: $stride")
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
-      rows.flatMap { r =>
-        if (notMkv(r.payload))
-          Iterator.single(
-            FrameStats(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
-        else {
-          val frames =
-            try mkvJpegFrames(r.payload)
-            catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
-          Iterator.range(0, frames.length, stride).map { i =>
-            val img = dec.decode(frames(i))
-            if (img == null)
-              FrameStats(r.doc_id, i.toLong, -1L, -1L, -1L, -1L, -1L, -1L)
-            else {
-              val (fw, fh, sr, sg, sb) = rgbSums(img)
-              FrameStats(r.doc_id, i.toLong, fw, fh, fw * fh, sr, sg, sb)
-            }
-          }
-        }
-      }
-    }
-  }
+      : Dataset[FrameStats] =
+    containerFrameStats(ds, stride, notMkv, mkvJpegFrames)
 
   /** [[mkvHeader]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup ([[videoHeaders]]' EBML sibling). */
-  def mkvHeaders(ds: Dataset[PayloadRow]): Dataset[MkvMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def mkvHeaders(ds: Dataset[PayloadRow]): Dataset[MkvMeta] =
+    perRow(ds) { r =>
       val (dt, ts, ms, n, w, h) = mkvHeader(r.payload)
       MkvMeta(r.doc_id, dt, ts, ms, n, w, h)
     }
-  }
 
   final case class TiffMeta(doc_id: Long, byte_order: String,
                             width: Long, height: Long, orientation: Long,
@@ -1360,13 +1273,11 @@ object Binary {
 
   /** [[tiffHeader]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup (the metadata family's TIFF member). */
-  def tiffHeaders(ds: Dataset[PayloadRow]): Dataset[TiffMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def tiffHeaders(ds: Dataset[PayloadRow]): Dataset[TiffMeta] =
+    perRow(ds) { r =>
       val (o, w, h, or, n) = tiffHeader(r.payload)
       TiffMeta(r.doc_id, o, w, h, or, n)
     }
-  }
 
   final case class FlacMeta(doc_id: Long, sample_rate: Long,
                             channels: Long, bits: Long,
@@ -1450,13 +1361,11 @@ object Binary {
 
   /** [[flacHeader]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup (the metadata family's FLAC member). */
-  def flacHeaders(ds: Dataset[PayloadRow]): Dataset[FlacMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def flacHeaders(ds: Dataset[PayloadRow]): Dataset[FlacMeta] =
+    perRow(ds) { r =>
       val (sr, c, b, t, d, n) = flacHeader(r.payload)
       FlacMeta(r.doc_id, sr, c, b, t, d, n)
     }
-  }
 
   final case class Mp3Meta(doc_id: Long, bitrate_kbps: Long,
                            sample_rate: Long, channels: Long,
@@ -1571,13 +1480,11 @@ object Binary {
 
   /** [[mp3Header]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup (the metadata family's MP3 member). */
-  def mp3Headers(ds: Dataset[PayloadRow]): Dataset[Mp3Meta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def mp3Headers(ds: Dataset[PayloadRow]): Dataset[Mp3Meta] =
+    perRow(ds) { r =>
       val (b, sr, c, n, d, id3) = mp3Header(r.payload)
       Mp3Meta(r.doc_id, b, sr, c, n, d, id3)
     }
-  }
 
   final case class ZipMeta(doc_id: Long, n_entries: Long,
                            total_comp: Long, total_uncomp: Long,
@@ -1676,13 +1583,11 @@ object Binary {
   /** [[zipListing]] over a payload Dataset — typed map, Tungsten
     * encoders, no per-row setup (the metadata family's archive
     * member). */
-  def zipListings(ds: Dataset[PayloadRow]): Dataset[ZipMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def zipListings(ds: Dataset[PayloadRow]): Dataset[ZipMeta] =
+    perRow(ds) { r =>
       val (n, c, u, d, crc) = zipListing(r.payload)
       ZipMeta(r.doc_id, n, c, u, d, crc)
     }
-  }
 
   final case class WebpMeta(doc_id: Long, variant: String, width: Long,
                             height: Long, has_alpha: Long)
@@ -1778,13 +1683,11 @@ object Binary {
 
   /** [[webpHeader]] over a payload Dataset — typed map, Tungsten
     * encoders ([[mkvHeaders]]' RIFF-image sibling). */
-  def webpHeaders(ds: Dataset[PayloadRow]): Dataset[WebpMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def webpHeaders(ds: Dataset[PayloadRow]): Dataset[WebpMeta] =
+    perRow(ds) { r =>
       val (v, w, h, a) = webpHeader(r.payload)
       WebpMeta(r.doc_id, v, w, h, a)
     }
-  }
 
   /** Deterministic FULLY-DECODABLE PNG: a w×h RGB image whose every pixel
     * is a closed-form function of (doc_id, x, y) — r = (doc_id+x+y)%256,
@@ -1830,7 +1733,7 @@ object Binary {
     * directly — no sRGB/linear-gray colorspace conversion anywhere
     * (TYPE_BYTE_GRAY + setRGB would gamma-shift the values), and GIF
     * stores palettes verbatim — so the round-trip through
-    * [[sampleFrames]]' real decoder recovers the pattern EXACTLY: the
+    * [[frameStatsFused]]' real decoder recovers the pattern EXACTLY: the
     * multi-frame analog of [[makeRealPng]]'s closed-form oracle. */
   def makeRealGif(docId: Long): Array[Byte] = {
     val w = (6 + docId % 5).toInt
@@ -1922,11 +1825,8 @@ object Binary {
     * join exactly like SimHash text signatures. Runs at the codec
     * boundary ([[pixelStats]]' mapPartitions discipline); undecodable
     * payloads are dropped (no sentinel rows to pair). */
-  def aHashes(ds: Dataset[PayloadRow]): Dataset[HashSig] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
+  def aHashes(ds: Dataset[PayloadRow]): Dataset[HashSig] =
+    decoding(ds) { (dec, rows) =>
       rows.flatMap { r =>
         val img = dec.decode(r.payload)
         if (img == null) None
@@ -1986,7 +1886,6 @@ object Binary {
         }
       }
     }
-  }
 
   final case class PixelStats(doc_id: Long, width: Long, height: Long,
                               n_pixels: Long, sum_r: Long, sum_g: Long,
@@ -1994,18 +1893,14 @@ object Binary {
 
   /** REAL pixel decode — `javax.imageio` (pure-JVM PNG/GIF/BMP/JPEG
     * readers ship in `java.desktop`; no native media codecs needed), run
-    * partition-batched like [[decodePartitions]]. Emits per-image channel
+    * partition-batched at the codec boundary. Emits per-image channel
     * sums (exact longs; means = sum/n_pixels are derived downstream so the
     * aggregate stays engine-portable). Undecodable payloads (video, the
     * header-only [[makeImage]] blobs, arbitrary bytes) yield -1 sentinels
     * rather than failing the batch — the only formats still without a real
     * decode path are ones `javax.imageio` has no reader for. */
-  def pixelStats(ds: Dataset[PayloadRow]): Dataset[PixelStats] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      // Per-partition init: headless decode, no display subsystem.
-      codecPrologue()
-      val dec = new FrameDecoder
+  def pixelStats(ds: Dataset[PayloadRow]): Dataset[PixelStats] =
+    decoding(ds) { (dec, rows) =>
       rows.map { r =>
         val img = dec.decode(r.payload)
         if (img == null)
@@ -2016,7 +1911,6 @@ object Binary {
         }
       }
     }
-  }
 
   final case class ColorHist(doc_id: Long, bin: Long, n_r: Long,
                              n_g: Long, n_b: Long)
@@ -2030,11 +1924,8 @@ object Binary {
     * its fixed 16 rows (zero bins included — the oracle's join has no
     * presence ambiguity). Undecodable payloads yield one (-1, -1, -1,
     * -1) sentinel row. */
-  def colorHistograms(ds: Dataset[PayloadRow]): Dataset[ColorHist] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
+  def colorHistograms(ds: Dataset[PayloadRow]): Dataset[ColorHist] =
+    decoding(ds) { (dec, rows) =>
       rows.flatMap { r =>
         val img = dec.decode(r.payload)
         if (img == null) Seq(ColorHist(r.doc_id, -1L, -1L, -1L, -1L))
@@ -2071,7 +1962,6 @@ object Binary {
         }
       }
     }
-  }
 
   /** Raster fast path: the packed byte buffer + (stride, rOff, gOff,
     * bOff) when the decoded image is one of the two byte layouts
@@ -2100,7 +1990,7 @@ object Binary {
   }
 
   /** Exact per-channel long sums of a decoded image (shared by
-    * [[pixelStats]] and [[frameStats]]). */
+    * [[pixelStats]] and every frame-stats operator). */
   private def rgbSums(img: java.awt.image.BufferedImage)
       : (Long, Long, Long, Long, Long) = {
     val (w, h) = (img.getWidth, img.getHeight)
@@ -2129,164 +2019,37 @@ object Binary {
     (w.toLong, h.toLong, sr, sg, sb)
   }
 
-  final case class ResizedMeta(doc_id: Long, width: Long, height: Long,
-                               payload: Array[Byte])
-  final case class Frame(doc_id: Long, frame_idx: Long,
-                         payload: Array[Byte])
-
-  /** REAL resize for any `javax.imageio`-decodable payload: decode,
-    * nearest-neighbor rescale through a headless `Graphics2D` (pure JVM),
-    * re-encode as PNG. Payloads with no reader (video containers, raw
-    * bytes) fall back to [[resizeStub]]'s deterministic truncation — the
-    * stub now covers ONLY genuinely env-blocked formats. */
-  def resizeImages(ds: Dataset[PayloadRow], w: Long, h: Long)
-      : Dataset[ResizedMeta] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
-      rows.map { r =>
-        val img = dec.decode(r.payload)
-        if (img == null) {
-          val n = math.min(r.payload.length.toLong, w * h).toInt
-          ResizedMeta(r.doc_id, w, h, r.payload.take(n))
-        } else {
-          val out = new java.awt.image.BufferedImage(
-            w.toInt, h.toInt, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g2 = out.createGraphics()
-          g2.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-          g2.drawImage(img, 0, 0, w.toInt, h.toInt, null)
-          g2.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          ResizedMeta(r.doc_id, w, h, bos.toByteArray)
-        }
-      }
-    }
-  }
-
-  /** Resize stub: the payload transform is a deterministic fake (truncate
-    * to the target "pixel count"), but the Spark shape is real — a typed
-    * map keeping the binary column opaque, fused into codegen'd pipelines
-    * upstream/downstream. Superseded by [[resizeImages]] for every format
-    * `javax.imageio` can read; retained as its fallback and for callers
-    * that want the transform-only shape. */
-  def resizeStub(ds: Dataset[PayloadRow], w: Long, h: Long)
-      : Dataset[ResizedMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
-      val n = math.min(r.payload.length.toLong, w * h).toInt
-      ResizedMeta(r.doc_id, w, h, r.payload.take(n))
-    }
-  }
-
-  /** REAL frame sampling for any multi-frame format `javax.imageio` can
-    * read (the JDK ships a multi-image GIF reader): walk the payload's
-    * image sequence with `ImageReader.getNumImages`/`read(i)`, keep every
-    * `stride`-th frame, re-encode each as lossless PNG so downstream
-    * per-frame ops ([[frameStats]], [[pixelStats]]) decode it exactly.
-    * Partition-batched like [[decodePartitions]]; payloads with no
-    * reader (video containers with no JVM codec for their payload —
-    * genuinely env-blocked, see [[sampleFramesStub]]) emit one
-    * doc-level sentinel row (frame_idx = -1, empty payload) rather than
-    * failing the batch or vanishing. Frame count per payload is bounded
-    * (a decode, not a scan), so the per-row materialization is fine. */
-  def sampleFrames(ds: Dataset[PayloadRow], stride: Int): Dataset[Frame] = {
-    import ds.sparkSession.implicits._
+  /** Multi-image frame stats for any format `javax.imageio` can read
+    * (the JDK ships a multi-image GIF reader): walk the payload's image
+    * sequence with `ImageReader.getNumImages`/`read(i)`, keep every
+    * `stride`-th frame, and fold its channel sums in ONE pass — no
+    * per-frame re-encode (BinarySpec pins it against a sample, PNG
+    * re-encode, decode reference). Corrupt frame → -1 stats at its
+    * frame_idx, so one bad frame never swallows its siblings;
+    * unreadable container (no reader claims it, or its index is broken)
+    * → one doc-level row with frame_idx = -1. */
+  def frameStatsFused(ds: Dataset[PayloadRow], stride: Int)
+      : Dataset[FrameStats] = {
     require(stride > 0, s"stride must be positive: $stride")
-    ds.mapPartitions { rows =>
-      codecPrologue()
+    decoding(ds) { (_, rows) =>
       rows.flatMap { r =>
         val iis = javax.imageio.ImageIO.createImageInputStream(
           new java.io.ByteArrayInputStream(r.payload))
         val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        // An unreadable CONTAINER (no reader claims it, or its index is
-        // broken) emits ONE doc-level sentinel row at frame_idx = -1 with
-        // an empty payload — distinguishable from a zero-frame container
-        // (no rows) and from a corrupt FRAME (its own frame_idx, empty
-        // payload). Silent loss never.
         if (!readers.hasNext) {
-          iis.close()
-          Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
+          iis.close(); Iterator.single(frameStatsOf(r.doc_id, -1, null))
         } else {
           val reader = readers.next()
           try {
             reader.setInput(iis)
             val n = reader.getNumImages(true)
             (0 until n by stride).map { i =>
-              // Per-FRAME isolation: one corrupt frame must not swallow
-              // its siblings. A failed decode emits an EMPTY payload —
-              // the sentinel row discipline of pixelStats/frameStats
-              // (downstream decode yields -1s), never silent loss.
-              val png =
-                try {
-                  val src = reader.read(i)
-                  // Copy into INT_RGB before encoding: PNG-writing an
-                  // indexed/gray frame directly converts colorspaces
-                  // (sRGB → linear gray, a measured gamma shift);
-                  // RGB → PNG is exact.
-                  val rgb = new java.awt.image.BufferedImage(src.getWidth,
-                    src.getHeight, java.awt.image.BufferedImage.TYPE_INT_RGB)
-                  val g2 = rgb.createGraphics()
-                  g2.drawImage(src, 0, 0, null)
-                  g2.dispose()
-                  val bos = new java.io.ByteArrayOutputStream()
-                  javax.imageio.ImageIO.write(rgb, "png", bos)
-                  bos.toByteArray
-                } catch { case _: Exception => Array.empty[Byte] }
-              Frame(r.doc_id, i.toLong, png)
+              try frameStatsOf(r.doc_id, i, reader.read(i))
+              catch { case _: Exception => frameStatsOf(r.doc_id, i, null) }
             }.iterator
           } catch {
             case _: Exception =>
-              Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
-          } finally { reader.dispose(); iis.close() }
-        }
-      }
-    }
-  }
-
-  /** [[sampleFrames]] fused with [[frameStats]]: demux → decode → channel
-    * sums in ONE pass, skipping the per-frame lossless-PNG re-encode and
-    * re-decode round trip the blob contract costs (the Frame-emitting API
-    * stays for writers; a stats consumer needs only the sums, computed on
-    * the SAME decoded image the blob path would encode — result-identical,
-    * parity-spec-pinned). Sentinel discipline matches the composed path:
-    * corrupt frame → -1 stats at its frame_idx; unreadable container →
-    * one doc-level row with frame_idx = -1. */
-  def frameStatsFused(ds: Dataset[PayloadRow], stride: Int)
-      : Dataset[FrameStats] = {
-    import ds.sparkSession.implicits._
-    require(stride > 0, s"stride must be positive: $stride")
-    def containerSentinel(id: Long) =
-      FrameStats(id, -1L, -1L, -1L, -1L, -1L, -1L, -1L)
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      rows.flatMap { r =>
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(r.payload))
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) {
-          iis.close(); Iterator.single(containerSentinel(r.doc_id))
-        } else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis)
-            val n = reader.getNumImages(true)
-            (0 until n by stride).map { i =>
-              try {
-                val src = reader.read(i)
-                val (w, h, sr, sg, sb) = rgbSums(src)
-                FrameStats(r.doc_id, i.toLong, w, h, w * h, sr, sg, sb)
-              } catch {
-                case _: Exception =>
-                  FrameStats(r.doc_id, i.toLong, -1L, -1L, -1L, -1L, -1L,
-                    -1L)
-              }
-            }.iterator
-          } catch {
-            case _: Exception => Iterator.single(containerSentinel(r.doc_id))
+              Iterator.single(frameStatsOf(r.doc_id, -1, null))
           } finally { reader.dispose(); iis.close() }
         }
       }
@@ -2301,7 +2064,7 @@ object Binary {
     * container is spec-shaped (RIFF 'AVI ' → LIST hdrl {avih, LIST strl
     * {strh vids/MPNG, strf BITMAPINFOHEADER}} → LIST movi {00dc…}) and
     * every frame chunk is an independent lossless PNG, so
-    * [[sampleVideoFrames]]' demux + decode recovers the closed form
+    * [[videoFrameStatsFused]]' demux + decode recovers the closed form
     * EXACTLY — the true-video analog of [[makeRealGif]]'s oracle. */
   def makeRealAvi(docId: Long): Array[Byte] = {
     val w = (5 + docId % 6).toInt
@@ -2409,12 +2172,6 @@ object Binary {
     out.result()
   }
 
-  /** [[sampleFrames]] for RIFF/AVI video: [[aviFrames]] demuxes the
-    * container (pure JVM — this retires the frame-sample stub for AVI;
-    * only containers with no JVM demuxer path, e.g. MP4, remain stubbed),
-    * every `stride`-th frame's codec payload becomes a row. Payloads pass
-    * through verbatim (Motion-PNG frames feed [[frameStats]] directly);
-    * decode stays a separate stage exactly like the GIF path. */
   /** True when the payload doesn't even carry the RIFF/AVI magic — the
     * container-level unreadability test (an on-magic container with a
     * broken chunk walk yields zero frames instead: the walker stops at
@@ -2425,62 +2182,52 @@ object Binary {
       new String(p.slice(0, 4), "US-ASCII") != "RIFF" ||
       new String(p.slice(8, 12), "US-ASCII") != "AVI "
 
-  def sampleVideoFrames(ds: Dataset[PayloadRow], stride: Int)
-      : Dataset[Frame] = {
-    import ds.sparkSession.implicits._
+  /** RIFF/AVI frame stats: [[aviFrames]] demux → decode → channel sums
+    * in one row-local pass; frame payloads are the container's own codec
+    * bytes (Motion-PNG in [[makeRealAvi]]). Sentinels: non-AVI payload →
+    * doc-level frame_idx = -1 row; an undecodable frame payload → -1
+    * stats at its frame_idx. */
+  def videoFrameStatsFused(ds: Dataset[PayloadRow], stride: Int)
+      : Dataset[FrameStats] =
+    containerFrameStats(ds, stride, notAvi, aviFrames)
+
+  /** The one body of the container frame-stats operators: a payload
+    * failing the container check `not` → one doc-level frame_idx −1 row;
+    * else `demux`'s frames (none when it throws) every `stride`-th,
+    * each decoded by the partition's [[FrameDecoder]] to channel sums,
+    * −1 stats where a frame won't decode. Row-local: a clip's frames
+    * live in its own payload, so zero shuffles, linear in frames. */
+  private def containerFrameStats(ds: Dataset[PayloadRow], stride: Int,
+      not: Array[Byte] => Boolean,
+      demux: Array[Byte] => IndexedSeq[Array[Byte]]): Dataset[FrameStats] = {
     require(stride > 0, s"stride must be positive: $stride")
-    ds.mapPartitions { rows =>
+    decoding(ds) { (dec, rows) =>
       rows.flatMap { r =>
-        // Not an AVI at all → one doc-level sentinel row (frame_idx = -1,
-        // empty payload), the sampleFrames unreadable-container rule.
-        if (notAvi(r.payload))
-          Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
+        if (not(r.payload)) Iterator.single(frameStatsOf(r.doc_id, -1, null))
         else {
-          val frames =
-            try aviFrames(r.payload)
-            catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
+          val frames = demuxed(r.payload, demux)
           Iterator.range(0, frames.length, stride)
-            .map(i => Frame(r.doc_id, i.toLong, frames(i)))
+            .map(i => frameStatsOf(r.doc_id, i, dec.decode(frames(i))))
         }
       }
     }
   }
 
-  /** [[sampleVideoFrames]] fused with [[frameStats]]: demux → decode →
-    * channel sums in one pass, skipping the Frame-row hop between the
-    * two typed operators (no re-encode exists on the video path — frame
-    * payloads are the container's own codec bytes — so the fusion saves
-    * the intermediate row materialization, not a codec round trip).
-    * Sentinels: non-AVI payload → doc-level frame_idx = -1 row;
-    * an undecodable frame payload → -1 stats at its frame_idx. */
-  def videoFrameStatsFused(ds: Dataset[PayloadRow], stride: Int)
-      : Dataset[FrameStats] = {
-    import ds.sparkSession.implicits._
-    require(stride > 0, s"stride must be positive: $stride")
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
-      rows.flatMap { r =>
-        if (notAvi(r.payload))
-          Iterator.single(
-            FrameStats(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
-        else {
-          val frames =
-            try aviFrames(r.payload)
-            catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
-          Iterator.range(0, frames.length, stride).map { i =>
-            val img = dec.decode(frames(i))
-            if (img == null)
-              FrameStats(r.doc_id, i.toLong, -1L, -1L, -1L, -1L, -1L, -1L)
-            else {
-              val (w, h, sr, sg, sb) = rgbSums(img)
-              FrameStats(r.doc_id, i.toLong, w, h, w * h, sr, sg, sb)
-            }
-          }
-        }
-      }
+  /** A frame's stats row: dims and exact channel sums, or −1 stats when
+    * `img` is null (the frame or container did not decode). */
+  private def frameStatsOf(docId: Long, idx: Long,
+                           img: java.awt.image.BufferedImage): FrameStats =
+    if (img == null) FrameStats(docId, idx, -1L, -1L, -1L, -1L, -1L, -1L)
+    else {
+      val (w, h, sr, sg, sb) = rgbSums(img)
+      FrameStats(docId, idx, w, h, w * h, sr, sg, sb)
     }
-  }
+
+  /** `demux`'s frames of a payload, or none when the walk throws. */
+  private def demuxed(p: Array[Byte],
+                      demux: Array[Byte] => IndexedSeq[Array[Byte]])
+      : IndexedSeq[Array[Byte]] =
+    try demux(p) catch { case _: Exception => IndexedSeq.empty }
 
   final case class FrameStats(doc_id: Long, frame_idx: Long, width: Long,
                               height: Long, n_pixels: Long, sum_r: Long,
@@ -2502,17 +2249,8 @@ object Binary {
       val r = (20 + (11 * docId) % 100 + 5 * (f % 8) + 100 * jump(f)).toInt
       val g = (10 + (13 * docId) % 100 + 3 * (f % 8) + 110 * jump(f)).toInt
       val b = (5 + (17 * docId) % 100 + 7 * (f % 8) + 90 * jump(f)).toInt
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val rgb = (r << 16) | (g << 8) | b
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-        y += 1
-      }
       val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
+      javax.imageio.ImageIO.write(uniformImage(w, h, r, g, b), "png", bos)
       bos.toByteArray
     }
     aviContainer(w, h, frames)
@@ -2537,19 +2275,13 @@ object Binary {
     * with an undecodable side → −1 deltas and is_cut −1. */
   def videoSceneCuts(ds: Dataset[PayloadRow], threshold: Long)
       : Dataset[SceneDelta] = {
-    import ds.sparkSession.implicits._
     require(threshold >= 0, s"threshold must be non-negative: $threshold")
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
+    decoding(ds) { (dec, rows) =>
       rows.flatMap { r =>
         if (notAvi(r.payload))
           Iterator.single(SceneDelta(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1))
         else {
-          val frames =
-            try aviFrames(r.payload)
-            catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
-          val sums = frames.map { p =>
+          val sums = demuxed(r.payload, aviFrames).map { p =>
             val img = dec.decode(p)
             if (img == null) None
             else Some(rgbSums(img))
@@ -2567,56 +2299,6 @@ object Binary {
             }
           }
         }
-      }
-    }
-  }
-
-  /** Per-frame pixel stats: [[pixelStats]] keyed by (doc, frame) — the
-    * decode step after [[sampleFrames]]. Undecodable frame payloads get
-    * -1 sentinels (cannot happen for sampleFrames' own PNG re-encodes). */
-  def frameStats(ds: Dataset[Frame]): Dataset[FrameStats] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { rows =>
-      codecPrologue()
-      val dec = new FrameDecoder
-      rows.map { r =>
-        val img = dec.decode(r.payload)
-        if (img == null)
-          FrameStats(r.doc_id, r.frame_idx, -1L, -1L, -1L, -1L, -1L, -1L)
-        else {
-          val (w, h, sr, sg, sb) = rgbSums(img)
-          FrameStats(r.doc_id, r.frame_idx, w, h, w * h, sr, sg, sb)
-        }
-      }
-    }
-  }
-
-  /** Frame-sample stub: one-to-many partition-batched extraction — every
-    * `stride`-th "frame" (here: byte window) becomes a row. The iterator
-    * discipline is the real thing: per-partition demux context, lazy
-    * output, no per-row setup, no materialized frame lists. Superseded by
-    * [[sampleFrames]] for every format `javax.imageio` can read (GIF
-    * sequences included), by [[sampleVideoFrames]] for RIFF/AVI, by
-    * [[mp4JpegFrames]]/[[mp4FrameStats]] for Motion-JPEG MP4, and by
-    * [[mkvJpegFrames]]/[[mkvFrameStats]] for Motion-JPEG Matroska;
-    * MP4- and Matroska-class metadata is real too ([[mp4Header]],
-    * [[mkvHeader]]), so the stub's remaining territory is ONLY frame
-    * decode of payloads with no JVM codec (H.264/VP9-class codec bytes
-    * in MP4/Matroska). */
-  def sampleFramesStub(ds: Dataset[PayloadRow], stride: Int,
-                       frameBytes: Int): Dataset[Frame] = {
-    import ds.sparkSession.implicits._
-    require(stride > 0 && frameBytes > 0)
-    ds.mapPartitions { rows =>
-      // Per-partition init: a real video demuxer context would open here.
-      rows.flatMap { r =>
-        Iterator.range(0, math.max(r.payload.length / frameBytes, 1))
-          .filter(_ % stride == 0)
-          .map { i =>
-            Frame(r.doc_id, i.toLong,
-              r.payload.slice(i * frameBytes,
-                math.min((i + 1) * frameBytes, r.payload.length)))
-          }
       }
     }
   }
@@ -2841,13 +2523,11 @@ object Binary {
 
   /** [[h264Meta]] over a payload Dataset (the metadata family's
     * elementary-stream member). */
-  def h264Metas(ds: Dataset[PayloadRow]): Dataset[H264Meta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def h264Metas(ds: Dataset[PayloadRow]): Dataset[H264Meta] =
+    perRow(ds) { r =>
       val (n, sp, pp, idr, sl, w, h) = h264Meta(r.payload)
       H264Meta(r.doc_id, n, sp, pp, idr, sl, w, h)
     }
-  }
 
   // ---- IVF containers (the VP8/VP9 transport; structure walk) ----
 
@@ -2916,13 +2596,11 @@ object Binary {
   }
 
   /** [[ivfMeta]] over a payload Dataset. */
-  def ivfMetas(ds: Dataset[PayloadRow]): Dataset[IvfMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def ivfMetas(ds: Dataset[PayloadRow]): Dataset[IvfMeta] =
+    perRow(ds) { r =>
       val (c, w, h, nd, nw, b, pts) = ivfMeta(r.payload)
       IvfMeta(r.doc_id, c, w, h, nd, nw, b, pts)
     }
-  }
 
   final case class OggMeta(doc_id: Long, n_pages: Long, n_streams: Long,
     n_bos: Long, n_eos: Long, n_packets: Long, payload_bytes: Long,
@@ -3028,11 +2706,9 @@ object Binary {
   }
 
   /** [[oggMeta]] over a payload Dataset. */
-  def oggMetas(ds: Dataset[PayloadRow]): Dataset[OggMeta] = {
-    import ds.sparkSession.implicits._
-    ds.map { r =>
+  def oggMetas(ds: Dataset[PayloadRow]): Dataset[OggMeta] =
+    perRow(ds) { r =>
       val (np, nst, nb, ne, npk, b, g) = oggMeta(r.payload)
       OggMeta(r.doc_id, np, nst, nb, ne, npk, b, g)
     }
-  }
 }

@@ -80,7 +80,8 @@ object CellKnobs {
     * assignment is the n^1.5 term the r17 octave measured at 2.2× of
     * linear per decade, and the two-level n·(c1+c2) build overtakes it
     * once c ≫ 2√c plus one extra narrow corpus shuffle. Measured
-    * (tools/ScaleKnobProbe ivfcmp, BENCHLOG r18): two-level 1.9×
+    * (BENCHLOG "r18 two-level IVF build", its `ivfcmp` crossover
+    * table; CellKnobsSpec pins the switch): two-level 1.9×
     * faster end-to-end at c = 141 (n = 20k) and also already faster at
     * c = 45 (n = 2k, probe-floor-dominated). 64 keeps gate-scale corpora
     * (c ≤ ~22 at the 500-row spec fixtures) on the single level, whose

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -27,32 +27,6 @@ object Streams {
   private[graft] implicit val TsOrdering: Ordering[java.sql.Timestamp] =
     Ordering.comparatorToOrdering(
       java.util.Comparator.naturalOrder[java.sql.Timestamp]())
-
-  /** State-store provider knob shared by the gate replays
-    * (SparkEntry.runStreamOnce) and the streaming probes: resolves
-    * the short names to Spark's provider classes (`rocksdb` / `hdfs`)
-    * and passes anything else through as a fully-qualified class. The
-    * provider is RESULT-invariant — it stores the same keyed rows;
-    * only the per-row update cost class changes (HDFSBackedStateStore
-    * rewrites its in-memory map's delta per batch, RocksDB absorbs
-    * updates in a native LSM — the standard answer to the r18
-    * octave's one unmitigated streaming cost term, st10's update
-    * churn), so gates stay oracle-exact under either. */
-  def stateStoreProviderClass(name: String): String =
-    name.trim.toLowerCase match {
-      case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider"
-      case "hdfs" => "org.apache.spark.sql.execution.streaming." +
-        "state.HDFSBackedStateStoreProvider"
-      case _ => name.trim
-    }
-
-  /** Applies `GRAFT_ST_PROVIDER` to the session (no-op when unset). */
-  def applyStateStoreProviderEnv(spark: SparkSession): Unit =
-    sys.env.get("GRAFT_ST_PROVIDER").map(_.trim).filter(_.nonEmpty)
-      .foreach(p => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        stateStoreProviderClass(p)))
 
   /** Hourly windowed aggregate per event_type. Window emitted as epoch
     * seconds so batch/stream/oracle all agree. Works on batch and streaming

@@ -125,11 +125,12 @@ object OhaHeadroom {
     * with a profile's series×day grid. Without this, a default-conf
     * session running [[graft.sim.Ivf.ivfKnnAuto]] past ~128 probes per
     * task silently sort-falls-back — sorting the full scored CANDIDATE
-    * stream, which is probes × nprobe × cell-size rows (measured: the
-    * 2M-vector IvfScaleProbe leg wrote 55 GB of sort spill and died on
-    * disk; the same leg's aggregate state is ~100k probes × ~240 B =
-    * 24 MB). The derived floor is budgeted against the LARGEST buffer
-    * registered in the session (see the class doc), clamped to
+    * stream, which is probes × nprobe × cell-size rows (measured in
+    * BENCHLOG "r19 session 3": a 2M-vector IVF leg wrote 55 GB of sort
+    * spill and died on disk; the same leg's aggregate state is ~100k
+    * probes × ~240 B = 24 MB). The derived floor is budgeted against
+    * the LARGEST buffer registered in the session (see the class doc),
+    * clamped to
     * [[Floor]]..[[MaxFloor]]; an externally-set threshold is never
     * lowered, and the [[OptOutKey]] opt-out applies. */
   def ensureSmallBuffer(spark: SparkSession, bufferBytes: Long): Int = {

@@ -1,47 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.BinaryType
 import graft.multimodal.Binary
 import graft.sources.Tables
 
 class BinarySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = TestSpark.sf
-
-  test("partition-batched decode emits real byte_len/checksum/dimensions") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // Mixed payloads: synthesized image blobs (parse to real dims) and a
-    // text payload (classifies unknown, dims -1). byte_len/checksum must
-    // match the codegen'd column expressions; dims must match imageHeader.
-    val payloads = Tables(spark, dir, "documents")
-      .select(col("doc_id").cast("long")).as[Long].limit(200)
-      .map { id =>
-        if (id % 5 == 4) Binary.PayloadRow(id, s"plain text $id".getBytes("UTF-8"))
-        else Binary.PayloadRow(id, Binary.makeImage(id))
-      }
-    val viaPartitions = Binary.decodePartitions(payloads).toDF()
-    val viaCols = payloads.toDF()
-      .select(col("doc_id"),
-        octet_length(col("payload")).cast("long").as("byte_len"),
-        md5(col("payload")).as("checksum"))
-    val expectDims = payloads.map { r =>
-      val (_, w, h) = Binary.imageHeader(r.payload)
-      (r.doc_id, w, h)
-    }.toDF("doc_id", "width", "height")
-    val joined = viaPartitions.alias("p")
-      .join(viaCols.alias("c"), "doc_id")
-      .join(expectDims.alias("d"), "doc_id")
-    assert(joined.count() == 200)
-    assert(joined.filter(
-      col("p.byte_len") =!= col("c.byte_len") ||
-      col("p.checksum") =!= col("c.checksum") ||
-      col("p.width") =!= col("d.width") ||
-      col("p.height") =!= col("d.height")).count() == 0)
-    // the unknown-path rows really take the -1 branch
-    assert(viaPartitions.filter(col("width") === -1).count() ==
-      payloads.filter(_.doc_id % 5 == 4).count())
-  }
 
   test("makeImage blobs round-trip through imageHeader with doc-derived " +
       "format and dimensions (the m01 gate contract)") {
@@ -100,64 +68,13 @@ class BinarySpec extends AnyFunSuite {
         s"mean ${sum.toDouble / s.n_pixels} vs $exp")
   }
 
-  test("resizeImages really rescales decodable payloads, stub-falls-back " +
-      "otherwise") {
-    import spark.implicits._
-    // solid-color source: any interpolation of a constant is the constant
-    val solid = new java.awt.image.BufferedImage(
-      10, 6, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 6; x <- 0 until 10) solid.setRGB(x, y, 0x1a2b3c)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(solid, "png", bos)
-    val rows = Binary.resizeImages(
-        Seq(Binary.PayloadRow(1L, bos.toByteArray),
-          Binary.PayloadRow(2L, ("x" * 100).getBytes("UTF-8")))
-          .toDS(), w = 4, h = 3)
-      .collect().map(r => r.doc_id -> r).toMap
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(rows(1L).payload))
-    assert(back.getWidth == 4 && back.getHeight == 3)
-    for (y <- 0 until 3; x <- 0 until 4)
-      assert((back.getRGB(x, y) & 0xffffff) == 0x1a2b3c, s"($x,$y)")
-    // undecodable payload: resizeStub's truncation contract
-    assert(rows(2L).payload.length == 12 &&
-      (rows(2L).width, rows(2L).height) == ((4L, 3L)))
-  }
-
-  test("resize stub keeps ids and bounds payloads to the target size") {
-    import spark.implicits._
-    val ds = Seq((1L, "x" * 100), (2L, "y"))
-      .toDF("doc_id", "text")
-    val rows = Binary.resizeStub(
-        Binary.withPayload(ds, "text")
-          .select("doc_id", "payload").as[Binary.PayloadRow], w = 4, h = 8)
-      .collect().map(r => (r.doc_id, r.payload.length)).toMap
-    assert(rows == Map(1L -> 32, 2L -> 1), "min(len, w*h) bytes survive")
-  }
-
-  test("frame sampling emits every stride-th frame, at least one per doc") {
-    import spark.implicits._
-    val ds = Seq((1L, "a" * 100), (2L, "b"))
-      .toDF("doc_id", "text")
-    val frames = Binary.sampleFramesStub(
-        Binary.withPayload(ds, "text")
-          .select("doc_id", "payload").as[Binary.PayloadRow],
-        stride = 2, frameBytes = 10)
-      .collect().groupBy(_.doc_id)
-    // doc 1: 10 frames, stride 2 -> indices 0,2,4,6,8
-    assert(frames(1L).map(_.frame_idx).sorted.toSeq == Seq(0L, 2L, 4L, 6L, 8L))
-    assert(frames(1L).forall(_.payload.length == 10))
-    // doc 2: shorter than one frame -> exactly one (partial) frame
-    assert(frames(2L).map(_.frame_idx).toSeq == Seq(0L))
-  }
-
   test("sampleFrames: REAL GIF multi-frame extraction recovers the " +
       "closed-form pixel pattern exactly (the m04 gate contract)") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L, 3L, 7L, 42L, 255L, 256L, 1000L)
     val ds = ids.map(id => Binary.PayloadRow(id, Binary.makeRealGif(id)))
       .toDS()
-    val stats = Binary.frameStats(Binary.sampleFrames(ds, stride = 2))
+    val stats = BinaryRef.frameStats(BinaryRef.sampleFrames(ds, stride = 2))
       .collect()
     val byDoc = stats.groupBy(_.doc_id)
     for (id <- ids) {
@@ -187,7 +104,7 @@ class BinarySpec extends AnyFunSuite {
         Binary.PayloadRow(5L, Binary.makeRealGif(5L)),
         Binary.PayloadRow(99L, "definitely not an image".getBytes("UTF-8")))
       .toDS()
-    val frames = Binary.sampleFrames(ds, stride = 1).collect()
+    val frames = BinaryRef.sampleFrames(ds, stride = 1).collect()
     assert(frames.filter(_.doc_id == 5L).map(_.frame_idx).sorted.toSeq ==
       (0L until (2 + 5 % 4)).toSeq)
     // an undecodable CONTAINER is distinguishable from a zero-frame one:
@@ -628,7 +545,7 @@ class BinarySpec extends AnyFunSuite {
     val ds = Seq(5L, 6L, 7L, 8L)
       .map(id => Binary.PayloadRow(id, Binary.makeRealGif(id)))
       .toDS()
-    val composed = Binary.frameStats(Binary.sampleFrames(ds, stride = 2))
+    val composed = BinaryRef.frameStats(BinaryRef.sampleFrames(ds, stride = 2))
       .collect().toSet
     val fused = Binary.frameStatsFused(ds, stride = 2).collect().toSet
     assert(fused == composed,
@@ -637,7 +554,7 @@ class BinarySpec extends AnyFunSuite {
     // row decodes to all -1s; fused emits the identical stats row
     val bad = Seq(Binary.PayloadRow(99L, Array[Byte](1, 2, 3))).toDS()
     assert(Binary.frameStatsFused(bad, stride = 1).collect().toSeq ==
-      Binary.frameStats(Binary.sampleFrames(bad, stride = 1))
+      BinaryRef.frameStats(BinaryRef.sampleFrames(bad, stride = 1))
         .collect().toSeq)
   }
 
@@ -647,8 +564,8 @@ class BinarySpec extends AnyFunSuite {
     val ds = Seq(3L, 4L, 5L)
       .map(id => Binary.PayloadRow(id, Binary.makeRealAvi(id)))
       .toDS()
-    val composed = Binary
-      .frameStats(Binary.sampleVideoFrames(ds, stride = 2))
+    val composed = BinaryRef
+      .frameStats(BinaryRef.sampleVideoFrames(ds, stride = 2))
       .collect().toSet
     val fused = Binary.videoFrameStatsFused(ds, stride = 2)
       .collect().toSet
@@ -667,7 +584,8 @@ class BinarySpec extends AnyFunSuite {
     val ids = Seq(0L, 1L, 2L, 5L, 17L, 254L, 255L, 256L, 999L)
     val ds = ids.map(id => Binary.PayloadRow(id, Binary.makeRealAvi(id)))
       .toDS()
-    val stats = Binary.frameStats(Binary.sampleVideoFrames(ds, stride = 2))
+    val stats = BinaryRef
+      .frameStats(BinaryRef.sampleVideoFrames(ds, stride = 2))
       .collect().groupBy(_.doc_id)
     for (id <- ids) {
       val w = 5 + id % 6
@@ -727,7 +645,7 @@ class BinarySpec extends AnyFunSuite {
     // must still decode exactly; the corrupt frame must surface as a row
     // with an undecodable payload (frameStats -1 sentinels), never vanish.
     val good = Binary.makeRealGif(3L) // 5 frames (2 + 3%4)
-    val stats0 = Binary.frameStats(Binary.sampleFrames(
+    val stats0 = BinaryRef.frameStats(BinaryRef.sampleFrames(
         Seq(Binary.PayloadRow(3L, good)).toDS(), stride = 1))
       .collect().sortBy(_.frame_idx)
     assert(stats0.length == 5 && stats0.forall(_.width > 0))
@@ -737,7 +655,7 @@ class BinarySpec extends AnyFunSuite {
     for (k <- (bad.length * 3 / 4) until
         math.min(bad.length * 3 / 4 + 8, bad.length))
       bad(k) = 0x55.toByte
-    val out = Binary.sampleFrames(
+    val out = BinaryRef.sampleFrames(
         Seq(Binary.PayloadRow(3L, bad)).toDS(), stride = 1)
       .collect().sortBy(_.frame_idx)
     if (out.nonEmpty) {
@@ -745,20 +663,12 @@ class BinarySpec extends AnyFunSuite {
       // failed decode carry the empty-payload sentinel
       assert(out.map(_.frame_idx) == (0L until out.length).toArray.toSeq)
       val sentinels = out.count(_.payload.isEmpty)
-      val decoded = Binary.frameStats(Binary.sampleFrames(
+      val decoded = BinaryRef.frameStats(BinaryRef.sampleFrames(
           Seq(Binary.PayloadRow(3L, bad)).toDS(), stride = 1))
         .collect()
       assert(decoded.count(_.width == -1L) == sentinels)
     } // an unindexable container (reader throws on getNumImages) is the
       // documented no-rows case — same as no reader at all
-  }
-
-  test("payload is the exact utf8 bytes") {
-    import spark.implicits._
-    val df = Seq((1L, "héllo")).toDF("doc_id", "text")
-    val bytes = Binary.withPayload(df, "text")
-      .select("payload").head.getAs[Array[Byte]](0)
-    assert(bytes.sameElements("héllo".getBytes("UTF-8")))
   }
 
   test("imageHeader parses real PNG/JPEG/GIF headers from raw bytes") {
@@ -787,8 +697,8 @@ class BinarySpec extends AnyFunSuite {
     // Dataset path: corpus text payloads all classify as unknown, typed map
     val ds = Seq((1L, "plain text")).toDF("doc_id", "text")
     val got = Binary.imageHeaders(
-      Binary.withPayload(ds, "text")
-        .select("doc_id", "payload").as[Binary.PayloadRow]).collect()
+      ds.select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
+        .as[Binary.PayloadRow]).collect()
     assert(got.toSeq == Seq(Binary.ImageHeader(1L, "unknown", -1L, -1L)))
   }
 
@@ -963,6 +873,79 @@ class BinarySpec extends AnyFunSuite {
       -1)))
   }
 
+  test("every Dataset-level format op equals its scalar parser mapped on " +
+      "the driver, row for row and in order, at 1 and 4 partitions") {
+    import spark.implicits._
+    import BinaryRef._
+    val makers: Seq[Long => Array[Byte]] = Seq(
+      id => Binary.makeWav(id, 100L + id), id => Binary.makeWavPcm(id, 50),
+      Binary.makeImage, Binary.makeMp4, Binary.makeMjpegMp4, Binary.makeMkv,
+      Binary.makeMjpegMkv, Binary.makeTiff, Binary.makeFlac, Binary.makeMp3,
+      Binary.makeZip, Binary.makeWebp, Binary.makeRealPng,
+      Binary.makeRealGif, id => Binary.makeNoisePng(id),
+      id => Binary.makeNoisePng(id, variant = 1), Binary.makeRealAvi,
+      Binary.makeSceneAvi, Binary.makeH264, Binary.makeIvf, Binary.makeOgg)
+    val made = for (m <- makers; id <- Seq(0L, 1L, 2L, 5L)) yield m(id)
+    val rnd = new scala.util.Random(7)
+    val blobs = made ++ made.map(p => p.take(p.length * 2 / 3)) ++
+      Seq(Array.empty[Byte]) ++
+      Seq(1, 16, 300).map { n =>
+        val b = new Array[Byte](n); rnd.nextBytes(b); b
+      }
+    val payloads = blobs.zipWithIndex.map { case (p, i) =>
+      Binary.PayloadRow(i.toLong, p) }
+    def rows(p: Binary.PayloadRow, t: Product) =
+      Seq(p.doc_id +: t.productIterator.toSeq)
+    type Op = (String, Dataset[Binary.PayloadRow] => Dataset[_ <: Product],
+      Binary.PayloadRow => Seq[Seq[Any]])
+    // a header/meta op's row is its doc_id followed by the parser's tuple
+    def perRow(name: String,
+               op: Dataset[Binary.PayloadRow] => Dataset[_ <: Product],
+               parse: Array[Byte] => Product): Op =
+      (name, op, p => rows(p, parse(p.payload)))
+    val parsers = Seq[Op](
+      perRow("audioHeaders", Binary.audioHeaders, Binary.wavHeader),
+      perRow("imageHeaders", Binary.imageHeaders, Binary.imageHeader),
+      perRow("videoHeaders", Binary.videoHeaders, Binary.mp4Header),
+      perRow("mkvHeaders", Binary.mkvHeaders, Binary.mkvHeader),
+      perRow("tiffHeaders", Binary.tiffHeaders, Binary.tiffHeader),
+      perRow("flacHeaders", Binary.flacHeaders, Binary.flacHeader),
+      perRow("mp3Headers", Binary.mp3Headers, Binary.mp3Header),
+      perRow("zipListings", Binary.zipListings, Binary.zipListing),
+      perRow("webpHeaders", Binary.webpHeaders, Binary.webpHeader),
+      perRow("h264Metas", Binary.h264Metas, Binary.h264Meta),
+      perRow("ivfMetas", Binary.ivfMetas, Binary.ivfMeta),
+      perRow("oggMetas", Binary.oggMetas, Binary.oggMeta),
+      perRow("audioStatsOf", Binary.audioStatsOf, Binary.pcmStats),
+      perRow("pixelStats", Binary.pixelStats, p => Option(decode(p))
+        .map { img => val (w, h, r, g, b) = sums(img); (w, h, w * h, r, g, b) }
+        .getOrElse((-1L, -1L, -1L, -1L, -1L, -1L))),
+      ("colorHistograms", Binary.colorHistograms, p =>
+        Option(decode(p.payload)).map(histogram)
+          .getOrElse(Seq(Seq(-1L, -1L, -1L, -1L))).map(p.doc_id +: _)),
+      ("aHashes", Binary.aHashes, p =>
+        Option(decode(p.payload)).map(img => Seq(Seq(p.doc_id, aHash(img))))
+          .getOrElse(Nil)),
+      ("videoSceneCuts", Binary.videoSceneCuts(_, 64L), p =>
+        sceneCuts(p, 64L).map(_.productIterator.toSeq))) ++
+      Seq(1, 2).flatMap(stride => Seq[Op](
+        (s"mp4FrameStats/$stride", Binary.mp4FrameStats(_, stride), p =>
+          containerStats(p, stride, notMp4, Binary.mp4JpegFrames)),
+        (s"mkvFrameStats/$stride", Binary.mkvFrameStats(_, stride), p =>
+          containerStats(p, stride, notMkv, Binary.mkvJpegFrames)),
+        (s"videoFrameStatsFused/$stride",
+          Binary.videoFrameStatsFused(_, stride),
+          p => containerStats(p, stride, notAvi, Binary.aviFrames))))
+    for (parts <- Seq(1, 4)) {
+      val ds = spark.sparkContext.parallelize(payloads, parts).toDS()
+      for ((name, op, scalar) <- parsers) {
+        val got = op(ds).collect().toSeq.map(_.productIterator.toSeq)
+        val want = payloads.flatMap(scalar)
+        assert(got == want, s"$name at $parts partition(s)")
+      }
+    }
+  }
+
   test("codec prologue leaves ImageIO on memory-cached streams — the " +
       "default file cache round-trips a temp file per decode/encode " +
       "(the r14 3-4x decode-gate regression class)") {
@@ -973,4 +956,189 @@ class BinarySpec extends AnyFunSuite {
     assert(!javax.imageio.ImageIO.getUseCache,
       "ImageIO.setUseCache(false) missing from Binary.codecPrologue")
   }
+}
+
+/** Driver-side references for BinarySpec: plain `ImageIO.read` decode
+  * and `getRGB` channel folds, with none of Binary's per-partition
+  * reader cache or raster fast path, so an op that agrees with them is
+  * pinned to the decoded pixels rather than to its own helpers. */
+object BinaryRef {
+  import java.awt.image.BufferedImage
+
+  final case class Frame(doc_id: Long, frame_idx: Long,
+                         payload: Array[Byte])
+
+  /** Frame sampling for any multi-frame format `javax.imageio` can read:
+    * every `stride`-th image of the payload's sequence, re-encoded as
+    * lossless PNG (through INT_RGB, so an indexed or gray frame keeps
+    * its sRGB values). An unreadable container (no reader claims it, or
+    * its index is broken) emits ONE frame_idx = -1 row with an empty
+    * payload; a frame that fails to decode emits an empty payload at its
+    * frame_idx. The reference that frameStatsFused must equal. */
+  def sampleFrames(ds: Dataset[Binary.PayloadRow], stride: Int)
+      : Dataset[Frame] = {
+    import ds.sparkSession.implicits._
+    require(stride > 0, s"stride must be positive: $stride")
+    ds.mapPartitions { rows =>
+      System.setProperty("java.awt.headless", "true")
+      javax.imageio.ImageIO.setUseCache(false)
+      rows.flatMap { r =>
+        val iis = javax.imageio.ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(r.payload))
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) {
+          iis.close()
+          Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
+        } else {
+          val reader = readers.next()
+          try {
+            reader.setInput(iis)
+            val n = reader.getNumImages(true)
+            (0 until n by stride).map { i =>
+              val png =
+                try {
+                  val src = reader.read(i)
+                  val rgb = new BufferedImage(src.getWidth, src.getHeight,
+                    BufferedImage.TYPE_INT_RGB)
+                  val g2 = rgb.createGraphics()
+                  g2.drawImage(src, 0, 0, null)
+                  g2.dispose()
+                  val bos = new java.io.ByteArrayOutputStream()
+                  javax.imageio.ImageIO.write(rgb, "png", bos)
+                  bos.toByteArray
+                } catch { case _: Exception => Array.empty[Byte] }
+              Frame(r.doc_id, i.toLong, png)
+            }.iterator
+          } catch {
+            case _: Exception =>
+              Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
+          } finally { reader.dispose(); iis.close() }
+        }
+      }
+    }
+  }
+
+  /** [[sampleFrames]] for RIFF/AVI: every `stride`-th frame payload of
+    * [[Binary.aviFrames]], verbatim; a non-AVI payload → one frame_idx
+    * = -1 row with an empty payload. */
+  def sampleVideoFrames(ds: Dataset[Binary.PayloadRow], stride: Int)
+      : Dataset[Frame] = {
+    import ds.sparkSession.implicits._
+    require(stride > 0, s"stride must be positive: $stride")
+    ds.flatMap { r =>
+      if (notAvi(r.payload))
+        Iterator.single(Frame(r.doc_id, -1L, Array.empty[Byte]))
+      else {
+        val frames = demux(r.payload, Binary.aviFrames)
+        Iterator.range(0, frames.length, stride)
+          .map(i => Frame(r.doc_id, i.toLong, frames(i)))
+      }
+    }
+  }
+
+  /** Per-frame pixel stats keyed by (doc, frame); undecodable frame
+    * payloads get -1 stats. */
+  def frameStats(ds: Dataset[Frame]): Dataset[Binary.FrameStats] = {
+    import ds.sparkSession.implicits._
+    ds.map { r =>
+      val img = decode(r.payload)
+      if (img == null)
+        Binary.FrameStats(r.doc_id, r.frame_idx, -1L, -1L, -1L, -1L, -1L, -1L)
+      else {
+        val (w, h, sr, sg, sb) = sums(img)
+        Binary.FrameStats(r.doc_id, r.frame_idx, w, h, w * h, sr, sg, sb)
+      }
+    }
+  }
+
+  def decode(p: Array[Byte]): BufferedImage =
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
+    catch { case _: Exception => null }
+
+  private def pixels(img: BufferedImage): Seq[Int] =
+    for (y <- 0 until img.getHeight; x <- 0 until img.getWidth)
+      yield img.getRGB(x, y)
+
+  def sums(img: BufferedImage): (Long, Long, Long, Long, Long) = {
+    val px = pixels(img)
+    (img.getWidth.toLong, img.getHeight.toLong,
+      px.map(p => ((p >> 16) & 0xff).toLong).sum,
+      px.map(p => ((p >> 8) & 0xff).toLong).sum,
+      px.map(p => (p & 0xff).toLong).sum)
+  }
+
+  def histogram(img: BufferedImage): Seq[Seq[Any]] = {
+    val px = pixels(img)
+    def bins(shift: Int) = px.groupBy(p => ((p >> shift) & 0xff) / 16)
+      .map { case (b, v) => b -> v.size.toLong }.withDefaultValue(0L)
+    val (r, g, b) = (bins(16), bins(8), bins(0))
+    (0 until 16).map(i => Seq(i.toLong, r(i), g(i), b(i)))
+  }
+
+  def aHash(img: BufferedImage): Long = {
+    val (w, h) = (img.getWidth, img.getHeight)
+    val sums = new Array[Long](64); val cnts = new Array[Long](64)
+    for (y <- 0 until h; x <- 0 until w) {
+      val b = math.min(y * 8 / h, 7) * 8 + math.min(x * 8 / w, 7)
+      val rgb = img.getRGB(x, y)
+      sums(b) += ((rgb >> 16) & 0xff) * 299 +
+        ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114
+      cnts(b) += 1
+    }
+    val means = Array.tabulate(64)(i =>
+      if (cnts(i) == 0) 0.0 else sums(i).toDouble / cnts(i))
+    val g = means.sum / 64.0
+    (0 until 64).foldLeft(0L)((s, i) => if (means(i) > g) s | (1L << i) else s)
+  }
+
+  private def ascii(p: Array[Byte], from: Int) =
+    new String(p.slice(from, from + 4), "US-ASCII")
+  def notMp4(p: Array[Byte]): Boolean = p.length < 12 || ascii(p, 4) != "ftyp"
+  def notMkv(p: Array[Byte]): Boolean =
+    p.length < 4 ||
+      !p.take(4).sameElements(Array(0x1a, 0x45, 0xdf, 0xa3).map(_.toByte))
+  def notAvi(p: Array[Byte]): Boolean =
+    p.length < 12 || ascii(p, 0) != "RIFF" || ascii(p, 8) != "AVI "
+
+  private def demux(p: Array[Byte],
+                    frames: Array[Byte] => IndexedSeq[Array[Byte]]) =
+    try frames(p) catch { case _: Exception => IndexedSeq.empty[Array[Byte]] }
+
+  /** Frame-stats rows of one container payload: one −1 row when `notIt`,
+    * else every `stride`-th demuxed frame, −1 stats where it won't decode. */
+  def containerStats(r: Binary.PayloadRow, stride: Int,
+                     notIt: Array[Byte] => Boolean,
+                     frames: Array[Byte] => IndexedSeq[Array[Byte]])
+      : Seq[Seq[Any]] =
+    if (notIt(r.payload)) Seq(Seq(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+    else {
+      val fs = demux(r.payload, frames)
+      (0 until fs.length by stride).map { i =>
+        Option(decode(fs(i))) match {
+          case None => Seq(r.doc_id, i.toLong, -1L, -1L, -1L, -1L, -1L, -1L)
+          case Some(img) =>
+            val (w, h, sr, sg, sb) = sums(img)
+            Seq(r.doc_id, i.toLong, w, h, w * h, sr, sg, sb)
+        }
+      }
+    }
+
+  def sceneCuts(r: Binary.PayloadRow, threshold: Long): Seq[Binary.SceneDelta] =
+    if (notAvi(r.payload))
+      Seq(Binary.SceneDelta(r.doc_id, -1L, -1L, -1L, -1L, -1L, -1))
+    else {
+      val s = demux(r.payload, Binary.aviFrames)
+        .map(f => Option(decode(f)).map(sums))
+      (1 until s.length).map { f =>
+        (s(f - 1), s(f)) match {
+          case (Some((w, h, pr, pg, pb)), Some((_, _, cr, cg, cb))) =>
+            val (dr, dg, db) =
+              (math.abs(cr - pr), math.abs(cg - pg), math.abs(cb - pb))
+            Binary.SceneDelta(r.doc_id, f.toLong, w * h, dr, dg, db,
+              if (dr + dg + db > threshold * w * h) 1 else 0)
+          case _ =>
+            Binary.SceneDelta(r.doc_id, f.toLong, -1L, -1L, -1L, -1L, -1)
+        }
+      }
+    }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Guards on the driver contract itself: the correctness gate only checks
   * queries that exist in BOTH maps, so a typo'd key would silently drop a
@@ -106,6 +107,55 @@ class ContractSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       s"uncast SUM( in OracleSql.scala at line(s) ${bad.mkString(",")} — " +
         "wrap in CAST(SUM(...) AS <type>) to pin the oracle's result type")
+  }
+
+  test("entry points and the environment they read are exactly the " +
+      "declared sets") {
+    // A main nobody runs, or a knob nobody sets, is code no gate,
+    // workload or user path exercises: adding one must edit this test.
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toList finally walk.close()
+    }
+    // code lines only: scaladoc and line comments may name anything
+    val code = files.map { f =>
+      val src = scala.io.Source.fromFile(f.toFile)(scala.io.Codec.UTF8)
+      val text = try src.mkString finally src.close()
+      f -> text.split("\n").filterNot { l =>
+        val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+      }.mkString("\n")
+    }
+    val objRe = "\\bobject\\s+(\\w+)".r
+    val mains = code.flatMap { case (_, text) =>
+      val objs = objRe.findAllMatchIn(text).map(m => m.start -> m.group(1))
+        .toList
+      "\\bdef\\s+main\\s*\\(|\\bextends\\s+App\\b".r.findAllMatchIn(text)
+        .map(m => objs.takeWhile(_._1 < m.start).last._2)
+    }.toSet
+    assert(mains ==
+      Set("Bench", "Verify", "Cli", "RunOne", "PlanDump", "ScaleUp"))
+    // environment variables and system properties; the JVM's own
+    // (java.io.tmpdir, ...) are not knobs
+    val readRe = ("(?s)(?:sys\\.env|sys\\.props|System\\.getenv|" +
+      "System\\.getProperty)\\s*(?:\\.\\s*(?:get|getOrElse|contains|apply)" +
+      "\\s*)?\\(\\s*\"([^\"]+)\"").r
+    val knobs = code.flatMap { case (_, text) =>
+      readRe.findAllMatchIn(text).map(_.group(1))
+    }.toSet.filterNot(_.startsWith("java."))
+    assert(knobs == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_ONLY", "GRAFT_STREAM_STATE", "GRAFT_ST_CKPT_DIR",
+      "graft.gate.runId", "graft.gate.sfTag"))
+    // every read goes through a literal name the set above can see
+    val dynamic = code.flatMap { case (f, text) =>
+      "(?:sys\\.env|sys\\.props|System\\.getenv|System\\.getProperty)\\b".r
+        .findAllMatchIn(text)
+        .filterNot(m => readRe.findPrefixOf(text.substring(m.start)).isDefined)
+        .map(m => s"${f.getFileName}:${text.substring(0, m.start)
+          .count(_ == '\n') + 1}")
+    }
+    assert(dynamic.isEmpty, s"non-literal env/property reads: $dynamic")
   }
 
   test("every query plans against the test scale factor") {

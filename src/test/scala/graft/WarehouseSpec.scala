@@ -207,23 +207,6 @@ class WarehouseSpec extends AnyFunSuite {
     }
   }
 
-  test("state-store provider knob resolves short names to Spark's " +
-      "provider classes and passes FQCNs through") {
-    import graft.streaming.Streams.stateStoreProviderClass
-    assert(stateStoreProviderClass("rocksdb") ==
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    assert(stateStoreProviderClass("HDFS") ==
-      "org.apache.spark.sql.execution.streaming.state." +
-        "HDFSBackedStateStoreProvider")
-    assert(stateStoreProviderClass(" my.custom.Provider ") ==
-      "my.custom.Provider")
-    // both resolved classes must actually exist in this Spark — a
-    // rename in a Spark upgrade should fail HERE, not mid-octave
-    for (n <- Seq("rocksdb", "hdfs"))
-      Class.forName(stateStoreProviderClass(n))
-  }
-
   test("q49 compaction: one file per day after, strictly fewer than " +
       "before, rows and checksums conserved") {
     val out = SparkEntry.queries("q49_compact")(spark, dir).collect()
