@@ -9,13 +9,19 @@ import org.apache.spark.sql.{Dataset, Encoders}
   *
   * Header metadata (image, audio, video, archive and stream formats)
   * is parsed for REAL from payload bytes — pure arithmetic, no codecs —
-  * and each parser has a typed Dataset form (`perRow`). Pixel decode
-  * ([[Binary.pixelStats]]) and multi-frame decode
-  * ([[Binary.frameStatsFused]] for GIF sequences; AVI, Motion-JPEG MP4
-  * and Matroska through the pure-byte demuxers) are REAL too, via the
-  * pure-JVM `javax.imageio` readers (PNG/GIF/BMP/JPEG). Frames of codecs
-  * with no JVM reader (H.264/VP9-class bytes) are not decoded; their
-  * streams get structure walks ([[Binary.h264Meta]], [[Binary.ivfMeta]]).
+  * and each parser has a typed Dataset form (`perRow`). Every parser
+  * reads through one bounds-checked byte reader (`uint` and its
+  * `u8`…`u64be`/`tag` widths: Long offsets, −1 out of bounds), every
+  * container walk is one of three walkers — [[Binary.riffChunks]]
+  * (WAV, WebP, AVI), [[Binary.isoBoxes]] (MP4) and
+  * [[Binary.ebmlElements]] (Matroska/WebM) — and every fixture maker
+  * writes through one `Writer`. Pixel decode ([[Binary.pixelStats]])
+  * and multi-frame decode ([[Binary.frameStatsFused]] for GIF
+  * sequences; AVI, Motion-JPEG MP4 and Matroska through the pure-byte
+  * demuxers) are REAL too, via the pure-JVM `javax.imageio` readers
+  * (PNG/GIF/BMP/JPEG). Frames of codecs with no JVM reader
+  * (H.264/VP9-class bytes) are not decoded; their streams get
+  * structure walks ([[Binary.h264Meta]], [[Binary.ivfMeta]]).
   * Every decode runs at the codec boundary (`decoding`): `mapPartitions`
   * amortizes codec initialization once per partition, the Scala analog
   * of `mapInPandas` batch processing.
@@ -114,6 +120,154 @@ object Binary {
       f(new FrameDecoder, rows)
     }(Encoders.product[T])
 
+  // ---- The byte reader, the byte writer and the three chunk walkers ----
+
+  /** The byte reader: the `n`-byte unsigned integer at offset `i` of `p`,
+    * little- or big-endian (past 8 bytes, its low 64 bits), or −1 when
+    * any of its bytes lies outside `p` — the one out-of-bounds rule of
+    * every read below, so no read can index outside the array. Offsets
+    * are Longs: a position derived from a hostile 32-bit size compares
+    * and reads without overflowing. Allocates nothing. */
+  private def uint(p: Array[Byte], i: Long, n: Long, le: Boolean): Long =
+    if (i < 0 || n < 0 || i + n > p.length) -1L
+    else {
+      var v = 0L
+      var k = 0L
+      while (k < n) {
+        v = (v << 8) | (p((if (le) i + n - 1 - k else i + k).toInt) & 0xffL)
+        k += 1
+      }
+      v
+    }
+  private def u8(p: Array[Byte], i: Long): Long = uint(p, i, 1, le = false)
+  private def u16le(p: Array[Byte], i: Long): Long = uint(p, i, 2, le = true)
+  private def u16be(p: Array[Byte], i: Long): Long = uint(p, i, 2, le = false)
+  private def u24le(p: Array[Byte], i: Long): Long = uint(p, i, 3, le = true)
+  private def u24be(p: Array[Byte], i: Long): Long = uint(p, i, 3, le = false)
+  private def u32le(p: Array[Byte], i: Long): Long = uint(p, i, 4, le = true)
+  private def u32be(p: Array[Byte], i: Long): Long = uint(p, i, 4, le = false)
+  private def u64le(p: Array[Byte], i: Long): Long = uint(p, i, 8, le = true)
+  private def u64be(p: Array[Byte], i: Long): Long = uint(p, i, 8, le = false)
+
+  /** The 4-byte tag at `i` as its big-endian Int — −1, which no ASCII tag
+    * equals, out of bounds. Compare it with [[fourcc]]. */
+  private def tag(p: Array[Byte], i: Long): Int = u32be(p, i).toInt
+
+  /** A 4-character ASCII tag as [[tag]] reads it. */
+  private def fourcc(s: String): Int =
+    (s.charAt(0) << 24) | (s.charAt(1) << 16) | (s.charAt(2) << 8) | s.charAt(3)
+
+  /** The bytes [from, to) of `p` clipped to the array, as ASCII text (a
+    * non-ASCII byte decodes to U+FFFD) — for fields a parser returns. */
+  private def ascii(p: Array[Byte], from: Long, to: Long): String = {
+    val a = math.min(math.max(from, 0L), p.length.toLong).toInt
+    new String(p, a, math.max(math.min(to, p.length.toLong).toInt - a, 0),
+      "US-ASCII")
+  }
+
+  /** The byte writer of every fixture maker: unsigned integers of any
+    * width in either byte order, ASCII text, raw and zero bytes. */
+  private final class Writer {
+    private val out = new java.io.ByteArrayOutputStream()
+    def le(v: Long, n: Int): Writer = {
+      var k = 0
+      while (k < n) { out.write((v >> (8 * k)).toInt); k += 1 }
+      this
+    }
+    def be(v: Long, n: Int): Writer = {
+      var k = n - 1
+      while (k >= 0) { out.write((v >> (8 * k)).toInt); k -= 1 }
+      this
+    }
+    def ascii(s: String): Writer = bytes(s.getBytes("US-ASCII"))
+    def bytes(b: Array[Byte]*): Writer = {
+      b.foreach(a => out.write(a, 0, a.length)); this
+    }
+    def zeros(n: Long): Writer = bytes(new Array[Byte](n.toInt))
+    def size: Long = out.size.toLong
+    def result: Array[Byte] = out.toByteArray
+  }
+
+  /** The bytes `f` writes. */
+  private def written(f: Writer => Writer): Array[Byte] = f(new Writer).result
+
+  /** The RIFF chunk walk over [from, to) (WAV, WebP, AVI): `f(tag, body,
+    * size)` for each chunk whose 8-byte header lies inside, with its
+    * DECLARED size — the body may run past `to` (a truncated download
+    * still yields its header chunks); a caller that needs the whole body
+    * checks `body + size` itself. `f` returns whether to go on. The walk
+    * advances in Long space past the body and its pad byte (chunks pad to
+    * even offsets), so a giant size ends the walk instead of wrapping an
+    * Int back into the buffer. */
+  private def riffChunks(p: Array[Byte], from: Long, to: Long)(
+      f: (Int, Long, Long) => Boolean): Unit = {
+    var i = from
+    var go = true
+    while (go && i + 8 <= to) {
+      val sz = u32le(p, i + 4)
+      go = f(tag(p, i), i + 8, sz)
+      i += 8 + sz + (sz & 1)
+    }
+  }
+
+  /** `p` opens a RIFF container of the given form ("WAVE", "WEBP", …). */
+  private def riff(p: Array[Byte], form: String): Boolean =
+    tag(p, 0) == fourcc("RIFF") && tag(p, 8) == fourcc(form)
+
+  /** The ISO-BMFF box walk over [from, to) (MP4): `f(type, body, end)` for
+    * each box — 32-bit size, or size 1 with a 64-bit `largesize` after the
+    * type, or size 0 for "to the end of the parent". The first box smaller
+    * than its header or ending past `to` stops the walk: all the
+    * information the bytes offer. */
+  private def isoBoxes(p: Array[Byte], from: Long, to: Long)(
+      f: (Int, Long, Long) => Unit): Unit = {
+    var i = from
+    while (i + 8 <= to) {
+      var sz = u32be(p, i)
+      var hdr = 8
+      if (sz == 1L && i + 16 <= to) { sz = u64be(p, i + 8); hdr = 16 }
+      else if (sz == 0L) sz = to - i
+      if (sz < hdr || i + sz > to) i = to
+      else { f(tag(p, i + 4), i + hdr, i + sz); i += sz }
+    }
+  }
+
+  /** An EBML VINT's length from its first byte: the leading-zero count
+    * + 1; 0x00 (more than 8 bytes) and an out-of-bounds −1 give −1. */
+  private def vintLen(b: Long): Int =
+    if (b <= 0) -1 else java.lang.Long.numberOfLeadingZeros(b) - 55
+
+  /** The EBML element walk over a master body [from, to) (Matroska/WebM,
+    * RFC 8794): `f(id, body, end)` for each element — the id a 1-4 byte
+    * VINT with its marker KEPT (the form the spec tables list ids in,
+    * 0x1A45DFA3 etc.), the size a 1-8 byte VINT with its marker stripped,
+    * all value bits set meaning unknown size, read to `to` (RFC 8794
+    * §6.2, simplified to parent-bounded, which is exact for the last
+    * child). Every header is bounded by the ENCLOSING master's `to`, not
+    * the array: a child straddling its parent's end stops the walk there
+    * and never parses itself out of the next sibling's bytes. */
+  private def ebmlElements(p: Array[Byte], from: Long, to: Long)(
+      f: (Long, Long, Long) => Unit): Unit = {
+    var i = from
+    while (i < to) {
+      val idLen = vintLen(u8(p, i))
+      val s = i + idLen
+      val szLen = if (s < to) vintLen(u8(p, s)) else -1
+      val body = s + szLen
+      if (idLen < 1 || idLen > 4 || s > to || szLen < 1 || body > to) i = to
+      else {
+        val mask = (1L << (7 * szLen)) - 1
+        val sz = uint(p, s, szLen, le = false) & mask
+        if (sz != mask && sz > to - body) i = to
+        else {
+          val end = if (sz == mask) to else body + sz
+          f(uint(p, i, idLen, le = false), body, end)
+          i = end
+        }
+      }
+    }
+  }
+
   final case class ImageHeader(doc_id: Long, format: String, width: Long,
                                height: Long)
 
@@ -123,35 +277,26 @@ object Binary {
     * stub; only pixel decode remains environment-blocked. Unknown or
     * truncated payloads yield ("unknown", -1, -1) rather than failing the
     * batch. */
-  def imageHeader(p: Array[Byte]): (String, Long, Long) = {
-    def u16be(i: Int): Long = (((p(i) & 0xff) << 8) | (p(i + 1) & 0xff)).toLong
-    def u32be(i: Int): Long =
-      ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-        ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-    def u16le(i: Int): Long = ((p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)).toLong
-    val pngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-    if (p.length >= 24 &&
-        pngSig.indices.forall(i => (p(i) & 0xff) == (pngSig(i) & 0xff)) &&
-        new String(p.slice(12, 16), "US-ASCII") == "IHDR")
-      ("png", u32be(16), u32be(20))
-    else if (p.length >= 4 && (p(0) & 0xff) == 0xff && (p(1) & 0xff) == 0xd8) {
+  def imageHeader(p: Array[Byte]): (String, Long, Long) =
+    if (p.length >= 24 && u64be(p, 0) == 0x89504e470d0a1a0aL &&
+        tag(p, 12) == fourcc("IHDR"))
+      ("png", u32be(p, 16), u32be(p, 20))
+    else if (p.length >= 4 && u16be(p, 0) == 0xffd8L) {
       // walk JPEG segments to the first frame header (SOF0..15, minus the
       // non-frame DHT/DAC/RST markers C4/C8/CC)
-      var i = 2
+      var i = 2L
       var res: (String, Long, Long) = ("unknown", -1L, -1L)
-      while (res._1 == "unknown" && i + 9 < p.length && (p(i) & 0xff) == 0xff) {
-        val marker = p(i + 1) & 0xff
+      while (res._1 == "unknown" && i + 9 < p.length && u8(p, i) == 0xffL) {
+        val marker = u8(p, i + 1)
         if (marker >= 0xc0 && marker <= 0xcf &&
             marker != 0xc4 && marker != 0xc8 && marker != 0xcc)
-          res = ("jpeg", u16be(i + 7), u16be(i + 5))
-        else i += 2 + u16be(i + 2).toInt
+          res = ("jpeg", u16be(p, i + 7), u16be(p, i + 5))
+        else i += 2 + u16be(p, i + 2)
       }
       res
-    } else if (p.length >= 10 &&
-        new String(p.slice(0, 4), "US-ASCII") == "GIF8")
-      ("gif", u16le(6), u16le(8))
+    } else if (p.length >= 10 && tag(p, 0) == fourcc("GIF8"))
+      ("gif", u16le(p, 6), u16le(p, 8))
     else ("unknown", -1L, -1L)
-  }
 
   final case class AudioHeader(doc_id: Long, format: String, channels: Long,
                                sample_rate: Long, bits: Long,
@@ -164,34 +309,42 @@ object Binary {
     * (header-only blob, the streaming-metadata-extract case) still
     * parses. Non-WAV or malformed bytes yield ("unknown", -1, …). */
   def wavHeader(p: Array[Byte]): (String, Long, Long, Long, Long, Long) = {
-    def u16le(i: Int): Long = ((p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)).toLong
-    def u32le(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
     val bad = ("unknown", -1L, -1L, -1L, -1L, -1L)
-    if (p.length < 12 || tag(0) != "RIFF" || tag(8) != "WAVE") bad
+    val (fmt, data, dataLen) = wavChunks(p)
+    val (channels, rate, bits) =
+      if (fmt < 0) (-1L, -1L, -1L)
+      else (u16le(p, fmt + 2), u32le(p, fmt + 4), u16le(p, fmt + 14))
+    // under 8 bits a sample has no whole bytes to count the data in
+    if (channels <= 0 || rate <= 0 || bits < 8 || data < 0) bad
     else {
-      var i = 12
-      var channels, rate, bits, dataLen = -1L
-      while (i + 8 <= p.length && (channels < 0 || dataLen < 0)) {
-        val id = tag(i)
-        val sz = u32le(i + 4)
-        if (id == "fmt " && sz >= 16 && i + 24 <= p.length) {
-          channels = u16le(i + 10)
-          rate = u32le(i + 12)
-          bits = u16le(i + 22)
-        } else if (id == "data") dataLen = sz
-        if (sz > Int.MaxValue - 16) i = p.length // malformed size: stop
-        else i += 8 + sz.toInt + (sz.toInt & 1) // chunks pad to even offsets
-      }
-      if (channels <= 0 || rate <= 0 || bits <= 0 || dataLen < 0) bad
-      else {
-        val nSamples = dataLen / (channels * (bits / 8))
-        ("wav", channels, rate, bits, nSamples, nSamples * 1000L / rate)
-      }
+      val nSamples = dataLen / (channels * (bits / 8))
+      ("wav", channels, rate, bits, nSamples, nSamples * 1000L / rate)
     }
   }
+
+  /** The RIFF/WAVE walk [[wavHeader]] and [[pcmStats]] share: the body
+    * offsets of the `fmt ` chunk (one of at least 16 bytes, all present)
+    * and of the `data` chunk, with the data chunk's declared size — −1
+    * each where absent. Later chunks of a kind replace earlier ones until
+    * both are found; the walk stops there. */
+  private def wavChunks(p: Array[Byte]): (Long, Long, Long) = {
+    var fmt, data, dataLen = -1L
+    if (riff(p, "WAVE"))
+      riffChunks(p, 12, p.length) { (t, b, sz) =>
+        if (t == fourcc("fmt ") && sz >= 16 && b + 16 <= p.length) fmt = b
+        else if (t == fourcc("data")) { data = b; dataLen = sz }
+        fmt < 0 || data < 0
+      }
+    (fmt, data, dataLen)
+  }
+
+  /** The canonical 44-byte PCM WAV header: RIFF/WAVE, a 16-byte `fmt `
+    * chunk, then the `data` chunk's header declaring `dataLen` bytes. */
+  private def pcmWav(w: Writer, channels: Int, rate: Int,
+                     dataLen: Int): Writer =
+    w.ascii("RIFF").le(36 + dataLen, 4).ascii("WAVEfmt ").le(16, 4)
+      .le(1, 2).le(channels, 2).le(rate, 4).le(rate * channels * 2, 4)
+      .le(channels * 2, 2).le(16, 2).ascii("data").le(dataLen, 4)
 
   /** Deterministic WAV header-only blob (44-byte canonical layout, data
     * chunk size declared but not materialized): the synthesized stand-in
@@ -199,20 +352,8 @@ object Binary {
     * id so the verify oracle can recompute them arithmetically. */
   def makeWav(docId: Long, nSamples: Long): Array[Byte] = {
     val channels = 1 + (docId % 2).toInt
-    val rate = (8000L * (1 + docId % 3)).toInt
-    val bits = 16
-    val blockAlign = channels * bits / 8
-    val dataLen = (nSamples * blockAlign).toInt
-    val b = java.nio.ByteBuffer.allocate(44)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1.toShort).putShort(channels.toShort)
-      .putInt(rate).putInt(rate * blockAlign)
-      .putShort(blockAlign.toShort).putShort(bits.toShort)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    b.array()
+    written(pcmWav(_, channels, (8000L * (1 + docId % 3)).toInt,
+      (nSamples * channels * 2).toInt))
   }
 
   final case class AudioStats(doc_id: Long, n_samples: Long, peak: Long,
@@ -224,80 +365,52 @@ object Binary {
     * regenerates the exact waveform arithmetically and any byte-level
     * encode/decode bug (endianness, chunk offset, sign) breaks the hash. */
   def makeWavPcm(docId: Long, nSamples: Int): Array[Byte] = {
-    val rate = (8000L * (1 + docId % 3)).toInt
-    val dataLen = nSamples * 2
-    val b = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1.toShort).putShort(1.toShort)
-      .putInt(rate).putInt(rate * 2)
-      .putShort(2.toShort).putShort(16.toShort)
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
+    val w = pcmWav(new Writer, 1, (8000L * (1 + docId % 3)).toInt,
+      nSamples * 2)
     var i = 0
     while (i < nSamples) {
-      b.putShort(((docId * 7919 + i.toLong * 104729) % 65536 - 32768).toShort)
+      w.le((docId * 7919 + i.toLong * 104729) % 65536 - 32768, 2)
       i += 1
     }
-    b.array()
+    w.result
   }
 
   /** REAL PCM decode + feature extraction — the audio analog of
-    * [[pixelStats]]'s decode half: walks the RIFF chunk list (the
-    * [[wavHeader]] byte discipline) to the `fmt `/`data` chunks, then
-    * reads every interleaved 16-bit little-endian sample and folds the
-    * speech/VAD-style summary features in ONE pass: sample count, peak
-    * |amplitude|, zero-crossing count (sign = v ≥ 0, the textbook ZCR),
-    * and the exact integer Σv / Σv² moments from which DC offset and RMS
-    * energy derive. Integer sums (not floats) so batch, stream, and the
-    * DuckDB oracle agree bit-for-bit; Σv² ≤ 2³⁰·n never overflows a Long
-    * for any realistic clip. A declared data size past the payload end is
-    * clamped to the bytes present (truncated-download tolerance, same
-    * rule as the header walkers); non-WAV / non-PCM16 payloads yield the
-    * (-1, …) sentinel row rather than throwing — per-row totality is the
-    * codec-boundary contract at scale. */
+    * [[pixelStats]]'s decode half: walks the RIFF chunk list
+    * ([[riffChunks]], the walk [[wavHeader]] shares) to the `fmt `/`data`
+    * chunks, then reads every interleaved 16-bit little-endian sample
+    * and folds the speech/VAD-style summary features in ONE pass:
+    * sample count, peak |amplitude|, zero-crossing count (sign = v ≥ 0,
+    * the textbook ZCR), and the exact integer Σv / Σv² moments from
+    * which DC offset and RMS energy derive. Integer sums (not floats) so
+    * batch, stream, and the DuckDB oracle agree bit-for-bit; Σv² ≤ 2³⁰·n
+    * never overflows a Long for any realistic clip. A declared data size
+    * past the payload end is clamped to the bytes present
+    * (truncated-download tolerance, same rule as the header walkers);
+    * non-WAV / non-PCM16 payloads yield the (-1, …) sentinel row rather
+    * than throwing — per-row totality is the codec-boundary contract at
+    * scale. */
   def pcmStats(p: Array[Byte]): (Long, Long, Long, Long, Long) = {
-    def u16le(i: Int): Int = (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    def u32le(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
-    val bad = (-1L, -1L, -1L, -1L, -1L)
-    if (p.length < 12 || tag(0) != "RIFF" || tag(8) != "WAVE") bad
+    val (fmt, data, dataLen) = wavChunks(p)
+    if (fmt < 0 || u16le(p, fmt) != 1 || u16le(p, fmt + 14) != 16 || data < 0)
+      (-1L, -1L, -1L, -1L, -1L)
     else {
-      var i = 12
-      var fmtCode, bits = -1
-      var dataOff, dataLen = -1L
-      while (i + 8 <= p.length && (fmtCode < 0 || dataOff < 0)) {
-        val id = tag(i)
-        val sz = u32le(i + 4)
-        if (id == "fmt " && sz >= 16 && i + 24 <= p.length) {
-          fmtCode = u16le(i + 8)
-          bits = u16le(i + 22)
-        } else if (id == "data") { dataOff = i + 8; dataLen = sz }
-        if (sz > Int.MaxValue - 16) i = p.length
-        else i += 8 + sz.toInt + (sz.toInt & 1)
+      val end = math.min(data + dataLen, p.length.toLong)
+      var j = data
+      var n, zc, peak, sumA, sumSq = 0L
+      var prevNeg = false
+      while (j + 1 < end) {
+        val v = u16le(p, j).toShort.toLong
+        val neg = v < 0
+        if (n > 0 && neg != prevNeg) zc += 1
+        prevNeg = neg
+        n += 1
+        if (math.abs(v) > peak) peak = math.abs(v)
+        sumA += v
+        sumSq += v * v
+        j += 2
       }
-      if (fmtCode != 1 || bits != 16 || dataOff < 0) bad
-      else {
-        val end = math.min(dataOff + dataLen, p.length.toLong).toInt
-        var j = dataOff.toInt
-        var n, zc, peak, sumA, sumSq = 0L
-        var prevNeg = false
-        while (j + 1 < end) {
-          val v = ((p(j) & 0xff) | (p(j + 1) << 8)).toShort.toLong
-          val neg = v < 0
-          if (n > 0 && neg != prevNeg) zc += 1
-          prevNeg = neg
-          n += 1
-          if (math.abs(v) > peak) peak = math.abs(v)
-          sumA += v
-          sumSq += v * v
-          j += 2
-        }
-        (n, peak, zc, sumA, sumSq)
-      }
+      (n, peak, zc, sumA, sumSq)
     }
   }
 
@@ -323,27 +436,23 @@ object Binary {
   def makeImage(docId: Long): Array[Byte] = {
     val w = 1 + docId % 640
     val h = 1 + docId * 7 % 480
-    def be32(v: Long) = Array((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
-    def be16(v: Long) = Array((v >> 8).toByte, v.toByte)
-    def le16(v: Long) = Array(v.toByte, (v >> 8).toByte)
-    (docId % 3) match {
-      case 0 =>
-        Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-          be32(13) ++ "IHDR".getBytes("US-ASCII") ++ be32(w) ++ be32(h) ++
-          Array[Byte](8, 2, 0, 0, 0) ++ be32(0) // CRC; readers skip it
-      case 1 =>
-        Array[Byte](0xff.toByte, 0xd8.toByte) ++                 // SOI
-          Array[Byte](0xff.toByte, 0xe0.toByte) ++ be16(16) ++   // APP0
-          "JFIF\u0000".getBytes("US-ASCII") ++
-          Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0) ++
-          Array[Byte](0xff.toByte, 0xc0.toByte) ++ be16(11) ++   // SOF0
-          Array[Byte](8) ++ be16(h) ++ be16(w) ++
-          Array[Byte](1, 1, 0x11, 0) ++                          // 1 component
-          Array[Byte](0xff.toByte, 0xd9.toByte)                  // EOI
-      case _ =>
-        "GIF89a".getBytes("US-ASCII") ++ le16(w) ++ le16(h) ++
-          Array[Byte](0xf0.toByte, 0, 0)
+    written { o =>
+      (docId % 3) match {
+        case 0 =>
+          o.be(0x89504e470d0a1a0aL, 8).be(13, 4).ascii("IHDR").be(w, 4)
+            .be(h, 4).bytes(Array[Byte](8, 2, 0, 0, 0))
+            .be(0, 4) // CRC; readers skip it
+        case 1 =>
+          o.be(0xffd8, 2)                                    // SOI
+            .be(0xffe0, 2).be(16, 2).ascii("JFIF\u0000")     // APP0
+            .bytes(Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
+            .be(0xffc0, 2).be(11, 2).be(8, 1).be(h, 2).be(w, 2) // SOF0
+            .bytes(Array[Byte](1, 1, 0x11, 0))               // 1 component
+            .be(0xffd9, 2)                                   // EOI
+        case _ =>
+          o.ascii("GIF89a").le(w, 2).le(h, 2)
+            .bytes(Array[Byte](0xf0.toByte, 0, 0))
+      }
     }
   }
 
@@ -367,95 +476,54 @@ object Binary {
                                timescale: Long, duration_ms: Long,
                                n_tracks: Long, width: Long, height: Long)
 
-  /** REAL ISO-BMFF (MP4) box walk — pure byte arithmetic, no codec:
-    * top-level boxes to `ftyp` (major brand) and `moov`, then one level
-    * down to `mvhd` (timescale, duration → duration_ms) and each
-    * `trak`'s `tkhd` (track count; width/height in 16.16 fixed point
-    * from the FIRST laid-out track, the [[aviFrames]] first-stream
-    * discipline). Handles v0 and v1 full boxes and 64-bit `largesize`;
-    * reads only declared sizes, so a header-only blob (metadata
-    * extraction without media data) parses. Non-MP4 or malformed bytes
-    * yield ("unknown", -1, …). Motion-JPEG frames decode via
-    * [[mp4JpegFrames]]; other codecs' frames have no JVM decoder. */
+  /** REAL ISO-BMFF (MP4) box walk ([[isoBoxes]]) — pure byte
+    * arithmetic, no codec: top-level boxes to `ftyp` (major brand) and
+    * `moov`, then one level down to `mvhd` (timescale, duration →
+    * duration_ms) and each `trak`'s `tkhd` (track count; width/height in
+    * 16.16 fixed point from the FIRST laid-out track, the [[aviFrames]]
+    * first-stream discipline). Handles v0 and v1 full boxes (64-bit
+    * `largesize` is the walker's); reads only declared sizes, so a
+    * header-only blob (metadata extraction without media data) parses.
+    * Non-MP4 or malformed bytes yield ("unknown", -1, …). Motion-JPEG
+    * frames decode via [[mp4JpegFrames]]; other codecs' frames have no
+    * JVM decoder. */
   def mp4Header(p: Array[Byte])
       : (String, Long, Long, Long, Long, Long) = {
-    def u32(i: Int): Long =
-      ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-        ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-    def u64(i: Int): Long = (u32(i) << 32) | u32(i + 4)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
     val bad = ("unknown", -1L, -1L, -1L, -1L, -1L)
-    if (p.length < 8 || tag(4) != "ftyp") return bad
+    if (tag(p, 4) != fourcc("ftyp")) return bad
     var brand: String = null
     var timescale, duration = -1L
     var nTracks = 0L
     var width, height = -1L
-    // (start, end, headerLen) of a box at i within [i, limit); None stops
-    // the walk (malformed size — all the information the bytes offer)
-    def boxAt(i: Int, limit: Int): Option[(Long, Int)] = {
-      if (i + 8 > limit) return None
-      val sz0 = u32(i)
-      val (sz, hdr) =
-        if (sz0 == 1L && i + 16 <= limit) (u64(i + 8), 16)
-        else if (sz0 == 0L) ((limit - i).toLong, 8)
-        else (sz0, 8)
-      if (sz < hdr || i + sz > limit) None else Some((sz, hdr))
-    }
-    def walkTrak(i0: Int, limit: Int): Unit = {
-      var i = i0
-      while (i + 8 <= limit) boxAt(i, limit) match {
-        case None => i = limit
-        case Some((sz, hdr)) =>
-          // sz > hdr guarantees the version byte exists — a box whose
-          // size equals its header is empty, not a crash
-          if (tag(i + 4) == "tkhd" && width < 0 && sz > hdr) {
-            val b = i + hdr
-            val v = p(b) & 0xff
-            // v0: cre(4) mod(4) id(4) res(4) dur(4); v1: 8/8/4/4/8 —
-            // then res(8) layer(2) alt(2) vol(2) res(2) matrix(36)
-            val off = b + 4 + (if (v == 1) 32 else 20) + 52
-            if (off + 8 <= i + sz) {
-              width = u32(off) >> 16
-              height = u32(off + 4) >> 16
+    isoBoxes(p, 0, p.length) { (t, b, e) =>
+      if (t == fourcc("ftyp")) { if (e - b >= 4) brand = ascii(p, b, b + 4) }
+      else if (t == fourcc("moov")) isoBoxes(p, b, e) { (mt, mb, me) =>
+        // a body past its header guarantees the version byte exists — a
+        // box whose size equals its header is empty, not a crash
+        if (mt == fourcc("mvhd") && me > mb) {
+          val v = u8(p, mb)
+          if (v == 1 && mb + 32 + 8 <= me) {
+            timescale = u32be(p, mb + 20)
+            duration = u64be(p, mb + 24)
+          } else if (v == 0 && mb + 20 + 4 <= me) {
+            timescale = u32be(p, mb + 12)
+            duration = u32be(p, mb + 16)
+          }
+        } else if (mt == fourcc("trak")) {
+          nTracks += 1
+          isoBoxes(p, mb, me) { (tt, tb, te) =>
+            if (tt == fourcc("tkhd") && width < 0 && te > tb) {
+              // v0: cre(4) mod(4) id(4) res(4) dur(4); v1: 8/8/4/4/8 —
+              // then res(8) layer(2) alt(2) vol(2) res(2) matrix(36)
+              val off = tb + 4 + (if (u8(p, tb) == 1) 32 else 20) + 52
+              if (off + 8 <= te) {
+                width = u32be(p, off) >> 16
+                height = u32be(p, off + 4) >> 16
+              }
             }
           }
-          i += sz.toInt
-      }
-    }
-    def walkMoov(i0: Int, limit: Int): Unit = {
-      var i = i0
-      while (i + 8 <= limit) boxAt(i, limit) match {
-        case None => i = limit
-        case Some((sz, hdr)) =>
-          tag(i + 4) match {
-            case "mvhd" if sz > hdr =>
-              val b = i + hdr
-              val v = p(b) & 0xff
-              if (v == 1 && b + 32 + 8 <= i + sz) {
-                timescale = u32(b + 20)
-                duration = u64(b + 24)
-              } else if (v == 0 && b + 20 + 4 <= i + sz) {
-                timescale = u32(b + 12)
-                duration = u32(b + 16)
-              }
-            case "trak" =>
-              nTracks += 1
-              walkTrak(i + hdr, i + sz.toInt)
-            case _ =>
-          }
-          i += sz.toInt
-      }
-    }
-    var i = 0
-    while (i + 8 <= p.length) boxAt(i, p.length) match {
-      case None => i = p.length
-      case Some((sz, hdr)) =>
-        tag(i + 4) match {
-          case "ftyp" => if (sz >= hdr + 4) brand = tag(i + hdr)
-          case "moov" => walkMoov(i + hdr, i + sz.toInt)
-          case _ =>
         }
-        i += sz.toInt
+      }
     }
     if (brand == null || timescale <= 0 || duration < 0 || nTracks == 0)
       bad
@@ -473,36 +541,44 @@ object Binary {
     * 1 + id%3 tracks, first track (16.16 fixed) 320 + (id%5)·16 ×
     * 240 + (id%4)·16, later tracks 0×0 (audio-shaped). */
   def makeMp4(docId: Long): Array[Byte] = {
-    def be32(v: Long) = Array((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
-    def be64(v: Long) = be32(v >> 32) ++ be32(v & 0xffffffffL)
-    def fourcc(s: String) = s.getBytes("US-ASCII")
-    def box(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(8L + body.length) ++ fourcc(typ) ++ body
-    val v1 = docId % 2 == 1
+    val version = (docId % 2).toInt
     val brand = Seq("isom", "mp42", "avc1")((docId % 3).toInt)
     val timescale = 600L * (1 + docId % 4)
     val duration = (1 + docId % 30) * timescale + docId % 7
-    val nTracks = (1 + docId % 3).toInt
-    val ftyp = box("ftyp", fourcc(brand) ++ be32(0) ++ fourcc(brand))
-    val mvhd = box("mvhd",
-      (if (v1) Array[Byte](1, 0, 0, 0) ++ be64(0) ++ be64(0) ++
-         be32(timescale) ++ be64(duration)
-       else Array[Byte](0, 0, 0, 0) ++ be32(0) ++ be32(0) ++
-         be32(timescale) ++ be32(duration)) ++
-        be32(0x00010000L) ++ Array.fill(76)(0.toByte))
-    def tkhd(trackId: Int, w: Long, h: Long) = box("tkhd",
-      (if (v1) Array[Byte](1, 0, 0, 7) ++ be64(0) ++ be64(0) ++
-         be32(trackId.toLong) ++ be32(0) ++ be64(duration)
-       else Array[Byte](0, 0, 0, 7) ++ be32(0) ++ be32(0) ++
-         be32(trackId.toLong) ++ be32(0) ++ be32(duration)) ++
-        Array.fill(52)(0.toByte) ++ be32(w << 16) ++ be32(h << 16))
-    val traks = (1 to nTracks).map { t =>
-      box("trak", tkhd(t,
+    val traks = (1 to (1 + docId % 3).toInt).map { t =>
+      box("trak", tkhdBox(version, t, duration,
         if (t == 1) 320 + (docId % 5) * 16 else 0,
         if (t == 1) 240 + (docId % 4) * 16 else 0))
     }
-    ftyp ++ box("moov", mvhd ++ traks.reduce(_ ++ _))
+    box("ftyp", written(_.ascii(brand).be(0, 4).ascii(brand))) ++
+      box("moov", mvhdBox(version, timescale, duration) +: traks: _*)
+  }
+
+  /** An ISO-BMFF box: 32-bit big-endian size, type, then `body`. */
+  private def box(typ: String, body: Array[Byte]*): Array[Byte] =
+    written(_.be(8L + body.map(_.length).sum, 4).ascii(typ).bytes(body: _*))
+
+  /** An ISO-BMFF full box: a [[box]] whose body opens with version 0 and
+    * zero flags. */
+  private def fullBox(typ: String, body: Array[Byte]*): Array[Byte] =
+    box(typ, new Array[Byte](4) +: body: _*)
+
+  /** An `mvhd` box; `version` 1 writes 64-bit times. */
+  private def mvhdBox(version: Int, timescale: Long,
+                      duration: Long): Array[Byte] = {
+    val tw = 4 * (1 + version)
+    box("mvhd", written(_.be(version, 1).be(0, 3).be(0, tw).be(0, tw)
+      .be(timescale, 4).be(duration, tw).be(0x00010000L, 4).zeros(76)))
+  }
+
+  /** A `tkhd` box (flags 7: enabled, in movie and preview) declaring
+    * `w` × `h` in 16.16 fixed point; `version` 1 writes 64-bit times. */
+  private def tkhdBox(version: Int, trackId: Int, duration: Long, w: Long,
+                      h: Long): Array[Byte] = {
+    val tw = 4 * (1 + version)
+    box("tkhd", written(_.be(version, 1).be(7, 3).be(0, tw).be(0, tw)
+      .be(trackId, 4).be(0, 4).be(duration, tw).zeros(52).be(w << 16, 4)
+      .be(h << 16, 4)))
   }
 
   /** Uniform RGB fixture color for Motion-JPEG frames, indexed by a
@@ -577,14 +653,6 @@ object Binary {
     * the stsc run grammar is exercised non-degenerately, not as the
     * trivial one-sample-per-chunk table. */
   def makeMjpegMp4(docId: Long): Array[Byte] = {
-    def be32(v: Long) = Array((v >> 24).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
-    def be16(v: Int) = Array((v >> 8).toByte, v.toByte)
-    def fourcc(s: String) = s.getBytes("US-ASCII")
-    def box(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(8L + body.length) ++ fourcc(typ) ++ body
-    def full(typ: String, body: Array[Byte]): Array[Byte] =
-      box(typ, Array[Byte](0, 0, 0, 0) ++ body)
     val w = (11 + docId % 6).toInt
     val h = (9 + docId % 5).toInt
     val nf = (3 + docId % 4).toInt
@@ -592,55 +660,45 @@ object Binary {
       val (r, g, b) = mjpegColor(((docId + 3 * f) % 20).toInt)
       encodeJpeg(uniformImage(w, h, r, g, b))
     }
-    val ftyp = box("ftyp", fourcc("isom") ++ be32(0) ++ fourcc("isom"))
-    val mdat = box("mdat", frames.reduce(_ ++ _))
+    val ftyp = box("ftyp", written(_.ascii("isom").be(0, 4).ascii("isom")))
     // absolute file offsets: ftyp, then mdat header, then samples
     val sampleOffs = frames.scanLeft(ftyp.length + 8L)(_ + _.length).init
     val nChunks = (nf + 1) / 2
-    val chunkOffs = (0 until nChunks).map(ci => sampleOffs(2 * ci))
     val timescale = 600L
     val duration = nf * 150L
-    val mvhd = full("mvhd", be32(0) ++ be32(0) ++ be32(timescale) ++
-      be32(duration) ++ be32(0x00010000L) ++ Array.fill(76)(0.toByte))
-    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++ be32(0) ++ be32(0) ++
-      be32(1) ++ be32(0) ++ be32(duration) ++ Array.fill(52)(0.toByte) ++
-      be32(w.toLong << 16) ++ be32(h.toLong << 16))
-    val mdhd = full("mdhd", be32(0) ++ be32(0) ++ be32(timescale) ++
-      be32(duration) ++ be16(0x55c4) ++ be16(0))
-    val hdlr = full("hdlr", be32(0) ++ fourcc("vide") ++
-      Array.fill(12)(0.toByte) ++ Array[Byte](0))
+    val mdhd = fullBox("mdhd", written(_.be(0, 4).be(0, 4).be(timescale, 4)
+      .be(duration, 4).be(0x55c4, 2).be(0, 2)))
+    val hdlr = fullBox("hdlr", written(_.be(0, 4).ascii("vide").zeros(13)))
     // VisualSampleEntry 'jpeg': 6 reserved + dataref(1) + 16 predefined/
     // reserved + w + h + 72dpi×2 + reserved + framecount(1) + 32-byte
     // compressor name + depth 24 + predefined -1
-    val sampleEntry = box("jpeg", Array.fill(6)(0.toByte) ++ be16(1) ++
-      Array.fill(16)(0.toByte) ++ be16(w) ++ be16(h) ++
-      be32(0x00480000L) ++ be32(0x00480000L) ++ be32(0) ++ be16(1) ++
-      Array.fill(32)(0.toByte) ++ be16(24) ++ be16(0xffff))
-    val stsd = full("stsd", be32(1) ++ sampleEntry)
-    val stts = full("stts", be32(1) ++ be32(nf.toLong) ++ be32(150))
-    val stscEntries =
-      if (nf % 2 == 0) be32(1) ++ be32(2) ++ be32(1)
-      else be32(1) ++ be32(2) ++ be32(1) ++
-        be32(nChunks.toLong) ++ be32(1) ++ be32(1)
-    val stsc = full("stsc",
-      be32(if (nf % 2 == 0) 1L else 2L) ++ stscEntries)
-    val stsz = full("stsz", be32(0) ++ be32(nf.toLong) ++
-      frames.flatMap(fr => be32(fr.length.toLong)).toArray)
-    val stco = full("stco", be32(nChunks.toLong) ++
-      chunkOffs.flatMap(be32).toArray)
-    val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco)
-    val vmhd = box("vmhd", Array[Byte](0, 0, 0, 1) ++
-      Array.fill(8)(0.toByte))
-    val dref = full("dref", be32(1) ++
-      box("url ", Array[Byte](0, 0, 0, 1)))
-    val minf = box("minf", vmhd ++ box("dinf", dref) ++ stbl)
-    val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-    val trak = box("trak", tkhd ++ mdia)
-    ftyp ++ mdat ++ box("moov", mvhd ++ trak)
+    val sampleEntry = box("jpeg", written(_.zeros(6).be(1, 2).zeros(16)
+      .be(w, 2).be(h, 2).be(0x00480000L, 4).be(0x00480000L, 4).be(0, 4)
+      .be(1, 2).zeros(32).be(24, 2).be(0xffff, 2)))
+    // two samples per chunk, the last chunk one when the count is odd
+    val stscRuns = Seq((1L, 2L)) ++ (if (nf % 2 == 0) Nil else
+      Seq((nChunks.toLong, 1L)))
+    val stbl = box("stbl",
+      fullBox("stsd", written(_.be(1, 4)), sampleEntry),
+      fullBox("stts", written(_.be(1, 4).be(nf, 4).be(150, 4))),
+      fullBox("stsc", written(o => stscRuns.foldLeft(o.be(stscRuns.size, 4)) {
+        case (o, (first, n)) => o.be(first, 4).be(n, 4).be(1, 4) })),
+      fullBox("stsz", written(o => frames.foldLeft(o.be(0, 4).be(nf, 4))(
+        (o, fr) => o.be(fr.length, 4)))),
+      fullBox("stco", written(o => (0 until nChunks).foldLeft(
+        o.be(nChunks, 4))((o, ci) => o.be(sampleOffs(2 * ci), 4)))))
+    val minf = box("minf", box("vmhd", written(_.be(1, 4).zeros(8))),
+      box("dinf", fullBox("dref", written(_.be(1, 4)),
+        box("url ", written(_.be(1, 4))))),
+      stbl)
+    val trak = box("trak", tkhdBox(0, 1, duration, w, h),
+      box("mdia", mdhd, hdlr, minf))
+    ftyp ++ box("mdat", frames: _*) ++
+      box("moov", mvhdBox(0, timescale, duration), trak)
   }
 
   private def notMp4(p: Array[Byte]): Boolean =
-    p.length < 12 || new String(p.slice(4, 8), "US-ASCII") != "ftyp"
+    p.length < 12 || tag(p, 4) != fourcc("ftyp")
 
   /** REAL MP4 Motion-JPEG demux — the full ISO-BMFF sample-table walk,
     * pure byte arithmetic: moov → first trak whose stsd entry format is
@@ -654,108 +712,95 @@ object Binary {
     * last consistent sample
     * (all the information the bytes offer); no JPEG track → empty. */
   def mp4JpegFrames(p: Array[Byte]): IndexedSeq[Array[Byte]] = {
-    def u32(i: Int): Long =
-      ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-        ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-    def u64(i: Int): Long = (u32(i) << 32) | u32(i + 4)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
     if (notMp4(p)) return IndexedSeq.empty
-    // (type, bodyStart, end) of each well-formed child box in [i0,limit)
-    def children(i0: Int, limit: Int): List[(String, Int, Int)] = {
-      val out = List.newBuilder[(String, Int, Int)]
-      var i = i0
-      while (i + 8 <= limit) {
-        val sz0 = u32(i)
-        val (sz, hdr) =
-          if (sz0 == 1L && i + 16 <= limit) (u64(i + 8), 16)
-          else if (sz0 == 0L) ((limit - i).toLong, 8)
-          else (sz0, 8)
-        if (sz < hdr || i + sz > limit) i = limit
-        else { out += ((tag(i + 4), i + hdr, i + sz.toInt)); i += sz.toInt }
+    // (body, end) of the first box of type t in [from, to)
+    def first(from: Long, to: Long, t: String): Option[(Long, Long)] = {
+      var hit: Option[(Long, Long)] = None
+      isoBoxes(p, from, to) { (bt, b, e) =>
+        if (hit.isEmpty && bt == fourcc(t)) hit = Some((b, e))
       }
-      out.result()
+      hit
     }
-    def child(cs: List[(String, Int, Int)], t: String) = cs.find(_._1 == t)
-    val jpegTags = Set("jpeg", "mjpa", "MJPG")
-    val moov = child(children(0, p.length), "moov")
-      .getOrElse(return IndexedSeq.empty)
-    for ((t, b, e) <- children(moov._2, moov._3) if t == "trak") {
-      val stblOpt = for {
-        mdia <- child(children(b, e), "mdia")
-        minf <- child(children(mdia._2, mdia._3), "minf")
-        stbl <- child(children(minf._2, minf._3), "stbl")
-      } yield stbl
-      stblOpt.foreach { stbl =>
-        val cs = children(stbl._2, stbl._3)
-        val isJpeg = child(cs, "stsd").exists { case (_, sb, se) =>
-          // fullbox(4) + entry_count(4) + entry box: format at sb+12
-          sb + 16 <= se && u32(sb + 4) >= 1 && jpegTags(tag(sb + 12))
-        }
-        if (isJpeg) {
-          val sizes: IndexedSeq[Long] = child(cs, "stsz") match {
-            case Some((_, sb, se)) if sb + 12 <= se =>
-              val fixed = u32(sb + 4)
-              val n = u32(sb + 8).toInt
-              // fixed-size branch: bound sample_count by what the
-              // payload can physically hold — a hostile u32 count near
-              // 2^31 would otherwise allocate gigabytes here before the
-              // offset walk ever rejects it (the stco/stsc/variable-stsz
-              // reads are already takeWhile-bounded by box size)
-              if (fixed != 0)
-                IndexedSeq.fill(
-                  math.min(math.max(n, 0).toLong, p.length / fixed).toInt
-                )(fixed)
-              else (0 until n).takeWhile(i => sb + 12 + 4 * i + 4 <= se)
-                .map(i => u32(sb + 12 + 4 * i))
-            case _ => IndexedSeq.empty
-          }
-          val chunkOffs: IndexedSeq[Long] = cs.collectFirst {
-            case ("stco", sb, se) if sb + 8 <= se =>
-              val n = u32(sb + 4).toInt
-              (0 until n).takeWhile(i => sb + 8 + 4 * i + 4 <= se)
-                .map(i => u32(sb + 8 + 4 * i))
-            case ("co64", sb, se) if sb + 8 <= se =>
-              val n = u32(sb + 4).toInt
-              (0 until n).takeWhile(i => sb + 8 + 8 * i + 8 <= se)
-                .map(i => u64(sb + 8 + 8 * i))
-          }.getOrElse(IndexedSeq.empty)
-          val stscRuns: IndexedSeq[(Long, Long)] = child(cs, "stsc") match {
-            case Some((_, sb, se)) if sb + 8 <= se =>
-              val n = u32(sb + 4).toInt
-              (0 until n).takeWhile(i => sb + 8 + 12 * i + 12 <= se)
-                .map(i => (u32(sb + 8 + 12 * i), u32(sb + 8 + 12 * i + 4)))
-            case _ => IndexedSeq.empty
-          }
-          if (sizes.nonEmpty && chunkOffs.nonEmpty && stscRuns.nonEmpty) {
-            // expand stsc runs → samples_per_chunk for each chunk
-            val spc = chunkOffs.indices.map { ci =>
-              val chunkNo = ci + 1L
-              stscRuns.takeWhile(_._1 <= chunkNo).lastOption
-                .map(_._2).getOrElse(0L)
-            }
-            val out = IndexedSeq.newBuilder[Array[Byte]]
-            var si = 0
-            var ci = 0
-            var ok = true
-            while (ok && ci < chunkOffs.length && si < sizes.length) {
-              var off = chunkOffs(ci)
-              var j = 0L
-              while (ok && j < spc(ci) && si < sizes.length) {
-                val sz = sizes(si)
-                if (off < 0 || sz <= 0 || off + sz > p.length) ok = false
-                else {
-                  out += p.slice(off.toInt, (off + sz).toInt)
-                  off += sz; si += 1; j += 1
-                }
-              }
-              ci += 1
-            }
-            return out.result()
-          }
+    // the offsets of a table's entries: a u32 count at `at`, then
+    // `width`-byte entries, cut at the box end
+    def table(at: Long, end: Long, width: Int): IndexedSeq[Long] =
+      Iterator.range(0, u32be(p, at).toInt)
+        .map(k => at + 4 + width.toLong * k).takeWhile(_ + width <= end)
+        .toIndexedSeq
+    val jpegTags = Set("jpeg", "mjpa", "MJPG").map(fourcc)
+    // the samples of a sample table [sb0, se0) whose stsd entry is JPEG
+    // and whose stsz, stco/co64 and stsc tables are all non-empty
+    def samples(sb0: Long, se0: Long): Option[IndexedSeq[Array[Byte]]] = {
+      val isJpeg = first(sb0, se0, "stsd").exists { case (sb, se) =>
+        // fullbox(4) + entry_count(4) + entry box: format at sb+12
+        sb + 16 <= se && u32be(p, sb + 4) >= 1 && jpegTags(tag(p, sb + 12))
+      }
+      if (!isJpeg) return None
+      val sizes: IndexedSeq[Long] = first(sb0, se0, "stsz") match {
+        case Some((sb, se)) if sb + 12 <= se =>
+          val fixed = u32be(p, sb + 4)
+          val n = u32be(p, sb + 8).toInt
+          // fixed-size branch: bound sample_count by what the payload
+          // can physically hold — a hostile u32 count near 2^31 would
+          // otherwise allocate gigabytes here before the offset walk
+          // ever rejects it (the tables are already bounded by box size)
+          if (fixed != 0)
+            IndexedSeq.fill(
+              math.min(math.max(n, 0).toLong, p.length / fixed).toInt)(fixed)
+          else table(sb + 8, se, 4).map(u32be(p, _))
+        case _ => IndexedSeq.empty
+      }
+      var chunkOffs: Option[IndexedSeq[Long]] = None
+      isoBoxes(p, sb0, se0) { (t, b, e) =>
+        if (chunkOffs.isEmpty && b + 8 <= e) {
+          if (t == fourcc("stco")) chunkOffs = Some(table(b + 4, e, 4)
+            .map(u32be(p, _)))
+          else if (t == fourcc("co64")) chunkOffs = Some(table(b + 4, e, 8)
+            .map(u64be(p, _)))
         }
       }
+      val offs = chunkOffs.getOrElse(IndexedSeq.empty)
+      val stscRuns: IndexedSeq[(Long, Long)] = first(sb0, se0, "stsc") match {
+        case Some((sb, se)) if sb + 8 <= se =>
+          table(sb + 4, se, 12).map(e => (u32be(p, e), u32be(p, e + 4)))
+        case _ => IndexedSeq.empty
+      }
+      if (sizes.isEmpty || offs.isEmpty || stscRuns.isEmpty) return None
+      // expand stsc runs → samples_per_chunk for each chunk
+      val spc = offs.indices.map { ci =>
+        val chunkNo = ci + 1L
+        stscRuns.takeWhile(_._1 <= chunkNo).lastOption.map(_._2).getOrElse(0L)
+      }
+      val out = IndexedSeq.newBuilder[Array[Byte]]
+      var si = 0
+      var ci = 0
+      var ok = true
+      while (ok && ci < offs.length && si < sizes.length) {
+        var off = offs(ci)
+        var j = 0L
+        while (ok && j < spc(ci) && si < sizes.length) {
+          val sz = sizes(si)
+          if (off < 0 || sz <= 0 || off + sz > p.length) ok = false
+          else {
+            out += java.util.Arrays.copyOfRange(p, off.toInt, (off + sz).toInt)
+            off += sz; si += 1; j += 1
+          }
+        }
+        ci += 1
+      }
+      Some(out.result())
     }
-    IndexedSeq.empty
+    var frames: Option[IndexedSeq[Array[Byte]]] = None
+    for ((mb, me) <- first(0, p.length, "moov"))
+      isoBoxes(p, mb, me) { (t, b, e) =>
+        if (frames.isEmpty && t == fourcc("trak")) frames = for {
+          mdia <- first(b, e, "mdia")
+          minf <- first(mdia._1, mdia._2, "minf")
+          stbl <- first(minf._1, minf._2, "stbl")
+          fs <- samples(stbl._1, stbl._2)
+        } yield fs
+      }
+    frames.getOrElse(IndexedSeq.empty)
   }
 
   /** [[mp4JpegFrames]] fused with frame decode — the MP4 sibling of
@@ -782,8 +827,8 @@ object Binary {
                            timescale_ns: Long, duration_ms: Long,
                            n_tracks: Long, width: Long, height: Long)
 
-  /** REAL Matroska/WebM metadata — a pure-byte EBML walk (RFC 8794
-    * element grammar: VINT id with the marker kept, VINT size with the
+  /** REAL Matroska/WebM metadata — the pure-byte EBML element walk
+    * ([[ebmlElements]]: VINT id with the marker kept, VINT size with the
     * marker stripped, all-value-bits-set size = unknown/streaming), no
     * codec: EBML header → DocType; Segment → Info (TimestampScale in ns
     * — spec default 1e6 when absent — and Duration, a 4- or 8-byte
@@ -799,79 +844,25 @@ object Binary {
   def mkvHeader(p: Array[Byte])
       : (String, Long, Long, Long, Long, Long) = {
     val bad = ("unknown", -1L, -1L, -1L, -1L, -1L)
-    // VINT length = leading-zero count of the first byte + 1; 0x00 is
-    // reserved (would mean >8 bytes) — malformed here.
-    def vintLen(b: Int): Int =
-      if (b == 0) -1 else Integer.numberOfLeadingZeros(b) - 23
-    def uint(b0: Int, n: Int): Long = {
-      var v = 0L; var k = 0
-      while (k < n) { v = (v << 8) | (p(b0 + k) & 0xffL); k += 1 }
-      v
-    }
-    // Element ID: stored bytes kept verbatim (marker included) — the
-    // form the spec tables list ids in (0x1A45DFA3 etc.). Bounded by the
-    // ENCLOSING master's limit, not p.length: a child header straddling
-    // its parent's declared end must stop the walk there, never parse
-    // itself out of the next sibling's bytes.
-    def readId(i: Int, limit: Int): Option[(Long, Int)] = {
-      if (i >= limit) return None
-      val len = vintLen(p(i) & 0xff)
-      if (len < 1 || len > 4 || i + len > limit) None
-      else Some((uint(i, len), len))
-    }
-    // Data size: marker bit stripped; all value bits set = unknown.
-    def readSize(i: Int, limit: Int): Option[(Long, Int, Boolean)] = {
-      if (i >= limit) return None
-      val len = vintLen(p(i) & 0xff)
-      if (len < 1 || len > 8 || i + len > limit) return None
-      var v = (p(i) & 0xffL) & ((1L << (8 - len)) - 1)
-      var k = 1
-      while (k < len) { v = (v << 8) | (p(i + k) & 0xffL); k += 1 }
-      Some((v, len, v == (1L << (7 * len)) - 1))
-    }
-    def float(b0: Int, n: Int): Double = n match {
-      case 4 => java.lang.Float.intBitsToFloat(uint(b0, 4).toInt).toDouble
-      case 8 => java.lang.Double.longBitsToDouble(uint(b0, 8))
-      case _ => -1.0
-    }
+    // an element's body as a big-endian unsigned integer
+    def num(s: Long, e: Long): Long = uint(p, s, e - s, le = false)
     var docType: String = null
     var tscale = -1L
     var durTicks = -1.0
     var nTracks = 0L
     var width, height = -1L
     var sawInfo = false
-    // Children of a master body in [i0, limit); f sees (id, start, end).
-    def children(i0: Int, limit: Int)(f: (Long, Int, Int) => Unit): Unit = {
-      var i = i0
-      while (i < limit) {
-        readId(i, limit) match {
-          case None => i = limit
-          case Some((id, idLen)) =>
-            readSize(i + idLen, limit) match {
-              case None => i = limit
-              case Some((sz, szLen, unknown)) =>
-                val b0 = i + idLen + szLen
-                if (!unknown && sz > limit - b0) i = limit
-                else {
-                  val b1 = if (unknown) limit else (b0 + sz).toInt
-                  f(id, b0, b1)
-                  i = b1
-                }
-            }
-        }
-      }
-    }
     // First-wins throughout (the [[mp4Header]] first-track discipline,
     // extended to masters): only the FIRST Segment, and within it the
     // first Info and first Tracks, are read — resilience-style repeated
     // headers and concatenated init segments neither inflate the track
     // count nor overwrite earlier fields.
     var dimsLocked = false
-    def walkTrackEntry(b0: Int, b1: Int): Unit = {
+    def walkTrackEntry(b0: Long, b1: Long): Unit = {
       var ttype = -1L
-      var vS, vE = -1
-      children(b0, b1) { (id, s, e) =>
-        if (id == 0x83L) ttype = uint(s, e - s)
+      var vS, vE = -1L
+      ebmlElements(p, b0, b1) { (id, s, e) =>
+        if (id == 0x83L) ttype = num(s, e)
         else if (id == 0xE0L && vS < 0) { vS = s; vE = e }
       }
       // The first video-type track with a Video child claims the dims
@@ -879,36 +870,40 @@ object Binary {
       // track never fills in a missing half (no cross-track chimera).
       if (ttype == 1L && vS >= 0 && !dimsLocked) {
         dimsLocked = true
-        children(vS, vE) { (id, s, e) =>
-          if (id == 0xB0L && width < 0) width = uint(s, e - s)
-          else if (id == 0xBAL && height < 0) height = uint(s, e - s)
+        ebmlElements(p, vS, vE) { (id, s, e) =>
+          if (id == 0xB0L && width < 0) width = num(s, e)
+          else if (id == 0xBAL && height < 0) height = num(s, e)
         }
       }
     }
     var sawTracks = false
-    def walkSegment(b0: Int, b1: Int): Unit = children(b0, b1) {
+    def walkSegment(b0: Long, b1: Long): Unit = ebmlElements(p, b0, b1) {
       (id, s, e) =>
         if (id == 0x1549A966L && !sawInfo) { // first Info
           sawInfo = true
-          children(s, e) { (cid, cs, ce) =>
-            if (cid == 0x2AD7B1L && tscale < 0) tscale = uint(cs, ce - cs)
-            else if (cid == 0x4489L && durTicks < 0)
-              durTicks = float(cs, ce - cs)
+          ebmlElements(p, s, e) { (cid, cs, ce) =>
+            if (cid == 0x2AD7B1L && tscale < 0) tscale = num(cs, ce)
+            else if (cid == 0x4489L && durTicks < 0) durTicks = ce - cs match {
+              // Duration: a 4- or 8-byte float
+              case 4L =>
+                java.lang.Float.intBitsToFloat(num(cs, ce).toInt).toDouble
+              case 8L => java.lang.Double.longBitsToDouble(num(cs, ce))
+              case _ => -1.0
+            }
           }
         } else if (id == 0x1654AE6BL && !sawTracks) { // first Tracks
           sawTracks = true
-          children(s, e) { (cid, cs, ce) =>
+          ebmlElements(p, s, e) { (cid, cs, ce) =>
             if (cid == 0xAEL) { nTracks += 1; walkTrackEntry(cs, ce) }
           }
         }
     }
     if (p.length < 4) return bad
     var sawSegment = false
-    children(0, p.length) { (id, s, e) =>
+    ebmlElements(p, 0, p.length) { (id, s, e) =>
       if (id == 0x1A45DFA3L) // EBML header
-        children(s, e) { (cid, cs, ce) =>
-          if (cid == 0x4282L && docType == null)
-            docType = new String(p, cs, ce - cs, "US-ASCII")
+        ebmlElements(p, s, e) { (cid, cs, ce) =>
+          if (cid == 0x4282L && docType == null) docType = ascii(p, cs, ce)
         }
       else if (id == 0x18538067L && !sawSegment) {
         sawSegment = true
@@ -936,50 +931,47 @@ object Binary {
     * first track video 160 + (id%6)·32 × 120 + (id%5)·24, later tracks
     * audio-shaped (SamplingFrequency, no dims). */
   def makeMkv(docId: Long): Array[Byte] = {
-    def beN(v: Long, n: Int): Array[Byte] =
-      Array.tabulate(n)(k => ((v >> (8 * (n - 1 - k))) & 0xff).toByte)
-    def sizeV(n: Int, wide: Boolean): Array[Byte] =
-      if (!wide && n < 127) Array((0x80 | n).toByte)
-      else { require(n < (1 << 14) - 1); beN(0x4000L | n, 2) }
-    def el(id: Long, idLen: Int, body: Array[Byte],
-           wide: Boolean = false): Array[Byte] =
-      beN(id, idLen) ++ sizeV(body.length, wide) ++ body
     val webm = docId % 2 == 1
-    val docType = if (webm) "webm" else "matroska"
     val tscale = 1000000L * (1 + docId % 3)
     val ticks = (1 + docId % 30) * 1000 + docId % 7
-    val nTracks = (1 + docId % 3).toInt
     val w = 160 + (docId % 6) * 32
     val h = 120 + (docId % 5) * 24
-    val ebml =
-      el(0x1A45DFA3L, 4, el(0x4282L, 2, docType.getBytes("US-ASCII")))
-    val info = el(0x1549A966L, 4,
-      el(0x2AD7B1L, 3, beN(tscale, 4)) ++
-        (if (webm)
-           el(0x4489L, 2,
-             beN(java.lang.Float.floatToIntBits(ticks.toFloat) &
-               0xffffffffL, 4))
-         else
-           el(0x4489L, 2,
-             beN(java.lang.Double.doubleToLongBits(ticks.toDouble), 8))),
+    val info = element(0x1549A966L,
+      element(0x2AD7B1L, written(_.be(tscale, 4))) ++
+        (if (webm) element(0x4489L, written(_.be(
+           java.lang.Float.floatToIntBits(ticks.toFloat) & 0xffffffffL, 4)))
+         else element(0x4489L, written(_.be(
+           java.lang.Double.doubleToLongBits(ticks.toDouble), 8)))),
       wide = docId % 3 == 0)
     def trackEntry(t: Int): Array[Byte] =
-      el(0xAEL, 1,
-        el(0x83L, 1, beN(if (t == 1) 1L else 2L, 1)) ++
-          (if (t == 1)
-             el(0xE0L, 1, el(0xB0L, 1, beN(w, 2)) ++
-               el(0xBAL, 1, beN(h, 2)))
-           else // SamplingFrequency 44100.0, the audio-track shape
-             el(0xE1L, 1, el(0xB5L, 1,
-               beN(java.lang.Double.doubleToLongBits(44100.0), 8)))))
-    val tracks =
-      el(0x1654AE6BL, 4, (1 to nTracks).map(trackEntry).reduce(_ ++ _))
-    val segBody = info ++ tracks
-    val segment =
-      if (docId % 5 == 0) // unknown-size Segment: marker-only VINT
-        beN(0x18538067L, 4) ++ Array(0xff.toByte) ++ segBody
-      else el(0x18538067L, 4, segBody)
-    ebml ++ segment
+      element(0xAEL, element(0x83L, written(_.be(if (t == 1) 1 else 2, 1))) ++
+        (if (t == 1)
+           element(0xE0L, element(0xB0L, written(_.be(w, 2))) ++
+             element(0xBAL, written(_.be(h, 2))))
+         else // SamplingFrequency 44100.0, the audio-track shape
+           element(0xE1L, element(0xB5L,
+             written(_.be(java.lang.Double.doubleToLongBits(44100.0), 8))))))
+    val segBody = info ++ element(0x1654AE6BL,
+      (1 to (1 + docId % 3).toInt).map(trackEntry).reduce(_ ++ _))
+    element(0x1A45DFA3L, element(0x4282L,
+      (if (webm) "webm" else "matroska").getBytes("US-ASCII"))) ++
+      (if (docId % 5 == 0) // unknown-size Segment: marker-only VINT
+         written(_.be(0x18538067L, 4)) ++ Array(0xff.toByte) ++ segBody
+       else element(0x18538067L, segBody))
+  }
+
+  /** An EBML element: the id's bytes (marker included, so its length is
+    * the id's), the body size as a 1-byte VINT — 2-byte when it does not
+    * fit or `wide` asks for the non-minimal form — then the body. */
+  private def element(id: Long, body: Array[Byte],
+                      wide: Boolean = false): Array[Byte] = {
+    val n = body.length
+    require(n < (1 << 14) - 1)
+    written { o =>
+      o.be(id, (71 - java.lang.Long.numberOfLeadingZeros(id)) / 8)
+      (if (!wide && n < 127) o.be(0x80 | n, 1) else o.be(0x4000 | n, 2))
+        .bytes(body)
+    }
   }
 
   /** Deterministic Motion-JPEG-in-Matroska: a REAL EBML container whose
@@ -993,13 +985,7 @@ object Binary {
     * second frame ships as BlockGroup{Block} instead of SimpleBlock so
     * both block shapes are demuxed. */
   def makeMjpegMkv(docId: Long): Array[Byte] = {
-    def beN(v: Long, n: Int): Array[Byte] =
-      Array.tabulate(n)(k => ((v >> (8 * (n - 1 - k))) & 0xff).toByte)
-    def sizeV(n: Int): Array[Byte] = {
-      require(n < (1 << 14) - 1); beN(0x4000L | n, 2)
-    }
-    def el(id: Long, idLen: Int, body: Array[Byte]): Array[Byte] =
-      beN(id, idLen) ++ sizeV(body.length) ++ body
+    def el(id: Long, body: Array[Byte]) = element(id, body, wide = true)
     val w = (10 + docId % 7).toInt
     val h = (8 + docId % 6).toInt
     val nf = (2 + docId % 5).toInt
@@ -1007,133 +993,86 @@ object Binary {
       val (r, g, b) = mjpegColor(((2 * docId + 5 * f) % 20).toInt)
       encodeJpeg(uniformImage(w, h, r, g, b))
     }
-    val ebml =
-      el(0x1A45DFA3L, 4, el(0x4282L, 2, "matroska".getBytes("US-ASCII")))
-    val info = el(0x1549A966L, 4,
-      el(0x2AD7B1L, 3, beN(1000000L, 4)) ++
-        el(0x4489L, 2, beN(
-          java.lang.Double.doubleToLongBits(nf * 40.0), 8)))
-    val track = el(0xAEL, 1,
-      el(0xD7L, 1, beN(1L, 1)) ++                  // TrackNumber = 1
-        el(0x83L, 1, beN(1L, 1)) ++                // TrackType video
-        el(0x86L, 1, "V_MJPEG".getBytes("US-ASCII")) ++ // CodecID
-        el(0xE0L, 1, el(0xB0L, 1, beN(w, 2)) ++ el(0xBAL, 1, beN(h, 2))))
-    val tracks = el(0x1654AE6BL, 4, track)
+    val ebml = el(0x1A45DFA3L, el(0x4282L, "matroska".getBytes("US-ASCII")))
+    val info = el(0x1549A966L, el(0x2AD7B1L, written(_.be(1000000L, 4))) ++
+      el(0x4489L, written(
+        _.be(java.lang.Double.doubleToLongBits(nf * 40.0), 8))))
+    val track = el(0xAEL,
+      el(0xD7L, written(_.be(1L, 1))) ++             // TrackNumber = 1
+        el(0x83L, written(_.be(1L, 1))) ++           // TrackType video
+        el(0x86L, "V_MJPEG".getBytes("US-ASCII")) ++ // CodecID
+        el(0xE0L, el(0xB0L, written(_.be(w, 2))) ++
+          el(0xBAL, written(_.be(h, 2)))))
     // block body: track VINT (0x81 = track 1), s16 ts RELATIVE to the
     // enclosing Cluster's Timestamp (the spec shape — a demuxer places
     // the frame at cluster_ts + block_ts), flags
     def blockBody(f: Int, base: Int): Array[Byte] =
-      Array(0x81.toByte) ++ beN((f - base) * 40L, 2) ++
-        Array(0x00.toByte) ++ frames(f)
+      written(_.be(0x81, 1).be((f - base) * 40L, 2).be(0, 1).bytes(frames(f)))
     def blockEl(f: Int, base: Int): Array[Byte] =
       if (f == 1) // second frame: BlockGroup{Block} shape
-        el(0xA0L, 1, el(0xA1L, 1, blockBody(f, base)))
-      else el(0xA3L, 1, blockBody(f, base)) // SimpleBlock
+        el(0xA0L, el(0xA1L, blockBody(f, base)))
+      else el(0xA3L, blockBody(f, base)) // SimpleBlock
     def cluster(fs: Seq[Int]): Array[Byte] =
-      el(0x1F43B675L, 4,
-        el(0xE7L, 1, beN(fs.head * 40L, 2)) ++   // Cluster Timestamp
+      el(0x1F43B675L,
+        el(0xE7L, written(_.be(fs.head * 40L, 2))) ++   // Cluster Timestamp
           fs.map(blockEl(_, fs.head)).reduce(_ ++ _))
     val clusters =
       if (nf <= 2) cluster(0 until nf)
       else cluster(0 until 2) ++ cluster(2 until nf)
-    ebml ++ el(0x18538067L, 4, info ++ tracks ++ clusters)
+    ebml ++ el(0x18538067L, info ++ el(0x1654AE6BL, track) ++ clusters)
   }
 
   private def notMkv(p: Array[Byte]): Boolean =
-    p.length < 4 || (p(0) & 0xff) != 0x1a || (p(1) & 0xff) != 0x45 ||
-      (p(2) & 0xff) != 0xdf || (p(3) & 0xff) != 0xa3
+    tag(p, 0) != 0x1a45dfa3
 
   /** REAL Matroska Motion-JPEG demux — the EBML walk of [[mkvHeader]]
-    * extended to the data path: Segment → Tracks finds the track
-    * NUMBERS whose CodecID starts with V_MJPEG, then every Cluster's
-    * SimpleBlock (and BlockGroup→Block) whose track-number VINT matches
-    * yields its frame bytes (block header = track VINT + 2-byte
+    * ([[ebmlElements]]) extended to the data path: Segment → Tracks finds
+    * the track NUMBERS whose CodecID starts with V_MJPEG, then every
+    * Cluster's SimpleBlock (and BlockGroup→Block) whose track-number VINT
+    * matches yields its frame bytes (block header = track VINT + 2-byte
     * relative timestamp + flags; laced blocks — flag bits 0x06 — are
     * skipped, the fixture never laces and a demuxer must not guess
     * frame boundaries it cannot read). Feeds the bundled JPEG reader,
     * as [[mp4JpegFrames]] does for MP4. */
   def mkvJpegFrames(p: Array[Byte]): IndexedSeq[Array[Byte]] = {
     if (notMkv(p)) return IndexedSeq.empty
-    def vintLen(b: Int): Int =
-      if (b == 0) -1 else Integer.numberOfLeadingZeros(b) - 23
-    def uint(b0: Int, n: Int): Long = {
-      var v = 0L; var k = 0
-      while (k < n) { v = (v << 8) | (p(b0 + k) & 0xffL); k += 1 }
-      v
-    }
-    def readId(i: Int, limit: Int): Option[(Long, Int)] = {
-      if (i >= limit) return None
-      val len = vintLen(p(i) & 0xff)
-      if (len < 1 || len > 4 || i + len > limit) None
-      else Some((uint(i, len), len))
-    }
-    def readSize(i: Int, limit: Int): Option[(Long, Int, Boolean)] = {
-      if (i >= limit) return None
-      val len = vintLen(p(i) & 0xff)
-      if (len < 1 || len > 8 || i + len > limit) return None
-      var v = (p(i) & 0xffL) & ((1L << (8 - len)) - 1)
-      var k = 1
-      while (k < len) { v = (v << 8) | (p(i + k) & 0xffL); k += 1 }
-      Some((v, len, v == (1L << (7 * len)) - 1))
-    }
-    def children(i0: Int, limit: Int)(f: (Long, Int, Int) => Unit): Unit = {
-      var i = i0
-      while (i < limit) {
-        readId(i, limit) match {
-          case None => i = limit
-          case Some((id, idLen)) =>
-            readSize(i + idLen, limit) match {
-              case None => i = limit
-              case Some((sz, szLen, unknown)) =>
-                val b0 = i + idLen + szLen
-                if (!unknown && sz > limit - b0) i = limit
-                else {
-                  val b1 = if (unknown) limit else (b0 + sz).toInt
-                  f(id, b0, b1)
-                  i = b1
-                }
-            }
-        }
-      }
-    }
     val mjpegTracks = scala.collection.mutable.Set.empty[Long]
     val out = IndexedSeq.newBuilder[Array[Byte]]
     // block body in [s, e): track VINT, s16 rel-ts, flags, frame bytes
-    def block(s: Int, e: Int): Unit = {
-      if (s >= e) return
-      val tl = vintLen(p(s) & 0xff)
-      if (tl < 1 || tl > 8 || s + tl + 3 > e) return
-      val track = uint(s, tl) & ((1L << (7 * tl)) - 1)
-      val flags = p(s + tl + 2) & 0xff
-      if (mjpegTracks(track) && (flags & 0x06) == 0)
-        out += java.util.Arrays.copyOfRange(p, s + tl + 3, e)
+    def block(s: Long, e: Long): Unit = {
+      val tl = vintLen(u8(p, s))
+      if (s < e && tl >= 1 && s + tl + 3 <= e &&
+          mjpegTracks(uint(p, s, tl, le = false) & ((1L << (7 * tl)) - 1)) &&
+          (u8(p, s + tl + 2) & 0x06) == 0)
+        out += java.util.Arrays.copyOfRange(p, (s + tl + 3).toInt, e.toInt)
     }
-    def walkSegment(b0: Int, b1: Int): Unit = children(b0, b1) {
+    def walkSegment(b0: Long, b1: Long): Unit = ebmlElements(p, b0, b1) {
       (id, s, e) =>
         if (id == 0x1654AE6BL) // Tracks
-          children(s, e) { (cid, cs, ce) =>
+          ebmlElements(p, s, e) { (cid, cs, ce) =>
             if (cid == 0xAEL) { // TrackEntry
               var num = -1L
               var codec: String = null
-              children(cs, ce) { (tid, ts, te) =>
-                if (tid == 0xD7L && num < 0) num = uint(ts, te - ts)
+              ebmlElements(p, cs, ce) { (tid, ts, te) =>
+                if (tid == 0xD7L && num < 0)
+                  num = uint(p, ts, te - ts, le = false)
                 else if (tid == 0x86L && codec == null)
-                  codec = new String(p, ts, te - ts, "US-ASCII")
+                  codec = ascii(p, ts, te)
               }
               if (num > 0 && codec != null && codec.startsWith("V_MJPEG"))
                 mjpegTracks += num
             }
           }
         else if (id == 0x1F43B675L) // Cluster
-          children(s, e) { (cid, cs, ce) =>
+          ebmlElements(p, s, e) { (cid, cs, ce) =>
             if (cid == 0xA3L) block(cs, ce) // SimpleBlock
             else if (cid == 0xA0L) // BlockGroup
-              children(cs, ce) { (gid, gs, ge) =>
+              ebmlElements(p, cs, ce) { (gid, gs, ge) =>
                 if (gid == 0xA1L) block(gs, ge) // Block
               }
           }
     }
-    children(0, p.length) { (id, s, e) =>
+    ebmlElements(p, 0, p.length) { (id, s, e) =>
       if (id == 0x18538067L) walkSegment(s, e)
     }
     out.result()
@@ -1177,43 +1116,32 @@ object Binary {
       : (String, Long, Long, Long, Long) = {
     val bad = ("unknown", -1L, -1L, -1L, -1L)
     if (p.length < 8) return bad
-    val order = new String(p.slice(0, 2), "US-ASCII")
+    val order = ascii(p, 0, 2)
     val little = order == "II"
     if (!little && order != "MM") return bad
-    def u16(i: Int): Long =
-      if (i + 2 > p.length) -1L
-      else if (little) (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8)
-      else ((p(i) & 0xffL) << 8) | (p(i + 1) & 0xffL)
-    def u32(i: Int): Long =
-      if (i + 4 > p.length) -1L
-      else if (little) (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-      else ((p(i) & 0xffL) << 24) | ((p(i + 1) & 0xffL) << 16) |
-        ((p(i + 2) & 0xffL) << 8) | (p(i + 3) & 0xffL)
-    if (u16(2) != 42L) return bad
+    if (uint(p, 2, 2, little) != 42L) return bad
     var width, height, orient = -1L
     var nPages = 0L
-    var ifd = u32(4)
+    var ifd = uint(p, 4, 4, little)
     var first = true
     // cycle/ runaway guard: a chain longer than 64 IFDs in a metadata
     // blob is malformed by construction
     while (ifd > 0 && ifd + 2 <= p.length && nPages < 64) {
       nPages += 1
-      val n = u16(ifd.toInt)
-      if (n < 0) return bad
-      val entries = ifd.toInt + 2
+      val n = uint(p, ifd, 2, little)
+      val entries = ifd + 2
       if (first) {
         var k = 0
         while (k < n) {
           val e = entries + 12 * k
           if (e + 12 <= p.length) {
-            val tag = u16(e)
-            val typ = u16(e + 2)
+            val tag = uint(p, e, 2, little)
+            val typ = uint(p, e + 2, 2, little)
             // SHORT (3) value left-justified in the value field; LONG
             // (4) fills it — both inline for count 1
             val v =
-              if (typ == 3L) u16(e + 8)
-              else if (typ == 4L) u32(e + 8)
+              if (typ == 3L) uint(p, e + 8, 2, little)
+              else if (typ == 4L) uint(p, e + 8, 4, little)
               else -1L
             if (tag == 256L && width < 0) width = v
             else if (tag == 257L && height < 0) height = v
@@ -1223,7 +1151,7 @@ object Binary {
         }
         first = false
       }
-      val next = u32(entries + 12 * n.toInt)
+      val next = uint(p, entries + 12 * n, 4, little)
       ifd = if (next == ifd) -1L else next
     }
     if (nPages == 0) bad
@@ -1239,36 +1167,27 @@ object Binary {
     * orientation = 1 + id%8, pages = 1 + (id%3==0). */
   def makeTiff(docId: Long): Array[Byte] = {
     val little = docId % 2 == 0
-    def b16(v: Long): Array[Byte] =
-      if (little) Array(v.toByte, (v >> 8).toByte)
-      else Array((v >> 8).toByte, v.toByte)
-    def b32(v: Long): Array[Byte] =
-      if (little) Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte,
-        (v >> 24).toByte)
-      else Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte,
-        v.toByte)
-    def entryShort(tag: Long, v: Long): Array[Byte] =
-      b16(tag) ++ b16(3) ++ b32(1) ++ b16(v) ++ b16(0)
-    def entryLong(tag: Long, v: Long): Array[Byte] =
-      b16(tag) ++ b16(4) ++ b32(1) ++ b32(v)
-    val w = 100 + docId % 50
-    val h = 80 + docId % 40
-    val orient = 1 + docId % 8
+    val o = new Writer
+    def int(v: Long, n: Int): Writer = if (little) o.le(v, n) else o.be(v, n)
+    def entryShort(tag: Long, v: Long): Unit = {
+      int(tag, 2); int(3, 2); int(1, 4); int(v, 2); int(0, 2)
+    }
+    def entryLong(tag: Long, v: Long): Unit = {
+      int(tag, 2); int(4, 2); int(1, 4); int(v, 4)
+    }
     val twoPages = docId % 3 == 0
-    val header = (if (little) "II" else "MM").getBytes("US-ASCII") ++
-      b16(42) ++ b32(8)
+    o.ascii(if (little) "II" else "MM"); int(42, 2); int(8, 4)
     // IFD0 at offset 8: 3 entries + next pointer
-    val ifd0Entries = entryLong(256, w) ++ entryShort(257, h) ++
-      entryShort(274, orient)
-    val ifd0Len = 2 + 3 * 12 + 4
-    val ifd1Off = if (twoPages) 8L + ifd0Len else 0L
-    val ifd0 = b16(3) ++ ifd0Entries ++ b32(ifd1Off)
-    val ifd1 =
-      if (twoPages)
-        // page 2: one entry (its own dims stay unread — first-wins)
-        b16(1) ++ entryLong(256, w / 2) ++ b32(0)
-      else Array.empty[Byte]
-    header ++ ifd0 ++ ifd1
+    int(3, 2)
+    entryLong(256, 100 + docId % 50)
+    entryShort(257, 80 + docId % 40)
+    entryShort(274, 1 + docId % 8)
+    int(if (twoPages) 8L + 2 + 3 * 12 + 4 else 0L, 4)
+    if (twoPages) {
+      // page 2: one entry (its own dims stay unread — first-wins)
+      int(1, 2); entryLong(256, (100 + docId % 50) / 2); int(0, 4)
+    }
+    o.result
   }
 
   /** [[tiffHeader]] over a payload Dataset — typed map, Tungsten
@@ -1297,31 +1216,25 @@ object Binary {
     * malformed bytes yield (−1, …). */
   def flacHeader(p: Array[Byte]): (Long, Long, Long, Long, Long, Long) = {
     val bad = (-1L, -1L, -1L, -1L, -1L, -1L)
-    if (p.length < 8 ||
-        new String(p.slice(0, 4), "US-ASCII") != "fLaC") return bad
+    if (p.length < 8 || tag(p, 0) != fourcc("fLaC")) return bad
     var rate, chan, bits, total = -1L
     var nBlocks = 0L
-    var i = 4
+    var i = 4L
     var last = false
     while (!last && i + 4 <= p.length && nBlocks < 64) {
-      val h = p(i) & 0xff
+      val h = u8(p, i)
       last = (h & 0x80) != 0
-      val typ = h & 0x7f
-      val len = ((p(i + 1) & 0xffL) << 16) | ((p(i + 2) & 0xffL) << 8) |
-        (p(i + 3) & 0xffL)
+      val len = u24be(p, i + 1)
       if (i + 4 + len > p.length) return bad // truncated mid-block
       nBlocks += 1
-      if (typ == 0 && rate < 0 && len >= 34) {
-        val b = i + 4
-        var u = 0L
-        var k = 0
-        while (k < 8) { u = (u << 8) | (p(b + 10 + k) & 0xffL); k += 1 }
+      if ((h & 0x7f) == 0 && rate < 0 && len >= 34) {
+        val u = u64be(p, i + 4 + 10)
         rate = u >>> 44
         chan = ((u >>> 41) & 0x7L) + 1
         bits = ((u >>> 36) & 0x1fL) + 1
         total = u & ((1L << 36) - 1)
       }
-      i += 4 + len.toInt
+      i += 4 + len
     }
     if (rate <= 0) bad
     else (rate, chan, bits, total, total * 1000L / rate, nBlocks)
@@ -1340,23 +1253,17 @@ object Binary {
     val total = 10000L + docId % 9973 +
       (if (docId % 5 == 0) 1L << 33 else 0L)
     val nPad = (docId % 3).toInt
-    val u = (rate << 44) | ((chan - 1) << 41) | ((bits - 1) << 36) | total
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("fLaC".getBytes("US-ASCII"))
-    // STREAMINFO: type 0, 34 bytes; last-block flag iff no padding
-    out.write(if (nPad == 0) 0x80 else 0x00)
-    out.write(0); out.write(0); out.write(34)
-    // min/max block size 4096, min/max frame size unknown (0)
-    out.write(Array[Byte](0x10, 0, 0x10, 0, 0, 0, 0, 0, 0, 0))
-    var k = 7
-    while (k >= 0) { out.write(((u >>> (8 * k)) & 0xff).toInt); k -= 1 }
-    out.write(new Array[Byte](16)) // MD5 zeros
-    for (j <- 1 to nPad) {
-      out.write(if (j == nPad) 0x81 else 0x01) // PADDING, last on final
-      out.write(0); out.write(0); out.write(4)
-      out.write(new Array[Byte](4))
-    }
-    out.toByteArray
+    val o = new Writer().ascii("fLaC")
+    // STREAMINFO: type 0, 34 bytes; last-block flag iff no padding;
+    // min/max block size 4096, min/max frame size unknown (0), the packed
+    // rate/channels/bits/total, MD5 zeros
+    o.be(if (nPad == 0) 0x80 else 0x00, 1).be(34, 3)
+      .be(0x1000, 2).be(0x1000, 2).be(0, 3).be(0, 3)
+      .be((rate << 44) | ((chan - 1) << 41) | ((bits - 1) << 36) | total, 8)
+      .zeros(16)
+    for (j <- 1 to nPad) // PADDING, last on final
+      o.be(if (j == nPad) 0x81 else 0x01, 1).be(4, 3).zeros(4)
+    o.result
   }
 
   /** [[flacHeader]] over a payload Dataset — typed map, Tungsten
@@ -1395,43 +1302,37 @@ object Binary {
   def mp3Header(p: Array[Byte])
       : (Long, Long, Long, Long, Long, Long) = {
     val bad = (-1L, -1L, -1L, -1L, -1L, -1L)
-    var i = 0
+    var i = 0L
     var id3 = 0L
-    if (p.length >= 10 && p(0) == 'I' && p(1) == 'D' && p(2) == '3') {
+    if (p.length >= 10 && u24be(p, 0) == 0x494433L) { // "ID3"
       // syncsafe: 7 data bits per byte, high bit must be clear
-      var sz = 0L
-      var k = 6
-      while (k < 10) {
-        if ((p(k) & 0x80) != 0) return bad
-        sz = (sz << 7) | (p(k) & 0x7fL)
-        k += 1
-      }
-      id3 = 10L + sz
+      val sz = u32be(p, 6)
+      if ((sz & 0x80808080L) != 0) return bad
+      id3 = 10L + ((sz & 0x7f000000L) >> 3 | (sz & 0x7f0000L) >> 2 |
+        (sz & 0x7f00L) >> 1 | (sz & 0x7fL))
       if (id3 > p.length) return bad
-      i = id3.toInt
+      i = id3
     }
     var br, sr, chan = -1L
     var frames = 0L
     var ok = true
     while (ok && i + 4 <= p.length && frames < 10000) {
-      val b1 = p(i) & 0xff
-      val b2 = p(i + 1) & 0xff
-      if (b1 != 0xff || (b2 & 0xe0) != 0xe0) ok = false
+      val b2 = u8(p, i + 1)
+      if (u8(p, i) != 0xff || (b2 & 0xe0) != 0xe0) ok = false
       else if (((b2 >> 3) & 3) != 3 || ((b2 >> 1) & 3) != 1) ok = false
       else {
-        val b3 = p(i + 2) & 0xff
+        val b3 = u8(p, i + 2).toInt
         val thisBr = mp3Bitrates((b3 >> 4) & 15)
         val thisSr = mp3Rates((b3 >> 2) & 3)
-        val pad = (b3 >> 1) & 1
         if (thisBr < 0 || thisSr < 0) ok = false
         else {
           if (frames == 0) {
             br = thisBr; sr = thisSr
-            chan = if (((p(i + 3) & 0xff) >> 6) == 3) 1L else 2L
+            chan = if ((u8(p, i + 3) >> 6) == 3) 1L else 2L
           }
-          val len = 144000L * thisBr / thisSr + pad
+          val len = 144000L * thisBr / thisSr + ((b3 >> 1) & 1)
           if (len < 4 || i + len > p.length) ok = false
-          else { frames += 1; i += len.toInt }
+          else { frames += 1; i += len }
         }
       }
     }
@@ -1451,31 +1352,20 @@ object Binary {
   def makeMp3(docId: Long): Array[Byte] = {
     val brIdx = 1 + (docId % 14).toInt
     val srIdx = (docId % 3).toInt
-    val mode = (docId % 4).toInt
-    val nFrames = 5 + (docId % 20).toInt
     val tagLen = 10 + (docId % 200).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('I'); out.write('D'); out.write('3')
-    out.write(4); out.write(0); out.write(0) // v2.4, no flags
-    // syncsafe size, 7 bits per byte
-    out.write((tagLen >> 21) & 0x7f); out.write((tagLen >> 14) & 0x7f)
-    out.write((tagLen >> 7) & 0x7f); out.write(tagLen & 0x7f)
-    var j = 0
-    while (j < tagLen) { out.write(0xff); j += 1 } // sync-bait payload
-    val br = mp3Bitrates(brIdx)
-    val sr = mp3Rates(srIdx)
-    var f = 0
-    while (f < nFrames) {
+    // ID3 v2.4, no flags, syncsafe size (7 bits per byte), sync-bait
+    // payload
+    val o = new Writer().ascii("ID3").be(0x040000, 3)
+    for (k <- 3 to 0 by -1) o.be((tagLen >> (7 * k)) & 0x7f, 1)
+    o.bytes(Array.fill(tagLen)(0xff.toByte))
+    for (f <- 0 until 5 + (docId % 20).toInt) {
       val pad = ((docId + f) % 2).toInt
-      val len = (144000L * br / sr + pad).toInt
-      out.write(0xff); out.write(0xfb) // sync + MPEG-1 Layer III
-      out.write((brIdx << 4) | (srIdx << 2) | (pad << 1))
-      out.write(mode << 6)
-      var k = 4
-      while (k < len) { out.write(0); k += 1 }
-      f += 1
+      // sync + MPEG-1 Layer III, then bitrate/rate/padding, channel mode
+      o.be(0xfffb, 2).be((brIdx << 4) | (srIdx << 2) | (pad << 1), 1)
+        .be((docId % 4) << 6, 1)
+        .zeros(144000L * mp3Bitrates(brIdx) / mp3Rates(srIdx) + pad - 4)
     }
-    out.toByteArray
+    o.result
   }
 
   /** [[mp3Header]] over a payload Dataset — typed map, Tungsten
@@ -1504,32 +1394,24 @@ object Binary {
   def zipListing(p: Array[Byte])
       : (Long, Long, Long, Long, Long) = {
     val bad = (-1L, -1L, -1L, -1L, -1L)
-    def u16(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8)
-    def u32(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
     if (p.length < 22) return bad
     // EOCD backward scan (bounded by the 64 KiB max comment)
-    var e = p.length - 22
+    var e = p.length - 22L
     val stop = math.max(0, p.length - 22 - 65535)
-    while (e >= stop && !(p(e) == 0x50 && p(e + 1) == 0x4b &&
-      p(e + 2) == 0x05 && p(e + 3) == 0x06)) e -= 1
+    while (e >= stop && u32le(p, e) != 0x06054b50L) e -= 1
     if (e < stop) return bad
-    val n = u16(e + 10)
-    val cdOff = u32(e + 16)
-    if (cdOff < 0 || cdOff > p.length) return bad
-    var i = cdOff.toInt
+    val n = u16le(p, e + 10)
+    var i = u32le(p, e + 16)
+    if (i > p.length) return bad
     var k = 0L
     var comp, uncomp, defl, crc = 0L
     while (k < n) {
-      if (i + 46 > p.length || u32(i) != 0x02014b50L) return bad
-      val method = u16(i + 10)
-      crc += u32(i + 16)
-      comp += u32(i + 20)
-      uncomp += u32(i + 24)
-      if (method == 8L) defl += 1
-      i += 46 + (u16(i + 28) + u16(i + 30) + u16(i + 32)).toInt
+      if (i + 46 > p.length || u32le(p, i) != 0x02014b50L) return bad
+      crc += u32le(p, i + 16)
+      comp += u32le(p, i + 20)
+      uncomp += u32le(p, i + 24)
+      if (u16le(p, i + 10) == 8L) defl += 1
+      i += 46 + u16le(p, i + 28) + u16le(p, i + 30) + u16le(p, i + 32)
       k += 1
     }
     (n, comp, uncomp, defl, crc)
@@ -1543,41 +1425,33 @@ object Binary {
     * with PK bytes so only the true backward EOCD scan lands. */
   def makeZip(docId: Long): Array[Byte] = {
     val k = (1 + docId % 5).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    }
-    def w32(v: Long): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
-    val offs = new Array[Long](k)
+    val o = new Writer
     val names = (0 until k).map(j => s"member_${docId % 97}_$j.txt")
-    for (j <- 0 until k) {
-      offs(j) = out.size().toLong
+    // the fields a local header and its central entry share, from the
+    // method on: method, time, date, crc, sizes, name and extra lengths
+    def common(j: Int): Writer = {
       val comp = 10 + (docId + j) % 50
-      w32(0x04034b50L); w16(20); w16(0); w16((docId + j) % 2 * 8)
-      w16(0); w16(0) // time/date
-      w32(docId * 31 + j) // crc
-      w32(comp); w32(comp + (docId + j) % 7)
-      w16(names(j).length.toLong); w16(0)
-      out.write(names(j).getBytes("US-ASCII"))
-      out.write(new Array[Byte](comp.toInt)) // payload (zeros)
+      o.le((docId + j) % 2 * 8, 2).le(0, 2).le(0, 2).le(docId * 31 + j, 4)
+        .le(comp, 4).le(comp + (docId + j) % 7, 4).le(names(j).length, 2)
+        .le(0, 2)
     }
-    val cdOff = out.size().toLong
+    val offs = for (j <- 0 until k) yield {
+      val off = o.size
+      o.le(0x04034b50L, 4).le(20, 2).le(0, 2)
+      common(j)
+      o.ascii(names(j)).zeros(10 + (docId + j) % 50) // payload (zeros)
+      off
+    }
+    val cdOff = o.size
     for (j <- 0 until k) {
-      val comp = 10 + (docId + j) % 50
-      w32(0x02014b50L); w16(20); w16(20); w16(0)
-      w16((docId + j) % 2 * 8); w16(0); w16(0)
-      w32(docId * 31 + j)
-      w32(comp); w32(comp + (docId + j) % 7)
-      w16(names(j).length.toLong); w16(0); w16(0)
-      w16(0); w16(0); w32(0); w32(offs(j))
-      out.write(names(j).getBytes("US-ASCII"))
+      o.le(0x02014b50L, 4).le(20, 2).le(20, 2).le(0, 2)
+      common(j).le(0, 2).le(0, 2).le(0, 2).le(0, 4).le(offs(j), 4)
+        .ascii(names(j))
     }
-    val cdSize = out.size().toLong - cdOff
-    val comment = Array.fill((docId % 20).toInt)('P'.toByte)
-    w32(0x06054b50L); w16(0); w16(0); w16(k.toLong); w16(k.toLong)
-    w32(cdSize); w32(cdOff); w16(comment.length.toLong)
-    out.write(comment)
-    out.toByteArray
+    val cdSize = o.size - cdOff
+    o.le(0x06054b50L, 4).le(0, 2).le(0, 2).le(k, 2).le(k, 2).le(cdSize, 4)
+      .le(cdOff, 4).le(docId % 20, 2).ascii("P" * (docId % 20).toInt)
+      .result
   }
 
   /** [[zipListing]] over a payload Dataset — typed map, Tungsten
@@ -1592,9 +1466,9 @@ object Binary {
   final case class WebpMeta(doc_id: Long, variant: String, width: Long,
                             height: Long, has_alpha: Long)
 
-  /** REAL WebP metadata: the RIFF chunk walk ([[wavHeader]]'s discipline
-    * on the image container) to the first recognized bitstream chunk,
-    * covering all three container variants:
+  /** REAL WebP metadata: the RIFF chunk walk ([[riffChunks]]) to the
+    * first recognized bitstream chunk, covering all three container
+    * variants:
     *   - `VP8X` (extended): canvas dims as 24-bit LE minus-one fields,
     *     alpha from the flags byte (bit 4);
     *   - `VP8L` (lossless): 0x2F signature then 14+14-bit dims-minus-one
@@ -1604,49 +1478,25 @@ object Binary {
     * Reads only declared sizes; odd chunk sizes pad to even offsets.
     * Non-WebP or malformed bytes yield ("unknown", -1, -1, -1). */
   def webpHeader(p: Array[Byte]): (String, Long, Long, Long) = {
-    def u16le(i: Int): Long = ((p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)).toLong
-    def u24le(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) | ((p(i + 2) & 0xffL) << 16)
-    def u32le(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
-    val bad = ("unknown", -1L, -1L, -1L)
-    if (p.length < 12 || tag(0) != "RIFF" || tag(8) != "WEBP") bad
-    else {
-      var i = 12
-      var out = bad
-      while (i + 8 <= p.length && out._1 == "unknown") {
-        val id = tag(i)
-        val sz = u32le(i + 4)
-        val b = i + 8 // chunk body offset
-        if (id == "VP8X" && sz >= 10 && b + 10 <= p.length) {
-          val alpha = ((p(b) >> 4) & 1).toLong
-          out = ("vp8x", u24le(b + 4) + 1, u24le(b + 7) + 1, alpha)
-        } else if (id == "VP8L" && sz >= 5 && b + 5 <= p.length &&
-            (p(b) & 0xff) == 0x2f) {
-          val bits = u32le(b + 1)
+    var out = ("unknown", -1L, -1L, -1L)
+    if (riff(p, "WEBP"))
+      riffChunks(p, 12, p.length) { (t, b, sz) =>
+        if (t == fourcc("VP8X") && sz >= 10 && b + 10 <= p.length)
+          out = ("vp8x", u24le(p, b + 4) + 1, u24le(p, b + 7) + 1,
+            (u8(p, b) >> 4) & 1)
+        else if (t == fourcc("VP8L") && sz >= 5 && b + 5 <= p.length &&
+            u8(p, b) == 0x2f) {
+          val bits = u32le(p, b + 1)
           out = ("vp8l", (bits & 0x3fff) + 1, ((bits >> 14) & 0x3fff) + 1,
             (bits >> 28) & 1)
-        } else if (id == "VP8 " && sz >= 10 && b + 10 <= p.length &&
-            (p(b + 3) & 0xff) == 0x9d && (p(b + 4) & 0xff) == 0x01 &&
-            (p(b + 5) & 0xff) == 0x2a) {
-          out = ("vp8", u16le(b + 6) & 0x3fff, u16le(b + 8) & 0x3fff, 0L)
-        }
-        // advance in Long space: a malformed giant size can't overflow
-        // Int and re-enter the buffer
-        val next = i.toLong + 8L + sz + (sz & 1L)
-        i = if (next > p.length) p.length else next.toInt
+        } else if (t == fourcc("VP8 ") && sz >= 10 && b + 10 <= p.length &&
+            u24be(p, b + 3) == 0x9d012aL)
+          out = ("vp8", u16le(p, b + 6) & 0x3fff, u16le(p, b + 8) & 0x3fff, 0L)
+        out._1 == "unknown"
       }
-      out
-    }
+    out
   }
 
-  /** Deterministic header-only WebP ([[makeWav]]'s discipline on the
-    * image container): variant cycles vp8x/vp8l/vp8 by doc_id % 3,
-    * width = 16 + id % 301, height = 16 + id % 211, alpha = 1 - id % 2
-    * (lossy vp8 carries no alpha). Every field a closed form of doc_id
-    * so the oracle recomputes it arithmetically. */
   /** [[makeWebp]]'s closed-form dimension formulas, shared VERBATIM
     * with the m11 oracle SQL (the st11WithinSec/t18Merges/p11Seed
     * shared-constant discipline): width = base + id % wMod, height =
@@ -1655,30 +1505,30 @@ object Binary {
   private[graft] val WebpWMod = 301L
   private[graft] val WebpHMod = 211L
 
+  /** Deterministic header-only WebP ([[makeWav]]'s discipline on the
+    * image container): variant cycles vp8x/vp8l/vp8 by doc_id % 3,
+    * width = 16 + id % 301, height = 16 + id % 211, alpha = 1 - id % 2
+    * (lossy vp8 carries no alpha). Every field a closed form of doc_id
+    * so the oracle recomputes it arithmetically. */
   def makeWebp(docId: Long): Array[Byte] = {
-    def le16(v: Long) = Array(v.toByte, (v >> 8).toByte)
-    def le24(v: Long) = Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte)
-    def le32(v: Long) =
-      Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-    def fourcc(s: String) = s.getBytes("US-ASCII")
     val w = WebpDimBase + docId % WebpWMod
     val h = WebpDimBase + docId % WebpHMod
     val alpha = 1L - docId % 2
-    val body: Array[Byte] = (docId % 3) match {
-      case 0 =>
-        fourcc("VP8X") ++ le32(10) ++
-          Array((alpha << 4).toByte, 0.toByte, 0.toByte, 0.toByte) ++
-          le24(w - 1) ++ le24(h - 1)
-      case 1 =>
-        val bits = (w - 1) | ((h - 1) << 14) | (alpha << 28)
-        fourcc("VP8L") ++ le32(5) ++ (Array(0x2f.toByte) ++ le32(bits)) ++
-          Array(0.toByte) // odd size 5 pads to even
-      case _ =>
-        fourcc("VP8 ") ++ le32(10) ++
-          Array(0.toByte, 0.toByte, 0.toByte, 0x9d.toByte, 0x01.toByte,
-            0x2a.toByte) ++ le16(w) ++ le16(h)
-    }
-    fourcc("RIFF") ++ le32(4 + body.length) ++ fourcc("WEBP") ++ body
+    riffChunk("RIFF", written(_.ascii("WEBP")), (docId % 3) match {
+      case 0 => riffChunk("VP8X",
+        written(_.be(alpha << 4, 1).zeros(3).le(w - 1, 3).le(h - 1, 3)))
+      case 1 => riffChunk("VP8L", written(_.be(0x2f, 1)
+        .le((w - 1) | ((h - 1) << 14) | (alpha << 28), 4)))
+      case _ => riffChunk("VP8 ",
+        written(_.zeros(3).be(0x9d012a, 3).le(w, 2).le(h, 2)))
+    })
+  }
+
+  /** A RIFF chunk: tag, 32-bit little-endian body size, the body, and a
+    * pad byte after an odd-sized body. */
+  private def riffChunk(id: String, body: Array[Byte]*): Array[Byte] = {
+    val n = body.map(_.length).sum
+    written(_.ascii(id).le(n, 4).bytes(body: _*).zeros(n & 1))
   }
 
   /** [[webpHeader]] over a payload Dataset — typed map, Tungsten
@@ -2056,8 +1906,8 @@ object Binary {
     }
   }
 
-  /** Deterministic VIDEO file: a real RIFF/AVI container (the same chunk
-    * grammar [[wavHeader]] walks) carrying a Motion-PNG ('MPNG') video
+  /** Deterministic VIDEO file: a real RIFF/AVI container (the chunk
+    * grammar [[riffChunks]] walks) carrying a Motion-PNG ('MPNG') video
     * stream — 2 + doc_id%3 frames of (5 + doc_id%6) × (5 + doc_id%4) RGB
     * pixels, frame f's pixel (x,y) = ((doc_id + 17f + x + y) % 256,
     * (doc_id + 17f + 2x + y) % 256, (doc_id + 17f + x + 2y) % 256). The
@@ -2097,78 +1947,53 @@ object Binary {
     * ([[makeRealAvi]], [[makeSceneAvi]]). */
   private def aviContainer(w: Int, h: Int,
                            frames: Seq[Array[Byte]]): Array[Byte] = {
-    val nFrames = frames.length
-    def fourcc(s: String) = s.getBytes("US-ASCII")
-    def le32(v: Int) = Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte,
-      (v >> 24).toByte)
-    def chunk(id: String, body: Array[Byte]): Array[Byte] = {
-      val pad = if (body.length % 2 == 1) Array(0.toByte) else Array[Byte]()
-      fourcc(id) ++ le32(body.length) ++ body ++ pad
-    }
-    def list(kind: String, body: Array[Byte]): Array[Byte] =
-      chunk("LIST", fourcc(kind) ++ body)
-    val avih = le32(100000) ++ le32(0) ++ le32(0) ++ le32(0) ++
-      le32(nFrames) ++ le32(0) ++ le32(1) ++ le32(0) ++
-      le32(w) ++ le32(h) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
-    val strh = fourcc("vids") ++ fourcc("MPNG") ++ le32(0) ++ le32(0) ++
-      le32(0) ++ le32(1) ++ le32(10) ++ le32(0) ++ le32(nFrames) ++
-      le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
-    val strf = le32(40) ++ le32(w) ++ le32(h) ++
-      Array[Byte](1, 0, 24, 0) ++ fourcc("MPNG") ++
-      le32(w * h * 3) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0)
-    val hdrl = list("hdrl",
-      chunk("avih", avih) ++
-        list("strl", chunk("strh", strh) ++ chunk("strf", strf)))
-    val movi = list("movi",
-      frames.map(f => chunk("00dc", f)).reduce(_ ++ _))
-    val body = fourcc("AVI ") ++ hdrl ++ movi
-    fourcc("RIFF") ++ le32(body.length) ++ body
+    def list(kind: String, body: Array[Byte]*): Array[Byte] =
+      riffChunk("LIST", written(_.ascii(kind)) +: body: _*)
+    val avih = written(o => Seq(100000, 0, 0, 0, frames.length, 0, 1, 0, w,
+      h, 0, 0, 0, 0).foldLeft(o)(_.le(_, 4)))
+    val strh = written(o => Seq(0, 0, 0, 1, 10, 0, frames.length, 0, 0, 0, 0,
+      0).foldLeft(o.ascii("vidsMPNG"))(_.le(_, 4)))
+    val strf = written(_.le(40, 4).le(w, 4).le(h, 4).le(1, 2).le(24, 2)
+      .ascii("MPNG").le(w * h * 3, 4).zeros(16))
+    riffChunk("RIFF", written(_.ascii("AVI ")),
+      list("hdrl", riffChunk("avih", avih),
+        list("strl", riffChunk("strh", strh), riffChunk("strf", strf))),
+      list("movi", frames.map(riffChunk("00dc", _)): _*))
   }
 
-  /** REAL video demux: walk a RIFF/AVI container's chunk list (the same
-    * byte discipline as [[wavHeader]]) to the `movi` LIST and return the
-    * raw codec payload of every video frame chunk (00dc/00db). Pure byte
-    * arithmetic — no codecs; whether the PAYLOAD is then decodable is the
-    * codec's business ([[makeRealAvi]] uses lossless Motion-PNG, which
-    * `javax.imageio` reads). Multi-stream containers return ONLY the
-    * first video stream encountered (chunks share its `NNdc`/`NNdb`
-    * stream prefix) — interleaving a second stream's frames into one
-    * flat sequence would corrupt frame indexes downstream. Non-AVI or
-    * malformed bytes yield no frames. */
+  /** REAL video demux: walk a RIFF/AVI container's chunk list (the
+    * [[riffChunks]] walk of [[wavHeader]]) to the `movi` LIST and return
+    * the raw codec payload of every video frame chunk (00dc/00db). Pure
+    * byte arithmetic — no codecs; whether the PAYLOAD is then decodable
+    * is the codec's business ([[makeRealAvi]] uses lossless Motion-PNG,
+    * which `javax.imageio` reads). Only chunks whose whole body is
+    * present count: the first that runs past its LIST (or the file)
+    * ends that walk. Multi-stream containers return ONLY the first video
+    * stream encountered (chunks share its `NNdc`/`NNdb` stream prefix) —
+    * interleaving a second stream's frames into one flat sequence would
+    * corrupt frame indexes downstream. Non-AVI or malformed bytes yield
+    * no frames. */
   def aviFrames(p: Array[Byte]): IndexedSeq[Array[Byte]] = {
-    def u32le(i: Int): Long =
-      (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8) |
-        ((p(i + 2) & 0xffL) << 16) | ((p(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String = new String(p.slice(i, i + 4), "US-ASCII")
-    if (p.length < 12 || tag(0) != "RIFF" || tag(8) != "AVI ")
-      return IndexedSeq.empty
     val out = IndexedSeq.newBuilder[Array[Byte]]
     var stream: String = null // first video stream's 2-char prefix
-    var i = 12
-    while (i + 8 <= p.length) {
-      val sz = u32le(i + 4)
-      if (sz > Int.MaxValue - 16 || i + 8 + sz > p.length) i = p.length
-      else {
-        if (tag(i) == "LIST" && sz >= 4 && tag(i + 8) == "movi") {
-          var j = i + 12
-          val end = i + 8 + sz.toInt
-          while (j + 8 <= end) {
-            val ssz = u32le(j + 4)
-            if (ssz > Int.MaxValue - 16 || j + 8 + ssz > end) j = end
-            else {
-              val sid = tag(j)
-              if (sid.endsWith("dc") || sid.endsWith("db")) {
-                if (stream == null) stream = sid.substring(0, 2)
-                if (sid.startsWith(stream))
-                  out += p.slice(j + 8, j + 8 + ssz.toInt)
-              }
-              j += 8 + ssz.toInt + (ssz.toInt & 1)
+    if (riff(p, "AVI "))
+      riffChunks(p, 12, p.length) { (t, b, sz) =>
+        val whole = b + sz <= p.length
+        if (whole && t == fourcc("LIST") && sz >= 4 &&
+            tag(p, b) == fourcc("movi"))
+          riffChunks(p, b + 4, b + sz) { (_, fb, fsz) =>
+            val whole = fb + fsz <= b + sz
+            val sid = if (whole) ascii(p, fb - 8, fb - 4) else ""
+            if (sid.endsWith("dc") || sid.endsWith("db")) {
+              if (stream == null) stream = sid.substring(0, 2)
+              if (sid.startsWith(stream))
+                out += java.util.Arrays.copyOfRange(p, fb.toInt,
+                  (fb + fsz).toInt)
             }
+            whole
           }
-        }
-        i += 8 + sz.toInt + (sz.toInt & 1)
+        whole
       }
-    }
     out.result()
   }
 
@@ -2177,10 +2002,7 @@ object Binary {
     * broken chunk walk yields zero frames instead: the walker stops at
     * the first malformed size, which is all the information the bytes
     * offer). */
-  private def notAvi(p: Array[Byte]): Boolean =
-    p.length < 12 ||
-      new String(p.slice(0, 4), "US-ASCII") != "RIFF" ||
-      new String(p.slice(8, 12), "US-ASCII") != "AVI "
+  private def notAvi(p: Array[Byte]): Boolean = !riff(p, "AVI ")
 
   /** RIFF/AVI frame stats: [[aviFrames]] demux → decode → channel sums
     * in one row-local pass; frame payloads are the container's own codec
@@ -2417,14 +2239,9 @@ object Binary {
       w.u(0L, 1)      // vui_parameters_present_flag
       w.nalBytes
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def nal(refIdc: Int, typ: Int, rbsp: Array[Byte],
-            long: Boolean): Unit = {
-      if (long) out.write(0)
-      out.write(0); out.write(0); out.write(1)
-      out.write((refIdc << 5) | typ)
-      out.write(rbsp, 0, rbsp.length)
-    }
+    val o = new Writer
+    def nal(refIdc: Int, typ: Int, rbsp: Array[Byte], long: Boolean): Unit =
+      o.be(1, if (long) 4 else 3).be((refIdc << 5) | typ, 1).bytes(rbsp)
     nal(3, 7, sps, long = true)
     nal(3, 8, Array(0x40.toByte), long = false) // PPS (opaque rbsp)
     for (f <- 0 until nf) {
@@ -2433,7 +2250,7 @@ object Binary {
         (1 + (docId + f + j) % 255).toByte) // never 0x00
       nal(if (f == 0) 3 else 2, if (f == 0) 5 else 1, body, long = false)
     }
-    out.toByteArray
+    o.result
   }
 
   /** REAL H.264 Annex-B STRUCTURE metadata — the pure-byte walk a
@@ -2452,9 +2269,8 @@ object Binary {
     // must OPEN with a start code (leading zeros then 00 00 01)
     val first = {
       var i = 0
-      while (i < p.length && p(i) == 0) i += 1
-      if (i >= 2 && i + 1 <= p.length && i <= 3 &&
-        p(i) == 1) i + 1 else -1
+      while (u8(p, i) == 0) i += 1
+      if (i >= 2 && i <= 3 && u8(p, i) == 1) i + 1 else -1
     }
     if (first < 0) return bad
     // collect NAL payload ranges [start, end)
@@ -2462,8 +2278,8 @@ object Binary {
     var s = first
     var i = first
     while (i + 2 < p.length) {
-      if (p(i) == 0 && p(i + 1) == 0 && p(i + 2) == 1) {
-        val e = if (i > s && p(i - 1) == 0) i - 1 else i // 4-byte code
+      if (u24be(p, i) == 1L) {
+        val e = if (i > s && u8(p, i - 1) == 0) i - 1 else i // 4-byte code
         if (e > s) nals += ((s, e))
         s = i + 3; i += 3
       } else i += 1
@@ -2473,8 +2289,7 @@ object Binary {
     var nSps, nPps, nIdr, nSlices = 0L
     var width, height = -1L
     rs.foreach { case (b, e) =>
-      val typ = p(b) & 0x1f
-      typ match {
+      (u8(p, b) & 0x1f).toInt match {
         case 7 =>
           nSps += 1
           if (width < 0) {
@@ -2540,24 +2355,15 @@ object Binary {
     * fourcc VP90, LE dims, 30/1 timebase, frame count) + nf frames of
     * (u32 LE size, u64 LE pts, payload) with closed-form sizes. */
   def makeIvf(docId: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-    }
-    def w32(v: Long): Unit = { w16(v & 0xffff); w16((v >> 16) & 0xffff) }
     val nf = (1 + docId % 6).toInt
-    out.write("DKIF".getBytes("US-ASCII"))
-    w16(0); w16(32)
-    out.write("VP90".getBytes("US-ASCII"))
-    w16(64 + 8 * (docId % 9)); w16(48 + 8 * (docId % 7))
-    w32(30); w32(1)
-    w32(nf.toLong); w32(0)
+    val o = new Writer().ascii("DKIF").le(0, 2).le(32, 2).ascii("VP90")
+      .le(64 + 8 * (docId % 9), 2).le(48 + 8 * (docId % 7), 2)
+      .le(30, 4).le(1, 4).le(nf, 4).le(0, 4)
     for (f <- 0 until nf) {
       val sz = 12 + (docId + f) % 33
-      w32(sz); w32(f.toLong); w32(0) // pts as u64 LE (low, high)
-      out.write(new Array[Byte](sz.toInt))
+      o.le(sz, 4).le(f, 8).zeros(sz) // pts as u64 LE
     }
-    out.toByteArray
+    o.result
   }
 
   /** REAL IVF metadata — the container walk of VP8/VP9 elementary
@@ -2572,27 +2378,23 @@ object Binary {
   def ivfMeta(p: Array[Byte])
       : (String, Long, Long, Long, Long, Long, Long) = {
     val bad = ("unknown", -1L, -1L, -1L, -1L, -1L, -1L)
-    def u16(i: Int): Long = (p(i) & 0xffL) | ((p(i + 1) & 0xffL) << 8)
-    def u32(i: Int): Long = u16(i) | (u16(i + 2) << 16)
-    if (p.length < 32 ||
-      new String(p.slice(0, 4), "US-ASCII") != "DKIF") return bad
-    val hdrLen = u16(6).toInt
+    if (p.length < 32 || tag(p, 0) != fourcc("DKIF")) return bad
+    val hdrLen = u16le(p, 6)
     if (hdrLen < 32 || hdrLen > p.length) return bad
-    val codec = new String(p.slice(8, 12), "US-ASCII")
-    val (w, h) = (u16(12), u16(14))
-    val declared = u32(24)
+    val declared = u32le(p, 24)
     var i = hdrLen
     var walked = 0L; var bytes = 0L; var lastPts = -1L
     while (i + 12 <= p.length && walked < declared) {
-      val sz = u32(i)
-      if (sz < 0 || i + 12 + sz > p.length) i = p.length
+      val sz = u32le(p, i)
+      if (i + 12 + sz > p.length) i = p.length
       else {
         walked += 1; bytes += sz
-        lastPts = u32(i + 4) | (u32(i + 8) << 32)
-        i += 12 + sz.toInt
+        lastPts = u64le(p, i + 4)
+        i += 12 + sz
       }
     }
-    (codec, w, h, declared, walked, bytes, lastPts)
+    (ascii(p, 8, 12), u16le(p, 12), u16le(p, 14), declared, walked, bytes,
+      lastPts)
   }
 
   /** [[ivfMeta]] over a payload Dataset. */
@@ -2617,22 +2419,14 @@ object Binary {
     * reports structure and the walker does not validate checksums
     * (the makeZip closed-form-CRC convention). */
   def makeOgg(docId: Long): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit =
-      for (k <- 0 until 4) out.write(((v >> (8 * k)) & 0xff).toInt)
-    def w64(v: Long): Unit = { w32(v & 0xffffffffL); w32(v >>> 32) }
+    val o = new Writer
     def page(serial: Long, seq: Long, hdrType: Int, granule: Long,
         laces: Seq[Int]): Unit = {
-      out.write("OggS".getBytes("US-ASCII"))
-      out.write(0) // version
-      out.write(hdrType)
-      w64(granule)
-      w32(serial)
-      w32(seq)
-      w32(0) // CRC (unvalidated by the walker)
-      out.write(laces.length)
-      laces.foreach(out.write)
-      out.write(new Array[Byte](laces.sum))
+      // version 0, then the CRC written as 0 (unvalidated by the walker)
+      o.ascii("OggS").le(0, 1).le(hdrType, 1).le(granule, 8).le(serial, 4)
+        .le(seq, 4).le(0, 4).le(laces.length, 1)
+      laces.foreach(o.le(_, 1))
+      o.zeros(laces.sum)
     }
     val np = (1 + docId % 5).toInt
     for (f <- 0 until np) {
@@ -2646,7 +2440,7 @@ object Binary {
     if (docId % 7 == 0)
       page(docId % 100000 + 1, 0L, 0x06, 777L,
         Seq(((docId % 200)).toInt))
-    out.toByteArray
+    o.result
   }
 
   /** REAL Ogg metadata — the page walk of RFC 3533 multiplexed
@@ -2661,29 +2455,24 @@ object Binary {
   def oggMeta(p: Array[Byte])
       : (Long, Long, Long, Long, Long, Long, Long) = {
     val bad = (-1L, -1L, -1L, -1L, -1L, -1L, -1L)
-    def u32(i: Int): Long = (0 until 4)
-      .map(k => (p(i + k) & 0xffL) << (8 * k)).sum
-    def u64(i: Int): Long = u32(i) | (u32(i + 4) << 32)
-    if (p.length < 27 ||
-      new String(p.slice(0, 4), "US-ASCII") != "OggS") return bad
-    var i = 0
+    if (p.length < 27 || tag(p, 0) != fourcc("OggS")) return bad
+    var i = 0L
     var pages = 0L; var bos = 0L; var eos = 0L
     var packets = 0L; var bytes = 0L; var lastGranule = -1L
     val serials = scala.collection.mutable.HashSet.empty[Long]
-    while (i + 27 <= p.length &&
-      new String(p.slice(i, i + 4), "US-ASCII") == "OggS") {
-      val hdrType = p(i + 5) & 0xff
-      val granule = u64(i + 6)
-      val serial = u32(i + 14)
-      val nSegs = p(i + 26) & 0xff
+    while (i + 27 <= p.length && tag(p, i) == fourcc("OggS")) {
+      val hdrType = u8(p, i + 5)
+      val nSegs = u8(p, i + 26)
       if (i + 27 + nSegs > p.length) { i = p.length }
       else {
-        var body = 0
+        var body = 0L
         var pagePackets = 0L
-        for (k <- 0 until nSegs) {
-          val lace = p(i + 27 + k) & 0xff
+        var k = 0L
+        while (k < nSegs) {
+          val lace = u8(p, i + 27 + k)
           body += lace
           if (lace < 255) pagePackets += 1
+          k += 1
         }
         // a truncated body rejects the WHOLE page — its packet and
         // byte counts must not leak into the totals
@@ -2692,10 +2481,10 @@ object Binary {
           pages += 1
           if ((hdrType & 0x02) != 0) bos += 1
           if ((hdrType & 0x04) != 0) eos += 1
-          serials += serial
+          serials += u32le(p, i + 14)
           packets += pagePackets
           bytes += body
-          lastGranule = granule
+          lastGranule = u64le(p, i + 6)
           i += 27 + nSegs + body
         }
       }

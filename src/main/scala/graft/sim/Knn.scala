@@ -229,10 +229,6 @@ object Knn {
       .select(col("p"), col("i"), planeW(col("p"), col("i")).as("w"),
         lit(bits).as("bits"))
 
-  /** Single-table signature (back-compat helper; table 0 of [[srpBands]]). */
-  def lshSignatureExpr(vecCol: String, bits: Int): Column =
-    element_at(srpBands(vecCol, 1, bits), 1)
-
   /** Gate reference configuration for the kNN LSH family (s02/s04):
     * b=4, L=8, expected ~125-row buckets on the gate corpus — the
     * (baseBits, baseTables, targetBucket) anchor [[LshKnobs]] widens

@@ -539,6 +539,31 @@ class BinarySpec extends AnyFunSuite {
     assert(Binary.mp4Header(ftyp ++ large) == Binary.mp4Header(std))
   }
 
+  test("RIFF walks step over an odd-sized chunk and its pad byte " +
+      "(wavHeader, pcmStats, webpHeader)") {
+    // a 3-byte JUNK chunk, padded to 4, right after the RIFF header
+    val junk = "JUNK".getBytes("US-ASCII") ++
+      Array[Byte](3, 0, 0, 0, 1, 2, 3, 0)
+    def withJunk(p: Array[Byte]) = p.take(12) ++ junk ++ p.drop(12)
+    val wav = Binary.makeWavPcm(3L, 10)
+    assert(Binary.wavHeader(wav)._1 == "wav")
+    assert(Binary.wavHeader(withJunk(wav)) == Binary.wavHeader(wav))
+    assert(Binary.pcmStats(withJunk(wav)) == Binary.pcmStats(wav))
+    for (id <- 0L to 2L) { // vp8x, vp8l, vp8
+      val webp = Binary.makeWebp(id)
+      assert(Binary.webpHeader(withJunk(webp)) == Binary.webpHeader(webp))
+    }
+  }
+
+  test("mp4Header: a size-0 moov runs to the end of the file") {
+    val std = Binary.makeMp4(5L)
+    val toEnd = std.clone()
+    java.util.Arrays.fill(toEnd, 20, 24, 0.toByte) // moov's 32-bit size
+    assert(Binary.mp4Header(toEnd) == Binary.mp4Header(std))
+    assert(Binary.mp4Header(toEnd ++ new Array[Byte](8)) ==
+      Binary.mp4Header(std), "trailing bytes stay inside a size-0 moov")
+  }
+
   test("frameStatsFused == frameStats(sampleFrames) on GIFs, sentinels " +
       "included") {
     import spark.implicits._
@@ -946,6 +971,20 @@ class BinarySpec extends AnyFunSuite {
     }
   }
 
+  test("every scalar parser's outputs over maker blobs, all their prefixes " +
+      "and one-byte mutations, and seeded random blobs match the pinned " +
+      "digests; every maker's bytes for ids 0-49 match theirs") {
+    import BinaryRef._
+    val got = parserDigests(pinCorpus)
+    val makers = makerDigest(0L until 50L)
+    val report = (got.toSeq :+ ("makers" -> makers))
+      .map { case (n, d) => s"""    "$n" -> "$d",""" }.mkString("\n")
+    assert(got.keySet == ParserPins.keySet, report)
+    val off = ParserPins.keys.filter(n => got(n) != ParserPins(n)).toSeq
+    assert(off.isEmpty, s"${off.mkString(", ")} moved:\n$report")
+    assert(makers == MakerPin, s"maker bytes moved:\n$report")
+  }
+
   test("codec prologue leaves ImageIO on memory-cached streams — the " +
       "default file cache round-trips a temp file per decode/encode " +
       "(the r14 3-4x decode-gate regression class)") {
@@ -1122,6 +1161,116 @@ object BinaryRef {
         }
       }
     }
+
+  /** The 21 fixture makers, each a function of the doc id. */
+  val namedMakers: Seq[(String, Long => Array[Byte])] = Seq(
+    "makeWav" -> (id => Binary.makeWav(id, 100L + id)),
+    "makeWavPcm" -> (id => Binary.makeWavPcm(id, 50)),
+    "makeImage" -> Binary.makeImage, "makeMp4" -> Binary.makeMp4,
+    "makeMjpegMp4" -> Binary.makeMjpegMp4, "makeMkv" -> Binary.makeMkv,
+    "makeMjpegMkv" -> Binary.makeMjpegMkv, "makeTiff" -> Binary.makeTiff,
+    "makeFlac" -> Binary.makeFlac, "makeMp3" -> Binary.makeMp3,
+    "makeZip" -> Binary.makeZip, "makeWebp" -> Binary.makeWebp,
+    "makeRealPng" -> Binary.makeRealPng, "makeRealGif" -> Binary.makeRealGif,
+    "makeNoisePng" -> (id => Binary.makeNoisePng(id)),
+    "makeNoisePng/1" -> (id => Binary.makeNoisePng(id, variant = 1)),
+    "makeRealAvi" -> Binary.makeRealAvi, "makeSceneAvi" -> Binary.makeSceneAvi,
+    "makeH264" -> Binary.makeH264, "makeIvf" -> Binary.makeIvf,
+    "makeOgg" -> Binary.makeOgg)
+
+  /** The 16 scalar parsers, each output rendered as text: a tuple by its
+    * `toString`, a demuxer's frames by count and bytes, a throw by its
+    * exception class. */
+  val namedParsers: Seq[(String, Array[Byte] => Any)] = {
+    def frames(f: Array[Byte] => IndexedSeq[Array[Byte]]) =
+      (p: Array[Byte]) => f(p).map(java.util.HexFormat.of().formatHex(_))
+    Seq("imageHeader" -> Binary.imageHeader, "wavHeader" -> Binary.wavHeader,
+      "pcmStats" -> Binary.pcmStats, "mp4Header" -> Binary.mp4Header,
+      "mp4JpegFrames" -> frames(Binary.mp4JpegFrames),
+      "mkvHeader" -> Binary.mkvHeader,
+      "mkvJpegFrames" -> frames(Binary.mkvJpegFrames),
+      "tiffHeader" -> Binary.tiffHeader, "flacHeader" -> Binary.flacHeader,
+      "mp3Header" -> Binary.mp3Header, "zipListing" -> Binary.zipListing,
+      "webpHeader" -> Binary.webpHeader,
+      "aviFrames" -> frames(Binary.aviFrames), "h264Meta" -> Binary.h264Meta,
+      "ivfMeta" -> Binary.ivfMeta, "oggMeta" -> Binary.oggMeta)
+  }
+
+  /** The parser pin's inputs, in a fixed order: each maker's bytes for
+    * ids 0, 1, 2 and 5, then every prefix of them and every one-byte
+    * mutation (+1 and +0x80 at each offset); then seeded random blobs,
+    * bare and behind each format's magic. */
+  def pinCorpus: Iterator[Array[Byte]] = {
+    val made = for ((_, m) <- namedMakers; id <- Seq(0L, 1L, 2L, 5L))
+      yield m(id)
+    val derived = made.iterator.flatMap { p =>
+      Iterator.range(0, p.length + 1).map(p.take) ++
+        (for (i <- Iterator.range(0, p.length); d <- Iterator(1, 0x80))
+          yield { val m = p.clone(); m(i) = (m(i) + d).toByte; m })
+    }
+    val magics = Seq("", "RIFF\u0000\u0000\u0000\u0000WAVE",
+      "RIFF\u0000\u0000\u0000\u0000WEBP", "RIFF\u0000\u0000\u0000\u0000AVI ",
+      "\u0000\u0000\u0000\u0018ftyp", "\u001aE\u00df\u00a3", "II*\u0000",
+      "MM\u0000*", "fLaC", "ID3", "\u00ff\u00fb", "OggS", "DKIF",
+      "\u0000\u0000\u0000\u0001", "\u0089PNG\r\n\u001a\n", "\u00ff\u00d8",
+      "GIF8").map(_.getBytes("ISO-8859-1"))
+    val rnd = new scala.util.Random(11)
+    val random = for (m <- magics.iterator; _ <- Iterator.range(0, 200))
+      yield m ++ Array.fill(rnd.nextInt(160))(rnd.nextInt(256).toByte)
+    made.iterator ++ derived ++ random
+  }
+
+  private def sha256(update: java.security.MessageDigest => Unit): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    update(md)
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
+
+  /** SHA-256 of each parser's rendered outputs over `blobs`, one line per
+    * blob. */
+  def parserDigests(blobs: Iterator[Array[Byte]]): Map[String, String] = {
+    val mds = namedParsers.map(_ =>
+      java.security.MessageDigest.getInstance("SHA-256"))
+    for (p <- blobs; ((_, parse), md) <- namedParsers.zip(mds)) {
+      val out = try parse(p).toString
+        catch { case e: Exception => "!" + e.getClass.getName }
+      md.update((out + "\n").getBytes("UTF-8"))
+    }
+    namedParsers.map(_._1).zip(mds.map(md =>
+      java.util.HexFormat.of().formatHex(md.digest()))).toMap
+  }
+
+  /** SHA-256 of every maker's bytes for `ids`, each length-prefixed. */
+  def makerDigest(ids: Seq[Long]): String = sha256 { md =>
+    for ((_, m) <- namedMakers; id <- ids) {
+      val b = m(id)
+      md.update(s"${b.length}:".getBytes("UTF-8")); md.update(b)
+    }
+  }
+
+  /** [[parserDigests]] over [[pinCorpus]] and [[makerDigest]] over ids
+    * 0-49, recorded before the parsers moved onto the shared byte
+    * reader and walkers; the JPEG, PNG and GIF makers' bytes are those
+    * of the JDK 17 `javax.imageio` encoders. */
+  val ParserPins: Map[String, String] = Map(
+    "imageHeader" -> "45cfbe53bd3d9405a3bc751b50b41f68cd3a9ddcd98269d3546c80a217268c22",
+    "wavHeader" -> "5d58b78e74bc457d645825edcd217aca0a5b931959883c9ff89ebe7280cb5030",
+    "pcmStats" -> "9a73785870b2ed5ff8d88afcf90bdad16cfffc16f3d8c2f0857159e466c5e839",
+    "mp4Header" -> "b5a8a21f8f67303eba826bd1d25f3a4d6f20e60dccbf4f3a101d0b0a828ee12e",
+    "mp4JpegFrames" -> "5770d87d1f41d9ba0689a541559fec7c5d8a48b7a5c53ffbd25e8e4239cca75f",
+    "mkvHeader" -> "df521ab837c870038f34caf96b594ae2cb79b2b4498b4e2ae1e90df90e4ce112",
+    "mkvJpegFrames" -> "2370369aa21a28d384bfc74040d2a005bb791258d6e8d39bc55e036561686529",
+    "tiffHeader" -> "3f5a4abeca51cd829056941d25a96b27ff13b71336d79a82322a342400331fe3",
+    "flacHeader" -> "836a1c80e783b1f3adaa413b6230b17f5560c72224a86a8bd9e1ad684993aabe",
+    "mp3Header" -> "973af01f10ae984ff09e4baad50735f5f56ee1b632a43b9f092bceb9104ce0c9",
+    "zipListing" -> "13aa2ba132884778c3439773baa92589e15157379bd99c7cc0361527915cc5af",
+    "webpHeader" -> "ae72c46981995596a7ba17178f292100a6570118f954762bee8b6037a3afa6fb",
+    "aviFrames" -> "5a3ab553a89746aba95a72ab9d9b777dacc7cb52002af61bc9619c2d6a52eb30",
+    "h264Meta" -> "a6cdeedfbe2d54fcb7b692cdb269414d4e4207b6d966cff10032bc49dfbf5f25",
+    "ivfMeta" -> "d00723b593c8a52aa8e952bb64bed08e2b6b6f4521a07436ea5f9ca3faa7406a",
+    "oggMeta" -> "be7247727250810b6804b97868ebee18cce3f65507f7dee2d9918a4d45a47bc4")
+  val MakerPin =
+    "5df72be3efacb0ef9d3501e3cb122bd4e2e42f05c38b378efd7398a7ae11f3fb"
 
   def sceneCuts(r: Binary.PayloadRow, threshold: Long): Seq[Binary.SceneDelta] =
     if (notAvi(r.payload))

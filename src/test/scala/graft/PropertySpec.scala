@@ -182,80 +182,60 @@ class PropertySpec extends AnyFunSuite {
       Binary.wavHeader(wav.take(cut))
       Binary.imageHeader(wav.take(cut))
     }
+    // a chunk size that fits a signed Int but not the offset it is added
+    // to: RIFF/WAVE, a 4-byte JUNK chunk, then a JUNK chunk declaring
+    // 0x7FFFFFEF bytes (48 bytes in all) — one sentinel row, not a
+    // failed task
+    val le32 = (v: Int) => java.nio.ByteBuffer.allocate(4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+    val huge = "RIFF".getBytes("US-ASCII") ++ le32(40) ++
+      "WAVEJUNK".getBytes("US-ASCII") ++ le32(4) ++ new Array[Byte](4) ++
+      "JUNK".getBytes("US-ASCII") ++ le32(0x7fffffef) ++ new Array[Byte](16)
+    assert(huge.length == 48)
+    assert(Binary.wavHeader(huge) == (("unknown", -1L, -1L, -1L, -1L, -1L)))
+    // a 4-bit sample width: no whole bytes per sample to divide by
+    val nibble = wav.clone(); nibble(34) = 4
+    assert(Binary.wavHeader(nibble) == (("unknown", -1L, -1L, -1L, -1L, -1L)))
+    assert(Binary.pcmStats(huge) == ((-1L, -1L, -1L, -1L, -1L)))
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val ds = Seq(Binary.PayloadRow(3L, huge)).toDS()
+    assert(Binary.audioHeaders(ds).collect().toSeq ==
+      Seq(Binary.AudioHeader(3L, "unknown", -1L, -1L, -1L, -1L, -1L)))
+    assert(Binary.audioStatsOf(ds).collect().toSeq ==
+      Seq(Binary.AudioStats(3L, -1L, -1L, -1L, -1L, -1L)))
   }
 
   test("container walkers (mp4Header, mkvHeader) are total on arbitrary " +
       "and mutated bytes") {
     import graft.multimodal.Binary
+    // each walker with the maker of its format
+    val pairs: Seq[(Long => Array[Byte], Array[Byte] => Any)] = Seq(
+      (Binary.makeMp4, Binary.mp4Header), (Binary.makeMkv, Binary.mkvHeader),
+      (Binary.makeWebp, Binary.webpHeader),
+      (Binary.makeTiff, Binary.tiffHeader),
+      (Binary.makeFlac, Binary.flacHeader), (Binary.makeMp3, Binary.mp3Header),
+      (Binary.makeZip, Binary.zipListing), (Binary.makeOgg, Binary.oggMeta),
+      (Binary.makeWavPcm(_, 50), Binary.pcmStats),
+      (Binary.makeRealAvi, Binary.aviFrames),
+      (Binary.makeH264, Binary.h264Meta), (Binary.makeIvf, Binary.ivfMeta))
     val rng = new scala.util.Random(29)
     // pure fuzz: random blobs of every small length
     for (len <- 0 to 64; _ <- 1 to 5) {
       val p = Array.fill(len)(rng.nextInt(256).toByte)
-      Binary.mp4Header(p)
-      Binary.mkvHeader(p)
-      Binary.webpHeader(p)
-      Binary.tiffHeader(p)
-      Binary.flacHeader(p)
-      Binary.mp3Header(p)
-      Binary.zipListing(p)
-      Binary.h264Meta(p)
-      Binary.ivfMeta(p)
-      Binary.oggMeta(p)
+      pairs.foreach(_._2(p))
     }
     // structured fuzz: valid containers with one mutated byte — size
-    // fields, VINT markers, float widths, ids all get hit; walkers must
-    // degrade (possibly to "unknown"/garbage fields), never throw or
-    // read out of bounds
-    for (id <- Seq(0L, 1L, 5L, 6L)) {
-      val mp4 = Binary.makeMp4(id)
-      val mkv = Binary.makeMkv(id)
-      for (i <- mp4.indices; delta <- Seq(1, 0x80)) {
-        val m = mp4.clone(); m(i) = (m(i) + delta).toByte
-        Binary.mp4Header(m)
+    // fields, VINT markers, float widths, ids all get hit — then
+    // truncations at every length; walkers must degrade (possibly to
+    // "unknown"/garbage fields), never throw or read out of bounds
+    for (id <- Seq(0L, 1L, 5L, 6L); (make, parse) <- pairs) {
+      val valid = make(id)
+      for (i <- valid.indices; delta <- Seq(1, 0x80)) {
+        val m = valid.clone(); m(i) = (m(i) + delta).toByte
+        parse(m)
       }
-      for (i <- mkv.indices; delta <- Seq(1, 0x80)) {
-        val m = mkv.clone(); m(i) = (m(i) + delta).toByte
-        Binary.mkvHeader(m)
-      }
-      val webp = Binary.makeWebp(id)
-      for (i <- webp.indices; delta <- Seq(1, 0x80)) {
-        val m = webp.clone(); m(i) = (m(i) + delta).toByte
-        Binary.webpHeader(m)
-      }
-      val tiff = Binary.makeTiff(id)
-      for (i <- tiff.indices; delta <- Seq(1, 0x80)) {
-        val m = tiff.clone(); m(i) = (m(i) + delta).toByte
-        Binary.tiffHeader(m)
-      }
-      val flac = Binary.makeFlac(id)
-      for (i <- flac.indices; delta <- Seq(1, 0x80)) {
-        val m = flac.clone(); m(i) = (m(i) + delta).toByte
-        Binary.flacHeader(m)
-      }
-      val mp3 = Binary.makeMp3(id)
-      for (i <- mp3.indices; delta <- Seq(1, 0x80)) {
-        val m = mp3.clone(); m(i) = (m(i) + delta).toByte
-        Binary.mp3Header(m)
-      }
-      val zip = Binary.makeZip(id)
-      for (i <- zip.indices; delta <- Seq(1, 0x80)) {
-        val m = zip.clone(); m(i) = (m(i) + delta).toByte
-        Binary.zipListing(m)
-      }
-      val ogg = Binary.makeOgg(id)
-      for (i <- ogg.indices; delta <- Seq(1, 0x80)) {
-        val m = ogg.clone(); m(i) = (m(i) + delta).toByte
-        Binary.oggMeta(m)
-      }
-      // truncations at every length
-      for (cut <- 0 to mkv.length) Binary.mkvHeader(mkv.take(cut))
-      for (cut <- 0 to mp4.length) Binary.mp4Header(mp4.take(cut))
-      for (cut <- 0 to webp.length) Binary.webpHeader(webp.take(cut))
-      for (cut <- 0 to tiff.length) Binary.tiffHeader(tiff.take(cut))
-      for (cut <- 0 to flac.length) Binary.flacHeader(flac.take(cut))
-      for (cut <- 0 to mp3.length) Binary.mp3Header(mp3.take(cut))
-      for (cut <- 0 to zip.length) Binary.zipListing(zip.take(cut))
-      for (cut <- 0 to ogg.length) Binary.oggMeta(ogg.take(cut))
+      for (cut <- 0 to valid.length) parse(valid.take(cut))
     }
   }
 
