@@ -48,6 +48,41 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle entries with no query: $orphans")
   }
 
+  test("gate key set and every rendered oracle SQL match the pinned " +
+      "digest") {
+    // Pins what Verify dumps to oracle_sql.json, so moving a gate's plan
+    // or SQL between files cannot change a byte of it. The run id and the
+    // absolute model root differ per JVM and checkout: both are replaced
+    // by placeholders. A constant read before its object is initialized
+    // would render as `null` and move the digest.
+    val prop = "graft.gate.sfTag"
+    val saved = sys.props.get(prop)
+    sys.props(prop) = "sf0.01"
+    val sql =
+      try SparkEntry.oracleSql
+      finally saved match {
+        case Some(v) => sys.props(prop) = v
+        case None => sys.props -= prop
+      }
+    val root = java.util.regex.Pattern.quote(
+      new java.io.File("target/gate_models").getAbsolutePath)
+    val runPath = s"$root/sf0\\.01/[^/]+/".r
+    val keys = SparkEntry.queries.keySet.toSeq.sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def put(s: String): Unit =
+      md.update((s + "\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    keys.foreach(put)
+    for ((name, text) <- sql.toSeq.sortBy(_._1)) {
+      put(name)
+      put(runPath.replaceAllIn(text, "<MODELS>/sf0.01/<RUN>/"))
+    }
+    val digest = md.digest().map("%02x".format(_)).mkString
+    assert(keys.size == 182 && sql.size == 182)
+    assert(sql.values.count(runPath.findFirstIn(_).isDefined) >= 10)
+    assert(digest ==
+      "d8842420c0d8be260fdd64c5f473ef2688881b0f7fb669a2d3637b8a7e1f27d9")
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
