@@ -40,7 +40,7 @@ object Bench {
     val results = SparkEntry.querySubset.toSeq.sortBy(_._1)
       .flatMap { case (name, fn) =>
       graft.util.GateTimer.reset()
-      if (wantState) SparkEntry.stStateRows.clear()
+      if (wantState) gates.Shared.stStateRows.clear()
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -51,10 +51,10 @@ object Bench {
           failed += name
           false
         }
-      if (wantState && !SparkEntry.stStateRows.isEmpty) {
+      if (wantState && !gates.Shared.stStateRows.isEmpty) {
         import scala.jdk.CollectionConverters._
         stateRows(name) =
-          SparkEntry.stStateRows.values.asScala.map(_.longValue).max
+          gates.Shared.stStateRows.values.asScala.map(_.longValue).max
       }
       if (ok) Some((name, (System.nanoTime() - t0) / 1e9,
         graft.util.GateTimer.exportSeconds))

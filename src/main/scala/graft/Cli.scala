@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (after, until] ISO bounds — exclusive lower, inclusive upper, the
   * reference's dump_iter window. `init`/`empty`/`cleanup` are the
   * kcidb-db-init/-empty/-cleanup analogs over the parquet warehouse
-  * `load`/`merge` write (sources/Warehouse lifecycle). The session is
+  * `load`/`merge` write (sources/Warehouse lifecycle); `load` upserts
+  * into what the warehouse already holds. The session is
   * Verify/Bench's [[GraftSession]], so CLI results are the gate results.
   */
 object Cli {
@@ -67,17 +68,16 @@ object Cli {
         println(s"dump ($after, $until] -> $outDir")
         Some(df)
       case "load" :: path :: outDir :: rest if rest.size <= 1 =>
-        // kcidb-load: one report file (or same-shaped glob) into a
-        // per-type parquet warehouse
+        // kcidb-load: one report file (or same-shaped glob) upserted
+        // into a per-type parquet warehouse
         val types = rest.headOption.getOrElse("checkouts,builds,tests")
           .split(",").toSeq
         // absolute parent: a bare relative filename has null getParent,
         // which would NPE inside session() instead of reading the file
-        val rep = graft.sources.Reports.read(
-          session(new java.io.File(path).getAbsoluteFile.getParent),
-          path, types)
+        val s = session(new java.io.File(path).getAbsoluteFile.getParent)
+        val rep = graft.sources.Reports.read(s, path, types)
         rep.tables.foreach { case (t, df) =>
-          df.write.mode("overwrite").parquet(s"$outDir/$t")
+          graft.sources.Warehouse.load(s, outDir, t, df)
           println(s"$t (v${rep.version._1}.${rep.version._2}) " +
             s"-> $outDir/$t")
         }
@@ -98,7 +98,7 @@ object Cli {
         merged.values.headOption
       case "schemas" :: Nil =>
         // kcidb-db-schemas: the known schema-version lineage
-        SparkEntry.eventsSchematic.history
+        gates.QGates.eventsSchematic.history
           .foreach { case (ma, mi) => println(s"$ma.$mi") }
         None
       case "upgrade" :: sfDir :: outDir :: fromV :: Nil =>
@@ -106,12 +106,12 @@ object Cli {
         // latest via the inherit chain (Schematic.upgradeToLatest)
         val Array(ma, mi) = fromV.split("\\.")
         val s = session(sfDir)
-        val df = SparkEntry.eventsSchematic.upgradeToLatest(
+        val df = gates.QGates.eventsSchematic.upgradeToLatest(
           graft.sources.Tables.events(s, sfDir), (ma.toInt, mi.toInt))
         df.write.mode("overwrite").parquet(outDir)
         println(s"events v$fromV -> " +
-          s"v${SparkEntry.eventsSchematic.history.last._1}." +
-          s"${SparkEntry.eventsSchematic.history.last._2} -> $outDir")
+          s"v${gates.QGates.eventsSchematic.history.last._1}." +
+          s"${gates.QGates.eventsSchematic.history.last._2} -> $outDir")
         Some(df)
       case "purge" :: sfDir :: outDir :: beforeIso :: Nil =>
         // kcidb-db-purge: drop rows that arrived before the timestamp

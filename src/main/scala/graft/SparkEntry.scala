@@ -1,4439 +1,19 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.sources.Tables
-import graft.model.TestCatalog
-import graft.ingest.Loader
-import graft.operators.Rollups
-import graft.query.PatternQuery
-import graft.dedup.Dedup
-import graft.sim.Knn
-import graft.text.TextOps
-import graft.multimodal.Binary
-import graft.streaming.Streams
-import graft.util._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.gates.Gate
 
-/** Driver contract — one `queries` entry per operator in SURVEY.md §2, with
-  * a DuckDB-equivalent `oracleSql` for every SQL-expressible one.
-  *
-  * Determinism rules (see SURVEY.md §4): decimal-exact sums surfaced as
-  * doubles, no raw timestamps in outputs, explicit ORDER BY everywhere,
-  * aliases identical between Spark and SQL.
-  */
+/** Driver contract: one `queries` entry per operator in SURVEY.md §2, and
+  * for each the DuckDB SQL its output must hash-match. Both maps come from
+  * the one gate list in [[graft.gates.Gate.all]]. */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-  private def ev(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_summary_agg")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- core --
-
-  private def q01(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        moneySum(col("l_quantity")).as("sum_qty"),
-        moneySum(col("l_extendedprice")).as("sum_base_price"),
-        sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))
-          .cast("double").as("sum_disc_price"),
-        moneyAvg(col("l_quantity")).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  private def q02(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "orders")
-      .filter(col("o_orderstatus") === "F" && col("o_totalprice") > 250000)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-      .orderBy("o_orderkey")
-
-  private def q03(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") < lit("1997-06-01").cast("timestamp"))
-    val l = t(s, dir, "lineitem")
-      .filter(col("l_shipdate") > lit("1997-06-01").cast("timestamp"))
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate").cast("date").as("odate"))
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey").asc)
-      .limit(10)
-  }
-
-  private def q04(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val roots = Seq(21L, 22L, 23L).toDF("c_custkey")
-    val m = TestCatalog.catalog.childrenClosure(s, dir,
-      Map("customer" -> roots))
-    val cust = m("customer").select(
-      lit("customer").as("object_type"),
-      col("c_custkey").cast("string").as("id"),
-      lit("").as("parent_id"))
-    val ords = m("orders").select(
-      lit("orders").as("object_type"),
-      col("o_orderkey").cast("string").as("id"),
-      col("o_custkey").cast("string").as("parent_id"))
-    val lis = m("lineitem").select(
-      lit("lineitem").as("object_type"),
-      concat(col("l_orderkey").cast("string"), lit("_"),
-        col("l_linenumber").cast("string")).as("id"),
-      col("l_orderkey").cast("string").as("parent_id"))
-    cust.union(ords).union(lis).orderBy("object_type", "id")
-  }
-
-  private def q05(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val roots = Seq(1L, 2L, 3L, 4L, 5L).toDF("o_orderkey")
-    val m = TestCatalog.catalog.parentsClosure(s, dir, Map("orders" -> roots))
-    def part(tn: String, id: Column): DataFrame =
-      m(tn).select(lit(tn).as("object_type"), id.cast("string").as("id"))
-    part("orders", col("o_orderkey"))
-      .union(part("customer", col("c_custkey")))
-      .union(part("nation", col("n_nationkey")))
-      .union(part("region", col("r_regionkey")))
-      .orderBy("object_type", "id")
-  }
-
-  private def q06(s: SparkSession, dir: String): DataFrame = {
-    val log = ev(s, dir)
-      .withColumn("v", when(col("value") >= 50, col("value")))
-      .withColumn("ts_sec", epochSec(col("ts")))
-    Loader.upsertMerge(log, Seq("user_id", "event_type"),
-        Seq(col("ts"), col("event_id")), Seq("v", "props"),
-        maxFields = Seq("ts_sec")) // kcidb conflict_func MAX on _timestamp
-      .orderBy("user_id", "event_type")
-  }
-
-  private def q07(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir).select("event_id", "user_id", "event_type", "value")
-    val a = e.filter(col("user_id") < 20)
-    val b = e.filter(col("user_id") >= 10 && col("user_id") < 30)
-    Loader.mergeDatasets(Seq(a, b)).orderBy("event_id")
-  }
-
-  private def q08(s: SparkSession, dir: String): DataFrame =
-    Tables.names.map { n =>
-      t(s, dir, n).groupBy().agg(count(lit(1)).as("n"))
-        .select(lit(n).as("object_type"), col("n"))
-    }.reduce(_ union _).orderBy("object_type")
-
-  private def q09(s: SparkSession, dir: String): DataFrame =
-    Loader.dumpWindow(ev(s, dir), col("ts"),
-        lit("2024-01-10 00:00:00").cast("timestamp"),
-        lit("2024-01-20 00:00:00").cast("timestamp"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-        epochSec(col("ts")).as("ts_sec"))
-      .orderBy("event_id")
-
-  /** Batched dump (dump_iter objects_per_report, db/abstract.py:192-244):
-    * the q09 window chunked into 500-object reports keyed by the unique
-    * event_id order. */
-  private def q31(s: SparkSession, dir: String): DataFrame =
-    Loader.dumpBatched(
-        ev(s, dir).select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("ts")),
-        col("ts"),
-        lit("2024-01-10 00:00:00").cast("timestamp"),
-        lit("2024-01-20 00:00:00").cast("timestamp"),
-        orderKey = Seq(col("event_id")), batchSize = 500)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), epochSec(col("ts")).as("ts_sec"), col("batch_id"))
-      .orderBy("event_id")
-
-  /** q31's batched dump with with_metadata=false (db/abstract.py:192-244):
-    * ts still DRIVES the (after, until] window and the batching is
-    * unchanged, but the metadata column is stripped from the projection —
-    * the reference's `_timestamp` contract. q31 is the with-metadata way;
-    * together they oracle-check the flag both ways. */
-  private def q34(s: SparkSession, dir: String): DataFrame =
-    Loader.dumpBatched(
-        ev(s, dir).select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("ts")),
-        col("ts"),
-        lit("2024-01-10 00:00:00").cast("timestamp"),
-        lit("2024-01-20 00:00:00").cast("timestamp"),
-        orderKey = Seq(col("event_id")), batchSize = 500,
-        metaCols = Seq("ts"), withMetadata = false)
-      .orderBy("event_id")
-
-  private def q10(s: SparkSession, dir: String): DataFrame =
-    Loader.purge(ev(s, dir), col("ts"),
-        lit("2024-01-15 00:00:00").cast("timestamp"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), min(epochSec(col("ts"))).as("min_ts_sec"))
-      .orderBy("event_type")
-
-  private def q11(s: SparkSession, dir: String): DataFrame =
-    ev(s, dir).groupBy("event_type")
-      .agg(min(epochSec(col("ts"))).as("first_sec"),
-        max(epochSec(col("ts"))).as("last_sec"),
-        count(lit(1)).as("n"))
-      .orderBy("event_type")
-
-  private def q12(s: SparkSession, dir: String): DataFrame =
-    Rollups.latestPerKey(ev(s, dir), Seq("user_id"),
-        Seq(col("ts"), col("event_id")))
-      .select("user_id", "event_id", "event_type", "value")
-      .orderBy("user_id")
-
-  private def q13(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-      .join(broadcast(t(s, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")),
-        col("n_regionkey") === col("r_regionkey"))
-    c.rollup(col("r_name"), col("n_name"))
-      .agg(moneySum(col("c_acctbal")).as("total_bal"),
-        count(lit(1)).as("n_cust"))
-      .select(coalesce(col("r_name"), lit("(all)")).as("region_name"),
-        coalesce(col("n_name"), lit("(all)")).as("nation_name"),
-        col("total_bal"), col("n_cust"))
-      .orderBy("region_name", "nation_name")
-  }
-
-  private def q14(s: SparkSession, dir: String): DataFrame =
-    Rollups.statusPivot(t(s, dir, "orders"),
-        col("o_orderpriority"), "o_orderpriority",
-        col("o_orderstatus"), Seq("F" -> "n_f", "O" -> "n_o", "P" -> "n_p"))
-      .orderBy("o_orderpriority")
-
-  private def q15(s: SparkSession, dir: String): DataFrame =
-    Rollups.worstStatus(t(s, dir, "lineitem"), Seq("l_orderkey"),
-        col("l_returnflag"), Seq("R" -> 0, "A" -> 1, "N" -> 2))
-      .orderBy("l_orderkey")
-
-  private def q16(s: SparkSession, dir: String): DataFrame =
-    PatternQuery.run(s, dir, TestCatalog.catalog,
-        ">customer[21;22;23]>orders>lineitem#")("lineitem")
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber")
-
-  private def q17(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer")
-      .join(broadcast(t(s, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .groupBy("n_name", "c_mktsegment")
-      .agg(count(lit(1)).as("n"), moneySum(col("c_acctbal")).as("total_bal"))
-      .orderBy(col("n").desc, col("n_name").asc, col("c_mktsegment").asc)
-
-  /** Catalog-driven validation (orm/data.py:89-123): every required-field,
-    * format, and relation-orphan check is GENERATED from TestCatalog
-    * metadata; only domain value rules are passed as extras. */
-  private def q18(s: SparkSession, dir: String): DataFrame =
-    TestCatalog.catalog.validate(s, dir,
-      extra = Seq("customer_negative_acctbal" ->
-        t(s, dir, "customer").filter(col("c_acctbal") < 0)))
-
-  private def q19(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders").filter(
-      col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
-    val c = t(s, dir, "customer")
-    val su = t(s, dir, "supplier")
-    val n = t(s, dir, "nation")
-    val r = t(s, dir, "region").filter(col("r_name") === "ASIA")
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(c, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(su), col("l_suppkey") === col("s_suppkey") &&
-        col("s_nationkey") === col("c_nationkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("n_name")
-      .agg(sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name").asc)
-  }
-
-  private def q20(s: SparkSession, dir: String): DataFrame = {
-    val c = t(s, dir, "customer")
-    val o = t(s, dir, "orders")
-    def cnt(kind: String, df: DataFrame): DataFrame =
-      df.groupBy().agg(count(lit(1)).as("n"))
-        .select(lit(kind).as("kind"), col("n"))
-    cnt("with_orders",
-        c.join(o, col("c_custkey") === col("o_custkey"), "left_semi"))
-      .union(cnt("without_orders",
-        c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")))
-      .orderBy("kind")
-  }
-
-  private def q21(s: SparkSession, dir: String): DataFrame =
-    Rollups.topK(
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .groupBy("c_custkey", "c_name")
-        .agg(moneySum(col("o_totalprice")).as("total_spend"),
-          count(lit(1)).as("n_orders")),
-      Seq(col("total_spend").desc, col("c_custkey").asc), 20)
-
-  /** q22's (l_orderkey, l_linenumber) seeds, shared with the spec that
-    * asserts they exist in every /root/testdata/sf* lineitem. */
-  private[graft] val q22SeedIds = Seq("1" -> "3", "3" -> "2", "8" -> "2",
-    "12" -> "5", "13" -> "7")
-
-  /** Ultimate parents (`<*$` + `%` placeholder): the kcidb "root objects of
-    * these tests" query (orm/query.py STRING_DOC `>test%<*$`). From five
-    * lineitems, the dead-end ancestor types are region (via the
-    * customer/supplier spines) and part (side parent, childless upward). */
-  private def q22(s: SparkSession, dir: String): DataFrame = {
-    // Seed ids must exist in lineitem at every gate scale factor or the
-    // <*$ traversal is vacuous — PropertySpec("q22 seed ids exist at every
-    // generated scale factor") CHECKS this against the parquet itself.
-    val seedIds = q22SeedIds
-    val m = PatternQuery.run(s, dir, TestCatalog.catalog,
-      ">lineitem%<*$",
-      idLists = Seq(seedIds.map { case (ok, ln) => Seq(ok, ln) }))
-    m("region").select(lit("region").as("object_type"),
-        col("r_regionkey").cast("string").as("id"))
-      .union(m("part").select(lit("part").as("object_type"),
-        col("p_partkey").cast("string").as("id")))
-      .orderBy("object_type", "id")
-  }
-
-  /** Combined children+parents closure — the reference's main query entry
-    * point `query(ids, children=True, parents=True)`
-    * (/root/reference/kcidb/__init__.py:255-338). Pass order is faithful to
-    * the SQL generator (sqlite/v04_00.py:614-682): ancestors first, then
-    * descendants of the ACCUMULATED sets — so siblings under the matched
-    * objects' ancestors are included (the whole family tree). part is never
-    * reached: it only relates downward to lineitem, and no lineitem id is
-    * in the upward pass. */
-  private def q29(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val roots = Seq(1L, 2L, 3L).toDF("o_orderkey")
-    val m = TestCatalog.catalog.closure(s, dir, Map("orders" -> roots),
-      parents = true, children = true)
-    def part(tn: String, id: Column): DataFrame =
-      m(tn).select(lit(tn).as("object_type"), id.cast("string").as("id"))
-    part("region", col("r_regionkey"))
-      .union(part("nation", col("n_nationkey")))
-      .union(part("customer", col("c_custkey")))
-      .union(part("supplier", col("s_suppkey")))
-      .union(part("orders", col("o_orderkey")))
-      .union(part("lineitem", concat(col("l_orderkey").cast("string"),
-        lit("_"), col("l_linenumber").cast("string"))))
-      .orderBy("object_type", "id")
-  }
-
-  /** Multi-pattern union — `kcidb-query` with repeated patterns
-    * (orm/__init__.py:841-851): three patterns (one via a `%` placeholder
-    * list) whose per-type matches union; customers 21∩nation-1 and the
-    * repeated customer-21 orders prove cross-pattern dedup. */
-  private def q30(s: SparkSession, dir: String): DataFrame = {
-    val m = PatternQuery.runAll(s, dir, TestCatalog.catalog,
-      Seq(">customer[21;22;23]>orders#",
-        ">nation[1]>customer#",
-        ">customer%>orders#"),
-      idLists = Seq(Seq(Seq("21"), Seq("30"))))
-    m("orders").select(lit("orders").as("object_type"),
-        col("o_orderkey").cast("string").as("id"))
-      .union(m("customer").select(lit("customer").as("object_type"),
-        col("c_custkey").cast("string").as("id")))
-      .orderBy("object_type", "id")
-  }
-
-  /** All descendants (`>*#` — the downward twin of q22's `<*$`,
-    * orm/query.py:459-481 `_expand` in the children direction): from three
-    * customers, every object the children-direction wildcard expands into —
-    * their orders and those orders' lineitems. `#` matches all types
-    * TRAVERSED by the `*` step (the seed customers carry no match symbol,
-    * so they stay out of the result, exactly like q22's seed lineitems). */
-  private def q36(s: SparkSession, dir: String): DataFrame = {
-    val m = PatternQuery.run(s, dir, TestCatalog.catalog,
-      ">customer[21;22;23]>*#")
-    m("orders").select(lit("orders").as("object_type"),
-        col("o_orderkey").cast("string").as("id"))
-      .union(m("lineitem").select(lit("lineitem").as("object_type"),
-        concat(col("l_orderkey").cast("string"), lit("_"),
-          col("l_linenumber").cast("string")).as("id")))
-      .orderBy("object_type", "id")
-  }
-
-  /** Dot-path test-tree rollup (kcidb `Node`, oo/__init__.py:277-408): a
-    * 3-level path synthesized from events (type.userbucket.eventbucket),
-    * status from the measure; every node of the tree gets the worst status
-    * and size of its subtree. */
-  private def q23(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val path = concat(col("event_type"), lit(".u"),
-      pmod(col("user_id"), lit(8)).cast("string"), lit(".e"),
-      pmod(col("event_id"), lit(4)).cast("string"))
-    val status = when(col("value") >= 80, "PASS")
-      .when(col("value") >= 20, "SKIP").otherwise("FAIL")
-    Rollups.pathRollup(e, path, status,
-        Seq("FAIL" -> 0, "SKIP" -> 1, "PASS" -> 2))
-      .orderBy("node_path")
-  }
-
-  /** Subscription → notification matching (kcidb monitor/__init__.py:7,
-    * output.py:109): three subscriptions over the loaded object graph, each
-    * a pushdown-able predicate; notification ids are the deterministic
-    * spool dedup keys. */
-  /** q24's gate subscriptions, shared with the spec that asserts the
-    * streaming spool (dedupStream) emits exactly this batch set. */
-  private[graft] val q24Subscriptions = Seq(
-    graft.monitor.Subscription("failed_big_orders", "orders",
-      col("o_orderstatus") === "F" && col("o_totalprice") > 200000,
-      Seq("o_orderkey"),
-      subject = "Order {o_orderkey} failed ({o_orderpriority})",
-      body = "Order {o_orderkey} by customer {o_custkey} with priority " +
-        "{o_orderpriority} failed in status {o_orderstatus}."),
-    graft.monitor.Subscription("negative_balance", "customer",
-      col("c_acctbal") < -900, Seq("c_custkey"),
-      subject = "Customer {c_name} balance went negative",
-      body = "Customer {c_custkey} ({c_name}) of nation {c_nationkey}, " +
-        "segment {c_mktsegment}, has a negative account balance."),
-    graft.monitor.Subscription("returned_full_qty", "lineitem",
-      col("l_returnflag") === "R" && col("l_quantity") >= 50,
-      Seq("l_orderkey", "l_linenumber"),
-      subject = "Full-quantity return on order {l_orderkey} " +
-        "line {l_linenumber}",
-      body = "Lineitem {l_orderkey}_{l_linenumber} of part {l_partkey} " +
-        "came back with return flag {l_returnflag} in status " +
-        "{l_linestatus}."))
-
-  /** The oracle-side WHERE string for each q24 subscription, in
-    * [[q24Subscriptions]] order. Parsed by BOTH engines: DuckDB runs it
-    * in the oracle SQL and SubscriptionsSpec filters the same table with
-    * `expr(...)` vs the Column predicate and asserts identical row sets —
-    * so a predicate edited on only one side fails the suite instead of
-    * drifting (the predicates stay ANSI-portable by this contract). */
-  private[graft] val q24PredicateSql: Seq[String] = Seq(
-    "o_orderstatus = 'F' AND o_totalprice > 200000",
-    "c_acctbal < -900",
-    "l_returnflag = 'R' AND l_quantity >= 50")
-
-  /** q24 runs REAL micro-batch streaming through the rendered
-    * notification spool — the reference's full monitor loop
-    * (__init__.py:493-531 load → match → notify) as a streaming query:
-    * all three object tables arrive as file-source streams, matching +
-    * rendering are the stateless per-row projections of
-    * [[graft.monitor.Subscriptions.matchRendered]] (they run unchanged
-    * on streaming frames), and the spool's register-once guarantee is
-    * per-id state (`dedupRenderedStream`, st03's machinery class).
-    * Exact parity with the batch `matchNotificationsRendered` oracle:
-    * the one-shot AvailableNow replay is a single micro-batch, so each
-    * id's group carries every duplicate rendering and keeps the same
-    * min (subject, body_md5) pair the batch min-of-struct keeps. */
-  private def q24(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val rendered = graft.monitor.Subscriptions.matchRendered(
-        name => streamTable(s, dir, name), q24Subscriptions)
-      .as[graft.monitor.Subscriptions.NotifRendered]
-    runStreamOnce(s,
-        graft.monitor.Subscriptions.dedupRenderedStream(rendered).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("notification_id")
-  }
-
-  /** Conditional/loop notification rendering — the reference's Jinja2
-    * summary-with-children shape (templates/test.j2:11-52
-    * `container_summary`: per-container status counts, a capped ordered
-    * child list with an "..." overflow line gated on children existing,
-    * and a sorted-distinct "By" line; checkout_description.txt.j2's
-    * `max_list_len = 5`) rendered RELATIONALLY: one groupBy per
-    * container (order ← checkout, lineitems ← tests), the loop as
-    * [[graft.monitor.Subscriptions.cappedListAgg]] (collect → sort →
-    * slice → array_join, codegen'd), the `{% if %}` as a `when` on the
-    * child count, the subject through q24's `{col}` interpolation +
-    * clip discipline. One shuffle total; body width is bounded by the
-    * cap, never by fan-out. The DuckDB oracle re-renders the exact
-    * string with string_agg over a row_number()-capped subquery. */
-  private def q47(s: SparkSession, dir: String): DataFrame = {
-    import graft.monitor.Subscriptions
-    val ind = "        "
-    val li = t(s, dir, "lineitem")
-    val agg = li.groupBy(col("l_orderkey"))
-      .agg(
-        sum(when(col("l_linestatus") === "F", 1L).otherwise(0L)).as("n_f"),
-        sum(when(col("l_linestatus") === "O", 1L).otherwise(0L)).as("n_o"),
-        sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_r"),
-        Subscriptions.cappedListAgg(
-          concat(lit("line "), col("l_linenumber").cast("string"),
-            lit(" part "), col("l_partkey").cast("string")),
-          col("l_linenumber"), col("l_returnflag") === "R",
-          maxListLen = 5, indent = ind).as("ret_list"),
-        Subscriptions.distinctJoinAgg(col("l_suppkey"), ", ").as("by_line"))
-    agg.select(
-        col("l_orderkey").as("o_orderkey"),
-        Subscriptions.renderSubject(
-          "Order {l_orderkey}: {n_r} returned of {n_f}F/{n_o}O")
-          .as("subject"),
-        Subscriptions.renderBodyCol(concat(
-          lit("ORDER "), col("l_orderkey").cast("string"),
-          lit("\n    Status\n" + ind + "F: "), col("n_f").cast("string"),
-          lit("  O: "), col("n_o").cast("string"),
-          when(col("n_r") > 0,
-            concat(lit("\n    Returns\n"), col("ret_list")))
-            .otherwise(lit("")),
-          lit("\n    By\n" + ind), col("by_line"))).as("body"))
-      .orderBy("o_orderkey")
-  }
-
-  /** Array-of-struct JSON extraction — the reference's `get-url-stats`
-    * OBJECT_SPECS shape (get-url-stats:12-26: `output_files: [{url}]`
-    * arrays of {name, url} objects next to scalar url fields, extracted
-    * per dotted path, deduped on (path, url), then aggregated): the one
-    * reference extraction pattern q26's scalar paths don't cover. The
-    * JSON documents are CONSTRUCTED deterministically inside the query
-    * (one per order, its lineitems as the files array — props carries
-    * only scalar JSON in testdata), then round-tripped through the real
-    * extraction operator: `from_json` with an array<struct> schema +
-    * array-field explode — all codegen'd expressions, no UDF. The
-    * DuckDB oracle computes the same aggregate RELATIONALLY (no JSON),
-    * so a wrong parse/explode hash-mismatches: the round trip itself is
-    * what's verified. */
-  private def q39(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    val ext = element_at(array(lit("log"), lit("json"), lit("tar")),
-      (col("l_linenumber") % 3 + 1).cast("int"))
-    val fileUrl = concat(lit("https://files.example.org/"),
-      col("l_orderkey").cast("string"), lit("/"),
-      col("l_linenumber").cast("string"), lit("/part_"),
-      col("l_partkey").cast("string"), lit("."), ext)
-    val docs = li
-      .select(col("l_orderkey"),
-        struct(
-          concat(lit("part_"), col("l_partkey").cast("string"), lit("."),
-            ext).as("name"),
-          fileUrl.as("url")).as("f"))
-      .groupBy("l_orderkey")
-      .agg(collect_list(col("f")).as("output_files"))
-      .select(to_json(struct(
-        col("l_orderkey").as("id"),
-        concat(lit("https://cfg.example.org/"),
-          col("l_orderkey").cast("string"), lit(".cfg")).as("config_url"),
-        col("output_files"))).as("doc"))
-    val parsed = docs.select(from_json(col("doc"),
-      org.apache.spark.sql.types.DataType.fromDDL(
-        "id BIGINT, config_url STRING, " +
-          "output_files ARRAY<STRUCT<name: STRING, url: STRING>>"))
-      .as("o"))
-    // Single extraction pass: a union of two selects over `parsed` would
-    // plan the whole doc-construction subtree TWICE (one scan + one
-    // collect_list shuffle per branch — 2× the work at any scale), so
-    // both dotted paths are emitted from one row-local projection and
-    // one explode instead.
-    parsed
-      .select(explode(concat(
-        transform(col("o.output_files.url"),
-          u => struct(lit("orders.output_files.url").as("path"),
-            u.as("url"))),
-        array(struct(lit("orders.config_url").as("path"),
-          col("o.config_url").as("url"))))).as("e"))
-      .select(col("e.path").as("path"), col("e.url").as("url"))
-      .distinct()
-      .select(col("path"),
-        regexp_extract(col("url"), "\\.([a-z0-9]+)$", 1).as("ext"),
-        length(col("url")).as("len"))
-      .groupBy("path", "ext")
-      .agg(count(lit(1)).as("n_urls"),
-        sum(col("len")).cast("bigint").as("total_len"))
-      .orderBy("path", "ext")
-  }
-
-  /** The events-table schema lineage used by q25 and its spec: v1.0 is the
-    * raw legacy layout; v2.0 adds a derived `status` enum (kcidb v05's
-    * valid→status migration, sqlite/v05_00.py:176-184); v2.1 adds `score`
-    * with COALESCE carry-forward (a renamed measure keeping any value
-    * already present). */
-  private[graft] def eventsSchematic: graft.ingest.Schematic =
-    new graft.ingest.Schematic("events", Seq(
-      (1, 0) -> identity[DataFrame] _,
-      (2, 0) -> ((df: DataFrame) => df.withColumn("status",
-        when(col("event_type") === "error", "FAIL")
-          .when(col("value") >= 50, "PASS").otherwise("SKIP"))),
-      (2, 1) -> ((df: DataFrame) => df.withColumn("score",
-        if (df.columns.contains("score"))
-          coalesce(col("score"), col("value"))
-        else col("value")))))
-
-  /** Schema-version upgrade chain (kcidb db/schematic.py lineage): legacy
-    * v1 rows upgrade through v2.0 → v2.1 and merge with natively-v2.1 data
-    * (which carries its own score) — the COALESCE carry-forward keeps
-    * native values and backfills upgraded ones. */
-  private def q25(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val sch = eventsSchematic
-    val legacy = e.filter(col("user_id") < 15)
-      .select("event_id", "user_id", "event_type", "value")
-    val native = e.filter(col("user_id") >= 15)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"),
-        when(col("event_type") === "error", "FAIL")
-          .when(col("value") >= 50, "PASS").otherwise("SKIP").as("status"),
-        (col("value") * 2).as("score"))
-    sch.upgradeToLatest(legacy, from = (1, 0))
-      .unionByName(sch.upgradeToLatest(native, from = (2, 1)))
-      .select("event_id", "user_id", "event_type", "status", "score")
-      .orderBy("event_id")
-  }
-
-  /** Freeform JSON field extraction + aggregation — kcidb objects carry
-    * `misc` JSON blobs queried by path (orm data fields). get_json_object
-    * stays inside codegen; at scale the JSON parse happens once per row in
-    * the scan projection. */
-  private def q26(s: SparkSession, dir: String): DataFrame = {
-    val k = get_json_object(col("props"), "$.k").cast("long")
-    ev(s, dir).groupBy("event_type")
-      .agg(sum(k).as("sum_k"),
-        count(when(k > 50, lit(1))).as("n_high"))
-      .orderBy("event_type")
-  }
-
-  /** As-of join: each purchase event picks up the latest preceding 'view'
-    * event's value for the same user (point-in-time state lookup). One
-    * shuffle on user_id via the union+window formulation — no range join.
-    * Right rows deduped to one per (user, ts) so ties are well-defined in
-    * both engines. */
-  private def q27(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val views = e.filter(col("event_type") === "view")
-      .groupBy("user_id", "ts").agg(max(col("value")).as("view_value"))
-    graft.operators.AsOf.asOfJoin(purchases, views, Seq("user_id"),
-        leftTs = col("ts"), rightTs = col("ts"),
-        payload = Seq("view_value"))
-      .select(col("event_id"), col("user_id"), col("asof_view_value"))
-      .orderBy("event_id")
-  }
-
-  /** Banded range join: each click paired with every signup whose 1-hour
-    * activation window contains it (cross-user concurrency analytic). The
-    * bucket id is the equi-join key — never a BETWEEN nested loop. */
-  private def q28(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir)
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"),
-        epochSec(col("ts")).as("click_sec"))
-    val signups = e.filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"),
-        epochSec(col("ts")).as("lo_sec"),
-        (epochSec(col("ts")) + 3600).as("hi_sec"))
-    graft.operators.RangeJoin.bandedRangeJoin(
-        clicks, col("click_sec"), signups, col("lo_sec"), col("hi_sec"),
-        bucketWidth = 3600)
-      .groupBy("click_id")
-      .agg(count(lit(1)).as("n_active_signups"))
-      .orderBy("click_id")
-  }
-
-  /** Salted fact⋈dim join under key skew ([[graft.operators.SkewJoin]]):
-    * the manual fallback when AQE skew splitting can't see the skew. The
-    * oracle is the PLAIN join — salting must be result-invariant. */
-  private def q32(s: SparkSession, dir: String): DataFrame = {
-    val facts = t(s, dir, "lineitem").select(
-      col("l_suppkey").as("suppkey"),
-      (dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount"))))
-        .as("disc_price"))
-    val dims = t(s, dir, "supplier")
-      .select(col("s_suppkey").as("suppkey"), col("s_nationkey"))
-    graft.operators.SkewJoin.saltedJoin(facts, dims, Seq("suppkey"),
-        saltFactor = 8, saltCols = Seq("disc_price"))
-      .join(broadcast(t(s, dir, "nation")),
-        col("s_nationkey") === col("n_nationkey"))
-      .groupBy("n_name")
-      .agg(sum(col("disc_price")).cast("double").as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("n_name")
-  }
-
-  // ------------------------------------------------- LLM pipeline ops --
-
-  /** Recurring-join warehouse path (SURVEY §5 co-location): both fact
-    * sides written bucketed+sorted by the join key, so the recurring
-    * fact⋈fact join zips pre-shuffled buckets — WarehouseSpec asserts the
-    * join contributes ZERO exchanges (the only one left is the final
-    * aggregate's). Bucketing is physical layout, not semantics, so the
-    * oracle is the same join over the plain parquet. The write happens
-    * per call — the honest cost model of the one-time bucketing a
-    * recurring ETL join amortizes. */
-  private def q35(s: SparkSession, dir: String): DataFrame = {
-    graft.sources.Warehouse.writeBucketed(
-      t(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus")),
-      "wh_gate_orders", Seq("o_orderkey"), 8)
-    graft.sources.Warehouse.writeBucketed(
-      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_extendedprice"),
-        col("l_discount")),
-      "wh_gate_lineitem", Seq("l_orderkey"), 8)
-    s.table("wh_gate_lineitem")
-      .join(s.table("wh_gate_orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy("o_orderstatus")
-      .agg((sum(dec(col("l_extendedprice")) * (lit(1) - dec(col("l_discount")))))
-        .cast("double").as("revenue"),
-        count(lit(1)).as("n_items"))
-      .orderBy("o_orderstatus")
-  }
-
-  /** kNN classification over the labeled embeddings — the standard
-    * label-quality / neighborhood-consistency check on a training corpus:
-    * each probe's predicted label is the majority vote of its k=5 exact
-    * cosine neighbors (ties: most votes, then lowest label). Composes
-    * s01's bruteForceKnn (absolutely bounded probe set, vec_id < 100, the
-    * same contract as s01) + one label join + two counting aggregates —
-    * the scale paths are s02/s03/s04's candidate generation feeding the
-    * same vote. */
-  private def s05(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val labels = e.select(col("vec_id"), col("label"))
-    Knn.bruteForceKnn(e, "vec_id", "embedding",
-        probeFilter = col("vec_id") < 100, k = 5)
-      .join(labels.select(col("vec_id").as("neighbor_id"),
-        col("label").as("n_label")), "neighbor_id")
-      .groupBy(col("probe_id"), col("n_label"))
-      .agg(count(lit(1)).as("votes"))
-      .groupBy("probe_id")
-      .agg(max_by(struct(col("n_label").as("pred_label"), col("votes")),
-        struct(col("votes"), -col("n_label"))).as("__w"))
-      .select(col("probe_id"), col("__w.pred_label").as("pred_label"),
-        col("__w.votes").as("votes"))
-      .join(labels.select(col("vec_id").as("probe_id"),
-        col("label").as("true_label")), "probe_id")
-      .select("probe_id", "true_label", "pred_label", "votes")
-      .orderBy("probe_id")
-  }
-
-  /** Nearest-class-mean classifier + confusion matrix over the labeled
-    * corpus — the one-pass label-coherence report of a curation pipeline.
-    * Per-label centroids are per-dimension DECIMAL-exact SUMS surfaced as
-    * double: associative, so bit-identical across engines regardless of
-    * row order, and cosine is scale-invariant so the unnormalized sum
-    * classifies exactly like the mean. Scale shape: one explode pass
-    * (map-side-combined (label, pos) sums — #labels × dim groups), then
-    * Ivf.assign's pattern — classify via a broadcast of the
-    * #labels-row centroid frame (bounded by construction,
-    * localCheckpoint'd like Ivf's) + one max_by per vec; the confusion
-    * matrix is a #labels² counting aggregate. */
-  private def s06(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val cent = e
-      .select(col("label").as("c_label"),
-        posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy(col("c_label"), col("pos"))
-      .agg(sum(col("x").cast("decimal(27,10)")).cast("double").as("m"))
-      .groupBy("c_label")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("m")))),
-        f => f.getField("m")).as("centroid"))
-      .localCheckpoint(eager = false)
-    // r19: classification is one row-local projection against the
-    // nested centroid row (Ivf.bestCluster — the identical
-    // max_by(struct(cos, -c_label)) rule) instead of a ×#labels
-    // crossJoin re-aggregated per vec: the per-vec exchange is gone and
-    // the confusion matrix aggregates straight off the scan.
-    e.select(col("vec_id"), col("label"), col("embedding"))
-      .crossJoin(broadcast(graft.sim.Ivf.nestedCentroids(
-        cent.select(col("c_label").as("cluster"), col("centroid")))))
-      .select(col("label"),
-        graft.sim.Ivf.bestCluster(col("embedding"), col("cents"),
-          graft.functions.Vectors.cosineHof).as("pred_label"))
-      .groupBy("label", "pred_label")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("label", "pred_label")
-  }
-
-  /** Product-quantization kNN with exact refine ([[graft.sim.Pq]]):
-    * the vector-COMPRESSION scale path next to s02's LSH and s03's IVF
-    * candidate reduction — the corpus is stored as m=16 codes from
-    * per-subspace 32-entry L2 codebooks (16× smaller than the float
-    * vectors), the ADC pass scores candidates via per-probe lookup
-    * tables (m array lookups each, no explode, no per-pair shuffle),
-    * and an 8·k shortlist is exactly re-ranked on the true vectors.
-    *
-    * FULL SQL oracle via the exported-model route (s12's discipline
-    * generalized): only the k-means FIT is non-SQL-expressible, so the
-    * gate persists the fitted codebooks ([[graft.sim.ModelStore]], the
-    * same parquet the production lifecycle persists) at the
-    * [[gateModelDir]] path the oracle reads back, and DuckDB re-derives
-    * EVERYTHING downstream of the fit — subvector encode (argmin L2),
-    * per-probe LUTs, the ordered ADC accumulation, the refine·k
-    * shortlist, and the exact re-rank — bit-for-bit (ascending-index
-    * double dot products; every ordering fully tie-broken). Fit quality
-    * itself stays pinned by PqSpec (lossless-corpus exactness vs brute
-    * ranking, knob-swept recall). */
-  private def s07(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{ModelStore, Pq}
-    val e = t(s, dir, "embeddings")
-    val base = gateModelDir(dir, "s07")
-    ModelStore.save(
-      Pq.fitCodebooks(e, "vec_id", "embedding", m = annM, ksub = annKsub),
-      "pq_codebooks", s"$base/pq_codebooks")
-    val codebooks = ModelStore.load(s, "pq_codebooks", s"$base/pq_codebooks")
-    val codes = Pq.encode(e, "vec_id", "embedding", codebooks, annM)
-    Pq.pqKnnFromModel(e, "vec_id", "embedding", codebooks, codes,
-        probeFilter = col("vec_id") < annProbeMax, k = annK, m = annM,
-        refine = annRefine)
-      .orderBy("probe_id", "rank")
-  }
-
-  /** IVFADC ([[graft.sim.Pq.ivfPqKnn]]) — candidate REDUCTION (s03's
-    * IVF cells, same c=16/nprobe=4 anchors) composed with vector
-    * COMPRESSION (s07's codebooks) and exact refine: the full
-    * production ANN shape, proving the two scale axes compose. FULL SQL
-    * oracle via s07's exported-model route: both fits (coarse centroids
-    * + codebooks) are persisted at the [[gateModelDir]] path and DuckDB
-    * re-derives cell assignment, probe-cell selection, encode, ADC and
-    * exact refine bit-for-bit. PqSpec still pins recall, determinism,
-    * and probed-cell soundness (every returned neighbor lives in one of
-    * its probe's nprobe cells). */
-  private def s08(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore, Pq}
-    val e = t(s, dir, "embeddings")
-    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("v"))
-    val base = gateModelDir(dir, "s08")
-    ModelStore.save(Ivf.fitCentroids(corpus, c = annC, iters = 3),
-      "ivf_centroids", s"$base/ivf_centroids")
-    ModelStore.save(
-      Pq.fitCodebooks(e, "vec_id", "embedding", m = annM, ksub = annKsub),
-      "pq_codebooks", s"$base/pq_codebooks")
-    val centroids = ModelStore.load(s, "ivf_centroids", s"$base/ivf_centroids")
-    val codebooks = ModelStore.load(s, "pq_codebooks", s"$base/pq_codebooks")
-    // r19: the celled code table is ONE row-local admission projection
-    // (admitStateless — PqSpec pins it bit-identical to the
-    // encode ⋈ assign composition this replaces), so building the index
-    // no longer shuffles the corpus-sized codes by id at all.
-    val codes = Pq.admitStateless(e, "vec_id", "embedding", centroids,
-      codebooks, annM)
-    Pq.ivfPqKnnFromModel(e, "vec_id", "embedding", centroids, codebooks,
-        codes, probeFilter = col("vec_id") < annProbeMax, k = annK,
-        nprobe = annNprobe, m = annM, refine = annRefine)
-      .orderBy("probe_id", "rank")
-  }
-
-  /** Fit-once / apply-many ANN lifecycle ([[graft.sim.ModelStore]]) —
-    * the production posture the reference's persistent-DB driver
-    * lifecycle implies (kcidb/db/abstract.py: a driver OPENS existing
-    * state and loads incrementally against it; it never rebuilds the
-    * database per query): IVF coarse centroids and PQ codebooks are
-    * fitted on the INITIAL batch only (even vec_ids), round-tripped
-    * through ModelStore parquet, and the later batch (odd vec_ids) is
-    * admitted by encode + cell-assignment against the LOADED models —
-    * both applications are row-local given the model frames, so
-    * batch-at-a-time admission agrees bit-for-bit with a one-shot pass
-    * (ModelStoreSpec pins it, d07's incremental discipline on vectors).
-    * Probes then query the unioned code table via
-    * [[graft.sim.Pq.ivfPqKnnFromModel]] with NO refit anywhere on the
-    * query path. FULL SQL oracle via the exported-model route: the
-    * persisted models ARE the gate's [[gateModelDir]] export, batch-at-
-    * a-time admission is row-local (so DuckDB's one-shot encode+assign
-    * over the whole corpus reproduces the unioned code table exactly —
-    * the equality ModelStoreSpec pins), and the query tail is s08's
-    * oracle arithmetic. ModelStoreSpec still carries save/load identity,
-    * incremental==full-encode equality, and from-model==end-to-end
-    * result equality. */
-  private def s09(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore, Pq}
-    val e = t(s, dir, "embeddings")
-    val m = annM; val ksub = annKsub
-    val fitBatch = e.filter(col("vec_id") % 2 === 0)
-    val nextBatch = e.filter(col("vec_id") % 2 === 1)
-    val base = gateModelDir(dir, "s09")
-    ModelStore.save(
-      Ivf.fitCentroids(
-        fitBatch.select(col("vec_id").as("id"), col("embedding").as("v")),
-        c = 16, iters = 3),
-      "ivf_centroids", s"$base/ivf_centroids")
-    ModelStore.save(
-      Pq.fitCodebooks(fitBatch, "vec_id", "embedding", m, ksub),
-      "pq_codebooks", s"$base/pq_codebooks")
-    val centroids = ModelStore.load(s, "ivf_centroids", s"$base/ivf_centroids")
-    val codebooks = ModelStore.load(s, "pq_codebooks", s"$base/pq_codebooks")
-    // per-batch admission against the loaded models — at production this
-    // runs once per arriving batch and appends to the code table.
-    // r19: one row-local admission projection (admitStateless, PqSpec-
-    // pinned identical to the encode ⋈ assign composition) — the
-    // id-keyed join of corpus-sized codes is gone.
-    def admit(batch: DataFrame): DataFrame =
-      Pq.admitStateless(batch, "vec_id", "embedding", centroids,
-        codebooks, m)
-    val codes = admit(fitBatch).union(admit(nextBatch))
-    Pq.ivfPqKnnFromModel(e, "vec_id", "embedding", centroids, codebooks,
-        codes, probeFilter = col("vec_id") < annProbeMax, k = annK,
-        nprobe = annNprobe, m = m, refine = annRefine)
-      .orderBy("probe_id", "rank")
-  }
-
-  /** DETERMINISTIC per-(sf, gate) model export dir, shared with the SQL
-    * oracles: a model-exporting gate (s07/s08/s09/st05) saves its fitted
-    * frames here and the matching [[OracleSql]] entry reads them back via
-    * `read_parquet` at the same absolute path, so DuckDB re-derives the
-    * whole post-fit pipeline from the identical model bits. Keyed by the
-    * sf dir's basename so a bench run (sf0.1) can never clobber the
-    * models a concurrently-running verify (sf0.01) is about to be
-    * oracle-checked against; two concurrent runs at the SAME sf remain
-    * the caller's discipline (they would also race the verify dumps
-    * themselves). Within one JVM, per-gate subdirs keep one gate's
-    * overwrite from invalidating another's still-lazy plan. Absolute
-    * path: Verify's oracle_sql.json is consumed by a DuckDB process
-    * whose cwd is not guaranteed to match. */
-  /** One model-export namespace per JVM (ADVICE r13): the per-(sf, gate)
-    * dirs alone made gate runs ORDER-dependent — a concurrent bench and
-    * verify at the SAME sf would overwrite the models a pending DuckDB
-    * check was about to read, surfacing as a confusing hash mismatch.
-    * Stamping the run id into the path (and, via [[gateModelSqlPath]],
-    * into the dumped oracle SQL — same JVM, same lazy value) turns that
-    * clobber into a loud missing-path error in the stale reader instead.
-    * Re-runs WITHIN one JVM still share a dir by design: one Verify
-    * process writes then dumps, and its SQL must see its own models. */
-  private[graft] lazy val gateRunId: String =
-    sys.props.getOrElse("graft.gate.runId",
-      java.lang.Long.toHexString(ProcessHandle.current.pid) + "-" +
-        java.lang.Long.toHexString(System.currentTimeMillis / 1000))
-
-  private[graft] def gateModelDir(dir: String, gate: String): String = {
-    val tag = new java.io.File(dir).getName
-    val root = new java.io.File(s"target/gate_models/$tag")
-    // best-effort GC of DEAD run dirs (mtime > 1 day): pending oracle
-    // checks run within minutes of their dump; only long-abandoned runs
-    // are collected, so no live reader can lose its models.
-    val cutoff = System.currentTimeMillis - 24L * 3600 * 1000
-    Option(root.listFiles).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName != gateRunId &&
-        d.lastModified < cutoff)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty)
-            .foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
-    val base = new java.io.File(root, s"$gateRunId/$gate")
-    java.nio.file.Files.createDirectories(base.toPath)
-    // touch OUR run dir on every call: GC keys liveness on the run
-    // dir's mtime, which otherwise only moves when a NEW gate dir is
-    // created — a run alive past the cutoff could have its models
-    // collected by a concurrent JVM mid-oracle
-    new java.io.File(root, gateRunId)
-      .setLastModified(System.currentTimeMillis)
-    base.getAbsolutePath
-  }
-
-  /** The oracle-side twin of [[gateModelDir]]: the sf tag comes from the
-    * `graft.gate.sfTag` system property, which [[Verify]] pins from its
-    * sfDir argument before dumping oracle_sql.json (default: sf0.01, the
-    * driver's correctness scale); the run id is this JVM's
-    * [[gateRunId]], so the dumped SQL can only ever read models this
-    * process wrote. */
-  private[graft] def gateModelSqlPath(gate: String): String =
-    new java.io.File("target/gate_models/" +
-      sys.props.getOrElse("graft.gate.sfTag", "sf0.01") +
-      s"/$gateRunId/$gate").getAbsolutePath
-
-  /** Deliberately mixed valid/invalid catalog entries for q42 — the
-    * rootIdCandidates discipline applied to the reference's test
-    * catalog (tests.yaml shape: key → {title, home, description?}).
-    * Covers every rule of kcidb/tests/schema.py: valid entries (with
-    * and without description, non-https scheme), bad key characters,
-    * empty key, key with spaces, missing/multi-line title (a TAB is a
-    * control char), missing/malformed home, and a multi-violation row.
-    * No null test_key: the driver's pandas row-sort cannot order
-    * None/str mixes (the SURVEY §2 scalar-gate rule's sibling). */
-  private[graft] val testCatalogEntries
-      : Seq[(String, String, String, String)] = Seq(
-    ("audit-suite", "Basic audit regression checks",
-      "https://example.org/audit", null),
-    ("boot", "Machine booted with the tested kernel",
-      "https://example.org/boot", "Longer free-form description."),
-    ("blk_tests", "Block layer and storage checks",
-      "ftp://mirror.example.net/blk", null),
-    ("perf.bench", "Dot is not a legal key character",
-      "https://example.org/perf", null),
-    ("", "Empty key", "https://example.org/empty", null),
-    ("space key", "Space is not a legal key character",
-      "https://example.org/space", null),
-    ("no-title", null, "https://example.org/nt", null),
-    ("tab_title", "line with a\ttab control char",
-      "https://example.org/tab", null),
-    ("no-home", "Entry without a home", null, null),
-    ("bad-home", "Home is not a URI", "not a uri", null),
-    ("rel-home", "Relative path home", "/usr/local/tests", null),
-    ("bare-min", null, null, null))
-
-  /** Deliberately mixed valid/invalid composite root-id candidates for
-    * q33 — shared with the oracle SQL generator (OracleSql builds the
-    * VALUES list from this constant, as t01 does with the language
-    * profiles). Covers: valid+existing, valid shape but absent, wrong
-    * arity both ways, unknown type, non-coercible parts, empty id. */
-  val rootIdCandidates: Seq[(String, String)] = Seq(
-    ("customer", "21"),        // valid, exists
-    ("customer", "920000021"), // valid shape, no such row
-    ("customer", "21_3"),      // arity 2 against a 1-column id
-    ("widget", "1"),           // unknown object type
-    ("lineitem", "1_3"),       // valid composite, exists
-    ("lineitem", "1"),         // arity 1 against a 2-column id
-    ("lineitem", "1_x"),       // second part not castable
-    ("orders", "abc"),         // not castable
-    ("orders", "1"),           // valid, exists
-    ("nation", ""))            // empty id: splits to one empty part
-
-  /** query_ids_are_valid surfaced as data (db/abstract.py:245-281): each
-    * candidate's catalog-driven validity verdict + an existence probe. */
-  private def q33(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    TestCatalog.catalog.checkRootIds(s, dir,
-        rootIdCandidates.toDF("object_type", "id"))
-      .orderBy("object_type", "id")
-  }
-
-  /** Test-catalog entry validation ([[graft.model.CatalogEntries]] —
-    * the reference's `kcidb-tests-validate` CLI,
-    * kcidb/tests/__init__.py:10 + tests/schema.py:6-42, the last named
-    * reference entry point without a twin): the planted
-    * [[testCatalogEntries]] exercise every schema rule, and the part
-    * table derives a corpus-sized VALID entry block (unique
-    * partkey-prefixed keys, sanitized names, synthetic homes) so the
-    * validator runs over real data, not just the fixture. One codegen'd
-    * scan, no shuffle before the output sort. */
-  private def q42(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val planted = testCatalogEntries
-      .toDF("test_key", "title", "home", "description")
-    val derived = t(s, dir, "part").select(
-      concat(lit("p"), col("p_partkey"), lit("-"),
-        regexp_replace(lower(col("p_name")), "[^a-z0-9_-]+", "-"))
-        .as("test_key"),
-      col("p_name").as("title"),
-      concat(lit("https://example.org/part/"), col("p_partkey"))
-        .as("home"),
-      lit(null).cast("string").as("description"))
-    graft.model.CatalogEntries.validate(planted.unionByName(derived))
-      .orderBy("test_key")
-  }
-
-  /** Multiplexed load fan-out ([[graft.sources.Mux]]) — the reference's
-    * mux driver (kcidb/db/mux.py:484-518 load-into-every-member,
-    * 397-470 query-the-first), the last infrastructure surface SURVEY
-    * §1 ranked as having any analytic twin: one batch (the q09 dump
-    * window) loads into BOTH members in one materialization, m0 at the
-    * latest events schema v2.1 and m1 at legacy v1.0 (mux.py:505's
-    * per-member `io_schema.upgrade`), and the gate emits a per-member
-    * audit — row count, key/value sums, and the version-dependent
-    * score/status aggregates — that the DuckDB oracle recomputes from
-    * `events` directly, proving every member received exactly the full
-    * batch at exactly its version's shape. Version-dependent columns
-    * use a -1 sentinel (not NULL) for the legacy member so the dump
-    * stays pandas-sortable (the st05 r11 scalar-gate rule). */
-  private def q43(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.Mux
-    val base = gateModelDir(dir, "q43")
-    val members = Seq(Mux.Member(s"$base/m0", (2, 1)),
-      Mux.Member(s"$base/m1", (1, 0)))
-    Mux.load(
-      Loader.dumpWindow(ev(s, dir), col("ts"),
-          lit("2024-01-10 00:00:00").cast("timestamp"),
-          lit("2024-01-20 00:00:00").cast("timestamp"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value")),
-      eventsSchematic, from = (1, 0), members, mode = "overwrite")
-    val audits = members.zipWithIndex.map { case (m, i) =>
-      // first member read through the query path (the reference serves
-      // dumps/queries from drivers[0] only); replicas read directly
-      val r = if (i == 0) Mux.query(s, members) else s.read.parquet(m.path)
-      r.agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("user_id")).as("sum_users"),
-          sum(dec(col("value"))).cast("double").as("sum_value"),
-          (if (r.columns.contains("score"))
-            sum(dec(col("score"))).cast("double")
-          else lit(-1.0)).as("sum_score"),
-          (if (r.columns.contains("status"))
-            count(when(col("status") === "FAIL", lit(1)))
-          else lit(-1L)).as("n_fail"))
-        .select(lit(s"m$i").as("member"),
-          lit(s"${m.version._1}.${m.version._2}").as("version"),
-          col("n_rows"), col("sum_users"), col("sum_value"),
-          col("sum_score"), col("n_fail"))
-    }
-    audits.reduce(_.unionByName(_)).orderBy("member")
-  }
-
-  /** q44's column/kind list for the orders table, shared with the SQL
-    * oracle generator; the gate asserts it against Profiler.kinds so a
-    * testdata schema drift fails loudly instead of desyncing the
-    * oracle. */
-  private[graft] val q44Cols: Seq[(String, String)] = Seq(
-    ("o_orderkey", "num"), ("o_custkey", "num"), ("o_orderstatus", "str"),
-    ("o_totalprice", "num"), ("o_orderdate", "ts"),
-    ("o_orderpriority", "str"))
-
-  /** Per-column table profile ([[graft.operators.Profiler]]) over
-    * orders — the generic corpus-QA "describe" (t19's data card at
-    * column granularity, kcidb-count extended below object level).
-    * Gate mode is `exact = true` (per-column single-distinct branches,
-    * unioned — never the multi-countDistinct Expand form — backing a
-    * full DuckDB oracle); the 100 TB default swaps in
-    * approx_count_distinct and the profile becomes one pure partial
-    * aggregate (ProfilerSpec pins both modes' no-Expand plans and the
-    * per-branch one-column scan pruning). */
-  private def q44(s: SparkSession, dir: String): DataFrame = {
-    val orders = t(s, dir, "orders")
-    require(graft.operators.Profiler.kinds(orders) == q44Cols,
-      s"orders schema drifted: ${graft.operators.Profiler.kinds(orders)}")
-    graft.operators.Profiler.profile(orders, exact = true)
-      .orderBy("column")
-  }
-
-  /** q45's base/delta boundary, shared with the spec (the oracle does
-    * not need it: it recomputes the rollup from the FULL table, which
-    * is exactly the incremental == full-recompute invariant). */
-  private[graft] val q45Split = "2024-01-15 00:00:00"
-
-  /** Incremental rollup maintenance (operators/Ivm — the reference's
-    * recompute-per-query summaries, kcidb/__init__.py:284-301, made
-    * incremental): the per-(event_type, day) mergeable state
-    * (count / exact decimal sum / min / max) over events before
-    * [[q45Split]] is PERSISTED (ModelStore "rollup_state", the r13
-    * exported-model route), then the refresh merges that parquet state
-    * with the delta's fresh partials — the base is read back as
-    * |keys| state rows, never rescanned (IvmSpec pins the single
-    * events scan in the merged plan). The DuckDB oracle recomputes the
-    * rollup from the FULL events table, so a hash match proves the
-    * incremental maintenance equals the full recompute bit-for-bit
-    * (decimal sums make the merge exact; double sums would drift). */
-  private def q45(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Ivm
-    val e = ev(s, dir)
-    val split = lit(q45Split).cast("timestamp")
-    def keyed(df: DataFrame): DataFrame =
-      df.select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day"), col("value"))
-    val statePath = s"${gateModelDir(dir, "q45")}/rollup_state"
-    // coalesce(1): |event_type|·|days| rows — bounded state artifact
-    graft.sim.ModelStore.save(
-      Ivm.rollupState(keyed(e.filter(col("ts") < split)),
-        Seq(col("event_type"), col("day")), col("value")).coalesce(1),
-      "rollup_state", statePath)
-    val deltaState = Ivm.rollupState(keyed(e.filter(col("ts") >= split)),
-      Seq(col("event_type"), col("day")), col("value"))
-    Ivm.merge(s.read.parquet(statePath), deltaState,
-        Seq("event_type", "day"))
-      .select(col("event_type"), col("day"), col("n_rows"),
-        col("sum_value").cast("double").as("sum_value"),
-        col("min_value"), col("max_value"))
-      .orderBy("event_type", "day")
-  }
-
-  /** Date-partitioned warehouse layout + partition PRUNING — the 100 TB
-    * storage posture the reference's windowed dump/purge implies (a
-    * time-partitioned events store where a day-window query must read
-    * ONLY its partitions' files, not filter a full scan): the gate
-    * materializes events as a `partitionBy(day)` parquet layout (the
-    * fit-once warehouse write), then answers a 5-day window rollup from
-    * it. PlanSpec pins the day bounds under `PartitionFilters` on the
-    * scan — directory-level pruning, so at 100 TB the window's I/O is
-    * proportional to the WINDOW, not the corpus. Day is re-emitted as
-    * string (partition-column type inference reads it back as DATE) so
-    * both engines hash the same text. */
-  private def q48(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${gateModelDir(dir, "q48")}/events_by_day"
-    ev(s, dir)
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-    s.read.parquet(path)
-      .filter(col("day") >= "2024-01-10" && col("day") < "2024-01-15")
-      .groupBy(col("day").cast("string").as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("value").cast("decimal(18,2)")).cast("double")
-          .as("sum_value"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .orderBy("day", "event_type")
-  }
-
-  /** Small-file compaction — the 100 TB housekeeping operator every
-    * streaming-ingested warehouse needs: a tiny `maxRecordsPerFile`
-    * cap on a many-task write produces the pathological
-    * thousands-of-small-files layout, then ONE `repartition` on the
-    * partition key rewrites each day in a single task → exactly one
-    * file per day at the production cap. The gate emits the per-day
-    * before/after file counts (via `input_file_name`), conserved row
-    * counts (cross-checked against a direct events recompute) and the
-    * exact-decimal value checksum, plus a `compact_ok` verdict. The
-    * FULL DuckDB oracle re-derives every column from the SAME two
-    * parquet trees (`read_parquet(..., filename=true,
-    * hive_partitioning=true)`) and raw events — a compaction that
-    * dropped, duplicated or re-bucketed a row breaks the hash. Scale
-    * shape: the rewrite is one shuffle on the partition key; file
-    * listing happens in the engines' scans, never a driver loop. Cost
-    * class (measured, BENCHLOG r15/r17 octaves): file-count-linear —
-    * the planted rows/256 fragmentation IS the fixture (a compactor
-    * cannot touch N files in under O(N)), so data-linear at the fixed
-    * fragment size is the intended contract, not a scaling defect.
-    * Parallelism ceiling, stated: one-file-per-day compaction is
-    * inherently one TASK per day (a single output file has a single
-    * writer), so the rewrite parallelizes across days, not within
-    * them — fine while a day fits one task's I/O budget. A 100 TB
-    * day does not; the production variant salts within the day —
-    * `.repartition(K, col("day"), pmod(hash(id), K))` with the same
-    * `maxRecordsPerFile` cap — trading "exactly 1 file/day" for "K
-    * bounded files/day" and K-way per-day writers. The gate keeps the
-    * 1-file contract because THAT is what makes before/after
-    * verifiable bit-for-bit in SQL; the salt changes only file
-    * boundaries, which the day-level row/checksum conservation
-    * columns do not observe. */
-  private def q49(s: SparkSession, dir: String): DataFrame = {
-    val base = gateModelDir(dir, "q49")
-    val smallPath = s"$base/events_small"
-    val compactPath = s"$base/events_compact"
-    val keyed = ev(s, dir)
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-    // round-robin across 8 tasks guarantees every day fragments into
-    // >= min(8, rows) files even at tiny sf; the 256-row cap adds the
-    // per-file splitting a row-capped streaming sink produces
-    keyed.repartition(8)
-      .write.mode("overwrite").option("maxRecordsPerFile", 256)
-      .partitionBy("day").parquet(smallPath)
-    s.read.parquet(smallPath).repartition(col("day"))
-      .write.mode("overwrite").option("maxRecordsPerFile", 1000000)
-      .partitionBy("day").parquet(compactPath)
-    def profile(path: String, tag: String) =
-      s.read.parquet(path)
-        // the _metadata.file_path column is the deterministic file
-        // identity (input_file_name() is non-deterministic and
-        // rejected inside aggregates)
-        .select(col("day").cast("string").as("day"), col("value"),
-          col("_metadata.file_path").as("__f"))
-        .groupBy("day")
-        .agg(countDistinct(col("__f")).as(s"n_files_$tag"),
-          count(lit(1)).as(s"n_rows_$tag"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as(s"sum_$tag"))
-    val expected = keyed.groupBy(col("day"))
-      .agg(count(lit(1)).as("n_rows_expected"))
-    profile(smallPath, "small")
-      .join(profile(compactPath, "compact"), "day")
-      .join(expected, "day")
-      .select(col("day"), col("n_files_small"), col("n_files_compact"),
-        col("n_rows_small").as("n_rows"), col("n_rows_expected"),
-        col("sum_small").as("sum_value"),
-        when(col("n_files_compact") === 1 &&
-          col("n_files_compact") < col("n_files_small") &&
-          col("n_rows_small") === col("n_rows_compact") &&
-          col("n_rows_small") === col("n_rows_expected") &&
-          col("sum_small") === col("sum_compact"), 1)
-          .otherwise(0).as("compact_ok"))
-      .orderBy("day")
-  }
-
-  // q50's probe point is max_u div 2 — derived from the data so the
-  // gate holds at every sf (a fixed id sits outside sf0.001's range)
-
-  /** Z-order clustering vs time clustering, measured as data-skipping
-    * power — THE layout decision a 100 TB warehouse makes for
-    * multi-dimensional pruning (Morton order; the Delta/Iceberg
-    * OPTIMIZE ZORDER primitive): both (user, day) dimensions scale to
-    * 16 bits by exact integer division, interleave bit-by-bit into the
-    * Morton code, and the top 3 z-bits name 8 range buckets — each
-    * bucket then bounds BOTH dimensions, where the time layout's
-    * contiguous-day buckets bound only days. Per (layout, bucket):
-    * rows, min/max of each dimension (exactly what parquet row-group
-    * pruning reads), and whether a data-derived user point query
-    * (max_u div 2) can skip the bucket; plus one summary row per
-    * layout whose `probe_hit` is the HIT COUNT — z-order reads a
-    * fraction of the buckets, time reads all of them. Everything is
-    * closed-form integer arithmetic (`div`, shifts, masks), so the
-    * FULL DuckDB oracle re-derives codes, buckets, ranges and verdicts
-    * bit-for-bit. Scale shape: one scalar agg + two map-side-combined
-    * groupBys over the scan; the Morton code is a codegen'd 32-term
-    * shift-mask sum, no UDF. */
-  private def q50(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir).select(col("user_id"),
-      to_date(col("ts")).as("day"))
-    val scalars = e.agg(min(col("day")).as("d0"),
-      (datediff(max(col("day")), min(col("day"))) + 1).cast("long")
-        .as("nd"),
-      max(col("user_id")).as("max_u"))
-    // 1-row totals zip — the p08/t05 declared scalar-broadcast class
-    val base = e.crossJoin(broadcast(scalars))
-      .select(col("user_id").as("u"),
-        datediff(col("day"), col("d0")).cast("long").as("d"),
-        col("nd"), col("max_u"))
-    val uS = expr("(u * 65535) div max_u")
-    // greatest(..,1): a single-day corpus (nd = 1) must degrade to one
-    // day-lane, not a null z-code (Spark div null) vs a DuckDB error
-    val dS = expr("(d * 65535) div greatest(nd - 1, 1L)")
-    // u rides the ODD (higher) bit lanes so the code's top bits are
-    // (u15, d15, u14): 8 buckets quarter the user range and halve the
-    // day range — the probe dimension gets the finer cut
-    val z = (0 until 16).map(i =>
-      shiftright(uS, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)) +
-        shiftright(dS, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i)))
-      .reduce(_ + _)
-    val keyed = base.select(col("u"), col("d"),
-      shiftright(z, 29).as("zbucket"),
-      least(lit(7L), expr("(d * 8) div nd")).as("tbucket"),
-      expr("max_u div 2").as("probe_u"))
-    def prof(bucketCol: String, layout: String) =
-      keyed.groupBy(col(bucketCol).as("bucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min("u").as("min_u"), max("u").as("max_u"),
-          min("d").as("min_d"), max("d").as("max_d"),
-          min("probe_u").as("probe_u"))
-        .select(lit(layout).as("layout"), col("bucket"), col("n_rows"),
-          col("min_u"), col("max_u"), col("min_d"), col("max_d"),
-          when(col("min_u") <= col("probe_u") &&
-            col("max_u") >= col("probe_u"), 1L).otherwise(0L)
-            .as("probe_hit"))
-    // bounded |buckets|-row frame, memoized (the q46 discipline) so
-    // the summary reads it instead of re-running the corpus counts
-    val pts = prof("zbucket", "zorder").unionByName(prof("tbucket",
-      "time")).localCheckpoint()
-    val summary = pts.groupBy("layout")
-      .agg(sum("n_rows").as("n_rows"), min("min_u").as("min_u"),
-        max("max_u").as("max_u"), min("min_d").as("min_d"),
-        max("max_d").as("max_d"), sum("probe_hit").as("probe_hit"))
-      .select(col("layout"), lit(-1L).as("bucket"), col("n_rows"),
-        col("min_u"), col("max_u"), col("min_d"), col("max_d"),
-        col("probe_hit"))
-    pts.unionByName(summary).orderBy("layout", "bucket")
-  }
-
-  /** Error-tolerant CSV ingestion — the messy-feed half of the source
-    * family (q39 reads clean JSON; real interchange files carry rows
-    * that don't parse): a CSV twin of orders is written with planted
-    * type-mismatch rows (ids %37 break the decimal price, ids %41 the
-    * bigint custkey), read back under PERMISSIVE mode with
-    * `columnNameOfCorruptRecord`, and the gate rolls up per-status
-    * counts + the exact-decimal price checksum of the GOOD rows plus
-    * one `_corrupt` quarantine row — ingest never drops data
-    * silently; bad rows are counted, not lost. The FULL DuckDB oracle
-    * re-derives the classification from the plant rules over raw
-    * orders — a parser that quarantined too much or too little breaks
-    * the hash. Scale shape: text write + one schema-driven parse +
-    * one map-side-combined rollup; the corrupt column is schema-level
-    * (Catalyst's parser), no UDF, no driver loop. */
-  private def q51(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${gateModelDir(dir, "q51")}/orders_csv"
-    val o = t(s, dir, "orders").select(col("o_orderkey"),
-      col("o_custkey"), col("o_orderstatus"),
-      col("o_totalprice").cast("decimal(18,2)").as("p"),
-      date_format(col("o_orderdate"), "yyyy-MM-dd").as("od"))
-    val price = when(col("o_orderkey") % 37 === 0, lit("broken-price"))
-      .otherwise(col("p").cast("string"))
-    val cust = when(col("o_orderkey") % 41 === 0 &&
-        col("o_orderkey") % 37 =!= 0, lit("x-cust"))
-      .otherwise(col("o_custkey").cast("string"))
-    o.select(concat_ws(",", col("o_orderkey").cast("string"), cust,
-        col("o_orderstatus"), price, col("od")).as("value"))
-      .write.mode("overwrite").text(path)
-    val parsed = s.read
-      .schema("k LONG, cust LONG, status STRING, price DECIMAL(18,2), " +
-        "odate DATE, _corrupt STRING")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .csv(path)
-    // Reference EVERY typed column in the rollup: Spark's CSV parser
-    // prunes unreferenced columns, and an unparsed column can't fail —
-    // so pruning silently changes WHICH rows are quarantined (measured
-    // r15: dropping `cust` from this projection halved the corrupt
-    // set). PERMISSIVE is also partial-result: a quarantined row keeps
-    // every field that did parse (n_cust/n_dated expose exactly that),
-    // only the failing field is null.
-    parsed.groupBy(coalesce(when(col("_corrupt").isNotNull,
-        lit("_corrupt")), col("status")).as("status"))
-      .agg(count(lit(1)).as("n_rows"),
-        coalesce(sum(col("price")).cast("double"), lit(0.0))
-          .as("sum_price"),
-        count(col("cust")).as("n_cust"),
-        count(col("odate")).as("n_dated"))
-      .orderBy("status")
-  }
-
-  /** SCD type-2 order history per customer
-    * ([[graft.operators.Scd.scd2]]): each customer's orders become
-    * interval-versioned rows — version index, valid_from/valid_to
-    * chain (open end '9999-12-31'), exactly one current row per key.
-    * One shuffle on the key, per-key local sort; FULL DuckDB oracle
-    * mirrors the window pair. */
-  private def q52(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders").select(col("o_custkey"),
-      date_format(col("o_orderdate"), "yyyy-MM-dd").as("valid_from"),
-      col("o_orderkey"), col("o_orderstatus"))
-    graft.operators.Scd.scd2(o, "o_custkey", "valid_from",
-        "o_orderkey", endMarker = "9999-12-31")
-      .select(col("o_custkey"), col("version"), col("o_orderkey"),
-        col("o_orderstatus"), col("valid_from"), col("valid_to"),
-        col("is_current"))
-      .orderBy("o_custkey", "version")
-  }
-
-  /** Spool delivery bookkeeping ([[graft.monitor.Spool]]): the
-    * reference notification spool's post/pick/ack/unpicked state
-    * machine (monitor/spool/__init__.py:95-275) replayed over a
-    * deterministic operation timeline planted on the events table —
-    * event_id decides the op (0,1→post 2,3→pick mod 5; the residue-4
-    * class splits mod 10 into 4→ack 9→delete, so re-created
-    * incarnations are exercised too), the due lag (15-min steps mod 7)
-    * and the tie order; pick leases run 1 h.
-    * Output: each notification's final delivery state (lease, ack,
-    * accepted/refused counters) plus the `unpicked(T)` re-delivery
-    * flag at end-of-log T (1-row scalar zip, the declared p08/t05
-    * class). FULL SQL oracle: a recursive CTE folds the identical
-    * transitions per id in op order. */
-  private def q53(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ops = ev(s, dir).select(
-        col("user_id").as("id"), col("event_id").as("seq"),
-        col("ts").cast("long").as("ts_sec"),
-        when(col("event_id") % 5 <= 1, "post")
-          .when(col("event_id") % 5 <= 3, "pick")
-          .when(col("event_id") % 10 === 4, "ack")
-          .otherwise("delete").as("op"),
-        (col("ts").cast("long") + (col("event_id") % 7) * 900L)
-          .as("due_sec"),
-        lit(3600L).as("timeout_sec"))
-      .as[graft.monitor.Spool.Op]
-    val state = graft.monitor.Spool.replay(ops).toDF()
-    val tEnd = ev(s, dir)
-      .agg((max(col("ts").cast("long")) + 1L).as("t_end"))
-    state.crossJoin(broadcast(tEnd))
-      .select(col("id"), col("created_sec"), col("due_sec"),
-        col("msg_rev"), col("picked_at_sec"), col("picked_until_sec"),
-        col("acked_at_sec"), col("n_posts"), col("n_rejected_posts"),
-        col("n_picks"), col("n_rejected_picks"),
-        when(col("picked_until_sec") < col("t_end"), 1).otherwise(0)
-          .as("free_at_end"))
-      .orderBy("id")
-  }
-
-  /** Deliberately mixed issue-editor form submissions for q54 — the
-    * q42 planted-fixture discipline on the issue_editor surface
-    * (issue_editor/__init__.py:64-69 required-field 400 gate): valid
-    * submissions with/without patterns and report_url, plus one row
-    * missing each required field; shared with the oracle generator. */
-  private[graft] val issueForms
-      : Seq[(String, String, String, String, String, String)] = Seq(
-    ("s1", "Alice", "alice@example.org", "boot failure on F orders",
-      "code", "https://example.org/r/1"),
-    ("s2", "Bob", "bob@example.org", "priority regression", "tool", ""),
-    ("s3", "", "carol@example.org", "missing name", "harness", ""),
-    ("s4", "Dan", "", "missing email", "code", ""),
-    ("s5", "Eve", "eve@example.org", "", "tool", ""),
-    ("s6", "Fay", "fay@example.org", "missing culprit", "", ""),
-    ("s7", "Gus", "gus@example.org", "no pattern attached", "harness",
-      ""),
-    ("s8", "Hal", "hal@example.org", "cross-category match", "code",
-      "https://example.org/r/8"))
-
-  /** q54's form pattern triples (zip order = seq), covering the
-    * reference's dict-assignment semantics: s2 repeats a field (last
-    * value wins), s3 carries a pattern on an INVALID submission (built
-    * but never matched — the 400 fires first), s8 spans two
-    * categories. */
-  private[graft] val issueTriples
-      : Seq[(String, Int, String, String, String)] = Seq(
-    ("s1", 1, "order", "o_orderstatus", "F"),
-    ("s1", 2, "order", "o_orderpriority", "1-URGENT"),
-    ("s2", 1, "order", "o_orderstatus", "O"),
-    ("s2", 2, "order", "o_orderstatus", "P"),
-    ("s3", 1, "order", "o_orderstatus", "F"),
-    ("s8", 1, "order", "o_orderstatus", "F"),
-    ("s8", 2, "order", "o_orderpriority", "5-LOW"),
-    ("s8", 3, "customer", "c_mktsegment", "BUILDING"))
-
-  /** Issue pattern-object assembly + automatch
-    * ([[graft.model.IssuePatterns]]) — the reference issue_editor's
-    * form→pattern_object builder and its automatching semantics
-    * (issue_editor/__init__.py:33-60) as a gate: planted form rows
-    * (shared fixtures above) assemble per-submission pattern objects
-    * (last-wins fields, +"s" category pluralization, canonical sorted
-    * flat form), invalid submissions are 400-gated, and each VALID
-    * pattern category automatches the corpus — orders melted on
-    * (o_orderstatus, o_orderpriority), customers on c_mktsegment —
-    * emitting per-category match counts. FULL SQL oracle re-derives
-    * everything from the same VALUES literals + the same melt. */
-  private def q54(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val forms = issueForms.toDF("sub_id", "name", "email",
-      "report_subject", "culprit_type", "report_url")
-    val triples = issueTriples.toDF("sub_id", "seq", "category",
-      "field", "value")
-    val orders = t(s, dir, "orders")
-    val objects = orders
-      .select(lit("order").as("category"),
-        col("o_orderkey").as("obj_id"),
-        lit("o_orderstatus").as("field"),
-        col("o_orderstatus").as("value"))
-      .unionByName(orders
-        .select(lit("order").as("category"),
-          col("o_orderkey").as("obj_id"),
-          lit("o_orderpriority").as("field"),
-          col("o_orderpriority").as("value")))
-      .unionByName(t(s, dir, "customer")
-        .select(lit("customer").as("category"),
-          col("c_custkey").as("obj_id"),
-          lit("c_mktsegment").as("field"),
-          col("c_mktsegment").as("value")))
-    graft.model.IssuePatterns.assembleAndMatch(forms, triples, objects)
-      .orderBy("kind", "sub_id", "category")
-  }
-
-  private def d01(s: SparkSession, dir: String): DataFrame = {
-    val fp = t(s, dir, "documents")
-      .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
-    fp.groupBy().agg(
-      count(lit(1)).as("n_docs"),
-      countDistinct(col("fp")).as("n_unique"))
-      .select(col("n_docs"), col("n_unique"),
-        (col("n_docs") - col("n_unique")).as("n_dup_docs"))
-  }
-
-  /** MinHash+LSH near-dup pairs. FULL SQL oracle via the exported-model
-    * route (r13): the shingle hash dictionary ([[graft.dedup.Dedup
-    * .shingleHashDict]]) is the one non-SQL-portable step, and banding
-    * uses exact slice-value keys, so DuckDB re-derives the k rotl-mix
-    * permutations, band keys, candidate join and exact jaccard. */
-  private def d02(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    // coalesce(1): the dict is a bounded oracle artifact (~10⁴ rows);
-    // 32 shuffle-partition part files would cost more than the write
-    graft.sim.ModelStore.save(
-      Dedup.shingleHashDict(docs, "doc_id", "text", n = 3).coalesce(1),
-      "shingle_hashes", s"${gateModelDir(dir, "d02")}/shingle_hashes")
-    // production default (r16): the corpus-derived boilerplate df cap
-    // rides the pipeline — a no-op at every gate sf (DedupSpec pins the
-    // margin; the oracle stays exact), the linear-work guard at 100 TB
-    Dedup.minhashNearDupsAuto(docs, "doc_id", "text",
-        k = mhK, nBands = mhBands, threshold = d02Tau)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Fuzzy decontamination (d09's MinHash sibling): eval docs (every
-    * 10th) near-duplicating some TRAIN doc at shingle-Jaccard >= 0.5,
-    * with the witness pair + exact jaccard exported so the DuckDB gate
-    * replica recomputes every emitted jaccard and asserts the bound and
-    * the split orientation (tools/oracle_check.py d13_soundness, the
-    * d02 recipe cross-split). */
-  private def d13(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.sim.ModelStore.save(
-      Dedup.shingleHashDict(docs, "doc_id", "text", n = 3).coalesce(1),
-      "shingle_hashes", s"${gateModelDir(dir, "d13")}/shingle_hashes")
-    Dedup.crossMinhashNearDupsAuto(docs, "doc_id", "text",
-        evalFilter = col("doc_id") % 10 === 0,
-        k = mhK, nBands = mhBands, threshold = d13Tau)
-      .select(col("eval_id"), col("train_id"),
-        round(col("jaccard"), 6).as("jaccard"))
-      .orderBy("eval_id", "train_id")
-  }
-
-  /** emitSigs: the gate output carries both signatures so the DuckDB side
-    * of the correctness check recomputes every emitted hamming as
-    * bit_count(xor(sig_a, sig_b)) and asserts the <= 3 soundness bound
-    * (tools/oracle_check.py, d02_soundness's sibling); completeness is the
-    * DedupSpec pigeonhole ground truth. */
-  private def d03(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    graft.sim.ModelStore.save(Dedup.tokenHashDict(docs, "text").coalesce(1),
-      "token_hashes", s"${gateModelDir(dir, "d03")}/token_hashes")
-    Dedup.simhashNearDups(docs, "doc_id", "text",
-        maxDist = 3, emitSigs = true)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** Exact (not LSH-approximate) — so it carries a full DuckDB oracle:
-    * jaccard rounded to 6 dp on both sides, threshold applied pre-round. */
-  private def d04(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairsAuto(t(s, dir, "documents"), "doc_id", "text",
-        n = 3, probeFilter = col("doc_id") % 10 === 0, threshold = 0.02)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy("id_a", "id_b")
-
-  /** Asymmetric containment near-subset pairs
-    * (Dedup.containmentPairs): every doc_id %20==0 plants a "quote"
-    * twin under id+2000000 carrying its first max(6, n/3) words — a
-    * subset Jaccard scores ~0.3 (invisible to d04's 0.9-class
-    * thresholds) but containment scores ~1.0. Shared-shingle
-    * equi-join blocking only; FULL DuckDB oracle re-derives plant,
-    * shingles, orientation and the threshold. */
-  private def d17(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val quotes = docs.filter(col("doc_id") % 20 === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        array_join(slice(split(col("text"), " "), lit(1),
-          greatest(lit(6), floor(size(split(col("text"), " ")) / 3)
-            .cast("int"))), " ").as("text"))
-    Dedup.containmentPairsAuto(docs.unionByName(quotes), "doc_id", "text",
-        n = 3, threshold = 0.9)
-      .select(col("id_small"), col("id_big"), col("inter"),
-        col("sz_small"), col("sz_big"),
-        round(col("containment"), 6).as("containment"))
-      .orderBy("id_small", "id_big")
-  }
-
-  private def d05(s: SparkSession, dir: String): DataFrame =
-    // the AUTO-knob deployment entry point is the gate default (r13):
-    // knobs derive from the corpus size (b=1/L=18 at every test sf —
-    // bit-identical to the frozen reference config, DedupSpec-pinned),
-    // and the 10x octave probe runs the SAME path, so the gate
-    // exercises what production ships instead of a frozen twin
-    Dedup.embeddingNearDupsAuto(t(s, dir, "embeddings"), "vec_id",
-        "embedding", probeFilter = col("vec_id") % 20 === 0,
-        threshold = 0.25)
-      .select(col("id_a"), col("id_b"))
-      .orderBy("id_a", "id_b")
-
-  /** Near-dup clustering: connected components over the d05 pair graph —
-    * every vec in a component gets the component's min id as its cluster
-    * (the KEEP-one-representative step of a dedup pipeline). */
-  private def d06(s: SparkSession, dir: String): DataFrame =
-    Dedup.connectedComponents(
-        Dedup.embeddingNearDupsAuto(t(s, dir, "embeddings"), "vec_id",
-          "embedding", probeFilter = col("vec_id") % 20 === 0,
-          threshold = 0.25),
-        "id_a", "id_b")
-      .select(col("id").as("vec_id"), col("cluster").as("cluster_id"))
-      .orderBy("vec_id")
-
-  /** Best-representative selection per near-dup text cluster
-    * (keep-the-best, the third dedup disposal mode next to drop-all-
-    * but-first and d15's down-weighting): d04's exact ngram-jaccard
-    * pairs cluster via connectedComponents, and each cluster keeps its
-    * highest-quality member (6-dp-rounded t02 score, ties to lowest
-    * doc_id). One quality join + one max_by aggregate over the bounded
-    * cluster frame. Full SQL oracle: d04's pair CTE + a recursive reach
-    * + the same argmax. */
-  private def d16(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val clusters = Dedup.connectedComponents(
-      Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text",
-        n = 3, probeFilter = col("doc_id") % 10 === 0, threshold = 0.02),
-      "id_a", "id_b")
-    val q = docs.select(col("doc_id").as("id"),
-      round(TextOps.qualityScore(col("text")), 6).as("q"))
-    clusters.join(q, Seq("id"))
-      .groupBy(col("cluster").as("cluster_id"))
-      .agg(count(lit(1)).as("n_members"),
-        max_by(col("id"), struct(col("q"), -col("id"))).as("rep_doc_id"),
-        max(struct(col("q"), -col("id"))).getField("q").as("rep_quality"))
-      .select(col("cluster_id"), col("n_members"), col("rep_doc_id"),
-        col("rep_quality"))
-      .orderBy("cluster_id")
-  }
-
-  /** Soft dedup weights (Dedup.dedupWeights): d06's near-dup clusters
-    * become per-document down-weights — weight = 1/cluster_size, 1 for
-    * singletons — so each cluster contributes one document's worth of
-    * training mass instead of being dropped. Full SQL oracle: d06's
-    * recursive-CTE components extended with sizes and the universe
-    * left join. */
-  private def d15(s: SparkSession, dir: String): DataFrame =
-    Dedup.dedupWeights(t(s, dir, "embeddings"), "vec_id",
-        Dedup.connectedComponents(
-          Dedup.embeddingNearDupsAuto(t(s, dir, "embeddings"), "vec_id",
-            "embedding", probeFilter = col("vec_id") % 20 === 0,
-            threshold = 0.25),
-          "id_a", "id_b"))
-      .orderBy("vec_id")
-
-  /** d08 cell count and cosine threshold, shared with the oracle SQL
-    * generator (tau=0.25 matches d05's near-dup band on this corpus —
-    * max off-diagonal cosine ≈ 0.44). */
-  private[graft] val d08Cells = 16
-  private[graft] val d08Tau = 0.25
-
-  /** Semantic dedup (SemDeDup): every corpus id with its keep/drop
-    * decision, each drop carrying a (witness_id, witness_cos) evidence
-    * pair. FULL SQL oracle via the exported-model route (r13): the
-    * k-means fit persists ([[graft.sim.ModelStore]]) and the greedy
-    * keep-lowest-id rule runs from the LOADED centroids, so DuckDB
-    * re-derives cell assignment, within-cell qualifying pairs and the
-    * min-id witness per drop from the exported model bits; the
-    * per-drop witness soundness audit (tools/oracle_check.py
-    * d08_soundness — d03 emitSigs' sibling) remains as the
-    * independent one-sided check. */
-  private def d08(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore}
-    val e = t(s, dir, "embeddings")
-    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("v"))
-    val base = gateModelDir(dir, "d08")
-    ModelStore.save(Ivf.fitCentroids(corpus, c = d08Cells, iters = 3),
-      "ivf_centroids", s"$base/ivf_centroids")
-    val centroids =
-      ModelStore.load(s, "ivf_centroids", s"$base/ivf_centroids")
-    Dedup.semanticDedupAuditFromCentroids(e, "vec_id", "embedding",
-        centroids, tau = d08Tau)
-      .orderBy("vec_id")
-  }
-
-  /** Benchmark decontamination: eval split = every 10th doc, train = the
-    * rest; 3-gram overlap against the train corpus, contaminated at ≥ 50%
-    * overlap (the near-dup-heavy corpus makes both flag values occur). */
-  private def d09(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    Dedup.contamination(
-        d.filter(col("doc_id") % 10 =!= 0),
-        d.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3, tau = 0.5)
-      .select(col("id").as("doc_id"), col("n_ngrams"), col("n_hits"),
-        col("overlap"), col("contaminated"))
-      .orderBy("doc_id")
-  }
-
-  /** ExactSubstr-style cleaning: remove every token covered by a
-    * cross-doc duplicated 5-gram span (d10's detection rule, applied as a
-    * transform — the actual dedup-the-training-text step). */
-  private def d12(s: SparkSession, dir: String): DataFrame =
-    Dedup.removeDupSpans(t(s, dir, "documents"), "doc_id", "text", n = 5)
-      .select(col("id").as("doc_id"), col("n_tokens"), col("n_removed"),
-        col("clean_text"))
-      .orderBy("doc_id")
-
-  private def s01(s: SparkSession, dir: String): DataFrame =
-    Knn.bruteForceKnn(t(s, dir, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") < 5, k = 3)
-      .orderBy("probe_id", "rank")
-
-  /** s10 seed and output dim, shared with the oracle SQL generator. */
-  private[graft] val s10Seed = "graft-project-r12"
-  private[graft] val s10OutDim = 16
-
-  /** Seeded ±1 random projection 64 → 16 (Project.randomProjection): the
-    * Johnson–Lindenstrauss reduction a 100 TB ANN pipeline runs before
-    * building any index. Pure per-row codegen'd map — zero shuffles, no
-    * fitting pass, the seed IS the model — and the DuckDB oracle
-    * regenerates the identical md5-coin matrix cell by cell, so every
-    * projected value hash-matches. */
-  private def s10(s: SparkSession, dir: String): DataFrame =
-    graft.sim.Project.randomProjection(t(s, dir, "embeddings"),
-        "vec_id", "embedding", inDim = 64, outDim = s10OutDim,
-        seed = s10Seed)
-      .orderBy("vec_id", "dim")
-
-  /** SQ8 scalar quantization (Sq.sq8Summary): per-dim [min,max] fit —
-    * one map-side-combined d-key aggregate — zipped into the scan as a
-    * 1-row broadcast, then a single codegen'd per-row transform encodes
-    * every float to a byte. The 4× compression rung BEFORE PQ at 100 TB;
-    * codes use floor(x+0.5) so Spark and DuckDB agree bit-for-bit, and
-    * the gate pins each vector's full code sequence via md5. */
-  private def s11(s: SparkSession, dir: String): DataFrame =
-    graft.sim.Sq.sq8Summary(t(s, dir, "embeddings"), "vec_id", "embedding")
-      .orderBy("vec_id")
-
-  /** SQ8 recall audit (Sq.sq8Recall): float-space brute top-5 vs
-    * code-space top-5 for the bounded probe set — the quality
-    * measurement a production SQ8 deployment ships with. Code-space
-    * cosines are integer-derived (exact in double under any summation
-    * order), so both rankings and every recall are bit-deterministic
-    * and the DuckDB oracle reproduces them exactly. */
-  private def s12(s: SparkSession, dir: String): DataFrame =
-    graft.sim.Sq.sq8Recall(t(s, dir, "embeddings"), "vec_id", "embedding",
-        probeFilter = col("vec_id") < 5, k = 5)
-      .orderBy("probe_id")
-
-  /** Banded SRP-LSH top-k. FULL SQL oracle via the exported-model
-    * route (r13): the kernel's murmur3 plane derivation is the one
-    * non-SQL-portable step, so the gate persists [[graft.sim.Knn
-    * .srpPlanes]] (the LSH "model") and DuckDB re-derives projections,
-    * sign buckets, the banded candidate set and the exact cosine
-    * ranking from it. KnnSpec pins planes == kernel signatures. */
-  private def s02(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val kn = srpGateKnobs(e)
-    saveSrpPlanes(s, e, gateModelDir(dir, "s02"), kn)
-    Knn.lshKnn(e, "vec_id", "embedding",
-        probeFilter = col("vec_id") < annProbeMax, k = annK,
-        bitsPerTable = kn.bits, nTables = kn.tables)
-      .orderBy("probe_id", "rank")
-  }
-
-  /** s02/s04 knobs AUTO-derived from the corpus size (the d05/d06/d15
-    * r13 discipline — the gate runs what production would derive, and
-    * the 10x probe measures the same path: frozen b=4/L=8 read 533 s
-    * at 10x where the derived b=8/L=15 read 56 s). Derived once here
-    * so the plane export and the query share one count() job; the
-    * oracle learns the split from the exported `bits` column. */
-  private def srpGateKnobs(e: DataFrame): graft.sim.LshKnobs.Knobs = {
-    val kn = graft.sim.LshKnobs.derive(e.count(), Knn.KnnTargetBucket,
-      Knn.KnnBaseBits, Knn.KnnBaseTables)
-    graft.sim.LshKnobs.requireUncapped(kn, "lshKnn/knnGraph")
-    kn
-  }
-
-  /** IVF top-k. FULL SQL oracle via the exported-model route (r13):
-    * the k-means fit persists ([[graft.sim.ModelStore]]) and the query
-    * runs [[graft.sim.Ivf.ivfKnnFromCentroids]] against the LOADED
-    * centroids — cell assignment, probe-cell selection and the exact
-    * cosine ranking all re-derived in DuckDB from the exported model. */
-  private def s03(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore}
-    val e = t(s, dir, "embeddings")
-    val corpus = e.select(col("vec_id").as("id"), col("embedding").as("v"))
-    val base = gateModelDir(dir, "s03")
-    ModelStore.save(Ivf.fitCentroids(corpus, c = annC, iters = 3),
-      "ivf_centroids", s"$base/ivf_centroids")
-    val centroids = ModelStore.load(s, "ivf_centroids", s"$base/ivf_centroids")
-    Ivf.ivfKnnFromCentroids(e, "vec_id", "embedding", centroids,
-        probeFilter = col("vec_id") < annProbeMax, k = annK,
-        nprobe = annNprobe)
-      .orderBy("probe_id", "rank")
-  }
-
-  /** Shared s02/s04 plane export: the dim rides inside the plane
-    * plan (srpPlanesFromCorpus), so the export is ONE write job. */
-  private def saveSrpPlanes(s: SparkSession,
-                            emb: org.apache.spark.sql.DataFrame,
-                            base: String,
-                            kn: graft.sim.LshKnobs.Knobs): Unit =
-    graft.sim.ModelStore.save(
-      Knn.srpPlanesFromCorpus(emb, "embedding", kn.tables, kn.bits),
-      "srp_planes", s"$base/srp_planes")
-
-  /** d09's decontamination behind the bloom pre-screen
-    * ([[graft.dedup.Dedup.bloomContamination]]): the sketch admits every
-    * true hit, so this is row-identical to d09 — the oracle IS d09's exact
-    * SQL, which makes the gate prove the prefilter never drops a hit. */
-  private def d11(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    Dedup.bloomContamination(
-        d.filter(col("doc_id") % 10 =!= 0),
-        d.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", n = 3, tau = 0.5)
-      .select(col("id").as("doc_id"), col("n_ngrams"), col("n_hits"),
-        col("overlap"), col("contaminated"))
-      .orderBy("doc_id")
-  }
-
-  /** p02's mixture weights, shared with the oracle CASE chain
-    * (OracleSql) and PackSpec: every fifth source dropped entirely, the
-    * rest sampled at staggered rates — all sampling regimes (keep-all,
-    * partial, drop-all) occur in the gate row. */
-  private[graft] val p02Weights: Map[String, Double] =
-    (0 until 20).map { i =>
-      s"src$i" -> Seq(1.0, 0.7, 0.4, 0.15, 0.0)(i % 5)
-    }.toMap
-  private[graft] val p02Seed = "mix-v1"
-
-  /** p08's integer mixture weights (percent), shared with the oracle
-    * CASE chain — p02's regime spread (keep-all / partial / drop-all)
-    * restated as integers so every allocation stays exact. */
-  private[graft] val p08Weights: Map[String, Int] =
-    (0 until 20).map { i => s"src$i" -> Seq(100, 70, 40, 15, 0)(i % 5) }
-      .toMap
-
-  /** Token-budget mixture plan (Pack.tokenBudget): per-source available
-    * vs desired tokens and the implied repeat factor under the target
-    * mixture — one map-side-combined aggregate to |sources| keys plus a
-    * 1-row totals zip; all allocation arithmetic integer, so the DuckDB
-    * oracle reproduces the plan bit-for-bit. */
-  private def p08(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.tokenBudget(t(s, dir, "documents"), col("source"),
-        TextOps.wordCount(col("text")), p08Weights)
-      .orderBy("source")
-
-  /** p13's total training-token budget, shared with the oracle. */
-  private[graft] val p13Budget = 1000000L
-
-  /** Temperature mixture allocation (Pack.temperatureMix, alpha = 0.5
-    * via correctly-rounded sqrt): per-source sqrt-of-size shares and
-    * floor token budgets out of [[p13Budget]] — the up-weight-the-tail
-    * recipe step before p08/p09's integer-weight plan. One map-side
-    * aggregate + a 1-row totals zip; FULL SQL oracle runs the same
-    * sqrt/fold/divide/floor chain in the same source-name order. */
-  private def p13(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.temperatureMix(t(s, dir, "documents"), col("source"),
-        TextOps.wordCount(col("text")), totalBudget = p13Budget)
-      .orderBy("source")
-
-  /** p09's coin seed, shared with the oracle SQL generator. */
-  private[graft] val p09Seed = "graft-expand-r12"
-
-  /** Epoch-expanded training mix (Pack.mixtureExpand): the p08 plan
-    * materialized — full epochs per source plus a seeded fractional
-    * copy, emitted at scan parallelism (plan broadcast, coin + sequence
-    * explode row-local). Gate folds the expansion back to per-source
-    * realized counts the oracle re-derives coin by coin. */
-  private def p09(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.mixtureExpand(t(s, dir, "documents"), col("source"),
-        col("doc_id"), TextOps.wordCount(col("text")), p08Weights, p09Seed)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("n_tokens")).as("realized_tokens"),
-        max(col("epoch")).as("max_epoch"))
-      .orderBy("source")
-
-  private[graft] val p11Seed = "graft-order-r12"
-  private[graft] val p11Shards = 8
-
-  /** Materialized training order (the pipeline's LAST step, composing
-    * p09 and p07): the epoch-expanded mix keyed by (doc, epoch) runs
-    * through the seeded global shuffle-shard — every copy of every doc
-    * gets its final (shard, position), i.e. exactly what the ordered
-    * shard files the trainer reads contain. One expansion scan + one
-    * shard-key exchange with in-partition sort (p07's shape); the full
-    * SQL oracle chains p09's coin-exact expansion CTE into p07's
-    * draw/rank logic over the composite 'id:epoch' key. */
-  /** p12's shared knobs (oracle-interpolated): the quality floor and
-    * the per-source token quota, sized against the corpus so the
-    * filters BIND — quality drops docs at every sf, quota (800 <
-    * every source's 1.1-1.5k sf0.01 token total) truncates every
-    * source's tail at both gate scales. Exact dedup bites only at
-    * sf0.1 (the corpus has 8 exact dups there, none at sf0.01) —
-    * stage verified by the sf0.1 sweep, pass-through at the driver
-    * sf. */
-  private[graft] val p12MinQuality = 0.5
-  private[graft] val p12Quota = 800L
-
-  /** END-TO-END training-data pipeline composition — one declarative
-    * plan chaining the four stages every §2 family contributes: exact
-    * dedup (d01's keep-lowest-per-fingerprint), quality filtering
-    * (t02's score, raw-double threshold — the chain is integer-derived
-    * so bit-identical across engines, t07-proven), per-source greedy
-    * token-quota admission (st07's cumsum-window rule, batch form),
-    * and bucketed sequence packing (p01's window). Proves the stages
-    * COMPOSE as DataFrames with no materialization between them: one
-    * logical plan, Catalyst free to pipeline dedup's aggregate into
-    * the quality scan. Per-doc output carries every stage's evidence
-    * (survival implies dedup-kept ∧ quality ≥ floor ∧ prior < quota)
-    * plus the packed coordinates. */
-  private def p12(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = t(s, dir, "documents")
-    val keep = docs
-      .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
-      .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    // upstream token count rides as "toks": packSequences reserves the
-    // n_tokens output name (its require would reject a clashing input),
-    // and the gate's emitted n_tokens is the pack stage's own cast
-    val scored = docs.join(keep, Seq("doc_id"))
-      .select(col("doc_id"), col("source"),
-        TextOps.wordCount(col("text")).cast("long").as("toks"),
-        TextOps.qualityScore(col("text")).as("quality"))
-      .filter(col("quality") >= p12MinQuality)
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val admitted = scored
-      .withColumn("prior", coalesce(sum(col("toks")).over(w), lit(0L)))
-      .filter(col("prior") < p12Quota)
-    graft.pack.Pack.packSequences(admitted.drop("prior"), "doc_id",
-        col("toks"), pmod(col("doc_id"), lit(8)), seqLen = 256)
-      .select(col("doc_id"), col("source"),
-        round(col("quality"), 6).as("quality"),
-        col("n_tokens"), col("bucket"), col("tok_offset"),
-        col("seq_first"), col("seq_last"))
-      .orderBy("doc_id")
-  }
-
-  private def p11(s: SparkSession, dir: String): DataFrame = {
-    val expanded = graft.pack.Pack.mixtureExpand(t(s, dir, "documents"),
-        col("source"), col("doc_id"), TextOps.wordCount(col("text")),
-        p08Weights, p09Seed)
-      .select(concat_ws(":", col("id"), col("epoch")).as("key"))
-    // (doc, epoch) re-derived by splitting the composite key — the
-    // expansion lineage executes exactly once, no self-join
-    graft.pack.Pack.shuffleShard(expanded, col("key"),
-        nShards = p11Shards, seed = p11Seed)
-      .select(
-        split(col("id"), ":").getItem(0).cast("long").as("doc_id"),
-        split(col("id"), ":").getItem(1).cast("long").as("epoch"),
-        col("shard"), col("pos"))
-      .orderBy("shard", "pos")
-  }
-
-  /** Boundary-respecting greedy packing (Pack.packNoStraddle): p01's
-    * buckets and capacity, but docs never straddle a sequence — the
-    * SFT packing mode. Per-bucket sequential fold after one bucket
-    * shuffle; all-integer, so the DuckDB oracle replays the fold with
-    * a recursive CTE bit-for-bit. */
-  private def p10(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.packNoStraddle(t(s, dir, "documents"), "doc_id",
-        TextOps.wordCount(col("text")), pmod(col("doc_id"), lit(8)),
-        capacity = 256L)
-      .orderBy("doc_id")
-
-  /** Concat-and-chunk sequence packing over 8 buckets at 256 tokens per
-    * training sequence ([[graft.pack.Pack.packSequences]]). */
-  private def p01(s: SparkSession, dir: String): DataFrame =
-    // narrow projection BEFORE the pack windows: packSequences now
-    // preserves input columns, and `text` riding the window sort would
-    // widen the shuffle for nothing
-    graft.pack.Pack.packSequences(
-        t(s, dir, "documents").select(col("doc_id"),
-          TextOps.wordCount(col("text")).as("__wc")),
-        "doc_id", col("__wc"), pmod(col("doc_id"), lit(8)),
-        seqLen = 256)
-      .select("doc_id", "n_tokens", "bucket", "tok_offset",
-        "seq_first", "seq_last")
-      .orderBy("doc_id")
-
-  /** Deterministic per-source mixture sampling, reported as per-source
-    * kept counts ([[graft.pack.Pack.mixtureFlags]]). */
-  private def p02(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.mixtureFlags(t(s, dir, "documents"), col("source"),
-        col("doc_id"), p02Weights, p02Seed)
-      .groupBy("source")
-      .agg(max(col("weight")).as("weight"),
-        count(lit(1)).as("n_docs"),
-        sum(col("kept")).cast("long").as("n_kept"))
-      .orderBy("source")
-
-  /** Duplicated-span profiling: 5-gram spans occurring in ≥ 2 docs. */
-  /** Content-defined chunking dedup (Dedup.cdcChunkDups): variable-
-    * length content-aligned chunks (rolling 3-gram md5 boundary rule,
-    * first hex ≤ '1' → p=1/8, mean ~8-token chunks), duplicated-chunk
-    * profile
-    * across docs. Segmentation is one row-local codegen'd projection;
-    * the only shuffles are the two narrow md5-keyed aggregates. */
-  private def d14(s: SparkSession, dir: String): DataFrame =
-    Dedup.cdcChunkDups(t(s, dir, "documents"), "doc_id", "text",
-        window = 3, hexBoundary = "1")
-      .orderBy("chunk_md5")
-
-  private def d10(s: SparkSession, dir: String): DataFrame =
-    Dedup.dupSpans(t(s, dir, "documents"), "doc_id", "text", n = 5)
-      .select(col("id").as("doc_id"), col("n_spans"), col("n_dup_spans"),
-        col("dup_frac"))
-      .orderBy("doc_id")
-
-  /** Full-corpus kNN graph (LSH internals — rows-only check; recall and
-    * rank-exactness pinned by KnnSpec ground truth at sf0.001). */
-  /** Full-corpus kNN graph — s02's banding with every row a probe.
-    * FULL SQL oracle via the same exported-plane route. */
-  private def s04(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val kn = srpGateKnobs(e)
-    saveSrpPlanes(s, e, gateModelDir(dir, "s04"), kn)
-    Knn.knnGraph(e, "vec_id", "embedding",
-        k = annK, bitsPerTable = kn.bits, nTables = kn.tables)
-      .orderBy("probe_id", "rank")
-  }
-
-  private def t01(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val scored = d.select(col("doc_id") +:
-      TextOps.profiles.map { case (l, _) =>
-        TextOps.langScore(col("text"), l).as(s"s_$l")
-      }: _*)
-    scored
-      .withColumn("lang_pred", {
-        val m = TextOps.profiles.map(p => col(s"s_${p._1}"))
-          .reduce((a, b) => greatest(a, b))
-        TextOps.profiles.foldRight(lit("und")) { case ((l, _), acc) =>
-          when(col(s"s_$l") === m, lit(l)).otherwise(acc)
-        }
-      })
-      .orderBy("doc_id")
-  }
-
-  private def t02(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
-      .orderBy("doc_id")
-
-  /** Per-source quality quota — the "keep the best N docs per domain"
-    * curation step of a data-mixture pipeline. Ranking is the bounded
-    * top-k aggregate (map-side ≤ N rows per source per partition), never
-    * a window; the DuckDB oracle states the same semantics as
-    * row_number() — the cross-engine check that the aggregate implements
-    * exactly the windowed contract. */
-  private def t07(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("source"), col("doc_id"),
-        TextOps.qualityScore(col("text")).as("quality"))
-      .groupBy("source")
-      .agg(graft.functions.TopK.topKByScore(
-        col("quality"), col("doc_id"), 20).as("kept"))
-      .select(col("source"), posexplode(col("kept")).as(Seq("pos", "kv")))
-      .select(col("source"), col("kv.id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("kv.score").as("quality"))
-      .orderBy("source", "rank")
-
-  private def t03(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"),
-        TextOps.wordCount(col("text")).as("ws_tokens"),
-        TextOps.bpeEstimate(col("text")).as("bpe_est"))
-      .orderBy("doc_id")
-
-  private def t04(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
-      .orderBy("doc_id")
-
-  /** Token-repetition quality filters (Gopher-style): the standard
-    * drop-if-too-repetitive signals of a training-data pipeline. */
-  private def t06(s: SparkSession, dir: String): DataFrame =
-    TextOps.repetitionMetrics(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** Corpus-level statistics — the first report of any training-data run:
-    * doc/token/vocab volume in one pass over the corpus plus one distinct
-    * aggregate over exploded tokens (map-side combined). */
-  private def t05(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val base = d.agg(
-      count(lit(1)).as("n_docs"),
-      sum(TextOps.wordCount(col("text"))).as("total_ws_tokens"),
-      sum(TextOps.bpeEstimate(col("text"))).as("total_bpe_est"))
-    val vocab = d
-      .select(explode(Dedup.tokens(col("text"))).as("tok"))
-      .agg(countDistinct(col("tok")).as("vocab_size"))
-    // two single-row aggregates zipped — the 1×1 nested-loop join here is
-    // the canonical scalar-combine plan, exempted in PlanSpec's audit
-    base.crossJoin(vocab)
-  }
-
-  /** Incremental dedup: a new crawl batch (doc_id >= 400) keeps only docs
-    * whose fingerprint is absent from the existing corpus (doc_id < 400)
-    * AND is the first occurrence within the batch — the production
-    * "dedupe the delta, not the world" flow. Anti-join on the fingerprint
-    * (one shuffle) + first-per-fp within the batch. */
-  private def d07(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), Dedup.fingerprint(col("text")).as("fp"))
-    val corpus = d.filter(col("doc_id") < 400)
-    val batch = d.filter(col("doc_id") >= 400)
-    batch.join(corpus, Seq("fp"), "left_anti")
-      .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id", "fp")
-      .orderBy("doc_id")
-  }
-
-  /** Image metadata: PNG/JPEG/GIF header blobs synthesized per doc (format
-    * and dimensions derived from doc_id), parsed back by the REAL header
-    * parser (Binary.imageHeader) — the oracle recomputes every field
-    * arithmetically, so a parse bug breaks the hash (the image analog of
-    * m02's makeWav → wavHeader loop). */
-  private def m01(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.imageHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeImage(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** Audio metadata: WAV blobs synthesized per doc (params derived from
-    * doc_id/n_chars), parsed back by the REAL RIFF chunk walker — the
-    * oracle recomputes every field arithmetically, so a parse bug breaks
-    * the hash. */
-  private def m02(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents")
-      .select(col("doc_id"), col("n_chars").cast("long").as("n"))
-      .as[(Long, Long)]
-    Binary.audioHeaders(
-        src.map { case (id, n) => Binary.PayloadRow(id, Binary.makeWav(id, n)) })
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL MP4 metadata: per-doc header-only ISO-BMFF containers
-    * (Binary.makeMp4 — every field a closed form of doc_id, v0 and v1
-    * box layouts alternating by parity) walked by the pure-byte box
-    * parser (Binary.mp4Header via videoHeaders): ftyp brand, mvhd
-    * timescale/duration, trak count, first track's fixed-point
-    * dimensions. The oracle recomputes every field arithmetically — a
-    * box-walk bug (offset, version layout, largesize, fixed-point
-    * shift) breaks the hash. Retires the MP4 stub's metadata half;
-    * only frame DECODE remains env-blocked (no JVM codec). */
-  private def m06(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.videoHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeMp4(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL Matroska/WebM metadata: per-doc header-only EBML containers
-    * (Binary.makeMkv — every field a closed form of doc_id; webm
-    * 4-byte-float vs matroska 8-byte-float Duration by parity,
-    * unknown-size Segments for id%5==0, non-minimal size VINTs for
-    * id%3==0) walked by the pure-byte EBML parser (Binary.mkvHeader
-    * via mkvHeaders): DocType, TimestampScale, Duration → ms, track
-    * count, first video track's pixel dims. The oracle recomputes
-    * every field arithmetically — a VINT-length, float-width,
-    * unknown-size, or first-video-track bug breaks the hash. Retires
-    * the Matroska stub's metadata half; only frame DECODE remains
-    * env-blocked (no JVM codec). */
-  private def m07(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.mkvHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeMkv(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL WebP metadata: per-doc header-only RIFF/WEBP containers
-    * (Binary.makeWebp — variant cycles VP8X/VP8L/VP8 by doc_id % 3,
-    * every field a closed form of doc_id) walked by the pure-byte RIFF
-    * parser (Binary.webpHeader): 24-bit-LE minus-one canvas dims,
-    * LE-bit-packed lossless dims + alpha bit, lossy sync-code frame
-    * dims. The oracle recomputes every field arithmetically — a chunk
-    * walk, bit-unpack, or variant-dispatch bug breaks the hash.
-    * Completes the RIFF family (WAV m02, AVI m05) on the image side. */
-  private def m11(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.webpHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeWebp(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL TIFF/EXIF-class metadata: per-doc header-only TIFF containers
-    * (Binary.makeTiff — even ids little-endian `II`, odd big-endian
-    * `MM`, so BOTH integer layouts run on every batch; every field a
-    * closed form of doc_id; ids %3==0 chain a second page IFD) walked
-    * by the pure-byte IFD parser (Binary.tiffHeader via tiffHeaders):
-    * byte order, ImageWidth (LONG type 4), ImageLength + Orientation
-    * (SHORT type 3, left-justified inline values — the EXIF rotation
-    * tag every image pipeline must honor before pixel ops), and the
-    * chained page count with first-IFD-wins dims (m06's first-track
-    * discipline). The oracle recomputes every field arithmetically —
-    * an endianness, inline-value-layout, or IFD-chain bug breaks the
-    * hash. Completes the still-image metadata family (PNG/GIF/JPEG
-    * m01, WebP m11) with the container the scan/EXIF world ships. */
-  private def m15(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.tiffHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeTiff(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL FLAC metadata: per-doc header-only FLAC containers
-    * (Binary.makeFlac — every field a closed form of doc_id; ids %5==0
-    * carry a >2^32 total-sample count forcing the 36-bit read; ids %3
-    * chain PADDING blocks behind STREAMINFO) walked by the pure-byte
-    * METADATA_BLOCK parser (Binary.flacHeader via flacHeaders): sample
-    * rate (20-bit), channels (3-bit, −1-coded), bit depth (5-bit,
-    * −1-coded), total samples (36-bit), integer-division duration, and
-    * the last-flag-terminated block count. The oracle recomputes every
-    * field arithmetically — a bit-offset, −1-coding, or block-walk bug
-    * breaks the hash. Completes the audio metadata family (WAV m02)
-    * with the lossless-archive container. */
-  private def m16(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.flacHeaders(
-        src.map(id => Binary.PayloadRow(id, Binary.makeFlac(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL MP3 metadata: per-doc MPEG-1 Layer III streams
-    * (Binary.makeMp3 — every field a closed form of doc_id; all 14
-    * bitrate rows, all 3 sample rates, all 4 channel modes and both
-    * padding hop lengths cycle through the corpus; the ID3v2 tag's
-    * payload is 0xFF-laced so only a correct SYNCSAFE size decode
-    * lands the walk on the first real frame) walked by the pure-byte
-    * frame hopper (Binary.mp3Header via mp3Headers): bitrate/rate
-    * table lookups, integer frame-length hops, first-frame-wins
-    * fields, frame count, integer-division duration. The oracle
-    * recomputes every field arithmetically — a table, bit-offset,
-    * syncsafe or hop-length bug breaks the hash. Completes the audio
-    * metadata family (WAV m02, FLAC m16) with the lossy-archive
-    * container. */
-  private def m17(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.mp3Headers(
-        src.map(id => Binary.PayloadRow(id, Binary.makeMp3(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL ZIP archive listing: per-doc spec-shaped archives
-    * (Binary.makeZip — 1 + id%5 members with closed-form methods,
-    * sizes and CRCs; trailing comments laced with `P` bytes so only a
-    * true backward EOCD scan lands) walked by the pure-byte
-    * central-directory parser (Binary.zipListing via zipListings):
-    * entry count, compressed/uncompressed byte totals, deflated-member
-    * count, CRC-32 checksum sum — the list-without-decompressing
-    * primitive corpus ingest runs over archive shards. The oracle
-    * recomputes every total arithmetically — an EOCD-scan, stride, or
-    * field-offset bug breaks the hash. */
-  private def m18(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.zipListings(
-        src.map(id => Binary.PayloadRow(id, Binary.makeZip(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL H.264 Annex-B STRUCTURE metadata (Binary.h264Meta): NAL
-    * start-code walk + exp-Golomb SPS parse (emulation prevention
-    * stripped) over deterministic baseline-profile fixtures — NAL/SPS/
-    * PPS/IDR/slice counts and the coded dimensions, all closed forms
-    * of doc_id the oracle recomputes arithmetically. The pixel half of
-    * H.264 stays environment-blocked (no JVM codec); this retires the
-    * STRUCTURE half, as mp4Header did for ISO-BMFF. */
-  private def m19(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.h264Metas(
-        src.map(id => Binary.PayloadRow(id, Binary.makeH264(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL IVF (VP8/VP9 transport) metadata (Binary.ivfMeta): DKIF
-    * header + bounds-checked length-prefixed frame walk — codec
-    * fourcc, dims, declared vs walked frame counts, payload byte
-    * total, last 64-bit pts; every column a closed form of doc_id. */
-  private def m20(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.ivfMetas(
-        src.map(id => Binary.PayloadRow(id, Binary.makeIvf(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** REAL Ogg (RFC 3533) page-walk metadata (Binary.oggMeta): page
-    * census with BOS/EOS flags, distinct bitstream serials (the
-    * multiplexed-stream arm planted for id%7 = 0), completed packets
-    * via the lacing-value grammar (255 = continuation — genuinely
-    * exercised by the fixture), payload byte totals and the last
-    * granule position; every column a closed form of doc_id the
-    * oracle recomputes arithmetically. Codec payload decode stays
-    * environment-blocked (the ivfMeta discipline). */
-  private def m21(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.oggMetas(
-        src.map(id => Binary.PayloadRow(id, Binary.makeOgg(id))))
-      .toDF()
-      .orderBy("doc_id")
-  }
-
-  /** Image near-dup detection by perceptual hash (Binary.aHashes +
-    * Dedup.hammingNearDups): every doc gets a deterministic noise PNG;
-    * docs with doc_id % 25 == 0 also plant a monotone brightness/contrast
-    * re-encode under id+1000000 — the transformed-asset duplicate a byte
-    * hash (m01/d01) can never see. aHash runs at the codec boundary
-    * (pixelStats' mapPartitions discipline), pairing is d03's pigeonhole
-    * band join over the 64-bit signatures — the m-family's decode meets
-    * the d-family's blocking in one operator. Rows-only: no SQL engine
-    * decodes PNG; BinarySpec pins planted-pair recall, pair soundness
-    * (recomputed hamming <= maxDist), and that noise images of distinct
-    * docs never collide. */
-  /** FULL SQL oracle via the exported-model route (r13): the aHash
-    * signature frame persists as the perceptual-hash "model" (the hash
-    * function's value at each payload — d03's token-dictionary status;
-    * exactness pinned by BinarySpec's independent reference decode),
-    * and DuckDB re-derives the pigeonhole chunks, the candidate join
-    * and every hamming. Loading the saved frame also decodes each image
-    * ONCE instead of once per chunk-join side. */
-  private def m08(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ids = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    val payloads = ids.flatMap { id =>
-      val base = Binary.PayloadRow(id, Binary.makeNoisePng(id))
-      if (id % 25 == 0)
-        Seq(base, Binary.PayloadRow(id + 1000000L,
-          Binary.makeNoisePng(id, variant = 1)))
-      else Seq(base)
-    }
-    val base = gateModelDir(dir, "m08")
-    graft.sim.ModelStore.save(Binary.aHashes(payloads).toDF().coalesce(1),
-      "hash_sigs", s"$base/hash_sigs")
-    graft.dedup.Dedup.hammingNearDups(
-        graft.sim.ModelStore.load(s, "hash_sigs", s"$base/hash_sigs"),
-        maxDist = 3)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** REAL audio decode + feature extraction (Binary.makeWavPcm →
-    * Binary.pcmStats): per-doc WAVs with MATERIALIZED closed-form 16-bit
-    * PCM — sample i = ((doc_id·7919 + i·104729) mod 65536) − 32768,
-    * 64 + doc_id mod 193 samples — decoded back by the real RIFF walk +
-    * sample loop into the speech-pipeline summary features: peak, zero
-    * crossings, DC offset, RMS energy. The decoder folds exact INTEGER
-    * Σv / Σv² moments; only this projection divides and rounds, so the
-    * DuckDB oracle (which regenerates the waveform arithmetically and
-    * aggregates the same integers) matches bit-for-bit. Retires the
-    * audio family's decode stub the way m03 retired the image one:
-    * m02 proves the header walk, m09 proves the samples. */
-  private def m09(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.audioStatsOf(
-        src.map(id => Binary.PayloadRow(id,
-          Binary.makeWavPcm(id, (64 + id % 193).toInt))))
-      .toDF()
-      .select(col("doc_id"), col("n_samples"), col("peak"), col("zcr"),
-        round(col("sum_amp").cast("double") / col("n_samples"), 6).as("dc"),
-        round(sqrt(col("sum_sq").cast("double") / col("n_samples")), 6)
-          .as("rms"))
-      .orderBy("doc_id")
-  }
-
-  /** Gap-based sessionization over the event stream (30-min gap) — the
-    * canonical behavioral-analytics rollup. Both window passes share one
-    * user_id partitioning (a single shuffle, per-key local sort — never a
-    * global sort); see operators/Sessionize. */
-  private def q37(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir).select(col("user_id"), col("event_id"),
-      graft.util.epochSec(col("ts")).as("ts_sec"))
-    graft.operators.Sessionize.sessionize(
-        e, "user_id", "ts_sec", "event_id", gapSec = 1800)
-      .orderBy("user_id", "session_idx")
-  }
-
-  /** `Pattern.from_io` + the reference's ingest expansion `<*#`
-    * (orm/query.py:788-851; kcidb/__init__.py:493-531): a simulated
-    * just-loaded batch — an orders date window plus a lineitem
-    * ship-date window, the dump-window shape a feed delivers — derives
-    * its per-type roots ([[graft.model.Catalog.rootsFromBatch]]) and
-    * the matched set is the loaded objects PLUS all their ancestors
-    * ([[graft.model.Catalog.ingestClosure]]), the exact object set the
-    * reference generates notifications over after each load. Output is
-    * q29's (object_type, id) ledger shape. */
-  private def q38(s: SparkSession, dir: String): DataFrame = {
-    val batch = Map(
-      "orders" -> t(s, dir, "orders")
-        .filter(col("o_orderdate").between("1995-01-01", "1995-01-31")),
-      "lineitem" -> t(s, dir, "lineitem")
-        .filter(col("l_shipdate").between("1996-06-01", "1996-06-15")))
-    val m = TestCatalog.catalog.ingestClosure(s, dir, batch)
-    def part(tn: String, id: Column): DataFrame =
-      m(tn).select(lit(tn).as("object_type"), id.cast("string").as("id"))
-    part("region", col("r_regionkey"))
-      .union(part("nation", col("n_nationkey")))
-      .union(part("customer", col("c_custkey")))
-      .union(part("supplier", col("s_suppkey")))
-      .union(part("part", col("p_partkey")))
-      .union(part("orders", col("o_orderkey")))
-      .union(part("lineitem", concat(col("l_orderkey").cast("string"),
-        lit("_"), col("l_linenumber").cast("string"))))
-      .orderBy("object_type", "id")
-  }
-
-  /** The reference's FULL post-load loop as one gate query
-    * (kcidb/__init__.py:493-531: load → from_io roots → `<*#` closure →
-    * match → render → spool): q38's ingest closure (loaded batch windows
-    * + ALL their ancestors, Catalog.ingestClosure) feeds q24's rendered
-    * subscription spool — the subscriptions run over the CLOSURE frames,
-    * not the raw tables, so the notification scope is exactly the
-    * objects the load touched. Composes two already-verified operators;
-    * the oracle re-derives the same composition in SQL from the shared
-    * subscription constants. */
-  private def q40(s: SparkSession, dir: String): DataFrame = {
-    val batch = Map(
-      "orders" -> t(s, dir, "orders")
-        .filter(col("o_orderdate").between("1995-01-01", "1995-01-31")),
-      "lineitem" -> t(s, dir, "lineitem")
-        .filter(col("l_shipdate").between("1996-06-01", "1996-06-15")))
-    val m = TestCatalog.catalog.ingestClosure(s, dir, batch)
-    graft.monitor.Subscriptions.matchNotificationsRendered(
-        tn => m(tn), q24Subscriptions)
-      .orderBy("notification_id")
-  }
-
-  /** Trailing-window rate anomaly over the event stream
-    * (operators/Series.rateAnomaly): per (event_type, day) counts scored
-    * against the previous 7 observed days' mean/variance — the volume
-    * alerting a monitoring deployment runs on submission rates. The
-    * corpus collapses to the bounded (series, day) frame BEFORE any
-    * window, and the z arithmetic is a stated chain of double ops over
-    * integer window sums, so the full DuckDB oracle reproduces every
-    * score bit-for-bit. */
-  private def q41(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Series.rateAnomaly(ev(s, dir), col("event_type"),
-        col("ts"))
-      .orderBy("series", "day")
-
-  /** Per-source quality-score distribution: exact interpolated
-    * percentiles via the bounded-state CDF form (operators/Percentiles) —
-    * never Spark's value-buffering `percentile` aggregate. The score is
-    * quantized to 6 dp FIRST (the bounded domain that makes the counting
-    * form exact); the oracle computes plain quantile_cont over the same
-    * quantized values — cross-engine proof the distributed CDF equals the
-    * textbook definition. */
-  private def t08(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Percentiles.groupPercentiles(
-        t(s, dir, "documents").select(col("source"),
-          round(TextOps.qualityScore(col("text")), 6).as("q")),
-        "source", "q",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75, "p95" -> 0.95))
-      // Round at 8dp, NOT 6: interpolated percentiles of 6dp-quantized
-      // values at p ∈ multiples of 0.05 live exactly on the 5e-8 grid,
-      // so 8dp rounds a grid POINT (engine-stable), while 6dp can land
-      // on a half-BOUNDARY (x·1e6 = N.5 exactly) where a 1-ulp
-      // cross-engine difference flips the last digit — hit twice at
-      // sf0.1 (src3 p75, src7 p95).
-      .select(col("source"), col("n_rows").as("n_docs"),
-        round(col("p25"), 8).as("p25"), round(col("p50"), 8).as("p50"),
-        round(col("p75"), 8).as("p75"), round(col("p95"), 8).as("p95"))
-      .orderBy("source")
-
-  /** Token-length histogram (equi-width, 16 buckets over [0, 1024) plus
-    * the overflow bucket) — the length profile a packing pipeline (p01)
-    * reads to pick its sequence length. width_bucket keeps the whole
-    * thing one codegen'd scan + one small-key aggregate. */
-  private def p03(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(width_bucket(TextOps.wordCount(col("text")).cast("double"),
-        lit(0.0), lit(1024.0), lit(16)).as("bucket"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col("bucket"), ((col("bucket") - 1) * 64).as("lo_tokens"),
-        (col("bucket") * 64).as("hi_tokens"), col("n_docs"))
-      .orderBy("bucket")
-
-  /** Corpus vocabulary heavy hitters: top-25 tokens by raw frequency with
-    * a deterministic tiebreak — one explode + one map-side-combined count
-    * + a global TakeOrderedAndProject (q21's shape: never a full sort). */
-  private def t09(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy("token")
-      .agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("token").asc)
-      .limit(25)
-
-  /** TF-IDF top terms per document — the per-doc keyword extraction of a
-    * corpus indexing pipeline. tf and df are two map-side-combined counts
-    * (df counts rows of the already-distinct (doc, token) tf frame); the
-    * corpus size joins in as a 1-row scalar frame (t05's declared BNLJ
-    * exemption class); ranking is the bounded STRING-id top-k aggregate
-    * (functions/TopKByScoreStr) with binary-order tiebreaks, so the
-    * DuckDB row_number() oracle reproduces rank order exactly. */
-  private def t10(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val tf = docs
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_docs"))
-    tf.join(df, "token")
-      .crossJoin(n)
-      .select(col("doc_id"), col("token"),
-        (col("tf") *
-          (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0))
-          .as("score"))
-      .groupBy("doc_id")
-      .agg(graft.functions.TopK.topKByScoreStr(
-        col("score"), col("token"), 5).as("kept"))
-      .select(col("doc_id"), posexplode(col("kept")).as(Seq("pos", "kv")))
-      .select(col("doc_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("kv.id").as("token"), round(col("kv.score"), 6).as("score"))
-      .orderBy("doc_id", "rank")
-  }
-
-  /** Perplexity-style LM filtering signal (TextOps.lmScore): add-0.5
-    * bigram model fit on the d09 train split (doc_id % 10 != 0), every
-    * doc scored by average bigram negative log-likelihood. The whole
-    * model is two count aggregates + a vocab scalar; scoring is a gram-
-    * keyed left join — the CCNet quality-filter shape at corpus scale. */
-  private def t11(s: SparkSession, dir: String): DataFrame =
-    graft.text.TextOps.lmScore(t(s, dir, "documents"), "doc_id", "text",
-        trainFilter = col("doc_id") % 10 =!= 0)
-      .orderBy("doc_id")
-
-  /** PII scrubbing (TextOps.piiRedact): the corpus has no natural PII, so
-    * the gate plants a deterministic email (doc_id % 3 == 0) and IPv4
-    * (doc_id % 4 == 0) per doc — makeWav's synthesize-then-parse recipe
-    * on text — then counts and redacts; the oracle recomputes the
-    * augmentation AND the redaction, and clean_md5 catches any span
-    * divergence between the two regex engines. */
-  private def t12(s: SparkSession, dir: String): DataFrame = {
-    val aug = concat(col("text"),
-      when(col("doc_id") % 3 === 0,
-        concat(lit(" contact user"), col("doc_id"), lit("@mail"),
-          col("doc_id") % 7, lit(".com"))).otherwise(lit("")),
-      when(col("doc_id") % 4 === 0,
-        concat(lit(" from "), col("doc_id") % 256, lit("."),
-          (col("doc_id") * 7) % 256, lit("."),
-          (col("doc_id") * 13) % 256, lit("."),
-          (col("doc_id") * 29) % 256)).otherwise(lit("")))
-    graft.text.TextOps.piiRedact(
-        t(s, dir, "documents").select(col("doc_id"), aug.as("text")),
-        "doc_id", "text")
-      .orderBy("doc_id")
-  }
-
-  /** Token-entropy quality signal (TextOps.tokenEntropy): Shannon entropy
-    * of each doc's token frequency distribution plus its normalized form —
-    * the information-density filter axis (template boilerplate scores low,
-    * uniform noise near 1.0) that t02's surface ratios and t06's
-    * repetition fractions don't measure. */
-  private def t13(s: SparkSession, dir: String): DataFrame =
-    graft.text.TextOps.tokenEntropy(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  private[graft] val t14Buckets = 1024
-  private[graft] val t14Target = "src0"
-
-  /** DSIR importance weights (TextOps.dsirWeights): how much each raw-pool
-    * doc looks like the `src0` target domain, via hashed-bigram
-    * distribution log ratios — the data-SELECTION axis (which docs to
-    * train on) next to t02/t06/t13's intrinsic quality axes. The fitted
-    * model is a B-row table independent of corpus size (the reason this
-    * is the 100 TB selection tool), broadcast on the apply pass. */
-  private def t14(s: SparkSession, dir: String): DataFrame =
-    graft.text.TextOps.dsirWeights(t(s, dir, "documents"), "doc_id", "text",
-        col("source") === t14Target, buckets = t14Buckets)
-      .orderBy("doc_id")
-
-  /** First-round BPE merge candidates (TextOps.bpeMergeCandidates):
-    * tokenizer-training's inner counting step — corpus collapses to the
-    * word-frequency table first, pairs explode off the vocab, top-20 by
-    * (count, pair); full SQL oracle re-counts every weighted pair. */
-  private def t15(s: SparkSession, dir: String): DataFrame =
-    TextOps.bpeMergeCandidates(t(s, dir, "documents"), "text", k = 20)
-
-  /** Language-ID quality audit (s12's "measure, don't guess" theme on
-    * the text axis): t01's n-gram detector scored against the corpus'
-    * ground-truth lang column as a confusion matrix — one map-side-
-    * combined aggregate to ≤|langs|² keys; full SQL oracle re-derives
-    * every prediction. */
-  private def t16(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("lang").as("lang_true"),
-        TextOps.langId(col("text")).as("lang_pred"))
-      .groupBy("lang_true", "lang_pred")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("lang_true", "lang_pred")
-
-  /** HLL++ cardinality profile over the event stream
-    * (operators/Sketches.distinctProfile): per event_type, exact ndv of
-    * user_id (the verifiable anchor, dropped at 100 TB) next to the
-    * fixed-memory sketch estimate. Hash-exact since r17 via the
-    * exported-estimate route (k08's mechanics applied to the PROFILE
-    * shape): the production artifact — (series, ndv_hll, rsd), no
-    * exact column — persists via ModelStore and is read back, the
-    * exact anchors (n_rows, ndv_exact) are recomputed from raw events
-    * in BOTH engines, and rel_err derives from the exported estimate
-    * with the identical 6-dp rounding. DuckDB reads the same estimate
-    * bytes, so every column hash-matches; the containment verdict
-    * itself lives in k08 (batch) and the driver's k01_audit, both
-    * still green on this frame. */
-  private def k01(s: SparkSession, dir: String): DataFrame = {
-    val prof = graft.operators.Sketches.distinctProfile(ev(s, dir),
-        col("event_type"), col("user_id"), rsd = 0.02)
-      .select("series", "n_rows", "ndv_hll", "rsd")
-    val base = gateModelDir(dir, "k01")
-    graft.sim.ModelStore.save(prof.coalesce(1), "hll_profile",
-      s"$base/hll_profile")
-    val m = s.read.parquet(s"$base/hll_profile")
-      .select("series", "ndv_hll", "rsd")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("user_id")).as("ndv_exact"))
-      .join(broadcast(m), "series")
-      .select(col("series"), col("n_rows"), col("ndv_exact"),
-        col("ndv_hll"),
-        round(abs(col("ndv_hll") - col("ndv_exact")).cast("double") /
-          col("ndv_exact").cast("double"), 6).as("rel_err"),
-        col("rsd"))
-      .orderBy("series")
-  }
-
-  /** AMS F2 sketch next to its exact anchor
-    * (operators/Sketches.amsF2): per event_type, the self-join-size
-    * moment Σ count(user)² estimated from 60 one-pass lanes, each
-    * signed by one bit of the row's single md5 draw.
-    * Unlike the HLL/GK gates this sketch is md5-coin-derived, so the
-    * FULL SQL oracle reproduces lanes, median, and error bit-for-bit. */
-  private def k03(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.amsF2(ev(s, dir), col("event_type"),
-        col("user_id"))
-      .orderBy("series")
-
-  /** Count-min point-query audit over corpus tokens
-    * (operators/Sketches.cmsTopK): t09's exact top-25 next to their CMS
-    * estimates from a 4×1024-cell table — md5-derived buckets, so the
-    * FULL SQL oracle rebuilds the sketch and every estimate exactly,
-    * and the one-sided overestimate contract is data, not prose. */
-  private def k04(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.cmsTopK(t(s, dir, "documents"), col("text"))
-
-  /** k05's sketch size, shared with the SQL oracle generator. */
-  private[graft] val k05K = 128
-
-  /** Pairwise cross-source BIGRAM-set overlap via KMV bottom-k
-    * sketches (Sketches.bottomKOverlap): per source the 128 smallest
-    * md5 hashes of its distinct word bigrams (~700 per source at gate
-    * sf, so k_used saturates at k and the ESTIMATOR path is really
-    * exercised — unigram vocab would fit the sketch and degenerate to
-    * exact), per source pair the KMV jaccard estimate next to the
-    * exact jaccard anchor (the element-level join a 100 TB run
-    * drops). Deterministic given the hash, so — unlike the register
-    * sketches k01/k02 — this carries a FULL SQL oracle that rebuilds
-    * sketches, estimator and exact answer relationally. */
-  /** k06's knobs, shared with the oracle SQL generator. */
-  private[graft] val k06K = 64
-  private[graft] val k06Seed = "graft-psamp"
-
-  /** Priority sampling over the documents corpus weighted by n_chars
-    * (Sketches.prioritySample — the weighted-subsample sketch family
-    * member): k sample rows + the total row whose Σ max(w, τ) is the
-    * Horvitz–Thompson estimate of the exact Σw emitted next to it.
-    * Deterministic given md5, so FULL SQL oracle. */
-  private def k06(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.prioritySample(t(s, dir, "documents"),
-        col("doc_id"), col("n_chars"), seed = k06Seed, k = k06K)
-      .orderBy("kind", "doc_id")
-
-  private def k05(s: SparkSession, dir: String): DataFrame = {
-    // materialize the split ONCE as a column: an inline `split(text)`
-    // would re-tokenize the whole document for every element_at inside
-    // the transform lambda (O(words²) splits per doc — measured 3×
-    // slower at sf0.1; CollapseProject keeps non-cheap aliases)
-    val ws = col("ws")
-    // codegen'd bigram pairing: zip the word array against itself
-    // shifted by one (slice clamps, so no when-guard needed) — stays
-    // inside whole-stage codegen where a transform() lambda would drop
-    // to the interpreted HOF path
-    val pairsZ = arrays_zip(
-      slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1))
-    graft.operators.Sketches.bottomKOverlap(
-      t(s, dir, "documents")
-        .select(col("source"), split(col("text"), " ").as("ws"))
-        .select(col("source"), explode(pairsZ).as("z"))
-        .select(col("source"),
-          concat_ws(" ", col("z.0"), col("z.1")).as("bg")),
-      col("source"), col("bg"), k = k05K)
-    .orderBy("source_a", "source_b")
-  }
-
-  /** GK-summary quantile profile over event values
-    * (operators/Sketches.quantileProfile): per event_type, p50/p90/p99
-    * estimates at accuracy 10000. Hash-exact since r17 via the
-    * exported-estimate route (k01's r17 promotion on the quantile
-    * axis): the estimate frame persists via ModelStore and is read
-    * back, n_rows is recomputed from raw events in BOTH engines
-    * (count of non-null value — the one exactly-recomputable column),
-    * and the estimates/accuracy come from the shared export so DuckDB
-    * sees the same bytes. The rank-window CONTRACT on these estimates
-    * stays in k07 and the driver's k02_audit, both green on this
-    * frame. */
-  private def k02(s: SparkSession, dir: String): DataFrame = {
-    val prof = graft.operators.Sketches.quantileProfile(ev(s, dir),
-      col("event_type"), col("value"), accuracy = 10000)
-    val base = gateModelDir(dir, "k02")
-    graft.sim.ModelStore.save(prof.coalesce(1), "gk_quantiles",
-      s"$base/gk_quantiles")
-    val m = s.read.parquet(s"$base/gk_quantiles")
-      .select("series", "p50", "p90", "p99", "accuracy")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"))
-      .agg(count(col("value")).as("n_rows"))
-      .join(broadcast(m), "series")
-      .select("series", "n_rows", "p50", "p90", "p99", "accuracy")
-      .orderBy("series")
-  }
-
-  /** The GK rank-window contract as a FULL SQL gate — the k02 audit's
-    * exported-model twin (the exported-model route applied to the
-    * CONTRACT, not the estimate): k02's quantileProfile estimates are
-    * persisted as a model frame, read back (so both engines see the
-    * same bytes), and the gate recomputes each estimate's exact rank
-    * window [count(<v)+1, count(<=v)] over the raw events in one scan
-    * (tiny estimate frame broadcast, ×3 fan per row) plus the audit's
-    * containment bound — target rank q·n ± (n/accuracy + 1) — in PURE
-    * INTEGER arithmetic (everything scaled by 100·accuracy, no float
-    * division). DuckDB re-derives the identical frame from the same
-    * export, so `contained` isn't just audited true — every rank and
-    * bound hash-matches. */
-  private def k07(s: SparkSession, dir: String): DataFrame = {
-    val prof = graft.operators.Sketches.quantileProfile(ev(s, dir),
-      col("event_type"), col("value"), accuracy = 10000)
-    val base = gateModelDir(dir, "k07")
-    graft.sim.ModelStore.save(prof.coalesce(1), "gk_quantiles",
-      s"$base/gk_quantiles")
-    val un = s.read.parquet(s"$base/gk_quantiles")
-      .select(col("series"), col("n_rows"), col("accuracy"),
-        explode(array(
-          struct(lit(50L).as("q100"), col("p50").as("qv")),
-          struct(lit(90L).as("q100"), col("p90").as("qv")),
-          struct(lit(99L).as("q100"), col("p99").as("qv")))).as("z"))
-      .select(col("series"), col("n_rows"), col("accuracy"),
-        col("z.q100").as("q100"), col("z.qv").as("qv"))
-    val rk = ev(s, dir)
-      .join(broadcast(un), col("event_type") === col("series"))
-      .groupBy(col("series"), col("q100"), col("qv"), col("n_rows"),
-        col("accuracy"))
-      .agg(count(col("value")).as("n"),
-        sum(when(col("value") < col("qv"), 1L).otherwise(0L)).as("r_lt"),
-        sum(when(col("value") <= col("qv"), 1L).otherwise(0L)).as("r_le"))
-    rk.select(col("series"), col("q100"), col("n_rows"), col("n"),
-        col("qv"), col("r_lt"), col("r_le"),
-        when(col("n_rows") === col("n") &&
-          col("r_lt") * 100L * col("accuracy") <=
-            col("q100") * col("n") * col("accuracy") +
-              lit(100L) * col("n") + lit(100L) * col("accuracy") &&
-          col("r_le") * 100L * col("accuracy") >=
-            col("q100") * col("n") * col("accuracy") -
-              lit(100L) * col("n") - lit(100L) * col("accuracy"), 1)
-          .otherwise(0).as("contained"))
-      .orderBy("series", "q100")
-  }
-
-  /** The HLL error contract as a FULL SQL gate — k07's route applied to
-    * k01 (the last sketch family with an audit-only contract): the
-    * distinctProfile estimates (WITHOUT the exact column — at 100 TB
-    * the exact NDV is what the sketch replaces) are persisted and read
-    * back, then exact NDV is recomputed from raw events and each
-    * series' |est − exact| ≤ 5·rsd·exact containment is evaluated from
-    * the SAME exported rsd knob (k01's knob-rides-the-output rule).
-    * The exact-NDV aggregate exists here precisely BECAUSE this is the
-    * contract-verification gate; production keeps only the sketch. */
-  private def k08(s: SparkSession, dir: String): DataFrame = {
-    val prof = graft.operators.Sketches.distinctProfile(ev(s, dir),
-        col("event_type"), col("user_id"), rsd = 0.02)
-      .select("series", "n_rows", "ndv_hll", "rsd")
-    val base = gateModelDir(dir, "k08")
-    graft.sim.ModelStore.save(prof.coalesce(1), "hll_profile",
-      s"$base/hll_profile")
-    val m = s.read.parquet(s"$base/hll_profile")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("ndv_exact"))
-      .join(broadcast(m), "series")
-      .select(col("series"), col("n_rows"), col("n"), col("ndv_hll"),
-        col("ndv_exact"), col("rsd"),
-        when(col("n_rows") === col("n") &&
-          abs(col("ndv_hll") - col("ndv_exact")).cast("double") <=
-            lit(5.0) * col("rsd") * col("ndv_exact").cast("double"), 1)
-          .otherwise(0).as("contained"))
-      .orderBy("series")
-  }
-
-  /** HLL mergeability contract ([[graft.operators.Sketches
-    * .mergeProfile]]) — k08's distributed sibling: per-(series, day)
-    * Datasketches-HLL sketches union-merged to the per-series answer,
-    * proving the re-aggregation path a 100 TB warehouse actually runs
-    * (daily partials folded to monthly without a base rescan). The
-    * profile exports via ModelStore (the r13 exported-model route) and
-    * the gate re-joins it against the exact per-series distinct + day
-    * count, emitting the contract columns the FULL SQL oracle
-    * re-derives: sub-count == day-count, and BOTH the merged and the
-    * direct estimate within 5·rsd·exact — containment, not equality,
-    * because the Datasketches union is measurably order-sensitive in
-    * sparse mode (see mergeProfile's Scaladoc); the envelope is the
-    * property that survives any merge order. */
-  private def k09(s: SparkSession, dir: String): DataFrame = {
-    val prof = graft.operators.Sketches.mergeProfile(ev(s, dir),
-      col("event_type"), date_format(col("ts"), "yyyy-MM-dd"),
-      col("user_id"), lgK = 12)
-    val base = gateModelDir(dir, "k09")
-    graft.sim.ModelStore.save(prof.coalesce(1), "hll_merge_profile",
-      s"$base/merge_profile")
-    val m = graft.sim.ModelStore.load(s, "hll_merge_profile",
-      s"$base/merge_profile")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"))
-      .agg(countDistinct(col("user_id")).as("ndv_exact"),
-        countDistinct(date_format(col("ts"), "yyyy-MM-dd")).as("n_days"))
-      .join(broadcast(m), "series")
-      .select(col("series"), col("n_days"), col("n_subs"),
-        col("ndv_merged"), col("ndv_direct"), col("ndv_exact"),
-        col("rsd"),
-        when(col("n_subs") === col("n_days") &&
-          abs(col("ndv_merged") - col("ndv_exact")).cast("double") <=
-            lit(5.0) * col("rsd") * col("ndv_exact").cast("double") &&
-          abs(col("ndv_direct") - col("ndv_exact")).cast("double") <=
-            lit(5.0) * col("rsd") * col("ndv_exact").cast("double"), 1)
-          .otherwise(0).as("contained"))
-      .orderBy("series")
-  }
-
-  /** k-means|| init quality report (Ivf.kmeansParallelInit, Bahmani et
-    * al. 2012): the same 3-iteration spherical k-means fit run from the
-    * deterministic lowest-id seeds AND from the cost-proportional
-    * oversampled init, each profiled as exact-decimal total quantization
-    * cost (Σ round(1−maxCos, 6), deterministic under any partitioning)
-    * plus occupied-cell count — "measure, don't guess" applied to the
-    * init knob every k-means consumer (IVF, SemDeDup, PQ) sits on.
-    * Rows-only: k-means isn't SQL-expressible; IvfInitSpec pins
-    * determinism, candidate provenance, and the cost relationship. */
-  private def s13(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore}
-    val corpus = t(s, dir, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("v"))
-    val base = gateModelDir(dir, "s13")
-    // FULL SQL oracle via the exported-model route (r13): both fitted
-    // centroid frames persist (ModelStore) and DuckDB re-derives the
-    // entire profile — per-row max cosine, exact-decimal total cost,
-    // occupied-cell count — from the identical model bits; the fits
-    // themselves stay pinned by IvfInitSpec (determinism, provenance,
-    // cost relationship).
-    def profile(name: String, init: Option[DataFrame]): DataFrame = {
-      ModelStore.save(Ivf.fitCentroids(corpus, c = annC, iters = 3,
-        initCentroids = init), "ivf_centroids", s"$base/$name")
-      val cents = ModelStore.load(s, "ivf_centroids", s"$base/$name")
-      // r19: per-row max cosine as one row-local projection against the
-      // nested centroid row (max over an array is order-exact — the
-      // same double as the old groupBy max) instead of a ×c crossJoin
-      // re-aggregated by id.
-      val scored = corpus
-        .crossJoin(broadcast(Ivf.nestedCentroids(cents)))
-        .select(col("id"),
-          array_max(transform(col("cents"), e =>
-            graft.functions.Vectors.cosine(col("v"),
-              e.getField("centroid")))).as("max_cos"))
-      val cost = scored.agg(count(lit(1)).as("n_rows"),
-        sum(round(lit(1.0) - col("max_cos"), 6).cast("decimal(28,6)"))
-          .cast("double").as("total_cost"))
-      val cells = Ivf.assign(corpus, cents)
-        .agg(countDistinct(col("cluster")).as("n_cells"))
-      // 1-row scalar combine (the exempted NLJ class)
-      cost.crossJoin(cells)
-        .select(lit(name).as("init"), col("n_rows"), col("n_cells"),
-          round(col("total_cost"), 6).as("total_cost"))
-    }
-    profile("lowid", None)
-      .union(profile("kmpp",
-        Some(Ivf.kmeansParallelInit(corpus, c = annC))))
-      .orderBy("init")
-  }
-
-  private[graft] val t18Merges = 20
-
-  /** BPE tokenizer APPLY (TextOps.bpeEncode): t15's top-20 merge
-    * candidates become the merge table (fit once — the tokenizer-axis
-    * s09 lifecycle) and every word encodes by repeatedly merging its
-    * lowest-rank present pair. The merge table is a bounded 20-row
-    * driver collect (Bloom's sketch-head class); encoding runs on the
-    * corpus-size-independent VOCAB frame only. Full SQL oracle: the t15
-    * counting CTE ranks the same table, a recursive CTE replays the
-    * stated merge-step rule state-for-state, and per-doc totals re-join. */
-  private def t18(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val merges = TextOps.bpeMergeCandidates(docs, "text", k = t18Merges)
-      .collect().map(_.getString(0)).toSeq
-    TextOps.bpeEncode(docs, "doc_id", "text", merges)
-      .orderBy("doc_id")
-  }
-
-  /** Zipf fit (TextOps.zipfFit): OLS slope/intercept of ln(freq) on
-    * ln(rank) over the top-100 tokens — the corpus-health statistic
-    * (natural text ≈ −1). Bounded top-N frame, decimal-exact sums,
-    * stated double-op regression; full SQL oracle. */
-  private def t20(s: SparkSession, dir: String): DataFrame =
-    TextOps.zipfFit(t(s, dir, "documents"), col("text"))
-
-  /** t21 page-synthesis knobs, shared with the SQL oracle generator
-    * (the q44Cols discipline): words per synthesized line, the
-    * every-4th-line-unpunctuated cycle, and the (modulus, line)
-    * boilerplate injections. The documents corpus is single-line word
-    * soup, so the gate deterministically renders each doc as a
-    * multi-line PAGE (the q39 fixture discipline) — line slices of the
-    * doc's words plus planted boilerplate — covering every C4 rule:
-    * %7 lorem-ipsum page drop, %13 brace page drop, %5 javascript line
-    * drop, %11 an unpunctuated line, %4 cycle varies the terminal-punct
-    * ratio, and the words-per-line tail exercises the min-words rule. */
-  private[graft] val t21WordsPerLine = 10
-  private[graft] val t21PunctCycle = 4
-  private[graft] val t21Boiler: Seq[(Int, String)] = Seq(
-    7 -> "lorem ipsum dolor sit amet.",
-    5 -> "please enable javascript to view this page.",
-    11 -> "read our terms of use and privacy policy",
-    13 -> "function() { return 0; }.")
-
-  /** t24's planted violations, keyed by doc_id residue (the t21
-    * fixture discipline; each modulus exercises one Gopher rule in the
-    * violating direction, odd ids get the stop-phrase that lets clean
-    * docs pass the stop-word rule — the corpus vocabulary carries only
-    * `the` from the stop set, so without planting the rule would fire
-    * on every row). */
-  private[graft] val t24StopPhrase =
-    Seq("with", "that", "loaded", "the", "data")
-  private[graft] val t24StopMod = 2    // odd ids carry the stop phrase
-  private[graft] val t24HashMod = 13   // append #-runs (symbol ratio)
-  private[graft] val t24OnesMod = 17   // append 1-char words (mean len)
-  private[graft] val t24NumMod = 19    // append digit words (alpha frac)
-  private[graft] val t24BulletMod = 7  // prefix every line with "- "
-  private[graft] val t24EllipsisMod = 11 // "..." on even lines
-
-  /** C4-style heuristic page filtering
-    * ([[graft.text.HeuristicFilters.c4Filter]], Raffel et al. 2020
-    * §2.2) over deterministically synthesized pages: per-doc verdict
-    * (kept/reason), line/word retention counts, and the md5 of the
-    * cleaned text — all row-local codegen'd expressions, no shuffle;
-    * the DuckDB oracle re-derives synthesis AND rules from the shared
-    * knobs so a drift in either fails the hash. */
-  private def t21(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val w = split(col("text"), " ")
-    val nLines = floor((size(w) + lit(t21WordsPerLine - 1)) /
-      lit(t21WordsPerLine)).cast("int")
-    val raw = transform(sequence(lit(0), nLines - lit(1)), i =>
-      concat(
-        array_join(slice(w, i * lit(t21WordsPerLine) + lit(1),
-          lit(t21WordsPerLine)), " "),
-        when(((id + i) % t21PunctCycle) =!= 0, lit("."))
-          .otherwise(lit(""))))
-    val boiler = t21Boiler.map { case (m, line) =>
-      when(id % m === 0, array(lit(line)))
-        .otherwise(typedLit(Seq.empty[String]))
-    }
-    val pages = t(s, dir, "documents")
-      .select(id, array_join(concat(raw +: boiler: _*), "\n").as("page"))
-    graft.text.HeuristicFilters.c4Filter(pages, "doc_id", "page")
-      .orderBy("doc_id")
-  }
-
-  /** Gopher-rule quality filtering
-    * ([[graft.text.HeuristicFilters.gopherFilter]], Rae et al. 2021
-    * Appendix A1.1.1) — the corpus-hygiene sibling of t21's C4 pass,
-    * covering the rules C4 lacks: word-count bounds, mean-word-length
-    * bounds, symbol-to-word ratio, bullet-/ellipsis-line fractions,
-    * alphabetic-word fraction, stop-word floor. Words and lines are
-    * staged ONCE ([[t21]]'s HOF discipline), every ratio is an integer
-    * cross-multiplication, and each rule is exercised in both
-    * directions by residue-class plants ([[t24StopPhrase]] etc). One
-    * row-local scan, no shuffle/UDF/explode; the FULL DuckDB oracle
-    * re-derives plants, counts and the precedence verdict. */
-  private def t24(s: SparkSession, dir: String): DataFrame = {
-    val id = col("doc_id")
-    val base = split(col("text"), " ")
-    val nb = size(base)
-    def plant(cond: Column, arr: Column): Column =
-      when(cond, arr).otherwise(typedLit(Seq.empty[String]))
-    val ws0 = concat(base,
-      plant(id % t24StopMod === 1, typedLit(t24StopPhrase)),
-      plant(id % t24HashMod === 0, array_repeat(lit("#"),
-        greatest(lit(1), floor(nb / lit(8)).cast("int")))),
-      plant(id % t24OnesMod === 0, array_repeat(lit("a"), nb * 2)),
-      plant(id % t24NumMod === 0, array_repeat(lit("1234"),
-        greatest(lit(1), floor(nb / lit(3)).cast("int")))))
-    val staged1 = t(s, dir, "documents").select(id, ws0.as("__ws"))
-    val ws = col("__ws")
-    val nLines = floor((size(ws) + lit(t21WordsPerLine - 1)) /
-      lit(t21WordsPerLine)).cast("int")
-    val lines = transform(sequence(lit(0), nLines - lit(1)), i =>
-      concat(
-        when(id % t24BulletMod === 0, lit("- ")).otherwise(lit("")),
-        array_join(slice(ws, i * lit(t21WordsPerLine) + lit(1),
-          lit(t21WordsPerLine)), " "),
-        when(id % t24EllipsisMod === 0 && i % 2 === 0, lit("..."))
-          .otherwise(lit(""))))
-    val staged2 = staged1.select(id, ws, lines.as("__ls"))
-    graft.text.HeuristicFilters.gopherFilter(staged2, "doc_id",
-        "__ws", "__ls")
-      .orderBy("doc_id")
-  }
-
-  /** Keyed snapshot diff (operators/SnapshotDiff): two versions of the
-    * orders table are synthesized by deterministic residue classes
-    * (the t21/q39 fixture discipline — adds, removes, single- and
-    * multi-field changes all planted), then ONE co-partitioned
-    * full-outer join classifies every key and names the changed
-    * fields; the gate reduces to per-status and per-field counts so
-    * the FULL DuckDB oracle re-derives synthesis and classification
-    * (IS DISTINCT FROM mirrors the null-safe <=> compare). */
-  private def q46(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.SnapshotDiff
-    val o = t(s, dir, "orders")
-    val k = col("o_orderkey")
-    val snapA = o.filter(k % 10 =!= 0)
-    val snapB = o.filter(k % 7 =!= 3)
-      .withColumn("o_custkey",
-        col("o_custkey") + when(k % 5 === 0, lit(1000L)).otherwise(lit(0L)))
-      .withColumn("o_orderpriority",
-        concat(col("o_orderpriority"),
-          when(k % 3 === 1, lit("+r2")).otherwise(lit(""))))
-    val d = SnapshotDiff.diff(snapA, snapB, Seq("o_orderkey"),
-      Seq("o_custkey", "o_orderstatus", "o_orderpriority"))
-    // one pass over the join: reduce to the tiny (status, field-set)
-    // grain first and checkpoint-memoize it (the q40/q43 discipline),
-    // so the two report branches don't each re-execute the full-outer
-    // join — ≤ |statuses|·2^|cols| rows survive
-    val pre = d.groupBy("status", "changed_fields")
-      .agg(count(lit(1)).as("n_rows")).localCheckpoint()
-    val byStatus = pre.groupBy("status").agg(sum("n_rows").as("n"))
-      .select(lit("status").as("kind"), col("status").as("name"), col("n"))
-    val byField = pre.select(explode(col("changed_fields")).as("name"),
-        col("n_rows"))
-      .groupBy("name").agg(sum("n_rows").as("n"))
-      .select(lit("field").as("kind"), col("name"), col("n"))
-    byStatus.unionByName(byField).orderBy("kind", "name")
-  }
-
-  /** Exact tie-aware ROC AUC (operators/Eval.aucExact): is the
-    * whitespace token count a discriminative signal for English docs?
-    * Score = wordCount(text) (t03's integer token grid — the shared
-    * wordCountSql twin), label = lang = 'en'. One counts-frame
-    * groupBy + one fold row; all integers until the final division. */
-  private def e01(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.aucExact(t(s, dir, "documents"),
-      TextOps.wordCount(col("text")), col("lang") === "en")
-
-  /** Calibration bins + Brier (operators/Eval.calibrationBins): is the
-    * pseudo-probability p = (wordCount mod 129)/128 calibrated against
-    * the English label? p is a BINARY fraction by construction, so
-    * every sum is exact across engines (the contract documented on the
-    * operator); 10 reliability bins + the overall Brier total row. */
-  private def e06(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.calibrationBins(t(s, dir, "documents"),
-        TextOps.wordCount(col("text")) % 129, pDenLog2 = 7,
-        col("lang") === "en", bins = 10)
-      .orderBy("kind", "bin")
-
-  /** Precision–recall curve + average precision
-    * (operators/Eval.prCurve) over the SAME score/label pair as e01's
-    * ROC AUC — the imbalance-robust ranking view of the identical
-    * signal: per-threshold exact TP/FP points with correctly-rounded
-    * precision/recall/ΔR·P terms, plus the AP total from one
-    * descending-threshold fold. */
-  private def e07(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.prCurve(t(s, dir, "documents"),
-        TextOps.wordCount(col("text")), col("lang") === "en")
-      .orderBy("kind", "s")
-
-  /** Chi-squared source-mix drift (operators/Eval.chi2Drift): did the
-    * per-source document mix shift between the English and
-    * non-English populations? Per-source contribution rows + one
-    * deterministic ordered-fold total. */
-  private def e02(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.chi2Drift(t(s, dir, "documents"),
-      col("source"), col("lang") === "en")
-      .orderBy("kind", "k")
-
-  /** Two-sample KS (operators/Eval.ks2Sample): does `value`
-    * distribute differently across the click and error event types?
-    * The exact rational D = max|cumA·n_b − cumB·n_a| / (n_a·n_b) and
-    * its first witness value. */
-  private def e03(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.ks2Sample(
-      ev(s, dir).filter(col("event_type").isin("click", "error")),
-      col("value"), col("event_type") === "click")
-
-  /** e08's knobs, shared with the oracle SQL generator: 64 Poisson
-    * replicates, nearest-rank 95% CI = the 2nd / 63rd order
-    * statistics of the sorted replicate means (ceil(0.025·64) /
-    * ceil(0.975·64)). Since r19 the coin is the xxhash64 draw
-    * (Eval.integerDrawXx — one XXH64 chain per (row, replicate)
-    * instead of string-concat + md5; the bootstrap's honest-linear
-    * leg is draw-dominated, so the digest IS the constant factor);
-    * the flag is shared so gate and oracle switch together. */
-  private[graft] val e08Replicates = 64
-  private[graft] val e08LoRank = 2
-  private[graft] val e08HiRank = 63
-  private[graft] val e08Seed = "graft-boot"
-  private[graft] val e08XxDraw = true
-
-  /** Poisson-bootstrap CI (operators/Eval.poissonBootstrap — the
-    * one-scan bootstrap a 100 TB corpus can actually afford): how
-    * tight is the corpus mean word count? 64 deterministic Poisson(1)
-    * xxhash64-replicates of the t03 integer token grid, exact int64
-    * partial sums per replicate, nearest-rank 95% CI picked (never
-    * interpolated) from the sorted replicate means. */
-  private def e08(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.poissonBootstrap(t(s, dir, "documents"),
-        col("doc_id"), TextOps.wordCount(col("text")),
-        replicates = e08Replicates, seed = e08Seed,
-        loRank = e08LoRank, hiRank = e08HiRank, xxDraw = e08XxDraw)
-      .orderBy("kind", "b")
-
-  /** Exact tie-aware Spearman rank correlation
-    * (operators/Eval.spearmanExact): does the whitespace token count
-    * rank documents the same way raw length does? x = t03's word
-    * count, y = n_chars — doubled midranks on both marginals, exact
-    * decimal moment sums, one pinned-order ρ. */
-  private def e09(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.spearmanExact(t(s, dir, "documents"),
-      TextOps.wordCount(col("text")), col("n_chars"))
-
-  /** g01's knobs, shared with the oracle SQL generator: 10 power
-    * iterations at damping 17/20 = 0.85 over 3 md5-coin out-links per
-    * document, ranks in 10^12 micro-units. */
-  private[graft] val g01Iters = 10
-  private[graft] val g01OutDeg = 3
-  private[graft] val g01Seed = "graft-pr"
-  private[graft] val g01DampNum = 17
-  private[graft] val g01DampDen = 20
-  private[graft] val g01Unit = 1000000000000L
-
-  /** Fixed-point PageRank over a planted crawl graph
-    * (graph/Graph.pageRank — the link-graph quality weight a crawl
-    * pipeline derives per document/host; Page et al. 1999): nodes =
-    * doc_ids, edges = [[graft.graph.Graph.hashLinks]]' 3 deterministic
-    * md5 out-links per node (the makeZip planted-fixture discipline),
-    * 10 integer power-iteration rounds — every step div/mod/sum on
-    * micro-unit ranks, so in-sums are plain order-free integer SUMs
-    * and the FULL DuckDB oracle replays all 10 rounds bit-for-bit. */
-  private def g01(s: SparkSession, dir: String): DataFrame = {
-    val nodes = t(s, dir, "documents").select(col("doc_id").as("node"))
-    val edges = graft.graph.Graph.hashLinks(nodes, g01Seed, g01OutDeg)
-    graft.graph.Graph.pageRank(nodes, edges, iters = g01Iters,
-        dampNum = g01DampNum, dampDen = g01DampDen, unit = g01Unit)
-      .orderBy("node")
-  }
-
-  /** g02's iteration knob, shared with the oracle SQL generator. */
-  private[graft] val g02Iters = 8
-
-  /** t25's slot knob, shared with the oracle SQL generator. */
-  private[graft] val t25Buckets = 256
-
-  /** e11's knobs, shared with the oracle SQL generator: 10 bins of
-    * 50.00 (5000 cents) each, top bin clamped. */
-  private[graft] val e11Bins = 10
-  private[graft] val e11BinCents = 5000L
-
-  /** Population Stability Index (operators/Eval.psi) on the SAME
-    * click-vs-error value populations as e03/e10 — the ML-ops drift
-    * score (PSI > 0.25 = the classic retrain alarm) next to the
-    * hypothesis tests: exact integer cent binning, smoothed densities
-    * over ALL bins, the bin-ascending ln fold at 6 dp. */
-  private def e11(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.psi(
-        ev(s, dir).filter(col("event_type").isin("click", "error")),
-        col("value"), col("event_type") === "click",
-        bins = e11Bins, binCents = e11BinCents)
-      .orderBy("kind", "bin")
-
-  /** Mann–Whitney U z-test (operators/Eval.mannWhitney) on the SAME
-    * click-vs-error value populations as e03's KS — the rank-based
-    * location-shift test next to the CDF-supremum test: exact integer
-    * 2U₁/2μ off the doubled-midrank fold, tie-corrected variance in
-    * exact rational decimal(38,0), z a stated cast/sqrt/divide
-    * chain. */
-  private def e10(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.mannWhitney(
-      ev(s, dir).filter(col("event_type").isin("click", "error")),
-      col("value"), col("event_type") === "click")
-
-  /** Pairwise source-divergence profile (text/TextOps.jsDivergence,
-    * Lin 1991): the which-sources-differ report a mixture designer
-    * reads next to t14's which-docs-match-the-target weights — JS
-    * divergence between every source pair's smoothed hashed-bigram
-    * distribution, folded slot-ascending, in nats and bits at 6 dp. */
-  private def t25(s: SparkSession, dir: String): DataFrame =
-    TextOps.jsDivergence(t(s, dir, "documents"), "text", "source",
-        buckets = t25Buckets)
-      .orderBy("src_a", "src_b")
-
-  /** Fixed-point HITS hubs/authorities (graph/Graph.hits, Kleinberg
-    * 1999) over the SAME planted crawl graph as g01 — the seed-vs-
-    * content split PageRank conflates: 8 rounds of the mutual
-    * recursion with integer L1 normalization (same fixed points as
-    * the textbook L2 up to scale, but every step stays order-free
-    * integer arithmetic; ·unit products run in decimal(38,0)); FULL
-    * DuckDB oracle unrolls all rounds with identical HUGEINT //
-    * arithmetic. */
-  private def g02(s: SparkSession, dir: String): DataFrame = {
-    val nodes = t(s, dir, "documents").select(col("doc_id").as("node"))
-    val edges = graft.graph.Graph.hashLinks(nodes, g01Seed, g01OutDeg)
-    graft.graph.Graph.hits(nodes, edges, iters = g02Iters,
-        unit = g01Unit)
-      .orderBy("node")
-  }
-
-  /** g03's iteration knob, shared with the oracle SQL generator. */
-  private[graft] val g03Iters = 10
-
-  /** TrustRank — seeded personalized PageRank
-    * (graph/Graph.personalizedPageRank, Gyöngyi et al. 2004) over the
-    * SAME planted crawl graph as g01/g02: trusted seeds = documents
-    * whose source index divides by 3 (7 of the 20 sources), teleport
-    * AND dangling mass flow only to seeds, trust measured as what the
-    * seed set can reach — the spam-demotion / crawl-frontier weight
-    * next to g01's global centrality. Same integer fixed-point
-    * contract; FULL DuckDB oracle unrolls all rounds. */
-  private def g03(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val nodes = docs.select(col("doc_id").as("node"), col("source"))
-    val edges = graft.graph.Graph.hashLinks(
-      nodes.select("node"), g01Seed, g01OutDeg)
-    graft.graph.Graph.personalizedPageRank(nodes, edges,
-        // trailing-digits extraction, mirrored verbatim in the oracle
-        // (ADVICE r16): a non-numeric suffix yields NULL → non-seed in
-        // BOTH engines (Spark's lax cast / DuckDB's TRY_CAST), where
-        // the old substring(_, 4, 10)+CAST pair silently desynced on
-        // suffixes past 10 chars and errored only on the DuckDB side
-        seed = regexp_extract(col("source"), "([0-9]+)$", 1)
-          .cast("long") % 3 === 0,
-        iters = g03Iters, dampNum = g01DampNum, dampDen = g01DampDen,
-        unit = g01Unit)
-      .orderBy("node")
-  }
-
-  /** Cohen's kappa (operators/Eval.cohensKappa) between t01's n-gram
-    * language prediction and the true lang label — the chance-
-    * corrected agreement score OVER t16's raw confusion matrix
-    * (accuracy flatters the skewed corpus; kappa subtracts what the
-    * marginals agree on by chance): per-class exact totals +
-    * chance contributions, κ all-integer until one division. */
-  private def e12(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Eval.cohensKappa(t(s, dir, "documents"),
-        TextOps.langId(col("text")), col("lang"))
-      .orderBy("kind", "label")
-
-  /** e05's top-k knob, shared with the oracle SQL generator. */
-  private[graft] val e05TopK = 5
-
-  /** Embedding-space drift (Eval.meanVectors + embedDrift — the
-    * embedding axis of the drift family: did the corpus move in vector
-    * space between two snapshots?): the per-population per-dim mean
-    * vectors are the one non-SQL-portable step (engine-order double
-    * avg, s06's class), persisted via ModelStore "mean_vecs"; the
-    * report — top-[[e05TopK]] drifted dims + L2/cosine between means —
-    * derives from the LOADED model with pinned-order arithmetic, so
-    * the FULL DuckDB oracle re-derives it bit-for-bit from the export
-    * (the r13 exported-model route on the evaluation axis). */
-  private def e05(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Eval
-    val emb = t(s, dir, "embeddings")
-    val path = s"${gateModelDir(dir, "e05")}/mean_vecs"
-    // coalesce(1): 2·dims rows — bounded model artifact
-    graft.sim.ModelStore.save(
-      Eval.meanVectors(emb, col("embedding"), col("vec_id") % 2 === 0)
-        .coalesce(1),
-      "mean_vecs", path)
-    Eval.embedDrift(graft.sim.ModelStore.load(s, "mean_vecs", path),
-        topK = e05TopK)
-      .orderBy("kind", "i")
-  }
-
-  /** Incremental AUC maintenance (q45's Ivm discipline applied to an
-    * EVALUATION statistic): the per-score counts frame is a mergeable
-    * monoid, so the base state persists (ModelStore "auc_state",
-    * bounded by the score grid) and each delta folds in at
-    * O(|delta| + |grid|) — the evaluation never rescans the base.
-    * The FULL DuckDB oracle recomputes the statistic from the whole
-    * table: a hash match IS the incremental == full-recompute
-    * invariant, with `n_scores` pinning the bounded state size. */
-  private def e04(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Eval
-    val docs = t(s, dir, "documents")
-    def st(f: DataFrame): DataFrame =
-      Eval.aucState(f, TextOps.wordCount(col("text")),
-        col("lang") === "en")
-    val statePath = s"${gateModelDir(dir, "e04")}/auc_state"
-    // coalesce(1): |score grid| rows — bounded state artifact
-    graft.sim.ModelStore.save(
-      st(docs.filter(col("doc_id") % 4 =!= 3)).coalesce(1),
-      "auc_state", statePath)
-    Eval.aucFromState(Eval.aucMergeStates(
-      graft.sim.ModelStore.load(s, "auc_state", statePath),
-      st(docs.filter(col("doc_id") % 4 === 3))))
-  }
-
-  /** t22's knobs, shared with the SQL oracle generator. */
-  private[graft] val t22PathSlots = 50
-  private[graft] val t22Cap = 25
-
-  /** URL canonicalization + per-domain volume caps (text/Urls — the
-    * RefinedWeb/CCNet URL-dedup axis): URLs are synthesized
-    * deterministically from documents (the t21/q39 fixture discipline;
-    * every canonicalization rule — case, default ports, trailing
-    * slash, fragment, tracking params, param order — is exercised by a
-    * doc_id residue class and collisions are planted via
-    * [[t22PathSlots]] path slots), then ONE scan feeds a two-level
-    * aggregate: per (domain, canonical) the doc count / tracking count
-    * / min doc_id, per domain the totals plus the [[t22Cap]]-lowest
-    * surviving doc_ids via the bounded TopKByScore heap (never a
-    * row_number window). The FULL DuckDB oracle re-derives synthesis,
-    * canonicalization, dedup and cap byte-for-byte. */
-  private def t22(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Urls
-    import graft.functions.TopK
-    val id = col("doc_id")
-    val sch = when(id % 7 === 0, lit("HTTPS")).otherwise(lit("http"))
-    val sub = when(id % 5 === 0, lit("blog.")).otherwise(lit("www."))
-    val tld = element_at(typedLit(Seq("com", "org", "net")),
-      (id % 3).cast("int") + 1)
-    val port = when(id % 11 === 0, lit(":8080"))
-      .when(id % 4 === 0,
-        when(id % 7 === 0, lit(":443")).otherwise(lit(":80")))
-      .otherwise(lit(""))
-    val slash = when(id % 2 === 0, lit("/")).otherwise(lit(""))
-    val query = when(id % 3 === 0, lit("?utm_source=feed&ref=home"))
-      .when(id % 3 === 1, lit("?ref=home&utm_campaign=x"))
-      .otherwise(lit(""))
-    val frag = when(id % 6 === 0, lit("#section-2")).otherwise(lit(""))
-    val url = concat(sch, lit("://"), sub, col("source"), lit("."), tld,
-      port, lit("/articles/item-"), (id % t22PathSlots).cast("string"),
-      slash, query, frag)
-    val u = t(s, dir, "documents")
-      .select(id, url.as("url"))
-      .select(id.as("doc_id"),
-        Urls.canonicalize(col("url")).as("canon"),
-        Urls.registeredDomain(col("url")).as("domain"),
-        Urls.hasTracking(col("url")).cast("long").as("trk"))
-    u.groupBy(col("domain"), col("canon")).agg(
-        count(lit(1)).as("n_docs_u"),
-        sum(col("trk")).as("n_trk_u"),
-        min(col("doc_id")).as("doc_id"))
-      .groupBy("domain").agg(
-        sum(col("n_docs_u")).cast("long").as("n_docs"),
-        count(lit(1)).as("n_urls"),
-        sum(col("n_trk_u")).cast("long").as("n_tracking"),
-        TopK.topKByScore(lit(0.0), col("doc_id"), t22Cap).as("arr"))
-      .select(col("domain"), col("n_docs"), col("n_urls"),
-        (col("n_docs") - col("n_urls")).as("n_dup_docs"),
-        col("n_tracking"),
-        size(col("arr")).cast("long").as("n_kept"),
-        aggregate(transform(col("arr"), x => x.getField("id")),
-          lit(0L), (acc, x) => acc + x).as("kept_docid_sum"))
-      .orderBy("domain")
-  }
-
-  /** t23's knobs, shared with the SQL oracle generator. */
-  private[graft] val t23MinCount = 5
-  private[graft] val t23K = 50
-
-  /** Top-k PMI collocations (TextOps.pmiCollocations): which adjacent
-    * token pairs co-occur far above chance — reported as the raw
-    * probability ratio p(ab)/(p(a)p(b)) (monotone with PMI's log), so
-    * the whole pipeline is counts + correctly-rounded IEEE division
-    * and the full DuckDB oracle matches bit-for-bit. */
-  private def t23(s: SparkSession, dir: String): DataFrame =
-    TextOps.pmiCollocations(t(s, dir, "documents"), col("text"),
-      minCount = t23MinCount, k = t23K)
-
-  /** Per-source dataset card (TextOps.dataCard): the corpus datasheet —
-    * volume, token mass, mean quality, language share, unique/dup
-    * fingerprints — as one grouped report; every column integer- or
-    * decimal-exact so the full SQL oracle reproduces it bit-for-bit. */
-  private def t19(s: SparkSession, dir: String): DataFrame =
-    TextOps.dataCard(t(s, dir, "documents"), "doc_id", "text",
-        "source", "lang")
-      .orderBy("source")
-
-  /** Readability scoring (TextOps.readability): Flesch reading ease +
-    * Flesch-Kincaid grade per doc from integer sentence/word/syllable
-    * counts — single codegen'd scan, full SQL oracle re-deriving every
-    * count and both score chains. */
-  private def t17(s: SparkSession, dir: String): DataFrame =
-    TextOps.readability(t(s, dir, "documents"), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** Fixed-length sliding context windows (Pack.chunkWindows, 64-token
-    * chunks overlapping by 8): row-local explode, the oracle re-derives
-    * every chunk boundary and md5 from the same token array. */
-  private def p05(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.chunkWindows(t(s, dir, "documents"), "doc_id", "text",
-        chunkSize = 64, overlap = 8)
-      .orderBy("doc_id", "chunk_idx")
-
-  /** p06 seed and k, shared with the oracle SQL generator so the two
-    * sides cannot drift. */
-  private[graft] val p06Seed = "graft-sample-r9"
-  private[graft] val p06K = 10
-
-  /** Deterministic k-per-source sample (Pack.sampleKPerGroup): 10 docs
-    * per source by lowest md5 coin — growth-stable eval-set selection
-    * via the bounded top-k aggregate, never a row_number window; the
-    * oracle reproduces every coin and rank in DuckDB. */
-  private def p06(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.sampleKPerGroup(t(s, dir, "documents"),
-        col("source"), col("doc_id"), k = p06K, seed = p06Seed)
-      .select(col("grp").as("source"), col("id").as("doc_id"), col("rank"))
-      .orderBy("source", "doc_id")
-
-  /** p07 seed and shard count, shared with the oracle SQL generator. */
-  private[graft] val p07Seed = "graft-shard-r12"
-  private[graft] val p07Shards = 8
-
-  /** Deterministic training-order shuffle (Pack.shuffleShard): every doc
-    * gets a shard and an ordered position within it from one seeded md5
-    * coin — the global-shuffle-then-shard step feeding a trainer's data
-    * loader. The draw stays an exact integer so the DuckDB oracle
-    * reproduces shard AND rank bit-for-bit. */
-  private def p07(s: SparkSession, dir: String): DataFrame =
-    graft.pack.Pack.shuffleShard(t(s, dir, "documents"), col("doc_id"),
-        nShards = p07Shards, seed = p07Seed)
-      .select(col("id").as("doc_id"), col("shard"), col("pos"))
-      .orderBy("doc_id")
-
-  /** p04 seed, shared with the oracle SQL generator. */
-  private[graft] val p04Seed = "graft-split-r8"
-
-  /** Deterministic stratified train/val/test assignment (Pack.splitAssign:
-    * one md5-derived coin per doc vs cumulative fractions) — per-doc
-    * labels, stable under corpus growth, zero shuffles before the output
-    * sort. Summarized per (source, split) so the gate result is compact
-    * while the oracle still has to reproduce every coin. */
-  private def p04(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        graft.pack.Pack.splitAssign(col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1),
-          p04Seed).as("split"))
-      .groupBy("source", "split")
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id"),
-        max(col("doc_id")).as("max_doc_id"))
-      .orderBy("source", "split")
-
-  /** REAL pixel decode: per-doc fully-decodable PNGs (pixel pattern a
-    * closed form of doc_id — Binary.makeRealPng) decoded by javax.imageio
-    * in Binary.pixelStats; channel means derived from the exact long sums.
-    * The oracle recomputes width/height/means ARITHMETICALLY from doc_id
-    * over a generated (x, y) grid — PNG is lossless, so a decode bug (or a
-    * channel-order swap) breaks the hash. */
-  private def m03(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.pixelStats(
-        src.map(id => Binary.PayloadRow(id, Binary.makeRealPng(id))))
-      .toDF()
-      .select(col("doc_id"), col("width"), col("height"), col("n_pixels"),
-        round(col("sum_r").cast("double") / col("n_pixels"), 6).as("mean_r"),
-        round(col("sum_g").cast("double") / col("n_pixels"), 6).as("mean_g"),
-        round(col("sum_b").cast("double") / col("n_pixels"), 6).as("mean_b"))
-      .orderBy("doc_id")
-  }
-
-  /** REAL per-channel color histograms over decoded pixels
-    * (Binary.colorHistograms): m03's lossless PNG round trip feeding 16
-    * equi-width bins per channel — integer counts, all 16 bins emitted
-    * per doc, so the DuckDB oracle recomputes every bin exactly from
-    * the closed-form pixel pattern. A binning, decode, or channel-order
-    * bug breaks the hash. */
-  private def m12(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.colorHistograms(
-        src.map(id => Binary.PayloadRow(id, Binary.makeRealPng(id))))
-      .toDF()
-      .orderBy("doc_id", "bin")
-  }
-
-  /** REAL multi-frame sampling: per-doc animated GIFs (frame pixels a
-    * closed form of (doc_id, frame) — Binary.makeRealGif) demuxed by
-    * javax.imageio's multi-image reader and decoded to exact channel
-    * sums in ONE fused pass (Binary.frameStatsFused, every 2nd frame —
-    * no per-frame PNG re-encode/re-decode; BinarySpec pins it against
-    * a sample-then-decode reference). GIF
-    * stores the gray palette verbatim, so decode is lossless and the
-    * oracle recomputes frame set, dimensions, and mean arithmetically
-    * from doc_id — a demux bug (wrong frame count, frame/offset mixup,
-    * colorspace shift) breaks the hash. */
-  private def m04(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.frameStatsFused(
-        src.map(id => Binary.PayloadRow(id, Binary.makeRealGif(id))),
-        stride = 2)
-      .toDF()
-      .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
-        col("n_pixels"),
-        round(col("sum_r").cast("double") / col("n_pixels"), 6)
-          .as("mean_px"))
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** Scene-cut detection (Binary.videoSceneCuts) over synthesized
-    * multi-shot AVIs: real demux + decode, consecutive-frame mean deltas
-    * computed row-locally (zero shuffles — all frames of a clip live in
-    * one payload), cut flagged at >64 counts/pixel summed over channels.
-    * Deltas stay on the exact integer SUM scale, so the DuckDB oracle
-    * re-derives every frame color, delta and flag arithmetically. */
-  private def m10(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.videoSceneCuts(
-        src.map(id => Binary.PayloadRow(id, Binary.makeSceneAvi(id))),
-        threshold = 64L)
-      .toDF()
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** REAL video frame sampling: per-doc RIFF/AVI containers carrying
-    * Motion-PNG streams (Binary.makeRealAvi — frame pixels a closed form
-    * of (doc_id, frame)), demuxed by the pure-byte RIFF walker and
-    * decoded to exact channel sums in one fused pass
-    * (Binary.videoFrameStatsFused, every 2nd frame; BinarySpec pins it
-    * against a sample-then-decode reference). The oracle recomputes
-    * frame sets/dims/means arithmetically — a demux bug (chunk walk,
-    * padding, frame order) or decode bug breaks the hash. */
-  private def m05(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.videoFrameStatsFused(
-        src.map(id => Binary.PayloadRow(id, Binary.makeRealAvi(id))),
-        stride = 2)
-      .toDF()
-      .select(col("doc_id"), col("frame_idx"), col("width"), col("height"),
-        col("n_pixels"),
-        round(col("sum_r").cast("double") / col("n_pixels"), 6).as("mean_r"),
-        round(col("sum_g").cast("double") / col("n_pixels"), 6).as("mean_g"),
-        round(col("sum_b").cast("double") / col("n_pixels"), 6).as("mean_b"))
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** REAL MP4 Motion-JPEG frame decode: per-doc ISO-BMFF containers with
-    * full sample tables (Binary.makeMjpegMp4 — stsd 'jpeg' + stts/stsc/
-    * stsz/stco, samples two-per-chunk so the stsc run grammar is
-    * non-degenerate), demuxed by the pure-byte sample-table walk
-    * (Binary.mp4JpegFrames) and decoded by the bundled JPEG reader in
-    * one fused row-local pass (Binary.mp4FrameStats — zero shuffles,
-    * linear in frames). JPEG is lossy, so the decoded color of each
-    * uniform frame has no SQL closed form; the gate exports the 20-row
-    * round-trip palette dict (driver-side probes, Mp4Spec-pinned equal
-    * to the executor decode at every fixture dim) and the oracle joins
-    * it against the arithmetic palette index — the d02 exported-dict
-    * discipline. Frame set/dims/n_pixels stay fully arithmetic. */
-  private def m13(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val dict = (0 until 20).map { c =>
-      val (r, g, b) = Binary.mjpegColor(c)
-      val (dr, dg, db) = Binary.jpegRoundTripColor(r, g, b)
-      (c.toLong, dr, dg, db)
-    }
-    graft.sim.ModelStore.save(
-      s.createDataset(dict).toDF("c", "dr", "dg", "db").coalesce(1),
-      "jpeg_dict", s"${gateModelDir(dir, "m13")}/jpeg_dict")
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.mp4FrameStats(
-        src.map(id => Binary.PayloadRow(id, Binary.makeMjpegMp4(id))),
-        stride = 1)
-      .toDF()
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** REAL Matroska Motion-JPEG frame decode — m13's EBML sibling: per-doc
-    * MKV containers with V_MJPEG tracks and per-frame SimpleBlocks (plus
-    * one BlockGroup{Block} and a multi-Cluster split, so all the spec's
-    * block shapes demux), walked by the pure-byte EBML grammar
-    * (Binary.mkvJpegFrames) and decoded in one fused row-local pass
-    * (Binary.mkvFrameStats). Same exported round-trip palette dict
-    * discipline as m13 (shared [[Binary.mjpegColor]] palette, own export
-    * so the oracle is self-contained). */
-  private def m14(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val dict = (0 until 20).map { c =>
-      val (r, g, b) = Binary.mjpegColor(c)
-      val (dr, dg, db) = Binary.jpegRoundTripColor(r, g, b)
-      (c.toLong, dr, dg, db)
-    }
-    graft.sim.ModelStore.save(
-      s.createDataset(dict).toDF("c", "dr", "dg", "db").coalesce(1),
-      "jpeg_dict", s"${gateModelDir(dir, "m14")}/jpeg_dict")
-    val src = t(s, dir, "documents").select(col("doc_id")).as[Long]
-    Binary.mkvFrameStats(
-        src.map(id => Binary.PayloadRow(id, Binary.makeMjpegMkv(id))),
-        stride = 1)
-      .toDF()
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  private val stGateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Per-sink max state-store rows of the most recent replays (sink name
-    * → max over batches of Σ stateOperators.numRowsTotal), filled by
-    * [[runStreamOnce]]; [[graft.Bench]] drains it per gate under
-    * GRAFT_STREAM_STATE to measure the streaming family's bounded-state
-    * claims at each octave. */
-  private[graft] val stStateRows =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Streaming file source over a testdata table, schema from a
-    * metadata-only batch peek. The file source requires a DIRECTORY. A
-    * table that is already directory-shaped (a Spark-written or
-    * partitioned table root — the only shape that exists at scale)
-    * streams directly from its own root; symlinking a directory INTO a
-    * scratch dir would leave the source listing zero files (it does not
-    * recurse) and silently emit nothing — the r10 10x-probe catch. Only
-    * the single-file testdata shape needs the scratch-dir symlink — no
-    * data copy either way. */
-  private def streamTable(s: SparkSession, dir: String,
-                          table: String): DataFrame = {
-    val path = s"$dir/$table.parquet"
-    // r19: the schema peek rides the RAW relation cache (Tables.raw) —
-    // raw because the file source must see the parquet's physical
-    // shape; normalization applies on top of the stream.
-    val schema = graft.sources.Tables.raw(s, dir, table).schema
-    val tablePath = java.nio.file.Paths.get(path).toAbsolutePath
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(tablePath)) tablePath
-      else {
-        // Scratch dir keyed by a digest of the SOURCE path, not just the
-        // table name: concurrent runs (bench + verify loops) over
-        // different data dirs would otherwise race on the same symlink
-        // and a stream could silently read the other run's table.
-        val pathKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(tablePath.toString.getBytes("UTF-8"))
-          .take(6).map("%02x".format(_)).mkString
-        val srcDir = java.nio.file.Paths
-          .get("target", s"stream_src_${table}_$pathKey")
-          .toAbsolutePath
-        java.nio.file.Files.createDirectories(srcDir)
-        val link = srcDir.resolve(s"$table.parquet")
-        java.nio.file.Files.deleteIfExists(link)
-        // Two same-source runs racing between delete and create would
-        // both be writing the SAME link target (the dir is keyed by it),
-        // so losing the race is benign.
-        try java.nio.file.Files.createSymbolicLink(link, tablePath)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        srcDir
-      }
-    s.readStream.schema(schema).parquet(streamDir.toString)
-  }
-
-  /** [[streamTable]] over the events table with Tables.events' ts
-    * normalization ([[graft.sources.Tables.normalizeTs]]) — ONE
-    * definition of the input-shape rule shared by the batch reader and
-    * the streaming gates (st01/st02). */
-  private def streamEvents(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.normalizeTs(streamTable(s, dir, "events"))
-
-  /** One-shot micro-batch execution of a streaming frame into a memory
-    * sink; returns the sink's contents. The memory sink holds only the
-    * query's OUTPUT (aggregated windows / admitted ids — never raw
-    * input); at production scale the same plan runs continuously into a
-    * file sink. Dropping the catalog name keeps repeated runs (bench
-    * loops, re-verifies) from accumulating registered tables.
-    *
-    * The checkpoint (offsets/commits + state-store deltas) goes to a
-    * per-run tmpfs dir (/dev/shm when present, else java.io.tmpdir)
-    * and is deleted on completion: a one-shot AvailableNow replay
-    * into a memory sink needs no checkpoint DURABILITY, only the
-    * engine's bookkeeping, and the default disk-backed temp location
-    * made the stateful replays (st15's bootstrap state especially)
-    * contend with the rest of a full-tree run's disk I/O — the
-    * BASELINE st15 in-tree caveat this removes (VERDICT r16 item 5).
-    * A production continuous query points this at durable storage
-    * instead.
-    *
-    * tmpfs is preferred only when it has real headroom: containers
-    * commonly cap /dev/shm at 64 MB, where a stateful replay's
-    * state-store deltas would ENOSPC mid-run while the old disk-backed
-    * default worked (ADVICE r17) — so writability alone is not enough,
-    * and `GRAFT_ST_CKPT_DIR` overrides the whole choice for
-    * environments that know better. */
-  private def runStreamOnce(s: SparkSession, out: DataFrame,
-                            mode: org.apache.spark.sql.streaming.OutputMode)
-      : DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val shm = Paths.get("/dev/shm")
-    def shmHasHeadroom: Boolean =
-      try Files.getFileStore(shm).getUsableSpace >= (256L << 20)
-      catch { case scala.util.control.NonFatal(_) => false }
-    val ckptBase = sys.env.get("GRAFT_ST_CKPT_DIR") match {
-      case Some(d) =>
-        val p = Paths.get(d)
-        require(Files.isDirectory(p) && Files.isWritable(p),
-          s"GRAFT_ST_CKPT_DIR=$d is not a writable directory")
-        p
-      case None =>
-        if (Files.isDirectory(shm) && Files.isWritable(shm) &&
-            shmHasHeadroom) shm
-        else Paths.get(System.getProperty("java.io.tmpdir"))
-    }
-    val ckpt = Files.createTempDirectory(ckptBase, "graft_st_ckpt_")
-    val sink = s"st_gate_sink_${stGateRuns.incrementAndGet()}"
-    // cleanup wraps from start() onward so an analysis/start failure
-    // cannot leak the RAM-backed dir, closes the walk stream (the fd
-    // discipline), and swallows any NonFatal — Files.walk surfaces
-    // concurrent-delete races as UncheckedIOException, NOT
-    // IOException, and a cleanup hiccup must never mask the replay's
-    // own outcome
-    try {
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // state-size instrumentation (VERDICT r17 item 3): max over the
-      // replay's batches of total state-store rows, keyed by sink —
-      // Bench drains this per gate when GRAFT_STREAM_STATE is set, so
-      // the bounded-state claims in Streams.scala are MEASURED at each
-      // octave, not asserted. recentProgress retains the last ~100
-      // batch progresses — more than any one-shot replay here emits.
-      val maxStateRows = q.recentProgress
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      stStateRows.put(sink, maxStateRows)
-    } finally {
-      try {
-        val walk = Files.walk(ckpt)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        } finally walk.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    val res = s.table(sink)
-    s.catalog.dropTempView(sink)
-    res
-  }
-
-  /** st01 runs REAL micro-batch streaming execution inside the
-    * driver-verified query: a file source over the events table (the
-    * same ns→µs normalization as Tables.events), watermarked windowed
-    * agg, one-shot AvailableNow trigger into a memory sink. Complete
-    * output mode because a one-shot replay's watermark would hold back
-    * the newest (still-open) windows in append mode — the batch-parity
-    * contract wants every window; at production scale the same plan
-    * runs append-mode into a file sink with windows emitted as the
-    * watermark closes them (StreamingSpec exercises that path). */
-  private def st01(s: SparkSession, dir: String): DataFrame =
-    runStreamOnce(s, Streams.hourlyAggStream(streamEvents(s, dir)),
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      .orderBy("hour_sec", "event_type")
-
-  /** st09 runs the HLL++ sketch INSIDE the streaming state store
-    * (Streams.dailyNdvStream): per (day, series) windowed group, state
-    * is a fixed HLL register array — never the raw user set — so
-    * continuous cardinality monitoring holds KB-scale state at any
-    * stream rate. Complete mode for the one-shot replay (st01's
-    * reasoning). Hash-exact since r17 via the exported-estimate route
-    * (k01's r17 promotion on the streaming axis): the drained
-    * per-(series, day) frame persists via ModelStore, the streamed
-    * window count (n_rows) rides the export while a batch count (n)
-    * is recomputed from raw events in BOTH engines — so the hash
-    * additionally certifies stream-window == batch count parity —
-    * and the HLL estimate/rsd come from the shared bytes. The error
-    * CONTRACT on these estimates stays in st14 and the driver's
-    * st09_audit, both green on this frame; the spec pins stream ==
-    * batch estimate equality (HLL merges are order-insensitive). */
-  private def st09(s: SparkSession, dir: String): DataFrame = {
-    val drained = runStreamOnce(s,
-      Streams.dailyNdvStream(streamEvents(s, dir)),
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    val base = gateModelDir(dir, "st09")
-    graft.sim.ModelStore.save(drained.coalesce(1), "ndv_stream_profile",
-      s"$base/ndv_stream_profile")
-    val m = s.read.parquet(s"$base/ndv_stream_profile")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("n"))
-      .join(broadcast(m), Seq("series", "day"))
-      .select("series", "day", "n_rows", "n", "ndv_hll", "rsd")
-      .orderBy("series", "day")
-  }
-
-  /** The st09 STREAM's HLL error contract as a FULL SQL gate — k08's
-    * exported-estimate route applied on the streaming axis (the last
-    * audit-only family): the drained per-(series, day) estimate frame
-    * persists via ModelStore, exact per-(series, day) NDV is recomputed
-    * from raw events, and each window's |est − exact| ≤ 5·rsd·exact
-    * containment is evaluated with identically-associated arithmetic
-    * from the exported rsd knob. st09 itself stays rows-only for cause
-    * (HLL register state has no SQL twin); THIS gate makes its error
-    * contract hash-exact, so every sketch family now carries a SQL
-    * contract gate (k07 for GK, k08 for batch HLL, st14 for stream
-    * HLL). */
-  private def st14(s: SparkSession, dir: String): DataFrame = {
-    val prof = runStreamOnce(s,
-      Streams.dailyNdvStream(streamEvents(s, dir)),
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    val base = gateModelDir(dir, "st14")
-    graft.sim.ModelStore.save(prof.coalesce(1), "ndv_stream_profile",
-      s"$base/ndv_stream_profile")
-    val m = s.read.parquet(s"$base/ndv_stream_profile")
-    ev(s, dir)
-      .groupBy(col("event_type").as("series"),
-        date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(count(lit(1)).as("n"),
-        countDistinct(col("user_id")).as("ndv_exact"))
-      .join(broadcast(m), Seq("series", "day"))
-      .select(col("series"), col("day"), col("n_rows"), col("n"),
-        col("ndv_hll"), col("ndv_exact"), col("rsd"),
-        when(col("n_rows") === col("n") &&
-          abs(col("ndv_hll") - col("ndv_exact")).cast("double") <=
-            lit(5.0) * col("rsd") * col("ndv_exact").cast("double"), 1)
-          .otherwise(0).as("contained"))
-      .orderBy("series", "day")
-  }
-
-  /** st10 builds k04's count-min table INSIDE the streaming state store
-    * (Sketches.cmsCells on the streamed documents table): the state is
-    * the fixed 4×1024 cell grid — never tokens — so continuous
-    * token-frequency service state is constant at any stream rate.
-    * Counting is order-insensitive, so the drained cell table equals
-    * the batch build bit-for-bit and the composed point-query output
-    * shares k04's FULL SQL oracle (st08's shared-oracle discipline on
-    * the sketch axis — the tenth streaming-class gate). */
-  private def st10(s: SparkSession, dir: String): DataFrame = {
-    val cells = runStreamOnce(s,
-      graft.operators.Sketches.cmsCells(
-        streamTable(s, dir, "documents"), col("text")),
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    graft.operators.Sketches.cmsPointQuery(cells,
-      t(s, dir, "documents"), col("text"))
-  }
-
-  /** st11 runs a STREAM-STREAM event-time interval join
-    * (Streams.errorResolutionJoin): error events correlate with the
-    * purchases that follow them within an hour, both sides unbounded
-    * streams buffered in the state store and evicted by the event-time
-    * join bounds + watermark — the fifth streaming machinery class
-    * (after windowed agg, flatMapGroupsWithState, stream-static join,
-    * and sketch-in-state), and like st08/st10 it carries a FULL SQL
-    * oracle because the inner join's matched-pair output equals the
-    * batch interval join row-for-row on a replay. */
-  private def st11(s: SparkSession, dir: String): DataFrame =
-    runStreamOnce(s,
-        Streams.errorResolutionJoin(streamEvents(s, dir),
-          withinSec = st11WithinSec, fixType = st11FixType,
-          wmDelay = Some("35 days")),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("error_event_id", "fix_event_id")
-
-  /** st11 window/fix-type, shared with the oracle SQL generator so the
-    * two sides cannot drift (q24's shared-constant discipline). */
-  private[graft] val st11WithinSec = 3600L
-  private[graft] val st11FixType = "purchase"
-
-  /** st12 maintains e02's chi-squared drift cells INSIDE the streaming
-    * state store (Eval.chi2Cells on the streamed documents table): the
-    * state is the |keys|-row (o_a, o_b) counts frame — counting is
-    * order-insensitive, so the drained state equals the batch counts
-    * bit-for-bit and the composed statistic shares e02's FULL SQL
-    * oracle (st10's shared-oracle discipline on the evaluation axis —
-    * the continuous drift MONITOR: the alert a pipeline wants the
-    * moment the source mix shifts, not at the next batch audit). */
-  private def st12(s: SparkSession, dir: String): DataFrame = {
-    val cells = runStreamOnce(s,
-      graft.operators.Eval.chi2Cells(
-        streamTable(s, dir, "documents"),
-        col("source"), col("lang") === "en"),
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    graft.operators.Eval.chi2FromCells(cells).orderBy("kind", "k")
-  }
-
-  /** st15 maintains e08's bootstrap replicate partials INSIDE the
-    * streaming state store (Eval.bootstrapReps on the streamed
-    * documents table): the state is the (replicates+1)-row integer
-    * frame — including the b = −1 exact-totals sentinel — never
-    * documents, so continuous uncertainty monitoring holds constant
-    * state at any stream rate. Counting is order-insensitive, so the
-    * drained complete-mode state equals the batch reps bit-for-bit
-    * and the composed CI report shares e08's FULL SQL oracle verbatim
-    * (st10/st12's shared-oracle discipline on the uncertainty axis —
-    * the CI a pipeline wants live, not at the next batch audit). */
-  private def st15(s: SparkSession, dir: String): DataFrame = {
-    val reps = runStreamOnce(s,
-      graft.operators.Eval.bootstrapReps(
-        streamTable(s, dir, "documents"),
-        col("doc_id"), TextOps.wordCount(col("text")),
-        replicates = e08Replicates, seed = e08Seed,
-        xxDraw = e08XxDraw),
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    graft.operators.Eval.bootstrapFromReps(reps, e08LoRank, e08HiRank)
-      .orderBy("kind", "b")
-  }
-
-  /** st02 runs REAL micro-batch streaming through the stateful
-    * first-occurrence path (st03's `flatMapGroupsWithState` machinery
-    * on the MONITOR side): file source over the events table (st01's
-    * ns→µs normalization), one boolean of state per user
-    * (Streams.firstFailureStream), AvailableNow → memory sink, append
-    * mode. The oracle stays `firstFailureBatch`'s min-of-struct: exact
-    * parity because the one-shot replay is a single micro-batch, so
-    * every user group sees all its error rows at once and emits the
-    * earliest (ts, event_id) — the chunked-replay parity spec covers
-    * multi-batch arrival. */
-  private def st02(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val events = streamEvents(s, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-      .as[Streams.EventRow]
-    runStreamOnce(s, Streams.firstFailureStream(events).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("user_id")
-  }
-
-  /** st03 runs REAL micro-batch streaming through the STATEFUL path —
-    * `flatMapGroupsWithState` admission state, the machinery st01's
-    * stateless windowed agg does not exercise: file source over the
-    * documents table → fingerprint → one-boolean-per-key admission
-    * (Streams.firstPerFingerprintStream) → AvailableNow → memory sink.
-    * Append mode (admissions are final the moment they are emitted).
-    * The oracle stays `firstPerFingerprintBatch`'s min-doc_id-per-fp:
-    * exact parity because a one-shot AvailableNow replay of the gate
-    * table is a single micro-batch, so every key group sees all its
-    * rows at once and admits the minimum (the chunked-replay parity
-    * spec covers multi-batch arrival; at production scale first-seen
-    * admission IS the contract, and the batch frame is the oracle only
-    * at gate scale). */
-  private def st03(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = streamTable(s, dir, "documents")
-      .select(col("doc_id"),
-        graft.dedup.Dedup.fingerprint(col("text")).as("fp"))
-      .as[Streams.DocFp]
-    runStreamOnce(s, Streams.firstPerFingerprintStream(docs).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("doc_id")
-  }
-
-  /** Batch anchor of the streaming contamination detector (the stream
-    * variant is the SAME function over a readStream frame — parity spec
-    * in StreamingSpec): eval-split docs emit the positional 3-gram spans
-    * they share with the static train-gram index. */
-  /** st04 runs REAL micro-batch streaming through the STREAM-STATIC
-    * JOIN path — the third machinery class after st01 (stateless
-    * windowed agg) and st03 (stateful admission): the eval documents
-    * arrive as a stream, the train gram index is a STATIC batch frame,
-    * and `Streams.contaminationHits` — literally the same function as
-    * the batch anchor — joins them left-semi per micro-batch (stateless,
-    * append mode, no watermark). Row-identical to the batch plan by
-    * construction, so the shared d09 oracle is exact. */
-  private def st04(s: SparkSession, dir: String): DataFrame = {
-    val evalStream = streamTable(s, dir, "documents")
-      .filter(col("doc_id") % 10 === 0)
-    val trainIdx = Streams.trainGramIndex(
-      t(s, dir, "documents").filter(col("doc_id") % 10 =!= 0),
-      "doc_id", "text", n = 3)
-    runStreamOnce(s,
-        Streams.contaminationHits(evalStream, trainIdx,
-          "doc_id", "text", n = 3),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("doc_id", "pos")
-  }
-
-  /** st05 — CONTINUOUS ANN-index ingestion, the streaming composition
-    * of s09's admission path and the production job that keeps an
-    * IVFADC index current: models are fitted on the initial batch and
-    * loaded via ModelStore (s09's fit-once lifecycle), then the
-    * arriving embedding feed is admitted by
-    * [[graft.sim.Pq.admitStateless]] — (id, cluster, codes) computed
-    * in ONE row-local projection against broadcast one-row nested
-    * model frames, so the streaming plan has NO shuffle, NO state
-    * store, and NO watermark anywhere on the feed path (the
-    * stream-static class reduced to a pure broadcast projection;
-    * PqSpec pins admitStateless == encode⋈assign bit-for-bit, and the
-    * stateless plan shape is spec-asserted). FULL SQL oracle via the
-    * exported-model route: admission given the models is row-local
-    * arithmetic, so DuckDB re-derives every (cluster, codes) from the
-    * [[gateModelDir]] export + raw embeddings. The gate serializes the
-    * PQ code array to a comma-joined string (string_agg on the oracle
-    * side emits the identical bytes) — also what keeps the dump
-    * pandas-sortable (the r11 st05 ERR). */
-  private def st05(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.{Ivf, ModelStore, Pq}
-    val e = t(s, dir, "embeddings")
-    val m = annM; val ksub = annKsub
-    val fitBatch = e.filter(col("vec_id") % 2 === 0)
-    val base = gateModelDir(dir, "st05")
-    ModelStore.save(
-      Ivf.fitCentroids(
-        fitBatch.select(col("vec_id").as("id"), col("embedding").as("v")),
-        c = 16, iters = 3),
-      "ivf_centroids", s"$base/ivf_centroids")
-    ModelStore.save(
-      Pq.fitCodebooks(fitBatch, "vec_id", "embedding", m, ksub),
-      "pq_codebooks", s"$base/pq_codebooks")
-    val centroids = ModelStore.load(s, "ivf_centroids", s"$base/ivf_centroids")
-    val codebooks = ModelStore.load(s, "pq_codebooks", s"$base/pq_codebooks")
-    runStreamOnce(s,
-        Pq.admitStateless(streamTable(s, dir, "embeddings"),
-          "vec_id", "embedding", centroids, codebooks, m),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .withColumn("codes", concat_ws(",", col("codes")))
-      .orderBy("id")
-  }
-
-  /** st06 — STREAMING SESSIONIZATION as a driver-verified gate: the 4th
-    * stateful machinery class (`flatMapGroupsWithState` with
-    * EventTimeTimeout session state, [[graft.streaming.Streams
-    * .sessionizeStream]]) promoted from spec-only to driver verify. The
-    * file source replays the events table through the real micro-batch
-    * engine; the oracle is q37's batch sessionization SQL — exact parity
-    * because the replay is in event-time order (one file per sf dir, the
-    * TESTDATA shape; a production feed is time-ordered by construction)
-    * and the watermark delay (35 d > the table's 30 d span) means no
-    * event is ever late, for ANY file chunking.
-    *
-    * Closing the last open session per user is the part a one-shot
-    * replay cannot get from data alone (the watermark never passes an
-    * open session's gap), so the gate plants two far-future SENTINEL
-    * files (user −1, max ts + 37 d/+1 s) in a dedicated scratch stream
-    * dir and caps the source at one file per micro-batch: sentinel 1's
-    * batch advances the watermark past every real timeout, sentinel 2's
-    * batch fires them — deterministic session close without relying on
-    * no-data-batch semantics. The sentinel user is filtered from the
-    * output (its own session is never closed). */
-  /** ANN gate knobs, shared verbatim with the exported-model oracles
-    * (s07/s08/s09/st05) — the st11WithinSec shared-constant discipline:
-    * one definition on the Scala side, interpolated into the SQL, so a
-    * knob tweak can never leave the oracle checking a stale bound. */
-  private[graft] val annM = 16        // PQ subspaces
-  private[graft] val annKsub = 32     // codes per subspace (SQL-side: implicit in the exported codebook)
-  private[graft] val annK = 3         // neighbors returned
-  private[graft] val annRefine = 8    // shortlist = refine·k
-  private[graft] val annC = 16        // IVF coarse cells (implicit in the exported centroids)
-  private[graft] val annNprobe = 4    // cells scanned per probe
-  private[graft] val annProbeMax = 5  // probe set: vec_id < annProbeMax
-
-  /** MinHash gate knobs (d02/d13), shared with [[OracleSql]]'s
-    * minhashPrefixSql — same discipline as the ANN block above: the
-    * permutation count, band count (rowsPerBand = mhK / mhBands) and
-    * both jaccard thresholds interpolate into the oracle SQL, so a knob
-    * change desyncs at compile time, never as a runtime hash mismatch. */
-  private[graft] val mhK = 64        // MinHash permutations
-  private[graft] val mhBands = 16    // LSH bands (slice width mhK/mhBands)
-  private[graft] val d02Tau = 0.02   // d02 near-dup jaccard threshold
-  private[graft] val d13Tau = 0.5    // d13 decontam jaccard threshold
-
-  /** st07's per-source token quota, shared with the oracle SQL — sized
-    * to bind hard at the gate corpus (~40% of a source's tokens), so
-    * the admission cutoff is exercised in every source. */
-  private[graft] val st07Quota = 600L
-
-  /** Streaming token-budget quota admission
-    * ([[graft.streaming.Streams.quotaAdmitStream]]): real micro-batch
-    * streaming in verify — the documents table replays through the file
-    * source and each source greedily admits docs in doc_id order until
-    * its running token total fills the quota (one Long of state per
-    * source). The one-shot replay equals the batch window-cumsum the
-    * DuckDB oracle runs; chunked-replay parity is spec-asserted. */
-  private def st07(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = streamTable(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        TextOps.wordCount(col("text")).as("n_tokens"))
-      .as[Streams.DocTok]
-    runStreamOnce(s, Streams.quotaAdmitStream(docs, st07Quota).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .orderBy("source", "doc_id")
-  }
-
-  /** Sentinel-augmented events stream dir (the st06 mechanism, shared
-    * with st08): symlinks every data file of the events table into a
-    * dedicated digest-keyed scratch dir (its own `prefix`: st01/st02
-    * share the plain events stream dir and must not see sentinels), then
-    * writes two far-future one-row sentinel files — replayed last under
-    * maxFilesPerTrigger=1, they advance the watermark past every real
-    * day/gap so EventTimeTimeout fires deterministically. `mutate`
-    * rewrites the sentinel row so the gate can filter it back out. */
-  private def sentinelEventsDir(s: SparkSession, dir: String,
-                                prefix: String,
-                                mutate: (DataFrame, Int) => DataFrame)
-      : (java.nio.file.Path, org.apache.spark.sql.types.StructType) = {
-    val path = s"$dir/events.parquet"
-    val raw = s.read.parquet(path)
-    val tsType = raw.schema("ts").dataType
-    val maxUs = graft.sources.Tables.normalizeTs(raw)
-      .agg(max(unix_micros(col("ts")))).head.getLong(0)
-    def farLit(k: Int): Column = {
-      val us = maxUs + 37L * 86400 * 1000000L + k * 1000000L
-      tsType match {
-        case org.apache.spark.sql.types.LongType => lit(us * 1000L)
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          lit(java.time.LocalDateTime.ofEpochSecond(us / 1000000L,
-            ((us % 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC))
-        case _ => lit(new java.sql.Timestamp(us / 1000L))
-      }
-    }
-    val tablePath = java.nio.file.Paths.get(path).toAbsolutePath
-    val pathKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(tablePath.toString.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val srcDir = java.nio.file.Paths
-      .get("target", s"${prefix}_events_$pathKey").toAbsolutePath
-    java.nio.file.Files.createDirectories(srcDir)
-    val dataFiles =
-      if (java.nio.file.Files.isDirectory(tablePath))
-        java.nio.file.Files.list(tablePath).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            !p.getFileName.toString.startsWith("_") &&
-            !p.getFileName.toString.startsWith("."))
-          .toSeq
-      else Seq(tablePath)
-    for (f <- dataFiles) {
-      val link = srcDir.resolve(s"data_${f.getFileName}")
-      java.nio.file.Files.deleteIfExists(link)
-      try java.nio.file.Files.createSymbolicLink(link, f)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    }
-    for (k <- 0 to 1) {
-      val tmp = java.nio.file.Files.createTempDirectory(srcDir, "sentinel_w")
-      mutate(raw.limit(1), k)
-        .withColumn("ts", farLit(k))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      val dest = srcDir.resolve(s"zz_sentinel_$k.parquet")
-      java.nio.file.Files.move(part, dest,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // mtime orders the file source: data (testdata mtimes) < s0 < s1
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() + k * 2000L))
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(tmp.toFile)
-    }
-    (srcDir, raw.schema)
-  }
-
-  private def st06(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val (srcDir, schema) = sentinelEventsDir(s, dir, "stream_src6",
-      (one, k) => one
-        .withColumn("user_id", lit(-1L).cast(one.schema("user_id").dataType))
-        .withColumn("event_id",
-          lit(2000000000L + k).cast(one.schema("event_id").dataType)))
-    val events = graft.sources.Tables.normalizeTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      .select(col("user_id"), col("event_id"), col("ts"))
-      .withWatermark("ts", "35 days")
-      .as[Streams.SessionEvent]
-    runStreamOnce(s,
-        Streams.sessionizeStream(events, gapSec = 1800).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .filter(col("user_id") =!= -1L)
-      .orderBy("user_id", "session_idx")
-  }
-
-  /** st13 runs q52's SCD type-2 builder as REAL micro-batch streaming
-    * (Streams.scd2Stream): the events table replays through the file
-    * source as a per-user version log, ONE open version per key lives
-    * in the state store, every newcomer closes its predecessor
-    * immediately (the batch `lead`), and the watermark flushes each
-    * idle key's final version as `is_current = 1` (st06's sentinel
-    * files fire the final closes). The drained stream equals the batch
-    * window pair — the FULL SQL oracle IS the batch twin. */
-  private def st13(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val (srcDir, schema) = sentinelEventsDir(s, dir, "stream_src13",
-      (one, k) => one
-        .withColumn("user_id", lit(-1L).cast(one.schema("user_id").dataType))
-        .withColumn("event_id",
-          lit(2100000000L + k).cast(one.schema("event_id").dataType)))
-    val events = graft.sources.Tables.normalizeTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      .select(col("user_id"), col("event_id"), col("ts"))
-      .withWatermark("ts", "35 days")
-      .as[Streams.SessionEvent]
-    runStreamOnce(s, Streams.scd2Stream(events).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .filter(col("user_id") =!= -1L)
-      .orderBy("user_id", "version")
-  }
-
-  /** st08 runs q41's trailing-window rate anomaly as REAL micro-batch
-    * streaming (Streams.rateAnomalyStream): the events table replays
-    * through the file source, per-series day counts accumulate in
-    * bounded state, and each day is scored against its trailing week the
-    * moment the watermark passes it (EventTimeTimeout; st06's sentinel
-    * files fire the final closes). The in-order one-shot replay closes
-    * days exactly in day order, so the gate shares q41's FULL SQL
-    * oracle — the eighth streaming-class gate, and the second (after
-    * st06) whose stateful output is oracle-equal to its batch twin. */
-  private def st08(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val (srcDir, schema) = sentinelEventsDir(s, dir, "stream_src8",
-      (one, _) => one.withColumn("event_type", lit("__wm__")))
-    val events = graft.sources.Tables.normalizeTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
-      .select(col("event_type"), col("ts"))
-      .withWatermark("ts", "35 days")
-      .as[Streams.RateEvent]
-    runStreamOnce(s, Streams.rateAnomalyStream(events).toDF(),
-        org.apache.spark.sql.streaming.OutputMode.Append)
-      .filter(col("series") =!= "__wm__")
-      .orderBy("series", "day")
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_summary_agg" -> (q01 _),
-    "q02_filter_project" -> (q02 _),
-    "q03_hierarchy_join" -> (q03 _),
-    "q04_children_closure" -> (q04 _),
-    "q05_parents_closure" -> (q05 _),
-    "q06_load_upsert_merge" -> (q06 _),
-    "q07_merge_datasets" -> (q07 _),
-    "q08_count_objects" -> (q08 _),
-    "q09_dump_window" -> (q09 _),
-    "q10_purge_before" -> (q10 _),
-    "q11_first_last_modified" -> (q11 _),
-    "q12_latest_version" -> (q12 _),
-    "q13_status_rollup" -> (q13 _),
-    "q14_status_pivot" -> (q14 _),
-    "q15_worst_status" -> (q15 _),
-    "q16_pattern_query" -> (q16 _),
-    "q17_branch_tips" -> (q17 _),
-    "q18_validate" -> (q18 _),
-    "q19_star_join_agg" -> (q19 _),
-    "q20_semi_anti" -> (q20 _),
-    "q21_topk" -> (q21 _),
-    "q22_ultimate_parents" -> (q22 _),
-    "q23_path_rollup" -> (q23 _),
-    "q24_notifications" -> (q24 _),
-    "q25_schema_upgrade" -> (q25 _),
-    "q26_json_misc" -> (q26 _),
-    "q27_asof_join" -> (q27 _),
-    "q28_range_join" -> (q28 _),
-    "q29_full_closure" -> (q29 _),
-    "q30_multi_pattern" -> (q30 _),
-    "q31_dump_batched" -> (q31 _),
-    "q32_skew_join" -> (q32 _),
-    "q33_root_id_check" -> (q33 _),
-    "q34_dump_meta" -> (q34 _),
-    "q35_bucketed_join" -> (q35 _),
-    "q36_all_descendants" -> (q36 _),
-    "q37_sessionize" -> (q37 _),
-    "q38_ingest_patterns" -> (q38 _),
-    "q39_json_files" -> (q39 _),
-    "q40_ingest_notify" -> (q40 _),
-    "q41_rate_anomaly" -> (q41 _),
-    "q42_catalog_validate" -> (q42 _),
-    "q43_mux_load" -> (q43 _),
-    "q44_column_profile" -> (q44 _),
-    "q45_incr_rollup" -> (q45 _),
-    "q46_snapshot_diff" -> (q46 _),
-    "q47_notify_summary" -> (q47 _),
-    "q48_partitioned_dump" -> (q48 _),
-    "q49_compact" -> (q49 _),
-    "q50_zorder_skip" -> (q50 _),
-    "q51_csv_robust" -> (q51 _),
-    "q52_scd2" -> (q52 _),
-    "q53_spool_deliver" -> (q53 _),
-    "q54_issue_patterns" -> (q54 _),
-    "e01_auc_label" -> (e01 _),
-    "e02_chi2_drift" -> (e02 _),
-    "e03_ks_2sample" -> (e03 _),
-    "e04_incr_auc" -> (e04 _),
-    "e05_embed_drift" -> (e05 _),
-    "e06_calibration" -> (e06 _),
-    "e07_pr_auc" -> (e07 _),
-    "e08_bootstrap_ci" -> (e08 _),
-    "e09_spearman" -> (e09 _),
-    "e10_mannwhitney" -> (e10 _),
-    "e11_psi" -> (e11 _),
-    "e12_cohens_kappa" -> (e12 _),
-    "g01_pagerank" -> (g01 _),
-    "g02_hits" -> (g02 _),
-    "g03_trustrank" -> (g03 _),
-    "k01_sketch_distinct" -> (k01 _),
-    "k02_sketch_quantiles" -> (k02 _),
-    "k03_ams_f2" -> (k03 _),
-    "k04_cms_topk" -> (k04 _),
-    "k05_bottomk_overlap" -> (k05 _),
-    "k06_priority_sample" -> (k06 _),
-    "k07_quantile_contract" -> (k07 _),
-    "k08_distinct_contract" -> (k08 _),
-    "k09_sketch_merge" -> (k09 _),
-    "d01_dedup_exact" -> (d01 _),
-    "d02_dedup_minhash" -> (d02 _),
-    "d03_dedup_simhash" -> (d03 _),
-    "d04_ngram_jaccard" -> (d04 _),
-    "d05_embed_neardup" -> (d05 _),
-    "d06_dedup_clusters" -> (d06 _),
-    "s01_knn_brute" -> (s01 _),
-    "s02_knn_lsh" -> (s02 _),
-    "s03_knn_ivf" -> (s03 _),
-    "s04_knn_graph" -> (s04 _),
-    "s05_knn_classify" -> (s05 _),
-    "s06_class_centroids" -> (s06 _),
-    "s07_knn_pq" -> (s07 _),
-    "s08_knn_ivfpq" -> (s08 _),
-    "s09_incr_encode" -> (s09 _),
-    "s10_random_projection" -> (s10 _),
-    "s11_sq8_encode" -> (s11 _),
-    "s12_sq8_recall" -> (s12 _),
-    "s13_kmeanspp_init" -> (s13 _),
-    "t01_langid" -> (t01 _),
-    "t02_quality" -> (t02 _),
-    "t03_tokens" -> (t03 _),
-    "t04_fingerprint" -> (t04 _),
-    "t05_corpus_stats" -> (t05 _),
-    "t06_repetition" -> (t06 _),
-    "t07_quality_quota" -> (t07 _),
-    "t08_quality_percentiles" -> (t08 _),
-    "t09_top_tokens" -> (t09 _),
-    "t10_tfidf_terms" -> (t10 _),
-    "t11_lm_score" -> (t11 _),
-    "t12_pii_redact" -> (t12 _),
-    "t13_entropy" -> (t13 _),
-    "t14_dsir_weights" -> (t14 _),
-    "t15_bpe_merges" -> (t15 _),
-    "t16_langid_eval" -> (t16 _),
-    "t17_readability" -> (t17 _),
-    "t18_bpe_encode" -> (t18 _),
-    "t19_data_card" -> (t19 _),
-    "t20_zipf_fit" -> (t20 _),
-    "t21_c4_filters" -> (t21 _),
-    "t22_url_filters" -> (t22 _),
-    "t23_pmi_collocations" -> (t23 _),
-    "t24_gopher_rules" -> (t24 _),
-    "p05_chunk_windows" -> (p05 _),
-    "p06_group_sample" -> (p06 _),
-    "p07_shuffle_shard" -> (p07 _),
-    "p08_token_budget" -> (p08 _),
-    "p09_mixture_expand" -> (p09 _),
-    "p10_pack_greedy" -> (p10 _),
-    "p11_training_order" -> (p11 _),
-    "p12_pipeline_e2e" -> (p12 _),
-    "p03_length_histogram" -> (p03 _),
-    "p04_stratified_split" -> (p04 _),
-    "d07_incr_dedup" -> (d07 _),
-    "d08_semantic_dedup" -> (d08 _),
-    "d09_contamination" -> (d09 _),
-    "d10_dup_spans" -> (d10 _),
-    "d11_bloom_decontam" -> (d11 _),
-    "d12_remove_dup_spans" -> (d12 _),
-    "d13_fuzzy_decontam" -> (d13 _),
-    "d14_cdc_chunks" -> (d14 _),
-    "d15_dedup_weights" -> (d15 _),
-    "d16_cluster_best" -> (d16 _),
-    "d17_containment" -> (d17 _),
-    "p01_pack_sequences" -> (p01 _),
-    "p02_mixture_sample" -> (p02 _),
-    "p13_temperature_mix" -> (p13 _),
-    "m01_binary_meta" -> (m01 _),
-    "m02_audio_meta" -> (m02 _),
-    "m03_pixel_stats" -> (m03 _),
-    "m04_frame_sample" -> (m04 _),
-    "m05_video_frames" -> (m05 _),
-    "m10_scene_cuts" -> (m10 _),
-    "m06_mp4_meta" -> (m06 _),
-    "m07_mkv_meta" -> (m07 _),
-    "m08_phash_neardup" -> (m08 _),
-    "m09_audio_stats" -> (m09 _),
-    "m11_webp_meta" -> (m11 _),
-    "m12_color_histogram" -> (m12 _),
-    "m13_mp4_frames" -> (m13 _),
-    "m14_mkv_frames" -> (m14 _),
-    "m15_tiff_meta" -> (m15 _),
-    "m16_flac_meta" -> (m16 _),
-    "m17_mp3_meta" -> (m17 _),
-    "m18_zip_listing" -> (m18 _),
-    "m19_h264_meta" -> (m19 _),
-    "m20_ivf_meta" -> (m20 _),
-    "m21_ogg_meta" -> (m21 _),
-    "t25_js_divergence" -> (t25 _),
-    "st01_stream_window" -> (st01 _),
-    "st02_monitor" -> (st02 _),
-    "st03_incr_dedup_stream" -> (st03 _),
-    "st04_contamination_stream" -> (st04 _),
-    "st05_index_ingest" -> (st05 _),
-    "st06_sessionize_stream" -> (st06 _),
-    "st07_quota_admit" -> (st07 _),
-    "st08_anomaly_stream" -> (st08 _),
-    "st09_sketch_stream" -> (st09 _),
-    "st10_cms_stream" -> (st10 _),
-    "st11_stream_join" -> (st11 _),
-    "st12_drift_stream" -> (st12 _),
-    "st13_scd_stream" -> (st13 _),
-    "st14_ndv_contract" -> (st14 _),
-    "st15_bootstrap_stream" -> (st15 _)
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gate.all.map(g => g.name -> g.build).toMap
 
   /** [[queries]] filtered by the builder-side SPARK_GRAFT_ONLY env var
     * (comma-separated keys; absent = all — the driver never sets it).
@@ -4454,7 +34,7 @@ object SparkEntry {
     }
 
   /** DuckDB-equivalent SQL per query (same parquet tables registered under
-    * their bare names). Omitted for non-SQL-expressible ops (d02, d03, d04,
-    * s02 — LSH internals; driver records rows-only checks for those). */
-  def oracleSql: Map[String, String] = OracleSql.all
+    * their bare names), rendered per call. */
+  def oracleSql: Map[String, String] =
+    Gate.all.map(g => g.name -> g.oracleSql).toMap
 }

@@ -767,15 +767,7 @@ object Eval {
     * the fold runs on the bounded grid. */
   def mannWhitney(df: DataFrame, value: Column, inA: Column): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val counts = df.select(value.as("v"), inA.cast("boolean").as("a"))
-      .where(col("v").isNotNull && col("a").isNotNull)
-      .groupBy("v")
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("c_a"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("c_b"))
-    val g = counts.agg(
-      array_sort(collect_list(struct(col("v"), col("c_a"), col("c_b"))))
-        .as("grid"),
-      sum("c_a").as("n_a"), sum("c_b").as("n_b"),
+    val g = twoPopulationGrid(df, value, inA,
       sum((col("c_a") + col("c_b")).cast(d38) *
         (col("c_a") + col("c_b")) * (col("c_a") + col("c_b")) -
         (col("c_a") + col("c_b")).cast(d38)).as("t_ties"))
@@ -833,17 +825,8 @@ object Eval {
     * (cum·n ≤ 3.6e13 at the 10x probe): the value-grid counts frame
     * folds once in ascending value order, tracking both cumulative
     * counts, the best |difference| and its first witness. */
-  def ks2Sample(df: DataFrame, value: Column, inA: Column): DataFrame = {
-    val counts = df.select(value.as("v"), inA.cast("boolean").as("a"))
-      .where(col("v").isNotNull && col("a").isNotNull)
-      .groupBy("v")
-      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("c_a"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("c_b"))
-    val g = counts.agg(
-      array_sort(collect_list(struct(col("v"), col("c_a"), col("c_b"))))
-        .as("grid"),
-      sum("c_a").as("n_a"), sum("c_b").as("n_b"))
-    g.select(col("n_a"), col("n_b"),
+  def ks2Sample(df: DataFrame, value: Column, inA: Column): DataFrame =
+    twoPopulationGrid(df, value, inA).select(col("n_a"), col("n_b"),
         aggregate(col("grid"),
           struct(lit(0L).as("ca"), lit(0L).as("cb"),
             lit(-1L).as("best"), lit(0.0).as("at")),
@@ -863,5 +846,22 @@ object Eval {
         (col("r.num").cast("double") /
           (col("n_a") * col("n_b")).cast("double")).as("ks"),
         col("r.at").as("ks_at"))
-  }
+
+  /** The value grid both two-population tests fold: one row holding
+    * `grid`, the ascending-`v` array of (v, c_a, c_b) counts per
+    * distinct non-null value (c_a in population `inA`, c_b in its
+    * complement), the totals `n_a`/`n_b`, and any `extra` aggregates
+    * over that counts frame — one map-side-combined aggregate, so the
+    * folds run on the bounded grid. */
+  private def twoPopulationGrid(df: DataFrame, value: Column, inA: Column,
+                                extra: Column*): DataFrame =
+    df.select(value.as("v"), inA.cast("boolean").as("a"))
+      .where(col("v").isNotNull && col("a").isNotNull)
+      .groupBy("v")
+      .agg(sum(when(col("a"), 1L).otherwise(0L)).as("c_a"),
+        sum(when(!col("a"), 1L).otherwise(0L)).as("c_b"))
+      .agg(
+        array_sort(collect_list(struct(col("v"), col("c_a"), col("c_b"))))
+          .as("grid"),
+        sum("c_a").as("n_a") +: sum("c_b").as("n_b") +: extra: _*)
 }

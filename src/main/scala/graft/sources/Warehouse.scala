@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{lit, pmod}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id,
+  pmod}
+import org.apache.spark.sql.types.StructField
 
 /** Bucketed warehouse tables: the co-located-join path promised in
   * SURVEY §5. Writing both sides of a recurring fact-fact join bucketed
@@ -131,16 +133,57 @@ object Warehouse {
     ReportTypes.filter(t => new java.io.File(dir, t).exists())
       .foreach { t =>
         val schema = readType(spark, dir, t).schema
-        val empty = spark.createDataFrame(
+        replaceType(dir, t, spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        // write to a sibling then swap: overwriting the dir being read
-        // would race the schema we just captured
-        val tmp = s"$dir/.${t}_empty_tmp"
-        empty.repartition(1).write.mode("overwrite").parquet(tmp)
-        rmTree(new java.io.File(dir, t))
-        require(new java.io.File(tmp).renameTo(new java.io.File(dir, t)),
-          s"could not swap emptied table into $dir/$t")
+          .repartition(1))
       }
+  }
+
+  /** kcidb-load into one type table, which the reference upserts
+    * (db/sql/schema.py:235-287): the table's rows and the report's are
+    * one submission log, the table's first and the report's after them
+    * in read order, collapsed per `id` by
+    * [[graft.ingest.Loader.upsertMerge]] — every other column keeps its
+    * latest non-null value. A column only one side has is null on the
+    * other; a column whose type differs between them fails loudly. */
+  def load(spark: SparkSession, dir: String, t: String,
+           report: DataFrame): Unit = {
+    require(report.columns.contains("id"),
+      s"the report's $t records carry no id column")
+    val table =
+      if (new java.io.File(dir, t).exists) Seq(readType(spark, dir, t))
+      else Nil
+    val fields = (table.flatMap(_.schema.fields) ++ report.schema.fields)
+      .foldLeft(Vector.empty[StructField]) { (acc, f) =>
+        acc.find(_.name == f.name) match {
+          case None => acc :+ f
+          case Some(g) if g.dataType == f.dataType => acc
+          case Some(g) => throw new IllegalArgumentException(
+            s"column '${f.name}' of $t is ${g.dataType.simpleString} in " +
+              s"$dir but ${f.dataType.simpleString} in the report")
+        }
+      }
+    def log(df: DataFrame, src: Int): DataFrame =
+      df.select(fields.map(f =>
+        (if (df.columns.contains(f.name)) col(f.name)
+         else lit(null).cast(f.dataType)).as(f.name)) ++
+        Seq(lit(src).as("__src"), monotonically_increasing_id().as("__pos"))
+        : _*)
+    val names = fields.map(_.name)
+    replaceType(dir, t, graft.ingest.Loader.upsertMerge(
+        (table.map(log(_, 0)) :+ log(report, 1)).reduce(_ union _),
+        Seq("id"), Seq(col("__src"), col("__pos")), names.filter(_ != "id"))
+      .select(names.map(col): _*))
+  }
+
+  /** Write `df` beside `$dir/$t` and swap it in: `df` may read the table
+    * it replaces, so it is fully written before the old dir goes. */
+  private def replaceType(dir: String, t: String, df: DataFrame): Unit = {
+    val tmp = new java.io.File(dir, s".${t}_tmp")
+    df.write.mode("overwrite").parquet(tmp.getPath)
+    rmTree(new java.io.File(dir, t))
+    require(tmp.renameTo(new java.io.File(dir, t)),
+      s"could not swap the rewritten table into $dir/$t")
   }
 
   /** kcidb-db-cleanup: deinitialize — remove the type dirs and the

@@ -161,6 +161,54 @@ class CliSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$mout/builds").count() == 4)
   }
 
+  test("load upserts a second report into the warehouse: per id, each " +
+      "field's latest non-null value, as upsertMerge over both reports") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli-upsert")
+    def report(p: String, builds: String): String = {
+      val f = dir.resolve(p)
+      java.nio.file.Files.writeString(f,
+        s"""{"version": {"major": 4, "minor": 3}, "builds": [$builds]}""")
+      f.toString
+    }
+    val r1 = report("r1.json",
+      """{"id": "b1", "origin": "o", "architecture": "x86",
+          "comment": "first"},
+         {"id": "b2", "origin": "o", "architecture": null,
+          "comment": "kept"},
+         {"id": "b3", "origin": "o", "architecture": "arm"}""")
+    val r2 = report("r2.json",
+      """{"id": "b2", "origin": "p", "architecture": "riscv",
+          "comment": null},
+         {"id": "b3", "origin": null, "duration": 7},
+         {"id": "b4", "origin": "p"}""")
+    val wh = dir.resolve("wh").toString
+    Cli.dispatch(Array("load", r1, wh, "builds"))
+    Cli.dispatch(Array("load", r2, wh, "builds"))
+    val fields = Seq("origin", "architecture", "comment", "duration")
+    val log = Seq(r1, r2).zipWithIndex.map { case (p, i) =>
+      graft.sources.Reports.read(spark, p, Seq("builds")).tables("builds")
+        .withColumn("__src", lit(i))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val want = graft.ingest.Loader.upsertMerge(log, Seq("id"),
+      Seq(col("__src")), fields)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(("id" +: fields).map(col): _*).orderBy("id").collect()
+        .map(_.toSeq).toSeq
+    val got = rows(spark.read.parquet(s"$wh/builds"))
+    assert(got == rows(want))
+    // a null in the later report never erases a loaded value
+    assert(got.map(r => r(0) -> r(3)).toMap ==
+      Map("b1" -> "first", "b2" -> "kept", "b3" -> null, "b4" -> null))
+    // a column whose type clashes with the warehouse's fails, by name
+    val r3 = report("r3.json", """{"id": "b5", "duration": "long"}""")
+    val e = intercept[IllegalArgumentException] {
+      Cli.dispatch(Array("load", r3, wh, "builds"))
+    }
+    assert(e.getMessage.contains("'duration'"))
+    assert(spark.read.parquet(s"$wh/builds").count() == 4)
+  }
+
   test("time is the kcidb-db-time analog: the warehouse clock, ISO " +
       "UTC, parseable and current") {
     val df = Cli.dispatch(Array("time", TestSpark.sf)).get

@@ -445,7 +445,7 @@ class ClosureSpec extends AnyFunSuite {
       "fixture; extra columns are refused (additionalProperties: false)") {
     import spark.implicits._
     val got = graft.model.CatalogEntries.validate(
-        graft.SparkEntry.testCatalogEntries
+        graft.gates.QGates.testCatalogEntries
           .toDF("test_key", "title", "home", "description"))
       .collect()
       .map(r => r.getString(0) -> (r.getBoolean(1), r.getString(2)))

@@ -3,9 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Guards on the driver contract itself: the correctness gate only checks
-  * queries that exist in BOTH maps, so a typo'd key would silently drop a
-  * query from the gate instead of failing it. */
+/** Guards on the driver contract itself: the gate list, the oracle SQL
+  * it renders, and the ledger and entry points around it. */
 class ContractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -36,16 +35,13 @@ class ContractSpec extends AnyFunSuite {
     * Keep those audits alive as long as these gates exist. */
   private val declaredRowsOnly = Set.empty[String]
 
-  test("every query has an oracle or is a declared rows-only check") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing == declaredRowsOnly,
-      s"undeclared oracle gaps: ${missing -- declaredRowsOnly}; " +
-        s"stale rows-only declarations: ${declaredRowsOnly -- missing}")
-  }
-
-  test("no oracle SQL without a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle entries with no query: $orphans")
+  test("gate names are unique across families") {
+    // A Gate carries its plan and its SQL together, so neither map can
+    // miss the other's key; but both maps are built with toMap, which
+    // would silently drop one of two gates sharing a name.
+    val names = gates.Gate.all.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"gate names registered twice: ${dups.distinct}")
   }
 
   test("gate key set and every rendered oracle SQL match the pinned " +
@@ -129,18 +125,20 @@ class ContractSpec extends AnyFunSuite {
     // DuckDB widens integer SUM (plain or windowed) to HUGEINT; the
     // driver's hasher distinguishes it from Spark's BIGINT even when
     // every value matches (the round-8 q37 failure). Rule: every SUM( in
-    // OracleSql.scala sits directly inside a CAST( — the type is always
-    // pinned explicitly.
-    val src = scala.io.Source
-      .fromFile("src/main/scala/graft/OracleSql.scala")(scala.io.Codec.UTF8)
-    val text = try src.mkString finally src.close()
+    // the rendered oracle SQL (what Verify writes to oracle_sql.json)
+    // sits directly inside a CAST( — the type is always pinned
+    // explicitly.
     val sumRe = "(?i)\\bSUM\\(".r
-    val bad = sumRe.findAllMatchIn(text).filterNot { m =>
-      m.start >= 5 &&
-        text.substring(m.start - 5, m.start).equalsIgnoreCase("CAST(")
-    }.map(m => text.substring(0, m.start).count(_ == '\n') + 1).toList
+    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+      case (name, text) =>
+        val n = sumRe.findAllMatchIn(text).count { m =>
+          !(m.start >= 5 &&
+            text.substring(m.start - 5, m.start).equalsIgnoreCase("CAST("))
+        }
+        if (n > 0) Some(s"$name ($n)") else None
+    }
     assert(bad.isEmpty,
-      s"uncast SUM( in OracleSql.scala at line(s) ${bad.mkString(",")} — " +
+      s"uncast SUM( in the oracle SQL of ${bad.mkString(", ")} — " +
         "wrap in CAST(SUM(...) AS <type>) to pin the oracle's result type")
   }
 

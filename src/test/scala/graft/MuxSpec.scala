@@ -21,7 +21,7 @@ class MuxSpec extends AnyFunSuite {
     val batch = graft.sources.Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "value")
     val members = freshMembers()
-    Mux.load(batch, SparkEntry.eventsSchematic, from = (1, 0), members,
+    Mux.load(batch, gates.QGates.eventsSchematic, from = (1, 0), members,
       mode = "overwrite")
     val m0 = Mux.query(spark, members)
     val m1 = spark.read.parquet(members(1).path)
@@ -52,12 +52,12 @@ class MuxSpec extends AnyFunSuite {
       lit(1.0).as("value"))
     val p = java.nio.file.Files.createTempDirectory("graft-mux-dup")
     intercept[IllegalArgumentException] {
-      Mux.load(batch, SparkEntry.eventsSchematic, from = (1, 0),
+      Mux.load(batch, gates.QGates.eventsSchematic, from = (1, 0),
         Seq(Mux.Member(s"$p/same", (2, 1)), Mux.Member(s"$p/same", (1, 0))))
     }
     // a member OLDER than the data has no downgrade chain
     intercept[IllegalArgumentException] {
-      Mux.load(batch, SparkEntry.eventsSchematic, from = (2, 0),
+      Mux.load(batch, gates.QGates.eventsSchematic, from = (2, 0),
         Seq(Mux.Member(s"$p/old", (1, 0))), mode = "overwrite")
     }
   }

@@ -58,7 +58,7 @@ class PackSpec extends AnyFunSuite {
 
   test("mixture: weight-1 sources all kept, weight-0 sources all dropped") {
     val flags = Pack.mixtureFlags(docs, col("source"), col("doc_id"),
-        SparkEntry.p02Weights, SparkEntry.p02Seed)
+        gates.PGates.p02Weights, gates.PGates.p02Seed)
       .groupBy("weight").agg(count(lit(1)).as("n"),
         sum(col("kept")).as("kept"))
       .collect().map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
@@ -76,10 +76,10 @@ class PackSpec extends AnyFunSuite {
   test("mixture: same seed reproduces; new seed redraws") {
     def keptSet(seed: String) =
       Pack.mixtureSample(docs, col("source"), col("doc_id"),
-        SparkEntry.p02Weights, seed).select("doc_id")
+        gates.PGates.p02Weights, seed).select("doc_id")
         .collect().map(_.getLong(0)).toSet
-    val a = keptSet(SparkEntry.p02Seed)
-    assert(a == keptSet(SparkEntry.p02Seed))
+    val a = keptSet(gates.PGates.p02Seed)
+    assert(a == keptSet(gates.PGates.p02Seed))
     val b = keptSet("other-seed")
     assert(a != b, "independent seeds must not reproduce the same sample")
   }
@@ -118,9 +118,9 @@ class PackSpec extends AnyFunSuite {
       Pack.sampleKPerGroup(docs, col("source"), col("doc_id"), k, seed)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-    val got = sample(SparkEntry.p06Seed)
+    val got = sample(gates.PGates.p06Seed)
     val win = docs.select(col("source"), col("doc_id"),
-        Pack.uniformDraw(SparkEntry.p06Seed, col("doc_id")).as("u"))
+        Pack.uniformDraw(gates.PGates.p06Seed, col("doc_id")).as("u"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("source")
           .orderBy(col("u").asc, col("doc_id").asc)).cast("int"))
@@ -129,7 +129,7 @@ class PackSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getInt(3))).toSet
     assert(got == win)
     assert(got.groupBy(_._1).values.forall(_.size <= k))
-    assert(got == sample(SparkEntry.p06Seed)) // deterministic
+    assert(got == sample(gates.PGates.p06Seed)) // deterministic
     assert(got != sample("different-seed"))   // seed redraws
   }
 
@@ -347,12 +347,12 @@ class PackSpec extends AnyFunSuite {
     val keptFp = ref.groupBy(_._3).map { case (_, rs) =>
       rs.map(_._1).min }.toSet
     val afterQuality = ref.filter(r =>
-      keptFp(r._1) && r._5 >= SparkEntry.p12MinQuality)
+      keptFp(r._1) && r._5 >= gates.PGates.p12MinQuality)
     val admitted = afterQuality.groupBy(_._2).values.flatMap { rs =>
       rs.sortBy(_._1)
         .foldLeft((Vector.empty[(Long, String, String, Long, Double)],
           0L)) { case ((acc, used), r) =>
-          if (used < SparkEntry.p12Quota) (acc :+ r, used + r._4)
+          if (used < gates.PGates.p12Quota) (acc :+ r, used + r._4)
           else (acc, used)
         }._1
     }.toSeq.sortBy(_._1)

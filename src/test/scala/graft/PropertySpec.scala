@@ -75,13 +75,13 @@ class PropertySpec extends AnyFunSuite {
     assert(sfDirs.nonEmpty)
     for (dir <- sfDirs) {
       val li = graft.sources.Tables(spark, dir, "lineitem")
-      val cond = SparkEntry.q22SeedIds.map { case (ok, ln) =>
+      val cond = gates.QGates.q22SeedIds.map { case (ok, ln) =>
         col("l_orderkey") === ok.toLong && col("l_linenumber") === ln.toLong
       }.reduce(_ || _)
       val found = li.filter(cond)
         .select("l_orderkey", "l_linenumber").distinct().count()
-      assert(found == SparkEntry.q22SeedIds.size,
-        s"$dir: only $found of ${SparkEntry.q22SeedIds.size} q22 seeds " +
+      assert(found == gates.QGates.q22SeedIds.size,
+        s"$dir: only $found of ${gates.QGates.q22SeedIds.size} q22 seeds " +
           "exist — the <*$ gate row would be (partly) vacuous")
     }
   }

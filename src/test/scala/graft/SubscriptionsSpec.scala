@@ -87,13 +87,13 @@ class SubscriptionsSpec extends AnyFunSuite {
     import graft.sources.Tables
     val load = (n: String) => Tables(spark, TestSpark.sf, n)
     val batch = Subscriptions
-      .matchNotifications(load, SparkEntry.q24Subscriptions)
+      .matchNotifications(load, gates.QGates.q24Subscriptions)
       .collect().map(_.getString(0)).toSet
     assert(batch.nonEmpty, "gate subscriptions must match real rows")
     // Replay the RAW (pre-dedup) match set through the streaming spool in
     // three micro-batches, with an overlap chunk so cross-batch dedup is
     // actually exercised on gate data.
-    val raw = Subscriptions.matchRaw(load, SparkEntry.q24Subscriptions)
+    val raw = Subscriptions.matchRaw(load, gates.QGates.q24Subscriptions)
       .as[Subscriptions.Notif](
         org.apache.spark.sql.Encoders.product[Subscriptions.Notif])
       .collect().toSeq
@@ -120,15 +120,15 @@ class SubscriptionsSpec extends AnyFunSuite {
 
   test("q24 oracle WHERE strings match the Column predicates row-for-row") {
     // The oracle SQL builds its WHERE clauses from
-    // SparkEntry.q24PredicateSql; this pins each string to the gate's
+    // gates.QGates.q24PredicateSql; this pins each string to the gate's
     // Column predicate by filtering the SAME table both ways (the string
     // through Spark's own parser) and comparing id sets — a predicate
     // edited on only one side diverges here instead of drifting quietly.
     import graft.sources.Tables
-    assert(SparkEntry.q24PredicateSql.size ==
-      SparkEntry.q24Subscriptions.size)
-    for ((sub, where) <- SparkEntry.q24Subscriptions
-        .zip(SparkEntry.q24PredicateSql)) {
+    assert(gates.QGates.q24PredicateSql.size ==
+      gates.QGates.q24Subscriptions.size)
+    for ((sub, where) <- gates.QGates.q24Subscriptions
+        .zip(gates.QGates.q24PredicateSql)) {
       val df = Tables(spark, TestSpark.sf, sub.objectType)
       val ids = (f: org.apache.spark.sql.Column) =>
         df.filter(f)
@@ -180,11 +180,11 @@ class SubscriptionsSpec extends AnyFunSuite {
     import graft.sources.Tables
     val load = (n: String) => Tables(spark, TestSpark.sf, n)
     val rendered = Subscriptions
-      .matchNotificationsRendered(load, SparkEntry.q24Subscriptions)
+      .matchNotificationsRendered(load, gates.QGates.q24Subscriptions)
     val baseCols = Seq("notification_id", "subscription", "object_type",
       "object_id")
     assert(rendered.select(baseCols.map(col): _*).collect().toSet ==
-      Subscriptions.matchNotifications(load, SparkEntry.q24Subscriptions)
+      Subscriptions.matchNotifications(load, gates.QGates.q24Subscriptions)
         .collect().toSet)
     // ground-truth one subscription end-to-end: render locally from the
     // raw orders rows and md5 the body in the JVM (negative_balance
