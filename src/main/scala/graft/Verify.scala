@@ -7,7 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // Pin the sf tag BEFORE any gate/oracle access: the exported-model
-    // oracles (s07/s08/s09/st05) embed SparkEntry.gateModelSqlPath,
+    // oracles (s07/s08/s09/st05) embed gates.Shared.gateModelSqlPath,
     // which must name the same per-sf dir the gates write this run.
     System.setProperty("graft.gate.sfTag", new java.io.File(sfDir).getName)
     val spark = GraftSession.local(GraftSession.cpus(4))

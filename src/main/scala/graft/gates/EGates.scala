@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 import Shared.{U64, ev, gateModelDir, langScore, modelGlob, t, toS, toU,
@@ -234,31 +234,22 @@ object EGates extends Family {
   // a flat alias chain blows up ~3^24 — the nesting is what keeps the
   // expression tree linear in the 24 steps.
   private val XxP1 = "11400714785074694791"
-
   private val XxP2 = "14029467366897019727"
-
   private val XxP3 = "1609587929392839161"
-
   private val XxP4 = "9650029242287828579"
-
   private val XxP5 = "2870177450012600261"
-
   /** Wrapping u64 multiply via 32-bit split (u64·u64 overflows
     * HUGEINT; each split partial stays < 2^97). */
   private def xxMul(a: String, b: String): String =
     s"((($a) % 4294967296) * (($b) % 4294967296) + (((($a) % " +
       s"4294967296) * (($b) // 4294967296) + (($a) // 4294967296) * " +
       s"(($b) % 4294967296)) % 4294967296) * 4294967296) % $U64"
-
   private def xxRotl(x: String, s: Int): String =
     s"((($x) * ${BigInt(1) << s}) % $U64 + (($x) // ${BigInt(1) << (64 - s)}))"
-
   private def xxXor(a: String, b: String): String =
     toU(s"xor(${toS(a)}, ${toS(b)})")
-
   private def xxShr(x: String, s: Int): String =
     s"(($x) // ${BigInt(1) << s})"
-
   /** Nested-subquery chain computing XXH64.hashLong(`inputU`, `seedU`)
     * into column `out` over `inner`; `keep` columns pass through. */
   private def xxHashLongSql(inner: String, keep: Seq[String], p: String,

@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Shared.{ev, gateModelDir, modelGlob, normText, t, tsUs}
 

@@ -1,7 +1,6 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.multimodal.Binary
@@ -115,9 +114,7 @@ object MGates extends Family {
   // makeRealPng closed forms), interpolated instead of duplicated as
   // SQL literals — the shared-constant discipline (ADVICE r12).
   private def wb = graft.multimodal.Binary.WebpDimBase
-
   private def wwm = graft.multimodal.Binary.WebpWMod
-
   private def whm = graft.multimodal.Binary.WebpHMod
 
   /** REAL WebP metadata: per-doc header-only RIFF/WEBP containers
@@ -486,9 +483,7 @@ object MGates extends Family {
          FROM w GROUP BY doc_id ORDER BY doc_id""")
 
   private def pb = graft.multimodal.Binary.PngDimBase
-
   private def pwm = graft.multimodal.Binary.PngWMod
-
   private def phm = graft.multimodal.Binary.PngHMod
 
   /** REAL pixel decode: per-doc fully-decodable PNGs (pixel pattern a

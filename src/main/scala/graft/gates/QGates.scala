@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.model.TestCatalog
@@ -745,7 +745,6 @@ object QGates extends Family {
 
   private lazy val Seq(q24BigOrders, q24NegBal, q24Returned) =
     q24Subscriptions
-
   // WHERE strings come from the SAME constant the spec checks against
   // the Column predicates (q24PredicateSql) — no dual
   // hand-written predicate to drift.

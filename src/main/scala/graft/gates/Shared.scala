@@ -229,26 +229,20 @@ object Shared {
 
   /** events.ts normalized to µs, matching Spark's read. */
   private[gates] val tsUs = "CAST(ts AS TIMESTAMP)"
-
   private[gates] val epoch1970 = "TIMESTAMP '1970-01-01'"
-
   private[gates] def sec(e: String) =
     s"date_diff('second', $epoch1970, date_trunc('second', $e))"
-
   private[gates] def decSum(c: String) =
     s"CAST(SUM(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
 
   // Text helpers mirroring graft.text.TextOps / graft.dedup.Dedup
   private[gates] val normText =
     "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
-
   private val padded = s"(' ' || $normText || ' ')"
-
   private def occ(c: String, pat: String): String = {
     val esc = pat.replace("'", "''")
     s"CAST((length($c) - length(replace($c, '$esc', ''))) / ${pat.length} AS BIGINT)"
   }
-
   private[gates] def langScore(lang: String): String =
     graft.text.TextOps.profiles.toMap.apply(lang)
       .map(p => occ(padded, p)).mkString("(", " + ", ")")
@@ -256,7 +250,6 @@ object Shared {
   private[gates] def dotD(a: String, b: String) =
     s"list_reduce(list_transform(range(1, len($a)+1), " +
       s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (s, x) -> s + x)"
-
   private[gates] def cosD(a: String, b: String) =
     s"(${dotD(a, b)} / (sqrt(${dotD(a, a)}) * sqrt(${dotD(b, b)})))"
 
@@ -297,11 +290,9 @@ object Shared {
   // formula is exact: low and high parts occupy disjoint bit ranges,
   // so + is |.
   private[gates] val U64 = "18446744073709551616"
-
   private[gates] def toU(x: String) =
     s"(CAST($x AS HUGEINT) + CASE WHEN $x < 0 THEN CAST($U64 AS HUGEINT)" +
       " ELSE 0::HUGEINT END)"
-
   private[gates] def toS(u: String) =
     s"(CASE WHEN ($u) >= CAST(9223372036854775808 AS HUGEINT) " +
       s"THEN CAST(($u) - $U64 AS BIGINT) ELSE CAST(($u) AS BIGINT) END)"

@@ -1,7 +1,7 @@
 package graft
 package gates
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.text.TextOps
