@@ -212,6 +212,7 @@ object Shared {
         .map(p => p.stateOperators.map(_.numRowsTotal).sum)
         .foldLeft(0L)(math.max)
       stStateRows.put(sink, maxStateRows)
+      graft.util.RunMetrics.reportStateRows(maxStateRows)
     } finally {
       try {
         val walk = Files.walk(ckpt)

@@ -96,8 +96,10 @@ object ModelStore {
     * can report fit+export seconds separately from the query tail. */
   def save(model: DataFrame, kind: String, path: String): Unit =
     graft.util.GateTimer.timeExport {
-      validate(model, kind, path)
-        .write.mode("overwrite").parquet(path)
+      graft.util.RunMetrics.timeExport {
+        validate(model, kind, path)
+          .write.mode("overwrite").parquet(path)
+      }
     }
 
   /** Load a fitted model frame, shape-checked. The tiny model frames
