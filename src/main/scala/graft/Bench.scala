@@ -21,52 +21,37 @@ object Bench {
     }
     // SparkEntry.querySubset: optional SPARK_GRAFT_ONLY re-measurement
     // subset (absent = all; driver mode).
-    // Per query: total seconds, plus the seconds spent inside
-    // ModelStore.save (GateTimer) — the r13 exported-model gates pay a
-    // fit+export stage that is ORACLE overhead, not operator work, and
-    // folding it into one number made r13's totals incomparable with
-    // pre-r13 anchors (VERDICT r13 item 2). export_s isolates it.
-    // GRAFT_STREAM_STATE: per-gate max state-store rows (drained from
-    // runStreamOnce's per-sink records after each gate — a gate owns
-    // every sink created during its run), reported as a SECOND JSON
-    // line AFTER the canonical bench line so the canonical line's
-    // schema never changes and a consumer keying on the first JSON
-    // line still gets the bench object (ADVICE r18).
-    val wantState = sys.env.contains("GRAFT_STREAM_STATE")
-    val stateRows = scala.collection.mutable.Map.empty[String, Long]
+    // Per query: total seconds and its RunMetrics record. The record's
+    // export time (inside ModelStore.save) is reported apart as
+    // `export_s`: the r13 exported-model gates pay a fit+export stage
+    // that is ORACLE overhead, not operator work, and folding it into
+    // one number made r13's totals incomparable with pre-r13 anchors
+    // (VERDICT r13 item 2).
     // A gate that throws is a FAILURE, never a timing: it is listed in
     // `failed`, left out of `queries`/`total`, and the run exits non-zero.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.querySubset.toSeq.sortBy(_._1)
       .flatMap { case (name, fn) =>
-      graft.util.GateTimer.reset()
-      if (wantState) gates.Shared.stStateRows.clear()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
+      try {
+        val (sec, rec) = graft.util.RunMetrics.measure(spark) {
+          val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          failed += name
-          false
+          (System.nanoTime() - t0) / 1e9
         }
-      if (wantState && !gates.Shared.stStateRows.isEmpty) {
-        import scala.jdk.CollectionConverters._
-        stateRows(name) =
-          gates.Shared.stStateRows.values.asScala.map(_.longValue).max
+        Some((name, sec, rec))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
       }
-      if (ok) Some((name, (System.nanoTime() - t0) / 1e9,
-        graft.util.GateTimer.exportSeconds))
-      else None
     }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val qs = results.map { case (k, v, _) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v, _) => k -> f"$v%.3f" })
     // only gates that actually exported (others would be noise-y zeros)
-    val ex = results.filter(_._3 > 0.005)
-      .map { case (k, _, e) => "\"" + k + f"""\":$e%.3f""" }
-      .mkString("{", ",", "}")
+    val ex = obj(results.filter(_._3.exportMs > 5)
+      .map { case (k, _, r) => k -> f"${r.exportMs / 1e3}%.3f" })
     val total = results.map(_._2).sum
     // Provenance (VERDICT r12 item 8): the git SHA ties the numbers to a
     // tree, and the control query's reading (q19, BASELINE.md anchor
@@ -112,12 +97,10 @@ object Bench {
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","git_head":"$sha","git_dirty":$dirty,"control_q19_sec":$control%.3f,"cpus":$cpus,"queries":$qs,"export_s":$ex,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
-    // Supplementary line second: line-order consumers (first JSON line)
-    // read the canonical bench object regardless of GRAFT_STREAM_STATE.
-    if (wantState)
-      println(stateRows.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + s"""\":$v""" }
-        .mkString("""{"stream_state_rows":{""", ",", "}}"))
+    // Per-gate layer record second, so first-JSON-line consumers still
+    // read the canonical bench object.
+    val layers = s"""{"layers":${obj(results.map(r => r._1 -> r._3.json))}}"""
+    println(layers)
     // Compact summary LAST (VERDICT r19 item 2): the canonical line is
     // ~5.7 KB with 182 queries, so a bounded stdout tail window (the
     // driver keeps 2000 chars) clips it mid-object and has parsed no
@@ -135,7 +118,8 @@ object Bench {
     // clobber the canonical full-tree record.
     if (!sys.env.contains("SPARK_GRAFT_ONLY"))
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (line + "\n" + layers + "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

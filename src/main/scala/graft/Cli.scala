@@ -10,13 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   * sbt "runMain graft.Cli list"
   * sbt "runMain graft.Cli run q01_summary_agg /root/testdata/sf0.01 /tmp/out"
+  * sbt "runMain graft.Cli explain q29_full_closure /root/testdata/sf0.01"
   * sbt "runMain graft.Cli count /root/testdata/sf0.01"
   * sbt "runMain graft.Cli dump /root/testdata/sf0.01 /tmp/dump \
   *      2024-01-10T00:00:00 2024-01-20T00:00:00"
   * }}}
   *
   * `run` executes any `SparkEntry.queries` gate (the full operator
-  * catalog) and writes its result as parquet; `count` prints the
+  * catalog) and writes its result as parquet; `explain` prints a gate's
+  * formatted physical plan; `count` prints the
   * kcidb-count analog (q08); `dump` is the windowed dump
   * (Loader.dumpWindow over the events table) with optional
   * (after, until] ISO bounds — exclusive lower, inclusive upper, the
@@ -27,6 +29,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Verify/Bench's [[GraftSession]], so CLI results are the gate results.
   */
 object Cli {
+
+  private def gate(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query '$name' — `list` prints the catalog"))
 
   private[graft] def session(sfDir: String): SparkSession = {
     System.setProperty("graft.gate.sfTag", new java.io.File(sfDir).getName)
@@ -43,12 +49,13 @@ object Cli {
         SparkEntry.queries.keys.toSeq.sorted.foreach(println)
         None
       case "run" :: name :: sfDir :: outDir :: Nil =>
-        val fn = SparkEntry.queries.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"unknown query '$name' — `list` prints the catalog"))
-        val df = fn(session(sfDir), sfDir)
+        val df = gate(name)(session(sfDir), sfDir)
         df.write.mode("overwrite").parquet(s"$outDir/$name")
         println(s"$name -> $outDir/$name")
+        Some(df)
+      case "explain" :: name :: sfDir :: Nil =>
+        val df = gate(name)(session(sfDir), sfDir)
+        df.explain("formatted")
         Some(df)
       case "count" :: sfDir :: Nil =>
         val df = SparkEntry.queries("q08_count_objects")(
@@ -168,7 +175,8 @@ object Cli {
         Some(df)
       case other =>
         throw new IllegalArgumentException(
-          s"usage: list | run <query> <sfDir> <outDir> | count <sfDir> " +
+          s"usage: list | run <query> <sfDir> <outDir> " +
+            s"| explain <query> <sfDir> | count <sfDir> " +
             s"| dump <sfDir> <outDir> [afterIso untilIso] " +
             s"| load <reportJson> <outDir> [types] " +
             s"| merge <outDir> <reportJson> <reportJson>... " +

@@ -15,22 +15,18 @@ object Verify {
     // Delete each query's target dir up front AND on failure: AQE can fail a
     // query in stage materialization before the overwrite clears the dir, and
     // a stale dump from a previous run would then masquerade as a pass.
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(wipe)
-      f.delete(); ()
-    }
     // SparkEntry.querySubset: optional SPARK_GRAFT_ONLY targeted re-dump
     // subset (absent = all, so driver gate runs always dump everything).
     val failed = SparkEntry.querySubset.toSeq.flatMap { case (name, fn) =>
       val target = new java.io.File(s"$outDir/$name")
-      wipe(target)
+      graft.util.deleteTree(target)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(target.getPath)
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        wipe(target)
+        graft.util.deleteTree(target)
         Some(name)
       }
     }

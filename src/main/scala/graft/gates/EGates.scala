@@ -226,13 +226,12 @@ object EGates extends Family {
   // -- XXH64 hashLong twin (e08/st15's xxhash64 bootstrap coin,
   // Eval.integerDrawXx): Spark's xxhash64 folds columns left-to-right
   // as hashLong(colN, … hashLong(col1, hashUTF8String(seed, 42))), so
-  // the oracle interpolates the string stage as a constant
-  // (Eval.xxSeedHash — computed with the engine's OWN XXH64, never
-  // re-implemented) and replays only the long stages in wrapping u64
-  // HUGEINT arithmetic. Every intermediate lives in its own nested
-  // SELECT: DuckDB expands SAME-SELECT alias references textually, so
-  // a flat alias chain blows up ~3^24 — the nesting is what keeps the
-  // expression tree linear in the 24 steps.
+  // the oracle interpolates the string stage as a constant (computed by
+  // [[xxh64Utf8]], an engine-free XXH64) and replays only the long
+  // stages in wrapping u64 HUGEINT arithmetic. Every intermediate lives
+  // in its own nested SELECT: DuckDB expands SAME-SELECT alias
+  // references textually, so a flat alias chain blows up ~3^24 — the
+  // nesting is what keeps the expression tree linear in the 24 steps.
   private val XxP1 = "11400714785074694791"
   private val XxP2 = "14029467366897019727"
   private val XxP3 = "1609587929392839161"
@@ -250,6 +249,40 @@ object EGates extends Family {
     toU(s"xor(${toS(a)}, ${toS(b)})")
   private def xxShr(x: String, s: Int): String =
     s"(($x) // ${BigInt(1) << s})"
+  /** XXH64 of `s`'s UTF-8 bytes at `seed` (the string stage of Spark's
+    * xxhash64), in plain Scala so the oracle does not borrow the
+    * engine's hash. */
+  private[gates] def xxh64Utf8(s: String, seed: Long): Long = {
+    val Seq(p1, p2, p3, p4, p5) = Seq(XxP1, XxP2, XxP3, XxP4, XxP5)
+      .map(java.lang.Long.parseUnsignedLong)
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def le(i: Int, n: Int): Long =
+      (0 until n).foldLeft(0L)((w, j) => w | (b(i + j) & 0xffL) << (8 * j))
+    def rotl(x: Long, r: Int): Long = java.lang.Long.rotateLeft(x, r)
+    def round(acc: Long, in: Long): Long = rotl(acc + in * p2, 31) * p1
+    var i = 0
+    var h =
+      if (b.length < 32) seed + p5
+      else {
+        var v = Seq(seed + p1 + p2, seed + p2, seed, seed - p1)
+        while (i + 32 <= b.length) {
+          v = v.indices.map(k => round(v(k), le(i + 8 * k, 8)))
+          i += 32
+        }
+        v.foldLeft(rotl(v(0), 1) + rotl(v(1), 7) + rotl(v(2), 12) +
+          rotl(v(3), 18))((a, x) => (a ^ round(0L, x)) * p1 + p4)
+      }
+    h += b.length
+    while (i + 8 <= b.length) {
+      h = rotl(h ^ round(0L, le(i, 8)), 27) * p1 + p4; i += 8
+    }
+    if (i + 4 <= b.length) {
+      h = rotl(h ^ le(i, 4) * p1, 23) * p2 + p3; i += 4
+    }
+    while (i < b.length) { h = rotl(h ^ le(i, 1) * p5, 11) * p1; i += 1 }
+    h ^= h >>> 33; h *= p2; h ^= h >>> 29; h *= p3; h ^ (h >>> 32)
+  }
+
   /** Nested-subquery chain computing XXH64.hashLong(`inputU`, `seedU`)
     * into column `out` over `inner`; `keep` columns pass through. */
   private def xxHashLongSql(inner: String, keep: Seq[String], p: String,
@@ -297,8 +330,7 @@ object EGates extends Family {
             s"CAST(b AS HUGEINT) AS bu FROM v, " +
             s"unnest(generate_series(0, " +
             s"${e08Replicates - 1})) AS t(b))"
-          val h0 = java.lang.Long.toUnsignedString(
-            graft.operators.Eval.xxSeedHash(seed))
+          val h0 = java.lang.Long.toUnsignedString(xxh64Utf8(seed, 42L))
           val idStage = xxHashLongSql(grid,
             Seq("id", "v", "b", "iu", "bu"), "x", "iu", h0, "hid")
           val bStage = xxHashLongSql(idStage,

@@ -54,14 +54,7 @@ object Shared {
     Option(root.listFiles).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName != gateRunId &&
         d.lastModified < cutoff)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty)
-            .foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
+      .foreach(graft.util.deleteTree)
     val base = new java.io.File(root, s"$gateRunId/$gate")
     java.nio.file.Files.createDirectories(base.toPath)
     // touch OUR run dir on every call: GC keys liveness on the run
@@ -85,14 +78,6 @@ object Shared {
       s"/$gateRunId/$gate").getAbsolutePath
 
   private val stGateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Per-sink max state-store rows of the most recent replays (sink name
-    * → max over batches of Σ stateOperators.numRowsTotal), filled by
-    * [[runStreamOnce]]; [[graft.Bench]] drains it per gate under
-    * GRAFT_STREAM_STATE to measure the streaming family's bounded-state
-    * claims at each octave. */
-  private[graft] val stStateRows =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Streaming file source over a testdata table, schema from a
     * metadata-only batch peek. The file source requires a DIRECTORY. A
@@ -190,11 +175,8 @@ object Shared {
     val ckpt = Files.createTempDirectory(ckptBase, "graft_st_ckpt_")
     val sink = s"st_gate_sink_${stGateRuns.incrementAndGet()}"
     // cleanup wraps from start() onward so an analysis/start failure
-    // cannot leak the RAM-backed dir, closes the walk stream (the fd
-    // discipline), and swallows any NonFatal — Files.walk surfaces
-    // concurrent-delete races as UncheckedIOException, NOT
-    // IOException, and a cleanup hiccup must never mask the replay's
-    // own outcome
+    // cannot leak the RAM-backed dir, and swallows any NonFatal: a
+    // cleanup hiccup must never mask the replay's own outcome
     try {
       val q = out.writeStream.format("memory").queryName(sink)
         .outputMode(mode)
@@ -203,25 +185,17 @@ object Shared {
         .start()
       q.awaitTermination()
       // state-size instrumentation (VERDICT r17 item 3): max over the
-      // replay's batches of total state-store rows, keyed by sink —
-      // Bench drains this per gate when GRAFT_STREAM_STATE is set, so
-      // the bounded-state claims in Streams.scala are MEASURED at each
-      // octave, not asserted. recentProgress retains the last ~100
-      // batch progresses — more than any one-shot replay here emits.
-      val maxStateRows = q.recentProgress
+      // replay's batches of total state-store rows, reported to the open
+      // RunMetrics scope, so the bounded-state claims in Streams.scala
+      // are MEASURED at each octave, not asserted. recentProgress
+      // retains the last ~100 batch progresses — more than any one-shot
+      // replay here emits.
+      graft.util.RunMetrics.reportStateRows(q.recentProgress
         .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-      stStateRows.put(sink, maxStateRows)
-      graft.util.RunMetrics.reportStateRows(maxStateRows)
+        .foldLeft(0L)(math.max))
     } finally {
-      try {
-        val walk = Files.walk(ckpt)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator.asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
-        } finally walk.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
+      try graft.util.deleteTree(ckpt.toFile)
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     val res = s.table(sink)
     s.catalog.dropTempView(sink)

@@ -492,11 +492,7 @@ object StGates extends Family {
       java.nio.file.Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + k * 2000L))
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(wipe)
-        f.delete(); ()
-      }
-      wipe(tmp.toFile)
+      graft.util.deleteTree(tmp.toFile)
     }
     (srcDir, raw.schema)
   }

@@ -389,26 +389,17 @@ object Eval {
     * and XXH64's finalizer avalanches the low bits, so the masked
     * coin is as uniform as the digest's.
     *
-    * Engine contract (the hashGrams precedent, one step further): the
-    * oracle does not re-implement the string hash — Spark's xxhash64
-    * folds columns left-to-right, so the draw is
-    * `hashLong(b, hashLong(id, hashUTF8String(seed, 42)))`, the
-    * string stage is a per-plan CONSTANT ([[xxSeedHash]], interpolated
-    * into the oracle SQL), and DuckDB replays only the two hashLong
-    * stages in wrapping u64 HUGEINT arithmetic (validated
+    * Oracle contract: Spark's xxhash64 folds columns left-to-right, so
+    * the draw is `hashLong(b, hashLong(id, hashUTF8String(seed, 42)))`,
+    * the string stage is a per-plan CONSTANT (computed by the oracle's
+    * own engine-free XXH64 and interpolated into its SQL), and DuckDB
+    * replays only the two hashLong stages in wrapping u64 HUGEINT
+    * arithmetic (validated
     * mismatch-free against XXH64 on boundary longs; EvalSpec pins the
     * Scala twin against the live expression). */
   def integerDrawXx(seed: String, cols: Column*): Column =
     xxhash64((lit(seed) +: cols): _*)
       .bitwiseAND(lit((1L << 60) - 1))
-
-  /** Driver-side constant for the oracle: the xxhash64 expression's
-    * state after folding the seed STRING at Spark's fixed 42 seed —
-    * computed with the engine's own XXH64, so gate and oracle can
-    * never disagree on the byte-hash. */
-  def xxSeedHash(seed: String): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-      org.apache.spark.unsafe.types.UTF8String.fromString(seed), 42L)
 
   /** [[poissonWeight]] on the xxhash64 coin: the production draw for
     * the bootstrap grid (e08/st15 gates since r19). */

@@ -90,16 +90,15 @@ object ModelStore {
 
   /** Persist a fitted model frame. Overwrites: a model path names ONE
     * model version; versioning is the caller's path discipline (the
-    * same contract as a warehouse table). The save is wrapped in
-    * [[graft.util.GateTimer.timeExport]]: this call is where a gate's
-    * fit lineage actually executes (the write is the action), so Bench
-    * can report fit+export seconds separately from the query tail. */
+    * same contract as a warehouse table). The save is timed as export
+    * time of the open [[graft.util.RunMetrics]] scope: this call is
+    * where a gate's fit lineage actually executes (the write is the
+    * action), so Bench can report fit+export seconds separately from
+    * the query tail. */
   def save(model: DataFrame, kind: String, path: String): Unit =
-    graft.util.GateTimer.timeExport {
-      graft.util.RunMetrics.timeExport {
-        validate(model, kind, path)
-          .write.mode("overwrite").parquet(path)
-      }
+    graft.util.RunMetrics.timeExport {
+      validate(model, kind, path)
+        .write.mode("overwrite").parquet(path)
     }
 
   /** Load a fitted model frame, shape-checked. The tiny model frames

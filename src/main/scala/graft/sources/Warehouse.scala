@@ -181,7 +181,7 @@ object Warehouse {
   private def replaceType(dir: String, t: String, df: DataFrame): Unit = {
     val tmp = new java.io.File(dir, s".${t}_tmp")
     df.write.mode("overwrite").parquet(tmp.getPath)
-    rmTree(new java.io.File(dir, t))
+    graft.util.deleteTree(new java.io.File(dir, t))
     require(tmp.renameTo(new java.io.File(dir, t)),
       s"could not swap the rewritten table into $dir/$t")
   }
@@ -191,15 +191,9 @@ object Warehouse {
     * mount point, as the reference's database server does). */
   def cleanup(dir: String): Unit = {
     require(isInitialized(dir), s"warehouse $dir is not initialized")
-    ReportTypes.foreach(t => rmTree(new java.io.File(dir, t)))
+    ReportTypes.foreach(t => graft.util.deleteTree(new java.io.File(dir, t)))
     marker(dir).delete()
     ()
-  }
-
-  private[graft] def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
   }
 
   /** Salted small-file compaction — the PRODUCTION variant of q49's

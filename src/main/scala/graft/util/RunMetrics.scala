@@ -12,32 +12,28 @@ import org.apache.spark.sql.SparkSession
   * time it spent exporting models ([[graft.sim.ModelStore.save]]) and the
   * largest streaming state it held (the gates' streaming runner).
   *
-  * One listener per SparkContext counts every job, stage and task of the
-  * context. [[measure]] brackets its body with two marker jobs and reads
-  * the counters between the opening marker's end and the closing marker's
-  * start, on the listener's own thread. The bus delivers a queue's events
-  * in the order they were posted, so once the closing marker's start
-  * arrives every event of the body has been counted, with no sleep. Jobs
-  * other threads start inside the window count too: streaming
-  * micro-batches and broadcast exchanges run on their own threads and
-  * belong to the body that started them. */
+  * One listener per SparkContext does the counting. [[measure]] brackets
+  * its body with two marker jobs, and the listener counts what arrives
+  * between the opening marker's end and the closing marker's start. The
+  * bus delivers a queue's events in the order they were posted, so once
+  * the closing marker's start arrives every event of the body has been
+  * counted, with no sleep. Jobs other threads start inside the window
+  * count too: streaming micro-batches and broadcast exchanges run on
+  * their own threads and belong to the body that started them. */
 object RunMetrics {
   final case class Record(jobs: Long, stages: Long, tasks: Long,
       taskMs: Long, shuffleWriteBytes: Long, spillBytes: Long,
       exportMs: Long, stateRows: Long) {
-    def json: String =
-      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
-        s""""task_ms":$taskMs,"shuffle_write_bytes":$shuffleWriteBytes,""" +
-        s""""spill_bytes":$spillBytes,"export_ms":$exportMs,""" +
-        s""""state_rows":$stateRows}"""
+    /** One JSON object, the field names in snake case. */
+    def json: String = productElementNames.zip(productIterator).map {
+      case (k, v) => s""""${k.replaceAll("([A-Z])", "_$1").toLowerCase}":$v"""
+    }.mkString("{", ",", "}")
   }
 
-  /** jobs, stages, tasks, task ms, shuffle bytes written, bytes spilled */
-  private type Counts = Vector[Long]
-
   private final class Scope {
-    @volatile var from: Counts = Vector.empty
-    @volatile var to: Counts = Vector.empty
+    /** jobs, stages, tasks, task ms, shuffle bytes written, bytes
+      * spilled: written on the bus thread, read once `drained` opens */
+    val counts = new Array[Long](6)
     val drained = new CountDownLatch(1)
     val exportNanos = new AtomicLong(0L)
     val stateRows = new AtomicLong(0L)
@@ -48,36 +44,32 @@ object RunMetrics {
 
   /** Callbacks of one listener run on one bus thread, in posting order. */
   private final class Listener extends SparkListener {
-    private var jobs, stages, tasks, taskMs, written, spilled = 0L
-    private var openers = Map.empty[Int, Scope]
-    private def counts: Counts =
-      Vector(jobs, stages, tasks, taskMs, written, spilled)
+    private var opener = -1
+    private var counting: Option[Scope] = None
+    private def add(i: Int, n: Long): Unit =
+      counting.foreach(_.counts(i) += n)
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      (Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey))),
-        Option(open.get)) match {
-        case (None, _) => jobs += 1
-        case (Some("open"), Some(s)) => openers += e.jobId -> s
-        case (Some("close"), Some(s)) =>
-          s.to = counts
-          s.drained.countDown()
-        case _ => ()
+      Option(e.properties).flatMap(p => Option(p.getProperty(MarkerKey)))
+      match {
+        case None => add(0, 1)
+        case Some("open") => opener = e.jobId
+        case Some(_) => // the closing marker
+          counting.foreach(_.drained.countDown())
+          counting = None
       }
     // the opening marker's own stage and task precede its end
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      openers.get(e.jobId).foreach { s =>
-        s.from = counts
-        openers -= e.jobId
-      }
+      if (e.jobId == opener) counting = Option(open.get)
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages += 1
+      add(1, 1)
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      tasks += 1
-      if (e.taskInfo != null) taskMs += e.taskInfo.duration
+      add(2, 1)
+      if (e.taskInfo != null) add(3, e.taskInfo.duration)
       val m = e.taskMetrics
       if (m != null) {
-        written += m.shuffleWriteMetrics.bytesWritten
-        spilled += m.memoryBytesSpilled + m.diskBytesSpilled
+        add(4, m.shuffleWriteMetrics.bytesWritten)
+        add(5, m.memoryBytesSpilled + m.diskBytesSpilled)
       }
     }
   }
@@ -93,10 +85,9 @@ object RunMetrics {
   }
 
   private def marker(sc: SparkContext, kind: String): Unit = {
-    val prev = sc.getLocalProperty(MarkerKey)
     sc.setLocalProperty(MarkerKey, kind)
     try { sc.parallelize(Seq(1), 1).count(); () }
-    finally sc.setLocalProperty(MarkerKey, prev)
+    finally sc.setLocalProperty(MarkerKey, null)
   }
 
   /** Runs `body` and returns its result with the run metrics it caused.
@@ -104,28 +95,27 @@ object RunMetrics {
   def measure[T](spark: SparkSession)(body: => T): (T, Record) = {
     val sc = spark.sparkContext
     setup(sc)
-    val scope = new Scope
-    if (!open.compareAndSet(null, scope))
+    val s = new Scope
+    if (!open.compareAndSet(null, s))
       throw new IllegalStateException("a RunMetrics scope is already open")
     try {
       marker(sc, "open")
       val out = body
       marker(sc, "close")
-      if (!scope.drained.await(60, TimeUnit.SECONDS))
+      if (!s.drained.await(60, TimeUnit.SECONDS))
         throw new IllegalStateException("Spark listener bus stalled")
-      val d = scope.to.zip(scope.from).map { case (a, b) => a - b }
-      (out, Record(d(0), d(1), d(2), d(3), d(4), d(5),
-        scope.exportNanos.get / 1000000L, scope.stateRows.get))
+      val Array(jobs, stages, tasks, taskMs, written, spilled) = s.counts
+      (out, Record(jobs, stages, tasks, taskMs, written, spilled,
+        s.exportNanos.get / 1000000L, s.stateRows.get))
     } finally open.set(null)
   }
 
   /** Runs `body`, adding its wall time to the open scope's export time. */
-  def timeExport[T](body: => T): T = Option(open.get) match {
-    case None => body
-    case Some(s) =>
-      val t0 = System.nanoTime()
-      try body
-      finally { s.exportNanos.addAndGet(System.nanoTime() - t0); () }
+  def timeExport[T](body: => T): T = {
+    val t0 = System.nanoTime()
+    try body
+    finally Option(open.get)
+      .foreach(_.exportNanos.addAndGet(System.nanoTime() - t0))
   }
 
   /** Raises the open scope's state rows to `rows` if it held fewer. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Cross-engine-deterministic helpers.
+/** Cross-engine-deterministic helpers, and the one recursive delete.
   *
   * The driver's oracle runs the same SQL in DuckDB and hash-compares values,
   * so every aggregate over parquet doubles must be bit-reproducible across
@@ -30,4 +30,12 @@ package object util {
   /** Timestamp -> epoch seconds (floor), matching DuckDB's
     * date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts)). */
   def epochSec(c: Column): Column = c.cast(LongType)
+
+  /** Deletes `f` and everything under it; a missing path is a no-op. A
+    * symbolic link is deleted, never followed. */
+  def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles).foreach(_.foreach(deleteTree))
+    f.delete(); ()
+  }
 }

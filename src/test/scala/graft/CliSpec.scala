@@ -16,6 +16,12 @@ class CliSpec extends AnyFunSuite {
     assert(back.count() == df.count() && back.count() > 0)
   }
 
+  test("explain prints a gate's formatted physical plan") {
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(Cli.dispatch(Array("explain", "q01_summary_agg", sf)))
+    assert(out.toString.contains("== Physical Plan =="))
+  }
+
   test("count is the q08 analog") {
     val df = Cli.dispatch(Array("count", sf)).get
     assert(df.columns.toSeq ==

@@ -236,7 +236,8 @@ class ClosureSpec extends AnyFunSuite {
       "collecting its local frames runs none") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    def jobsOf(body: => Unit): Int = Jobs.of(spark)(body)
+    def jobsOf(body: => Unit): Long =
+      graft.util.RunMetrics.measure(spark)(body)._2.jobs
     def walk(): Map[String, DataFrame] = cat.parentsClosure(spark, dir,
       Map("lineitem" -> Seq((1L, 3L)).toDF("l_orderkey", "l_linenumber")))
     walk() // loads every table once; a first parquet load infers its schema

@@ -167,8 +167,7 @@ class ContractSpec extends AnyFunSuite {
       "\\bdef\\s+main\\s*\\(|\\bextends\\s+App\\b".r.findAllMatchIn(text)
         .map(m => objs.takeWhile(_._1 < m.start).last._2)
     }.toSet
-    assert(mains ==
-      Set("Bench", "Verify", "Cli", "RunOne", "PlanDump", "ScaleUp"))
+    assert(mains == Set("Bench", "Verify", "Cli", "ScaleUp"))
     // environment variables and system properties; the JVM's own
     // (java.io.tmpdir, ...) are not knobs
     val readRe = ("(?s)(?:sys\\.env|sys\\.props|System\\.getenv|" +
@@ -178,8 +177,13 @@ class ContractSpec extends AnyFunSuite {
       readRe.findAllMatchIn(text).map(_.group(1))
     }.toSet.filterNot(_.startsWith("java."))
     assert(knobs == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
-      "SPARK_GRAFT_ONLY", "GRAFT_STREAM_STATE", "GRAFT_ST_CKPT_DIR",
-      "graft.gate.runId", "graft.gate.sfTag"))
+      "SPARK_GRAFT_ONLY", "GRAFT_ST_CKPT_DIR", "graft.gate.runId",
+      "graft.gate.sfTag"))
+    // Spark conf keys of graft's own, read through the session conf
+    val confKeys = code.flatMap { case (_, text) =>
+      "\"(spark\\.graft\\.[^\"]*)\"".r.findAllMatchIn(text).map(_.group(1))
+    }.toSet
+    assert(confKeys == Set("spark.graft.ohaAutoRaise"))
     // every read goes through a literal name the set above can see
     val dynamic = code.flatMap { case (f, text) =>
       "(?:sys\\.env|sys\\.props|System\\.getenv|System\\.getProperty)\\b".r

@@ -788,10 +788,10 @@ class DedupSpec extends AnyFunSuite {
     val pairs = randomGraph(11).toDF("id_a", "id_b").repartition(1)
     val want = driverComponents(randomGraph(11))
     var got = Map.empty[Long, Long]
-    val jobs = Jobs.of(spark) {
+    val jobs = graft.util.RunMetrics.measure(spark) {
       got = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
+    }._2.jobs
     assert(got == want)
     assert(jobs <= 4, s"$jobs jobs")
   }

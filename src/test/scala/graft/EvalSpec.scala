@@ -355,13 +355,14 @@ class EvalSpec extends AnyFunSuite {
   test("integerDrawXx: the expression's coin equals a driver-side " +
       "XXH64 chain replay — the oracle's twin model, pinned") {
     // Spark's xxhash64 folds children left-to-right: the seed STRING
-    // stage is Eval.xxSeedHash (the engine's own hashUTF8String), then
+    // stage is the engine's own hashUTF8String at seed 42, then
     // one hashLong per long column. The DuckDB oracle replays exactly
     // this chain in u64 HUGEINT arithmetic, so if this pin breaks the
     // oracle model is wrong — boundary longs included.
     import org.apache.spark.sql.catalyst.expressions.XXH64
     val seed = "spec-xx"
-    val h0 = Eval.xxSeedHash(seed)
+    val h0 = XXH64.hashUTF8String(
+      org.apache.spark.unsafe.types.UTF8String.fromString(seed), 42L)
     val cases = Seq((0L, 0L), (1L, 63L), (123456789012345L, 7L),
       (Long.MaxValue, 1L), (-17L, 42L))
     val got = cases.toDF("id", "b")

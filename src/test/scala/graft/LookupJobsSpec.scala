@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.model.TestCatalog
 import graft.query.PatternQuery
+import graft.util.RunMetrics
 
 /** Spark jobs per request, and classes compiled per request, for the
   * request shapes of perfbench's `lookup` workload, on sf0.001. A request
@@ -42,7 +43,7 @@ class LookupJobsSpec extends AnyFunSuite {
   for ((name, bound, run, a, b) <- shapes)
     test(s"$name: at most $bound jobs, and new ids compile no new code") {
       request(run(a)) // loads the tables and compiles the request's classes
-      val jobs = Jobs.of(spark)(request(run(a)))
+      val jobs = RunMetrics.measure(spark)(request(run(a)))._2.jobs
       assert(jobs <= bound, s"$jobs jobs")
       assert(compiled(request(run(b))) == 0)
     }

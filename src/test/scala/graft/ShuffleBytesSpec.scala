@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.util.RunMetrics
 
 /** Plan ECONOMICS assertions — PlanSpec pins plan SHAPE (broadcasts,
   * pushdown, no cartesians); this pins plan COST: per-query ceilings on
@@ -25,37 +24,15 @@ class ShuffleBytesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = TestSpark.sf
 
-  private class Acc extends SparkListener {
-    val written = new AtomicLong(0L)
-    val spilled = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        ()
-      }
-    }
-  }
-
   /** (shuffle bytes written, bytes spilled) across every job one noop
     * execution of the gate triggers (model-export writes included — the
-    * ceiling covers the whole gate). The listener bus is async, so after
-    * the action we wait for the counter to go quiet. */
+    * ceiling covers the whole gate). */
   private def measure(name: String): (Long, Long) = {
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
-    try {
+    val rec = RunMetrics.measure(spark) {
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-      var last = -1L; var quiet = 0; var waited = 0
-      while (quiet < 3 && waited < 15000) {
-        Thread.sleep(150); waited += 150
-        val v = acc.written.get() + acc.spilled.get()
-        if (v == last) quiet += 1 else { quiet = 0; last = v }
-      }
-      (acc.written.get(), acc.spilled.get())
-    } finally spark.sparkContext.removeSparkListener(acc)
+    }._2
+    (rec.shuffleWriteBytes, rec.spillBytes)
   }
 
   // Ceilings (bytes) at sf0.001 — ~3x the recorded r14 measurement

@@ -10,11 +10,6 @@ import graft.sources.Tables
 class TablesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree))
-    f.delete()
-  }
-
   test("a Catalog read after an in-place dir rewrite sees the new rows") {
     val wh = java.nio.file.Files.createTempDirectory("graft-tables").toFile
     try {
@@ -23,7 +18,7 @@ class TablesSpec extends AnyFunSuite {
       def write(ids: Range): Unit = {
         spark.range(ids.start, ids.end).select(col("id").as("o_orderkey"))
           .write.mode("overwrite").parquet(tmp.getPath)
-        rmTree(path)
+        graft.util.deleteTree(path)
         assert(tmp.renameTo(path))
       }
       val cat = new Catalog(
@@ -40,6 +35,6 @@ class TablesSpec extends AnyFunSuite {
       write(10 until 14)
       assert(keys() == Seq(10L, 11L, 12L, 13L))
       assert(!(Tables.raw(spark, wh.getPath, "orders") eq first))
-    } finally rmTree(wh)
+    } finally graft.util.deleteTree(wh)
   }
 }
