@@ -111,7 +111,7 @@ object RunMetrics {
   }
 
   /** Runs `body`, adding its wall time to the open scope's export time. */
-  def timeExport[T](body: => T): T = {
+  private[graft] def timeExport[T](body: => T): T = {
     val t0 = System.nanoTime()
     try body
     finally Option(open.get)
@@ -119,7 +119,7 @@ object RunMetrics {
   }
 
   /** Raises the open scope's state rows to `rows` if it held fewer. */
-  def reportStateRows(rows: Long): Unit =
+  private[graft] def reportStateRows(rows: Long): Unit =
     Option(open.get).foreach(
       _.stateRows.accumulateAndGet(rows, (a, b) => math.max(a, b)))
 }
