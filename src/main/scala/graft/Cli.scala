@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   * sbt "runMain graft.Cli list"
   * sbt "runMain graft.Cli run q01_summary_agg /root/testdata/sf0.01 /tmp/out"
-  * sbt "runMain graft.Cli explain q29_full_closure /root/testdata/sf0.01"
+  * sbt "runMain graft.Cli explain q29_full_closure <sfDir>"
   * sbt "runMain graft.Cli count /root/testdata/sf0.01"
   * sbt "runMain graft.Cli dump /root/testdata/sf0.01 /tmp/dump \
   *      2024-01-10T00:00:00 2024-01-20T00:00:00"

@@ -394,9 +394,8 @@ object Eval {
     * the string stage is a per-plan CONSTANT (computed by the oracle's
     * own engine-free XXH64 and interpolated into its SQL), and DuckDB
     * replays only the two hashLong stages in wrapping u64 HUGEINT
-    * arithmetic (validated
-    * mismatch-free against XXH64 on boundary longs; EvalSpec pins the
-    * Scala twin against the live expression). */
+    * arithmetic (validated mismatch-free against XXH64 on boundary
+    * longs; EvalSpec pins the Scala twin against the live expression). */
   def integerDrawXx(seed: String, cols: Column*): Column =
     xxhash64((lit(seed) +: cols): _*)
       .bitwiseAND(lit((1L << 60) - 1))
